@@ -59,7 +59,8 @@ object Clusters {
     * O(affected) write set of [[addToSaved]]. Output columns
     * (doc_id, component). */
   def extendDelta(assign: DataFrame, newPairs: DataFrame,
-      maxRounds: Int = 50, localSolveMax: Long = 1000000L): DataFrame = {
+      maxRounds: Int = 50,
+      localSolveMax: Long = ConnectedComponents.LocalSolveMaxEdges): DataFrame = {
     val a = assign.select(col("doc_id").cast("long").as("doc_id"),
       col("component").cast("long").as("component"))
     val e = norm(newPairs)
@@ -95,7 +96,8 @@ object Clusters {
     * to (standing ∪ new-edge) vertices; `ClustersSpec` gates that
     * identity on randomized graphs. */
   def extend(assign: DataFrame, newPairs: DataFrame,
-      maxRounds: Int = 50, localSolveMax: Long = 1000000L): DataFrame = {
+      maxRounds: Int = 50,
+      localSolveMax: Long = ConnectedComponents.LocalSolveMaxEdges): DataFrame = {
     val a = assign.select(col("doc_id").cast("long").as("doc_id"),
       col("component").cast("long").as("component"))
     val delta = extendDelta(a, newPairs, maxRounds, localSolveMax)
@@ -106,7 +108,8 @@ object Clusters {
   /** Cluster the pair graph and persist the assignment as an ACID
     * table at `path` (rows doc_id, component, gen = 0). */
   def buildSaved(pairs: DataFrame, path: String,
-      maxRounds: Int = 50, localSolveMax: Long = 1000000L): Unit = {
+      maxRounds: Int = 50,
+      localSolveMax: Long = ConnectedComponents.LocalSolveMaxEdges): Unit = {
     val assign = ConnectedComponents.components(pairs, maxRounds,
       localSolveMax)
     graft.land.AtomicLanding.commit(
@@ -144,7 +147,8 @@ object Clusters {
     * shuffles; everything else scales with the batch. `ClustersSpec`
     * gates raw ≡ resolved on multi-generation states. */
   private[ext] def extendDeltaRaw(raw: DataFrame, newPairs: DataFrame,
-      maxRounds: Int = 50, localSolveMax: Long = 1000000L): DataFrame = {
+      maxRounds: Int = 50,
+      localSolveMax: Long = ConnectedComponents.LocalSolveMaxEdges): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
     val e = norm(newPairs)
@@ -200,7 +204,8 @@ object Clusters {
     * append never resolves or shuffles the whole state. */
   def addToSaved(s: SparkSession, path: String, newPairs: DataFrame,
       batchId: Option[Long] = None,
-      maxRounds: Int = 50, localSolveMax: Long = 1000000L,
+      maxRounds: Int = 50,
+      localSolveMax: Long = ConnectedComponents.LocalSolveMaxEdges,
       beforeCommit: () => Unit = () => (),
       writer: String = ""): Unit = {
     import graft.land.AtomicLanding

@@ -22,6 +22,12 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
+  /** The driver-solve edge bound shared by every iterative graph job
+    * with a driver regime ([[components]], [[PageRank]] and their
+    * callers): graphs with at most this many distinct edges are
+    * collected and solved on the driver (~16 B/edge, so ~16 MB here). */
+  val LocalSolveMaxEdges: Long = 1000000L
+
   /** One large-star round: every node u connects its LARGER neighbors to
     * the minimum of its neighborhood (incl. itself). */
   private def largeStar(edges: DataFrame): DataFrame = {
@@ -89,7 +95,7 @@ object ConnectedComponents {
     * corpus-wide graphs. Pass `localSolveMax = 0` to force the
     * distributed path. */
   def components(pairs: DataFrame, maxRounds: Int = 50,
-      localSolveMax: Long = 1000000L): DataFrame =
+      localSolveMax: Long = LocalSolveMaxEdges): DataFrame =
     componentsWithRounds(pairs, maxRounds, localSolveMax)._1
 
   /** [[components]] plus the number of distributed star-contraction
@@ -98,7 +104,7 @@ object ConnectedComponents {
     * graphs the round count must stay ~flat as the corpus grows, which
     * is the whole convergence argument. */
   def componentsWithRounds(pairs: DataFrame, maxRounds: Int = 50,
-      localSolveMax: Long = 1000000L): (DataFrame, Int) = {
+      localSolveMax: Long = LocalSolveMaxEdges): (DataFrame, Int) = {
     // each round is checkpointed: without truncating the lineage the
     // logical plan doubles per iteration (plan-explosion OOM long before
     // any data-size limit) — the standard iterative-DataFrame discipline,

@@ -571,7 +571,7 @@ object FuzzyJoin {
     * Shared by the gate row AND the scale probe so the measured
     * computation cannot drift from the gated one. */
   def entityComponents(df: DataFrame, keyCol: String, idCol: String,
-      localSolveMax: Long = 1000000L): DataFrame = {
+      localSolveMax: Long = ConnectedComponents.LocalSolveMaxEdges): DataFrame = {
     val base = df.select(col(idCol), col(keyCol))
     val pairs = selfJoinEd1(base, keyCol)
       .join(base.select(col(keyCol).as("key_a"), col(idCol).as("doc_a")),

@@ -30,6 +30,10 @@ import org.apache.spark.sql.types._
 case class DotScaled(left: Expression, right: Expression)
     extends BinaryExpression {
 
+  // malformed input (a null element, a length mismatch) yields null,
+  // so the result is nullable even when the input array is not
+  override def nullable: Boolean = true
+
   override def dataType: DataType = LongType
 
   private def elemOk(t: DataType): Boolean = t match {
@@ -114,6 +118,10 @@ case class DotScaled(left: Expression, right: Expression)
   */
 case class IntDot(left: Expression, right: Expression)
     extends BinaryExpression {
+
+  // malformed input (a null element, a length mismatch) yields null,
+  // so the result is nullable even when the input array is not
+  override def nullable: Boolean = true
 
   override def dataType: DataType = LongType
 

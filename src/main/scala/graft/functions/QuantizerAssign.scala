@@ -66,6 +66,10 @@ case class NearestCentroidDot(child: Expression,
   require(cids.zip(cids.tail).forall(p => p._1 < p._2),
     "centroid ids must be strictly ascending (tie-break contract)")
 
+  // malformed input (a null element, a length mismatch) yields null,
+  // so the result is nullable even when the input array is not
+  override def nullable: Boolean = true
+
   override def dataType: DataType = IntegerType
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -156,6 +160,10 @@ case class NearestCentroidResidual(child: Expression,
     "nearest_centroid_residual needs one id per centroid")
   require(cids.zip(cids.tail).forall(p => p._1 < p._2),
     "centroid ids must be strictly ascending (tie-break contract)")
+
+  // malformed input (a null element, a length mismatch) yields null,
+  // so the result is nullable even when the input array is not
+  override def nullable: Boolean = true
 
   override def dataType: DataType = StructType(Seq(
     StructField("cid", IntegerType, nullable = false),
@@ -273,6 +281,10 @@ case class PqAssignCodes(child: Expression, subDim: Int,
     "codebook codes must be strictly ascending per subspace (tie-break contract)")
 
   private val m: Int = subCodes.size
+
+  // malformed input (a null element, a length mismatch) yields null,
+  // so the result is nullable even when the input array is not
+  override def nullable: Boolean = true
 
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)

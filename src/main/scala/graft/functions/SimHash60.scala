@@ -19,6 +19,10 @@ import org.apache.spark.sql.types._
   */
 case class SimHash60(child: Expression) extends UnaryExpression {
 
+  // a null element yields null, so the result is nullable even when
+  // the input array is not
+  override def nullable: Boolean = true
+
   override def dataType: DataType = LongType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

@@ -176,6 +176,21 @@ class AnalyticsSpec extends AnyFunSuite {
 
   // ---------- PageRank ----------
 
+  /** Both PageRank regimes: the driver solve (the default bound) and the
+    * distributed loop (a bound of 0 forces it). Every PageRank test runs
+    * under each. */
+  private val regimes =
+    Seq("driver" -> ConnectedComponents.LocalSolveMaxEdges, "distributed" -> 0L)
+
+  /** Every output row, sorted by node (a duplicated node stays visible),
+    * plus the rounds executed. */
+  private def pageRank(edges: Seq[(Long, Long)], maxIters: Int, scale: Long,
+      localSolveMax: Long): (Seq[(Long, Long)], Int) = {
+    val (df, rounds) = PageRank.ranksWithRounds(
+      spark, edges.toDF("src", "dst"), maxIters, scale, localSolveMax)
+    (df.as[(Long, Long)].collect().toSeq.sortBy(_._1), rounds)
+  }
+
   /** Driver-side integer reference: the exact fixed-point recurrence on a
     * dense map, summation order irrelevant by construction. */
   private def refRanks(edges: Seq[(Long, Long)], iters: Int,
@@ -199,43 +214,79 @@ class AnalyticsSpec extends AnyFunSuite {
     // chain + cycle + dangling node + duplicate edge + a hub
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L), (1L, 4L),
       (5L, 1L), (5L, 2L), (5L, 3L), (5L, 4L))
-    val got = PageRank.ranks(spark, edges.toDF("src", "dst"), iters = 5,
-        scale = 1000000L)
-      .orderBy(col("node")).as[(Long, Long)].collect().toMap
-    assert(got == refRanks(edges, 5, 1000000L))
+    for ((regime, bound) <- regimes) {
+      val (got, _) = pageRank(edges, 5, 1000000L, bound)
+      assert(got == refRanks(edges, 5, 1000000L).toSeq.sortBy(_._1), regime)
+    }
   }
 
   test("pagerank rank mass is conserved up to integer truncation") {
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L))
     val scale = 1000000000000L
-    val ranks = PageRank.ranks(spark, edges.toDF("src", "dst"), 5, scale)
-      .agg(sum(col("rank"))).as[Long].head()
-    // no dangling nodes here: total mass stays within truncation slack
-    assert(ranks <= scale && ranks > scale - 1000L * 3)
+    for ((regime, bound) <- regimes) {
+      val mass = pageRank(edges, 5, scale, bound)._1.map(_._2).sum
+      // no dangling nodes here: total mass stays within truncation slack
+      assert(mass <= scale && mass > scale - 1000L * 3, regime)
+    }
   }
 
   test("pagerank delta-zero exit: fixed point == full unroll; budget exit runs out the clock") {
-    // star source: node 1 feeds 2 and 3, nothing feeds 1 — rank(1)
-    // pins to the base term from round 1, ranks(2,3) repeat from round
-    // 2, so round 3 must detect the exact fixed point
-    val star = Seq((1L, 2L), (1L, 3L))
-    val (rConv, rounds) = PageRank.ranksWithRounds(
-      spark, star.toDF("src", "dst"), maxIters = 25, scale = 1000000L)
-    assert(rounds == 3, s"star graph must fix at round 3, got $rounds")
-    val conv = rConv.orderBy(col("node")).as[(Long, Long)].collect().toSeq
-    // identity past the fixed point: the early exit equals ANY longer
-    // unroll bit-for-bit — the q_pagerank oracle-compat guarantee
-    assert(conv == refRanks(star, 5, 1000000L).toSeq.sortBy(_._1))
-    assert(conv == refRanks(star, 25, 1000000L).toSeq.sortBy(_._1))
+    for ((regime, bound) <- regimes) {
+      // star source: node 1 feeds 2 and 3, nothing feeds 1 — rank(1)
+      // pins to the base term from round 1, ranks(2,3) repeat from round
+      // 2, so round 3 must detect the exact fixed point
+      val star = Seq((1L, 2L), (1L, 3L))
+      val (conv, rounds) = pageRank(star, 25, 1000000L, bound)
+      assert(rounds == 3, s"$regime: star graph must fix at round 3, got $rounds")
+      // identity past the fixed point: the early exit equals ANY longer
+      // unroll bit-for-bit — the q_pagerank oracle-compat guarantee
+      assert(conv == refRanks(star, 5, 1000000L).toSeq.sortBy(_._1), regime)
+      assert(conv == refRanks(star, 25, 1000000L).toSeq.sortBy(_._1), regime)
 
-    // a cycle at this scale keeps shedding one truncation unit per
-    // round for a while — a 3-round budget must end the loop, not the
-    // (unreached) fixed point, and the result is the exact 3-round state
+      // a cycle at this scale keeps shedding one truncation unit per
+      // round for a while — a 3-round budget must end the loop, not the
+      // (unreached) fixed point, and the result is the exact 3-round state
+      val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L))
+      val (cyc, cycRounds) = pageRank(cycle, 3, 1000000L, bound)
+      assert(cycRounds == 3, s"$regime: the budget, not convergence, must end this loop")
+      assert(cyc == refRanks(cycle, 3, 1000000L).toSeq.sortBy(_._1), regime)
+    }
+  }
+
+  test("pagerank driver and distributed regimes agree bit-for-bit on a random graph") {
+    // ~2k edges over 300 nodes: random edges make cycles, nodes 250-299
+    // never appear as a source (dangling), and 200 repeats are duplicates
+    val rnd = new scala.util.Random(7)
+    val drawn = Seq.fill(1800)((rnd.nextInt(250).toLong, rnd.nextInt(300).toLong))
+    val edges = drawn ++ rnd.shuffle(drawn).take(200)
+    val (driver, driverRounds) = pageRank(edges, 40, 1000000L, regimes.head._2)
+    val (dist, distRounds) = pageRank(edges, 40, 1000000L, 0L)
+    assert(driverRounds < 40, "the delta-zero exit must end this loop")
+    assert(driverRounds == distRounds)
+    assert(driver == dist)
+    assert(driver == refRanks(edges, driverRounds, 1000000L).toSeq.sortBy(_._1))
+  }
+
+  test("pagerank distributed loop releases each superseded round") {
+    // 6 budget-bound rounds (this cycle fixes at round 8); only the node
+    // table and the final round may stay persisted once the call returns
     val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L))
-    val (rCyc, cycRounds) = PageRank.ranksWithRounds(
-      spark, cycle.toDF("src", "dst"), maxIters = 3, scale = 1000000L)
-    assert(cycRounds == 3, "the budget, not convergence, must end this loop")
-    assert(rCyc.orderBy(col("node")).as[(Long, Long)].collect().toSeq ==
-      refRanks(cycle, 3, 1000000L).toSeq.sortBy(_._1))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val (got, rounds) = pageRank(cycle, 6, 1000000L, 0L)
+    assert(rounds == 6)
+    assert(got == refRanks(cycle, 6, 1000000L).toSeq.sortBy(_._1))
+    assert(spark.sparkContext.getPersistentRDDs.size - before <= 2)
+  }
+
+  test("pagerank refuses a null src or dst in both regimes") {
+    val withNulls = Seq(
+      Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (null, 2L)),
+      Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null)))
+    for (edges <- withNulls; (regime, bound) <- regimes) {
+      val err = intercept[IllegalArgumentException] {
+        PageRank.ranksWithRounds(spark, edges.toDF("src", "dst"), 5, 1000000L, bound)
+      }
+      assert(err.getMessage.contains("non-null src and dst"), regime)
+    }
   }
 }
