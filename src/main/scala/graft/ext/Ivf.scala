@@ -34,9 +34,8 @@ object Ivf {
 
   /** `emb`'s columns + `cid` — the MAP-ONLY assignment (guide §2.4:
     * remove shuffles outright): the per-vector argmax runs as the
-    * native [[graft.functions.NearestCentroidDot]] expression — exactly
-    * the old `max_by(cid, struct(dot, -cid))` winner (max exact
-    * scaled-integer dot, ties to the smaller cid — a total,
+    * native [[graft.functions.NearestCentroidDot]] expression (max
+    * exact scaled-integer dot, ties to the smaller cid — a total,
     * engine-independent order), computed in place with ZERO exchange.
     * The embedding stays ON the row, so call sites never pay the
     * corpus-sized `join(emb, "vec_id")` re-attach the two-step
@@ -44,29 +43,17 @@ object Ivf {
     * wide embedding column on both sides just to recover a column the
     * row already had. */
   private[ext] def assignWith(emb: DataFrame,
-      cents: Seq[(Int, Seq[Float])]): DataFrame =
-    if (cents.size <= IvfPq.MapOnlyCbEntries) {
-      // the native [[graft.functions.NearestCentroidDot]] kernel: the
-      // centroid matrix is plan-time reference state and the argmax is
-      // one generated loop per row — zero exchange, zero per-candidate
-      // allocation (a greatest-over-structs chain measured 2× slower on
-      // the PQ twin; an HOF fold drops the dot to interpreted eval)
-      val sorted = cents.sortBy(_._1)
-      emb.withColumn("cid", org.apache.spark.sql.GraftShims.column(
-        graft.functions.NearestCentroidDot(
-          org.apache.spark.sql.GraftShims.expression(col("embedding")),
-          sorted.map(_._1), sorted.map(_._2.map(_.toDouble)))))
-    } else {
-      // degenerate corpus-sized quantizer (unreachable from the
-      // engine's own configurations): the distributed broadcast-join +
-      // max_by shape, re-joined to keep the embedding on the row
-      val asn = emb.crossJoin(broadcast(centroidDf(emb.sparkSession, cents)))
-        .withColumn("dot", dotScaled(col("embedding"), col("cvec")))
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("cid"), struct(col("dot"), (-col("cid")).as("nc")))
-          .as("cid"))
-      emb.join(asn, "vec_id")
-    }
+      cents: Seq[(Int, Seq[Float])]): DataFrame = {
+    // the centroid matrix is plan-time reference state and the argmax is
+    // one generated loop per row — zero exchange, zero per-candidate
+    // allocation (a greatest-over-structs chain measured 2× slower on
+    // the PQ twin; an HOF fold drops the dot to interpreted eval)
+    val sorted = cents.sortBy(_._1)
+    emb.withColumn("cid", org.apache.spark.sql.GraftShims.column(
+      graft.functions.NearestCentroidDot(
+        org.apache.spark.sql.GraftShims.expression(col("embedding")),
+        sorted.map(_._1), sorted.map(_._2.map(_.toDouble)))))
+  }
 
   /** The rows holding the `n` smallest vec_ids, found WITHOUT a
     * corpus-wide scan of the wide embedding column: a narrow id-only

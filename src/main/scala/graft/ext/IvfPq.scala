@@ -71,45 +71,15 @@ object IvfPq {
     * corpus twice to recover columns the assignment already held
     * (guide §2.4), and its replacement `zip_with` would have run
     * interpreted (guide §4). */
-  def residuals(emb: DataFrame, cents: Seq[(Int, Seq[Float])]): DataFrame =
-    if (cents.size <= MapOnlyCbEntries) {
-      val sorted = cents.sortBy(_._1)
-      emb.select(col("vec_id"), org.apache.spark.sql.GraftShims.column(
-          graft.functions.NearestCentroidResidual(
-            org.apache.spark.sql.GraftShims.expression(col("embedding")),
-            sorted.map(_._1), sorted.map(_._2.map(_.toDouble)))).as("_cr"))
-        .select(col("vec_id"), col("_cr.cid").as("cid"),
-          col("_cr.res").as("res"))
-    } else
-      Ivf.assign(emb, cents)
-        .join(emb, "vec_id")
-        .join(broadcast(coarseDf(emb.sparkSession, cents)), "cid")
-        .select(col("vec_id"), col("cid"),
-          zip_with(col("embedding"), col("cvec"),
-            (x, c) => x.cast("double") - c.cast("double")).as("res"))
-
-  private def subSlices(df: DataFrame, vecCol: String, m: Int, subDim: Int,
-      out: String): DataFrame =
-    df.withColumn("_x", explode(array((0 until m).map(sI =>
-        struct(lit(sI).as("sub"),
-          slice(col(vecCol), sI * subDim + 1, subDim).as(out))): _*)))
-      .drop(vecCol)
-      .withColumn("sub", col("_x.sub"))
-      .withColumn(out, col("_x." + out))
-      .drop("_x")
-
-  /** Map-only vs broadcast-join dispatch bound for quantizer argmins:
-    * up to this many codebook/centroid entries the assignment inlines as
-    * a LITERAL `greatest`/`least` chain — fully whole-stage-codegen,
-    * zero exchange; past it the literal expression tree stops being
-    * reasonable (and a degenerate corpus-sized codebook must never
-    * inline), so the legacy distributed broadcast-join + `min_by`/
-    * `max_by` path keeps per-row work bounded. The engine's production
-    * configurations are far below it (IVF nLists = 16, PQ/IVF-PQ
-    * m·k = 128); the deliberate exception above it is
-    * `q_cosine_pq_exact`'s corpus-sized codebook (m·k = 1600), which
-    * keeps the distributed path by design. */
-  private[ext] val MapOnlyCbEntries = 512
+  def residuals(emb: DataFrame, cents: Seq[(Int, Seq[Float])]): DataFrame = {
+    val sorted = cents.sortBy(_._1)
+    emb.select(col("vec_id"), org.apache.spark.sql.GraftShims.column(
+        graft.functions.NearestCentroidResidual(
+          org.apache.spark.sql.GraftShims.expression(col("embedding")),
+          sorted.map(_._1), sorted.map(_._2.map(_.toDouble)))).as("_cr"))
+      .select(col("vec_id"), col("_cr.cid").as("cid"),
+        col("_cr.res").as("res"))
+  }
 
   /** (vec_id, cid, codes): ALL m nearest residual-codebook entries as
     * one array column in subspace order — the exact integer
@@ -130,41 +100,11 @@ object IvfPq {
     * self-dot is precomputed at construction with the identical
     * per-element `floor(x·y·1e15)` chain `dotScaled` generates (IEEE
     * doubles both sides; long addition associative) — ONE dot per
-    * candidate instead of three. Codebooks larger than
-    * [[MapOnlyCbEntries]] keep the legacy distributed per-sub path and
-    * fold it back to the array layout with a deterministic
-    * sort-by-sub collect (same winners, same order). */
+    * candidate instead of three. */
   def assignCodes(res: DataFrame, cb: Seq[(Int, Int, Seq[Double])],
       m: Int, subDim: Int): DataFrame =
-    if (cb.size <= MapOnlyCbEntries)
-      res.select(col("vec_id"), col("cid"),
-        codesColumn(cb, m, subDim).as("codes"))
-    else
-      subSlices(res, "res", m, subDim, "svec")
-        .join(broadcast(cbDf(res.sparkSession, cb)), "sub")
-        .withColumn("d2", dotScaled(col("svec"), col("svec"))
-          - lit(2L) * dotScaled(col("svec"), col("rvec"))
-          + dotScaled(col("rvec"), col("rvec")))
-        .groupBy(col("vec_id"), col("cid"), col("sub"))
-        .agg(min_by(col("code"), struct(col("d2"), col("code"))).as("code"))
-        .groupBy(col("vec_id"), col("cid"))
-        .agg(array_sort(collect_list(struct(col("sub"), col("code"))))
-          .as("sc"))
-        .select(col("vec_id"), col("cid"),
-          expr("transform(sc, x -> x.code)").as("codes"))
-
-  /** The [[graft.functions.PqAssignCodes]] column over a `res` column —
-    * shared by [[assignCodes]] and the train loop (which keeps `res` on
-    * the row to avoid re-joining the slices). */
-  private def codesColumn(cb: Seq[(Int, Int, Seq[Double])], m: Int,
-      subDim: Int): org.apache.spark.sql.Column = {
-    val bySub = cb.groupBy(_._1)
-    val ordered = (0 until m).map(sI => bySub(sI).sortBy(_._2))
-    org.apache.spark.sql.GraftShims.column(
-      graft.functions.PqAssignCodes(
-        org.apache.spark.sql.GraftShims.expression(col("res")), subDim,
-        ordered.map(_.map(_._2)), ordered.map(_.map(_._3))))
-  }
+    res.select(col("vec_id"), col("cid"),
+      Pq.pqColumn(col("res"), subDim, lutEntries(cb, m)).as("codes"))
 
   /** Build: coarse quantizer ([[Ivf.train]], `itersCoarse` Lloyd
     * rounds), residuals, residual codebooks seeded from the first `k`
@@ -185,15 +125,9 @@ object IvfPq {
     } yield (sI, j, v.slice(sI * subDim, (sI + 1) * subDim))
     (1 to itersPq).foreach { _ =>
       // assignment keeps `res` ON the row (map-only), so the mean pass
-      // never re-joins the slices it already held — the legacy path
-      // re-attaches res for codebooks past the map-only gate only
-      val assigned =
-        if (cb.size <= MapOnlyCbEntries)
-          res.withColumn("_codes", codesColumn(cb, m, subDim))
-        else assignCodes(res, cb, m, subDim)
-          .withColumnRenamed("codes", "_codes")
-          .join(res, Seq("vec_id", "cid"))
-      val means = assigned
+      // never re-joins the slices it already held
+      val means = res
+        .withColumn("_codes", Pq.pqColumn(col("res"), subDim, lutEntries(cb, m)))
         .withColumn("_x", explode(array((0 until m).map(sI =>
           struct(lit(sI).as("sub"),
             element_at(col("_codes"), sI + 1).as("code"),
@@ -216,43 +150,42 @@ object IvfPq {
     Index(cents, cb, m, subDim, codes, norms(emb).localCheckpoint(true))
   }
 
-  /** The per-query ADC lookup table carried as ONE array column,
-    * computed in place from the query embedding: element
-    * `sub·k + code + 1` is the exact scaled dot of the query's sub-slice
-    * with that code's codebook entry — bit-identical to the relational
-    * LUT table's `dotScaled(qs, rvec)` — so the (query_id, sub, code)
-    * LUT join collapses to an `element_at` lookup on the row the probe
-    * join already produced (guide §2.4: in [[probeShuffled]] that join
-    * SORTED the full ADC candidate stream, the plan's largest exchange;
-    * in [[probe]] it was a per-candidate broadcast hash probe). Only
-    * valid for dense per-sub codes (0..k-1, uniform k — exactly
-    * [[buildIndex]]'s construction); [[lutEntries]] returns None
-    * otherwise and callers keep the relational join. */
-  private def lutEntries(cb: Seq[(Int, Int, Seq[Double])],
-      m: Int): Option[Seq[Seq[Seq[Double]]]] = {
-    if (cb.size > MapOnlyCbEntries) return None
+  /** A codebook's entries by position — `(s)(j)` is code j of
+    * subspace s — enforcing the DENSE contract every assignment and
+    * lookup-table path relies on: subspaces 0..m-1, codes 0..k-1 in
+    * each, one uniform k (exactly [[buildIndex]]'s and [[Pq.train]]'s
+    * construction). Anything else fails here rather than mis-scoring
+    * later. */
+  private[ext] def lutEntries(cb: Seq[(Int, Int, Seq[Double])],
+      m: Int): Seq[Seq[Seq[Double]]] = {
     val bySub = cb.groupBy(_._1)
-    if (bySub.keySet != (0 until m).toSet) return None
+    require(m > 0 && bySub.keySet == (0 until m).toSet,
+      s"codebook must cover subspaces 0..${m - 1}, got " +
+        bySub.keySet.toSeq.sorted.mkString("[", ",", "]"))
     val ordered = (0 until m).map(sI => bySub(sI).sortBy(_._2))
     val k = ordered.head.size
-    if (ordered.forall(es => es.size == k && es.map(_._2) == (0 until k)))
-      Some(ordered.map(_.map(_._3)))
-    else None
+    require(ordered.forall(_.map(_._2) == (0 until k)),
+      s"codebook must hold codes 0..${k - 1} in every subspace (uniform k)")
+    ordered.map(_.map(_._3))
   }
 
-  private def lutArray(qe: org.apache.spark.sql.Column, subDim: Int,
+  /** The per-query ADC lookup table carried as ONE array column,
+    * computed in place from the query embedding by the native
+    * [[graft.functions.PqLut]] kernel: element `sub·k + code + 1` is the
+    * exact scaled dot of the query's sub-slice with that code's
+    * codebook entry, so scoring a candidate is an `element_at` lookup on
+    * the row the probe join already produced — no (query_id, sub, code)
+    * table join (guide §2.4). */
+  private[ext] def lutArray(qe: org.apache.spark.sql.Column, subDim: Int,
       entries: Seq[Seq[Seq[Double]]]): org.apache.spark.sql.Column =
-    array(entries.zipWithIndex.flatMap { case (es, sI) =>
-      val qs = slice(qe, sI * subDim + 1, subDim)
-      es.map(rv => dotScaled(qs, array(rv.map(lit): _*)))
-    }: _*)
+    org.apache.spark.sql.GraftShims.column(graft.functions.PqLut(
+      org.apache.spark.sql.GraftShims.expression(qe), subDim, entries))
 
   /** The complete per-candidate ADC sum `Σ_s lut[s·k + codes[s]]` over
     * the row's `codes` array and the probe row's carried `_lut` — m
     * element_at lookups, whole-stage codegen, exact long addition (any
-    * grouping gives the identical value, so this equals the former
-    * m-row `sum(d)` aggregate bit-for-bit). */
-  private def adcSum(k: Int, m: Int): org.apache.spark.sql.Column =
+    * grouping gives the identical value). */
+  private[ext] def adcSum(k: Int, m: Int): org.apache.spark.sql.Column =
     (0 until m).map(sI => element_at(col("_lut"),
       lit(sI * k + 1) + element_at(col("codes"), sI + 1))).reduce(_ + _)
 
@@ -267,48 +200,27 @@ object IvfPq {
     val q0 = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("cdot").desc, col("cid").asc)
-    val lutE = lutEntries(index.cb, index.m)
-    val probes0 = q0
+    val es = lutEntries(index.cb, index.m)
+    val probes = q0
       .crossJoin(broadcast(coarseDf(s, index.cents)))
       .withColumn("cdot", dotScaled(col("qe"), col("cvec")))
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= nProbe)
-    val probes = lutE match {
-      case Some(es) => probes0.select(col("query_id"), col("cid"),
-        col("cdot"), lutArray(col("qe"), index.subDim, es).as("_lut"))
-      case None => probes0.select(col("query_id"), col("cid"), col("cdot"))
-    }
+      .select(col("query_id"), col("cid"), col("cdot"),
+        lutArray(col("qe"), index.subDim, es).as("_lut"))
     // probes is bounded by the query batch (|queries| x nProbe rows):
     // broadcast it into the corpus-sized codes table — a shuffle join
     // on the 16-value cid key would funnel the corpus through nLists
     // partitions at scale
     val tkl = udaf(new Similarity.TopKLongAgg(shortlist),
       org.apache.spark.sql.Encoders.product[Similarity.ScoredL])
-    val scored0 = index.codes.join(broadcast(probes), "cid")
+    // one candidate ROW per (query, neighbor) — codes ride as an
+    // array, the LUT rides on the probe row, so the row computes its
+    // COMPLETE score in place, with no (query_id, neighbor_id) re-fold
+    val cand = index.codes.join(broadcast(probes), "cid")
       .filter(col("neighbor_id") =!= col("query_id"))
-    val cand = (lutE match {
-      case Some(es) =>
-        // one candidate ROW per (query, neighbor) — codes ride as an
-        // array, the LUT rides on the probe row, so the row computes
-        // its COMPLETE score in place and the former m-row
-        // (query_id, neighbor_id) re-fold exchange is gone
-        scored0.select(col("query_id"), col("neighbor_id"),
-          (col("cdot") + adcSum(es.head.size, index.m)).as("score"))
-      case None =>
-        // non-dense codebook fallback: the relational per-query LUT
-        // over the exploded codes, folded back per (query, neighbor)
-        val lut = subSlices(q0, "qe", index.m, index.subDim, "qs")
-          .join(broadcast(cbDf(s, index.cb)), "sub")
-          .select(col("query_id"), col("sub"), col("code"),
-            dotScaled(col("qs"), col("rvec")).as("d"))
-        scored0.select(col("query_id"), col("neighbor_id"), col("cdot"),
-            posexplode(col("codes")).as(Seq("sub", "code")))
-          .join(broadcast(lut), Seq("query_id", "sub", "code"))
-          .groupBy(col("query_id"), col("neighbor_id"))
-          // cdot is constant per (query, cid) and a neighbor lives in
-          // ONE list: max() just carries it through the m-row group
-          .agg((max(col("cdot")) + sum(col("d"))).as("score"))
-    })
+      .select(col("query_id"), col("neighbor_id"),
+        (col("cdot") + adcSum(es.head.size, index.m)).as("score"))
       // bounded-heap shortlist selection (score desc, neighbor_id asc):
       // partial-aggregates map-side, so only `shortlist` rows per
       // (partition, query) reach the exchange — a row_number window here
@@ -333,58 +245,40 @@ object IvfPq {
     *     row into `salts` copies — nLists·salts effective keys, corpus
     *     rows never replicate (only the |Q|·nProbe probe rows do).
     *   - the per-query ADC LUT rides the probe rows as one m·k-long
-    *     array column ([[lutArray]]) and each candidate's `d` is an
-    *     `element_at` lookup — the former relational LUT join sorted
-    *     the FULL ADC candidate stream on (query_id, sub, code).
+    *     array column ([[lutArray]]) and each candidate's score is m
+    *     `element_at` lookups — no LUT join sorts the candidate stream.
     *   - the exact re-rank shuffle-joins the query embeddings
     *     ([[Similarity.rerankExact]] with broadcastQueries = false).
     *
-    * The only broadcasts left are the two index-geometry tables
-    * (centroids: nLists rows; codebooks: m·k rows) — both O(index
-    * config), independent of corpus and query-set size. */
+    * The only broadcast left is the centroid table (nLists rows — O(index
+    * config), independent of corpus and query-set size); the codebook
+    * rides inside the LUT kernel as plan-time state. */
   def probeShuffled(emb: DataFrame, index: Index, queries: DataFrame,
       k: Int, nProbe: Int, shortlist: Int, salts: Int = 8): DataFrame = {
     val s = queries.sparkSession
     val q0 = queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("cdot").desc, col("cid").asc)
-    val lutE = lutEntries(index.cb, index.m)
-    val probes0 = q0
+    val es = lutEntries(index.cb, index.m)
+    val probes = q0
       .crossJoin(broadcast(coarseDf(s, index.cents)))
       .withColumn("cdot", dotScaled(col("qe"), col("cvec")))
       .withColumn("rn", row_number().over(wq))
       .filter(col("rn") <= nProbe)
-    val probes = (lutE match {
-      case Some(es) => probes0.select(col("query_id"), col("cid"),
-        col("cdot"), lutArray(col("qe"), index.subDim, es).as("_lut"))
-      case None => probes0.select(col("query_id"), col("cid"), col("cdot"))
-    }).withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
+      .select(col("query_id"), col("cid"), col("cdot"),
+        lutArray(col("qe"), index.subDim, es).as("_lut"))
+      .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
     val tkl = udaf(new Similarity.TopKLongAgg(shortlist),
       org.apache.spark.sql.Encoders.product[Similarity.ScoredL])
-    val scored0 = index.codes
+    // the carried-LUT lookup over the codes ARRAY: one candidate row
+    // per (query, neighbor) computes its complete score in place, with
+    // no (query_id, neighbor_id) re-fold exchange (guide §2.3/§2.4)
+    val cand = index.codes
       .withColumn("salt", pmod(col("neighbor_id"), lit(salts)).cast("int"))
       .join(probes, Seq("cid", "salt"))
       .filter(col("neighbor_id") =!= col("query_id"))
-    val cand = (lutE match {
-      // the carried-LUT lookup over the codes ARRAY: one candidate row
-      // per (query, neighbor) computes its complete score in place —
-      // the former per-sub layout pushed m× these rows through the
-      // salted join AND paid a (query_id, neighbor_id) re-fold
-      // exchange of the full candidate stream (guide §2.3/§2.4)
-      case Some(es) =>
-        scored0.select(col("query_id"), col("neighbor_id"),
-          (col("cdot") + adcSum(es.head.size, index.m)).as("score"))
-      case None =>
-        val lut = subSlices(q0, "qe", index.m, index.subDim, "qs")
-          .join(broadcast(cbDf(s, index.cb)), "sub")
-          .select(col("query_id"), col("sub"), col("code"),
-            dotScaled(col("qs"), col("rvec")).as("d"))
-        scored0.select(col("query_id"), col("neighbor_id"), col("cdot"),
-            posexplode(col("codes")).as(Seq("sub", "code")))
-          .join(lut, Seq("query_id", "sub", "code"))
-          .groupBy(col("query_id"), col("neighbor_id"))
-          .agg((max(col("cdot")) + sum(col("d"))).as("score"))
-    })
+      .select(col("query_id"), col("neighbor_id"),
+        (col("cdot") + adcSum(es.head.size, index.m)).as("score"))
       .groupBy(col("query_id"))
       .agg(tkl(col("neighbor_id"), col("score")).as("top"))
       .select(col("query_id"), explode(col("top.items")).as("x"))
@@ -459,6 +353,20 @@ object IvfPq {
     import graft.land.AtomicLanding
     val snap = AtomicLanding.linkedSnapshot(path).getOrElse(
       throw new IllegalStateException(s"no saved IVF-PQ index at $path"))
+    val (cents, cb, codes) = pinnedMembers(s, path, snap)
+    Index(cents, cb, cb.map(_._1).max + 1, cb.head._3.size, codes,
+      AtomicLanding.readVersion(s, s"$path/n2", snap.members("n2")))
+  }
+
+  /** A saved index's pinned quantizers and codes member, refusing (with
+    * the path named) a layout the single assignment/LUT path cannot
+    * score: a codebook that is not dense ([[lutEntries]]), or a codes
+    * member without the `codes: array<int>` column (an older per-sub
+    * layout — probing it fails late, appending to it mixes schemas). */
+  private def pinnedMembers(s: SparkSession, path: String,
+      snap: graft.land.AtomicLanding.LinkedSnapshot)
+      : (Seq[(Int, Seq[Float])], Seq[(Int, Int, Seq[Double])], DataFrame) = {
+    import graft.land.AtomicLanding
     val cents = AtomicLanding
       .readVersion(s, s"$path/cents", snap.members("cents"))
       .orderBy("cid").collect()
@@ -468,9 +376,20 @@ object IvfPq {
       .orderBy("sub", "code").collect()
       .map(r => (r.getAs[Int]("sub"), r.getAs[Int]("code"),
         r.getAs[scala.collection.Seq[Double]]("rvec").toSeq)).toSeq
-    Index(cents, cb, cb.map(_._1).max + 1, cb.head._3.size,
-      AtomicLanding.readVersion(s, s"$path/codes", snap.members("codes")),
-      AtomicLanding.readVersion(s, s"$path/n2", snap.members("n2")))
+    try lutEntries(cb, if (cb.isEmpty) 0 else cb.map(_._1).max + 1)
+    catch {
+      case e: IllegalArgumentException => throw new IllegalStateException(
+        s"$path: saved codebook is not dense: ${e.getMessage}", e)
+    }
+    val codes = AtomicLanding.readVersion(s, s"$path/codes", snap.members("codes"))
+    codes.schema.find(_.name == "codes").map(_.dataType) match {
+      case Some(org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.IntegerType, _)) => ()
+      case other => throw new IllegalStateException(
+        s"$path: saved codes member lacks the codes: array<int> column " +
+          s"(found ${other.fold("no codes column")(_.simpleString)})")
+    }
+    (cents, cb, codes)
   }
 
   /** Index MAINTENANCE: append a batch of vectors to a [[save]]d index
@@ -548,6 +467,9 @@ object IvfPq {
             "(codes ahead of the root pin, n2 not) — re-run save() over " +
             "the intended index to heal before appending")
       } else {
+      // refuse a layout the codes below could not extend before any
+      // member commits
+      val (cents, cb, _) = pinnedMembers(s, path, snap)
       def freshFor(t: String, keyCol: String): DataFrame =
         if (batchId.isDefined &&
             AtomicLanding.lastBatchId(t, writer).isDefined) {
@@ -576,16 +498,6 @@ object IvfPq {
         val cNew =
           if (!freshCodes.isEmpty ||
               (batchId.isDefined && !committed(codesT))) {
-            val cents = AtomicLanding
-              .readVersion(s, s"$path/cents", snap.members("cents"))
-              .orderBy("cid").collect()
-              .map(r => (r.getAs[Int]("cid"),
-                r.getAs[scala.collection.Seq[Float]]("cvec").toSeq)).toSeq
-            val cb = AtomicLanding
-              .readVersion(s, s"$path/cb", snap.members("cb"))
-              .orderBy("sub", "code").collect()
-              .map(r => (r.getAs[Int]("sub"), r.getAs[Int]("code"),
-                r.getAs[scala.collection.Seq[Double]]("rvec").toSeq)).toSeq
             AtomicLanding.commit(
               assignCodes(residuals(freshCodes, cents), cb,
                   cb.map(_._1).max + 1, cb.head._3.size)

@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import Similarity.dotScaled
 
 /** Product quantization — the codebook compression tier of the ANN
   * stack (scalar int8 in [[Quantize]] is its 1-dim-subspace degenerate
@@ -26,31 +25,14 @@ import Similarity.dotScaled
   */
 object Pq {
 
-  /** codebooks as a small broadcastable table: (sub, cid, cvec). */
-  final case class Codebooks(m: Int, subDim: Int, cents: Seq[(Int, Int, Seq[Float])])
-
-  private def centTable(spark: org.apache.spark.sql.SparkSession,
-      cb: Codebooks): DataFrame = {
-    import spark.implicits._
-    cb.cents.toDF("sub", "cid", "cvec")
-  }
-
-  /** One subspace's codebook as a single-subspace
-    * [[graft.functions.PqAssignCodes]] argmin over a `subDim`-sized
-    * vector column — the native generated loop (an HOF fold or a
-    * least-over-structs chain both measured slower; guide §4). Winner
-    * semantics are the legacy `min_by(cid, struct(d2, cid))`: exact
-    * integer sub-distance, ties to the smaller cid (the expression
-    * drops the constant `dot(svec, svec)` term — order unchanged — and
-    * precomputes entry self-dots with the identical IEEE chain). */
-  private def argminCid(sv: org.apache.spark.sql.Column, subDim: Int,
-      entries: Seq[(Int, Int, Seq[Float])]): org.apache.spark.sql.Column = {
-    val sorted = entries.sortBy(_._2)
-    element_at(org.apache.spark.sql.GraftShims.column(
-      graft.functions.PqAssignCodes(
-        org.apache.spark.sql.GraftShims.expression(sv), subDim,
-        Seq(sorted.map(_._2)),
-        Seq(sorted.map(_._3.map(_.toDouble))))), 1)
+  /** Codebooks (sub, cid, cvec). Dense by contract: subspaces 0..m-1,
+    * codes 0..k-1 in each, one uniform k — [[train]] builds exactly
+    * that, and anything else is rejected here, at construction, because
+    * the ADC lookup table ([[IvfPq.lutEntries]]) indexes codes by
+    * position. */
+  final case class Codebooks(m: Int, subDim: Int, cents: Seq[(Int, Int, Seq[Float])]) {
+    private[ext] val entries: Seq[Seq[Seq[Double]]] =
+      IvfPq.lutEntries(cents.map { case (s, c, v) => (s, c, v.map(_.toDouble)) }, m)
   }
 
   /** (vec_id, sub, svec): the m contiguous sub-slices of each vector. */
@@ -61,43 +43,31 @@ object Pq {
       .select(col("vec_id"), col("x.sub"), col("x.svec"))
 
   /** (vec_id, sub, cid): nearest codebook centroid per subspace, by the
-    * exact integer sub-distance, ties to the lower cid.
-    *
-    * MAP-ONLY for foldable codebooks (guide §2.4): the codebook rides
-    * in as one broadcast row ([[cbRow]]) and each exploded (vec_id,
-    * sub, svec) row computes its argmin in place — zero exchange, where
-    * the old shape broadcast-joined to N·m·k rows and paid a
-    * `groupBy(vec_id, sub)` exchange of N·m rows to fold them back.
-    * Codebooks past [[IvfPq.MapOnlyCbEntries]] (the degenerate
-    * corpus-sized exact-PQ shape at extreme k) keep the legacy
-    * distributed join + `min_by` path. */
+    * exact integer sub-distance, ties to the lower cid. Projection of
+    * [[assignCarry]]. */
   def assign(subs: DataFrame, cb: Codebooks): DataFrame =
-    if (cb.cents.size <= IvfPq.MapOnlyCbEntries)
-      assignCarry(subs, cb).select(col("vec_id"), col("sub"), col("cid"))
-    else
-      subs.join(broadcast(centTable(subs.sparkSession, cb)), "sub")
-        .withColumn("d2",
-          dotScaled(col("svec"), col("svec")) - lit(2L) * dotScaled(col("svec"), col("cvec"))
-            + dotScaled(col("cvec"), col("cvec")))
-        .groupBy(col("vec_id"), col("sub"))
-        .agg(min_by(col("cid"), struct(col("d2"), col("cid"))).as("cid"))
+    assignCarry(subs, cb).select(col("vec_id"), col("sub"), col("cid"))
 
-  /** [[assign]] with `svec` carried through — (vec_id, sub, svec, cid).
-    * Map-only when the codebook inlines: the per-row `sub` selects its
-    * subspace's literal chain through a lazily-evaluated CASE branch
-    * (only the matching branch's dots run). The legacy path re-joins
-    * `subs` (the shape every caller previously paid unconditionally). */
-  private def assignCarry(subs: DataFrame, cb: Codebooks): DataFrame =
-    if (cb.cents.size <= IvfPq.MapOnlyCbEntries) {
-      val bySub = cb.cents.groupBy(_._1).toSeq.sortBy(_._1)
-      val cid = bySub.tail.foldLeft(
-        when(col("sub") === bySub.head._1,
-          argminCid(col("svec"), cb.subDim, bySub.head._2))) {
-        case (acc, (sI, entries)) =>
-          acc.when(col("sub") === sI, argminCid(col("svec"), cb.subDim, entries))
-      }
-      subs.withColumn("cid", cid)
-    } else assign(subs, cb).join(subs, Seq("vec_id", "sub"))
+  /** `subs` + `cid`, MAP-ONLY (guide §2.4): each exploded (vec_id, sub,
+    * svec) row runs its own subspace's codebook as a single-subspace
+    * [[graft.functions.PqAssignCodes]] argmin, selected through a
+    * lazily-evaluated CASE branch (only the matching branch runs) —
+    * zero exchange, `svec` stays on the row. */
+  private def assignCarry(subs: DataFrame, cb: Codebooks): DataFrame = {
+    val branches = cb.entries.zipWithIndex.map { case (es, sI) =>
+      (sI, element_at(pqColumn(col("svec"), cb.subDim, Seq(es)), 1)) }
+    subs.withColumn("cid", branches.tail.foldLeft(
+      when(col("sub") === branches.head._1, branches.head._2)) {
+        case (acc, (sI, cid)) => acc.when(col("sub") === sI, cid) })
+  }
+
+  /** The [[graft.functions.PqAssignCodes]] column over `vec` for the
+    * dense per-subspace entries `es` (code j = position j). */
+  private[ext] def pqColumn(vec: org.apache.spark.sql.Column, subDim: Int,
+      es: Seq[Seq[Seq[Double]]]): org.apache.spark.sql.Column =
+    org.apache.spark.sql.GraftShims.column(graft.functions.PqAssignCodes(
+      org.apache.spark.sql.GraftShims.expression(vec), subDim,
+      es.map(_.indices), es))
 
   /** Train per-subspace codebooks: seed sub-codebook j from the j-th
     * vector (by vec_id — deterministic), then Lloyd iterations over ALL
@@ -131,84 +101,32 @@ object Pq {
     cb
   }
 
-  /** (vec_id, codes): each vector as m codebook ids in subspace order.
-    * Map-only for foldable codebooks: all m argmins compute on the
-    * un-exploded row, so the former Generate → join → two-exchange
-    * re-assembly (`groupBy(vec_id, sub)` then `groupBy(vec_id)`
-    * collect_list) is a single project. */
+  /** (vec_id, codes): each vector as m codebook ids in subspace order —
+    * all m argmins in one [[graft.functions.PqAssignCodes]] project on
+    * the un-exploded row. */
   def encode(emb: DataFrame, cb: Codebooks): DataFrame =
-    if (cb.cents.size <= IvfPq.MapOnlyCbEntries) {
-      val bySub = cb.cents.groupBy(_._1)
-      val ordered = (0 until cb.m).map(sI => bySub(sI).sortBy(_._2))
-      emb.select(col("vec_id"), org.apache.spark.sql.GraftShims.column(
-        graft.functions.PqAssignCodes(
-          org.apache.spark.sql.GraftShims.expression(col("embedding")),
-          cb.subDim,
-          ordered.map(_.map(_._2)),
-          ordered.map(_.map(_._3.map(_.toDouble))))).as("codes"))
-    }
-    else
-      assign(subvectors(emb, cb.m, cb.subDim), cb)
-        .groupBy(col("vec_id"))
-        .agg(array_sort(collect_list(struct(col("sub"), col("cid")))).as("sc"))
-        .select(col("vec_id"), expr("transform(sc, x -> x.cid)").as("codes"))
+    emb.select(col("vec_id"),
+      pqColumn(col("embedding"), cb.subDim, cb.entries).as("codes"))
 
   /** ADC top-k: exact query subvectors against candidate CODES.
     * Returns (query_id, rnk, neighbor_id).
     *
-    * For dense foldable codebooks (cids 0..k-1 per subspace — exactly
-    * [[train]]'s construction) the candidate stream is ONE row per
-    * (query, neighbor): codes ride as [[encode]]'s array, the per-query
-    * m·k LUT rides the broadcast query row as one array column, and
-    * each row computes its complete score as m `element_at` adds —
-    * exact long addition, bit-identical to the former per-sub
-    * `sum(d)` fold, which pushed m× the rows through the join AND paid
-    * a (query_id, neighbor_id) re-fold exchange (guide §2.3/§2.4).
-    * Non-dense or oversized codebooks (the degenerate exact-PQ gate)
-    * keep the relational (query, sub, cid) LUT join. */
+    * The candidate stream is ONE row per (query, neighbor): codes ride
+    * as [[encode]]'s array, the per-query m·k LUT rides the broadcast
+    * query row as one array column ([[IvfPq.lutArray]]), and each row
+    * computes its complete score as m `element_at` adds
+    * ([[IvfPq.adcSum]]) — exact long addition (guide §2.3/§2.4). */
   def topKAdc(emb: DataFrame, queries: DataFrame, k: Int, cb: Codebooks): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = emb.sparkSession
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)
-    val bySub = cb.cents.groupBy(_._1)
-    val dense = cb.cents.size <= IvfPq.MapOnlyCbEntries &&
-      bySub.keySet == (0 until cb.m).toSet && {
-        val ordered = (0 until cb.m).map(sI => bySub(sI).sortBy(_._2))
-        val kk = ordered.head.size
-        ordered.forall(es => es.size == kk && es.map(_._2) == (0 until kk))
-      }
-    val scored =
-      if (dense) {
-        val ordered = (0 until cb.m).map(sI => bySub(sI).sortBy(_._2))
-        val kk = ordered.head.size
-        val codes = encode(emb, cb)
-          .select(col("vec_id").as("neighbor_id"), col("codes"))
-        val qlut = queries.select(col("vec_id").as("query_id"),
-          array(ordered.zipWithIndex.flatMap { case (es, sI) =>
-            val qs = slice(col("embedding"), sI * cb.subDim + 1, cb.subDim)
-            es.map(e => dotScaled(qs, array(e._3.map(lit): _*)))
-          }: _*).as("_lut"))
-        codes.join(broadcast(qlut), col("neighbor_id") =!= col("query_id"))
-          .select(col("query_id"), col("neighbor_id"),
-            (0 until cb.m).map(sI => element_at(col("_lut"),
-              lit(sI * kk + 1) + element_at(col("codes"), sI + 1)))
-              .reduce(_ + _).as("score"))
-      } else {
-        val codes = assign(subvectors(emb, cb.m, cb.subDim), cb)
-          .select(col("vec_id").as("neighbor_id"), col("sub"), col("cid"))
-        val qsubs = subvectors(queries, cb.m, cb.subDim)
-          .select(col("vec_id").as("query_id"), col("sub"), col("svec"))
-        // the per-query lookup table: m*k scaled dots per query
-        val lut = qsubs.join(broadcast(centTable(spark, cb)), "sub")
-          .select(col("query_id"), col("sub"), col("cid"),
-            dotScaled(col("svec"), col("cvec")).as("d"))
-        codes.join(broadcast(lut), Seq("sub", "cid"))
-          .filter(col("neighbor_id") =!= col("query_id"))
-          .groupBy(col("query_id"), col("neighbor_id"))
-          .agg(sum(col("d")).as("score"))
-      }
-    scored
+    val codes = encode(emb, cb)
+      .select(col("vec_id").as("neighbor_id"), col("codes"))
+    val qlut = queries.select(col("vec_id").as("query_id"),
+      IvfPq.lutArray(col("embedding"), cb.subDim, cb.entries).as("_lut"))
+    codes.join(broadcast(qlut), col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        IvfPq.adcSum(cb.entries.head.size, cb.m).as("score"))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("query_id"), col("rnk"), col("neighbor_id"))
@@ -216,7 +134,7 @@ object Pq {
 
   /** The production PQ shape: ADC prunes the corpus to a `shortlist`
     * per query, exact scaled-integer cosine re-ranks only the
-    * shortlist. Degenerate-exact configuration (the gate): a codebook
+    * shortlist. Degenerate-exact configuration: a codebook
     * with `k = |corpus|` seeds and zero Lloyd iterations makes every
     * subvector its own centroid — reconstruction is exact, the ADC
     * score equals the exact dot bit-for-bit (same per-element floors,

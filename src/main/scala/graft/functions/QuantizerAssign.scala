@@ -2,18 +2,19 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Native quantizer-assignment expressions — the map-only argmax/argmin
-  * kernels of the ANN tier (guide §2.4 + §4 applied together): the
-  * quantizer geometry (centroids / PQ codebooks, bounded by contract)
-  * is CONSTRUCTOR state baked into the generated code as reference
-  * arrays, and each row's nearest-centroid decision runs as one tight
-  * generated loop — zero exchange, zero per-candidate struct
-  * allocation, zero interpreted lambda.
+/** Native quantizer expressions — the map-only argmax/argmin and lookup
+  * table kernels of the ANN tier (guide §2.4 + §4 applied together):
+  * the quantizer geometry (centroids / PQ codebooks) is CONSTRUCTOR
+  * state handed to the generated code as reference arrays — never
+  * inlined as literals, so the generated method size is independent of
+  * the geometry size — and each row's work runs as one tight generated
+  * loop: zero exchange, zero per-candidate struct allocation, zero
+  * interpreted lambda.
   *
   * Why not built-ins: a `greatest`/`least` chain over per-candidate
   * (score, id) structs is whole-stage-codegen'd but allocates k structs
@@ -29,9 +30,9 @@ import org.apache.spark.sql.types._
   * (float inputs widen exactly to double; the stored centroid doubles
   * ARE the widened floats). Ties break to the smaller centroid id by
   * iterating candidates in ascending-id order with a strict comparison.
-  * Null semantics: null input array → null; null element or a
-  * dimension mismatch against the geometry → null (the legacy join
-  * chain's null-propagating dots could never produce a winner either).
+  * Null semantics, shared by every kernel through [[QuantizerKernel]]:
+  * null input array → null; null element or a length mismatch against
+  * the geometry → null.
   */
 private[graft] object QuantizerAssign {
   /** Exact scaled self-dot of one centroid, the driver-side twin of
@@ -49,6 +50,114 @@ private[graft] object QuantizerAssign {
     case ArrayType(DoubleType, _) => true
     case _ => false
   }
+
+  /** The input prologue, interpreted: the `n` elements widened to
+    * double, or null when the length differs or an element is null. */
+  private[functions] def widen(a: ArrayData, n: Int, dbl: Boolean): Array[Double] = {
+    if (a.numElements() != n) return null
+    val x = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) return null
+      x(i) = if (dbl) a.getDouble(i) else a.getFloat(i).toDouble
+      i += 1
+    }
+    x
+  }
+
+  /** The input prologue, generated: the same length and null checks set
+    * `ev.isNull`, and `body` runs over the widened `double[]` (named by
+    * its argument) only when the input is well formed. */
+  private[functions] def widenCode(ctx: CodegenContext, ev: ExprCode, a: String,
+      n: Int, dbl: Boolean)(body: String => String): String = {
+    val i = ctx.freshName("i"); val x = ctx.freshName("x")
+    val getX = if (dbl) s"$a.getDouble($i)" else s"((double) $a.getFloat($i))"
+    s"""
+       |if ($a.numElements() != $n) { ${ev.isNull} = true; } else {
+       |  final double[] $x = new double[$n];
+       |  for (int $i = 0; $i < $n; $i++) {
+       |    if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
+       |    $x[$i] = $getX;
+       |  }
+       |  if (!${ev.isNull}) {
+       |    ${body(x)}
+       |  }
+       |}
+     """.stripMargin
+  }
+
+  /** Index of the centroid with the maximum exact scaled dot against
+    * `x`, ties to the lower index. */
+  private[functions] def argmaxDot(x: Array[Double], cents: Array[Array[Double]]): Int = {
+    var bestDot = Long.MinValue
+    var best = -1
+    var k = 0
+    while (k < cents.length) {
+      val c = cents(k)
+      var acc = 0L
+      var j = 0
+      while (j < x.length) {
+        acc += math.floor(x(j) * c(j) * 1e15).toLong
+        j += 1
+      }
+      if (best < 0 || acc > bestDot) { bestDot = acc; best = k }
+      k += 1
+    }
+    best
+  }
+
+  /** [[argmaxDot]] generated: declares `int <best>` (returned name) over
+    * the `double[][]` reference `centsRef`. */
+  private[functions] def argmaxDotCode(ctx: CodegenContext, x: String,
+      centsRef: String, nCents: Int, dim: Int): (String, String) = {
+    val j = ctx.freshName("j"); val k = ctx.freshName("k")
+    val c = ctx.freshName("c"); val acc = ctx.freshName("acc")
+    val bestDot = ctx.freshName("bestDot"); val best = ctx.freshName("best")
+    (s"""
+        |long $bestDot = Long.MIN_VALUE; int $best = -1;
+        |for (int $k = 0; $k < $nCents; $k++) {
+        |  final double[] $c = $centsRef[$k];
+        |  long $acc = 0L;
+        |  for (int $j = 0; $j < $dim; $j++) {
+        |    $acc += (long) Math.floor($x[$j] * $c[$j] * 1.0E15D);
+        |  }
+        |  if ($best < 0 || $acc > $bestDot) { $bestDot = $acc; $best = $k; }
+        |}
+      """.stripMargin, best)
+  }
+}
+
+/** A quantizer kernel over one float/double vector of `inputLen`
+  * elements: the shared type check, null contract and input prologue
+  * ([[QuantizerAssign.widen]] / [[QuantizerAssign.widenCode]]); each
+  * kernel supplies only its loop over the widened vector. */
+private[functions] trait QuantizerKernel extends UnaryExpression {
+  protected def fnName: String
+  protected def inputLen: Int
+  /** The result for a well-formed, widened input. */
+  protected def evalVec(x: Array[Double]): Any
+  /** Generated twin of [[evalVec]]: code assigning `ev.value` from the
+    * `double[]` named `x`. */
+  protected def genVec(ctx: CodegenContext, ev: ExprCode, x: String): String
+
+  // malformed input (a null element, a length mismatch) yields null,
+  // so the result is nullable even when the input array is not
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (QuantizerAssign.elemOk(child.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$fnName expects a float/double array, got ${child.dataType.simpleString}")
+
+  override def nullSafeEval(av: Any): Any = {
+    val x = QuantizerAssign.widen(av.asInstanceOf[ArrayData], inputLen,
+      QuantizerAssign.isDouble(child.dataType))
+    if (x == null) null else evalVec(x)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => QuantizerAssign.widenCode(ctx, ev, a,
+      inputLen, QuantizerAssign.isDouble(child.dataType))(genVec(ctx, ev, _)))
 }
 
 /** `NearestCentroidDot(vec)` — the cid (ascending-sorted constructor
@@ -59,88 +168,33 @@ private[graft] object QuantizerAssign {
   * the aggregation exchange). */
 case class NearestCentroidDot(child: Expression,
     cids: Seq[Int], cents: Seq[Seq[Double]])
-    extends UnaryExpression {
+    extends QuantizerKernel {
 
   require(cids.nonEmpty && cids.size == cents.size,
     "nearest_centroid needs one id per centroid")
   require(cids.zip(cids.tail).forall(p => p._1 < p._2),
     "centroid ids must be strictly ascending (tie-break contract)")
 
-  // malformed input (a null element, a length mismatch) yields null,
-  // so the result is nullable even when the input array is not
-  override def nullable: Boolean = true
-
   override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (QuantizerAssign.elemOk(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nearest_centroid expects a float/double array, got ${child.dataType.simpleString}")
+  protected def fnName: String = "nearest_centroid"
 
   private val cidArr: Array[Int] = cids.toArray
   private val centArr: Array[Array[Double]] = cents.map(_.toArray).toArray
-  private val dim: Int = centArr(0).length
+  protected val inputLen: Int = centArr(0).length
 
-  override def nullSafeEval(av: Any): Any = {
-    val a = av.asInstanceOf[ArrayData]
-    if (a.numElements() != dim) return null
-    val aD = QuantizerAssign.isDouble(child.dataType)
-    val x = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (a.isNullAt(i)) return null
-      x(i) = if (aD) a.getDouble(i) else a.getFloat(i).toDouble
-      i += 1
-    }
-    var bestDot = Long.MinValue
-    var best = -1
-    var k = 0
-    while (k < centArr.length) {
-      val c = centArr(k)
-      var acc = 0L
-      var j = 0
-      while (j < dim) {
-        acc += math.floor(x(j) * c(j) * 1e15).toLong
-        j += 1
-      }
-      if (best < 0 || acc > bestDot) { bestDot = acc; best = k }
-      k += 1
-    }
-    cidArr(best)
+  protected def evalVec(x: Array[Double]): Any =
+    cidArr(QuantizerAssign.argmaxDot(x, centArr))
+
+  protected def genVec(ctx: CodegenContext, ev: ExprCode, x: String): String = {
+    val cidsRef = ctx.addReferenceObj("cids", cidArr, "int[]")
+    val centsRef = ctx.addReferenceObj("cents", centArr, "double[][]")
+    val (argmax, best) =
+      QuantizerAssign.argmaxDotCode(ctx, x, centsRef, centArr.length, inputLen)
+    s"""
+       |$argmax
+       |${ev.value} = $cidsRef[$best];
+     """.stripMargin
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cidsRef = ctx.addReferenceObj("cids", cidArr, "int[]")
-      val centsRef = ctx.addReferenceObj("cents", centArr, "double[][]")
-      val getX = if (QuantizerAssign.isDouble(child.dataType))
-        s"$a.getDouble(%s)" else s"((double) $a.getFloat(%s))"
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val k = ctx.freshName("k"); val x = ctx.freshName("x")
-      val c = ctx.freshName("c"); val acc = ctx.freshName("acc")
-      val bestDot = ctx.freshName("bestDot"); val best = ctx.freshName("best")
-      s"""
-         |if ($a.numElements() != $dim) { ${ev.isNull} = true; } else {
-         |  final double[] $x = new double[$dim];
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $x[$i] = ${getX.format(i)};
-         |  }
-         |  if (!${ev.isNull}) {
-         |    long $bestDot = Long.MIN_VALUE; int $best = -1;
-         |    for (int $k = 0; $k < ${centArr.length}; $k++) {
-         |      final double[] $c = $centsRef[$k];
-         |      long $acc = 0L;
-         |      for (int $j = 0; $j < $dim; $j++) {
-         |        $acc += (long) Math.floor($x[$j] * $c[$j] * 1.0E15D);
-         |      }
-         |      if ($best < 0 || $acc > $bestDot) { $bestDot = $acc; $best = $k; }
-         |    }
-         |    ${ev.value} = $cidsRef[$best];
-         |  }
-         |}
-       """.stripMargin
-    })
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroidDot =
     copy(child = newChild)
@@ -154,105 +208,52 @@ case class NearestCentroidDot(child: Expression,
   * second argmax or a corpus re-join. */
 case class NearestCentroidResidual(child: Expression,
     cids: Seq[Int], cents: Seq[Seq[Double]])
-    extends UnaryExpression {
+    extends QuantizerKernel {
 
   require(cids.nonEmpty && cids.size == cents.size,
     "nearest_centroid_residual needs one id per centroid")
   require(cids.zip(cids.tail).forall(p => p._1 < p._2),
     "centroid ids must be strictly ascending (tie-break contract)")
 
-  // malformed input (a null element, a length mismatch) yields null,
-  // so the result is nullable even when the input array is not
-  override def nullable: Boolean = true
-
   override def dataType: DataType = StructType(Seq(
     StructField("cid", IntegerType, nullable = false),
     StructField("res", ArrayType(DoubleType, containsNull = false),
       nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (QuantizerAssign.elemOk(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nearest_centroid_residual expects a float/double array, got ${child.dataType.simpleString}")
+  protected def fnName: String = "nearest_centroid_residual"
 
   private val cidArr: Array[Int] = cids.toArray
   private val centArr: Array[Array[Double]] = cents.map(_.toArray).toArray
-  private val dim: Int = centArr(0).length
+  protected val inputLen: Int = centArr(0).length
 
-  override def nullSafeEval(av: Any): Any = {
-    val a = av.asInstanceOf[ArrayData]
-    if (a.numElements() != dim) return null
-    val aD = QuantizerAssign.isDouble(child.dataType)
-    val x = new Array[Double](dim)
-    var i = 0
-    while (i < dim) {
-      if (a.isNullAt(i)) return null
-      x(i) = if (aD) a.getDouble(i) else a.getFloat(i).toDouble
-      i += 1
-    }
-    var bestDot = Long.MinValue
-    var best = -1
-    var k = 0
-    while (k < centArr.length) {
-      val c = centArr(k)
-      var acc = 0L
-      var j = 0
-      while (j < dim) {
-        acc += math.floor(x(j) * c(j) * 1e15).toLong
-        j += 1
-      }
-      if (best < 0 || acc > bestDot) { bestDot = acc; best = k }
-      k += 1
-    }
+  protected def evalVec(x: Array[Double]): Any = {
+    val best = QuantizerAssign.argmaxDot(x, centArr)
     val bc = centArr(best)
-    val res = new Array[Any](dim)
+    val res = new Array[Any](inputLen)
     var t = 0
-    while (t < dim) { res(t) = x(t) - bc(t); t += 1 }
+    while (t < inputLen) { res(t) = x(t) - bc(t); t += 1 }
     InternalRow(cidArr(best), new GenericArrayData(res))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cidsRef = ctx.addReferenceObj("cids", cidArr, "int[]")
-      val centsRef = ctx.addReferenceObj("cents", centArr, "double[][]")
-      val getX = if (QuantizerAssign.isDouble(child.dataType))
-        s"$a.getDouble(%s)" else s"((double) $a.getFloat(%s))"
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val k = ctx.freshName("k"); val x = ctx.freshName("x")
-      val c = ctx.freshName("c"); val acc = ctx.freshName("acc")
-      val bestDot = ctx.freshName("bestDot"); val best = ctx.freshName("best")
-      val bc = ctx.freshName("bc"); val res = ctx.freshName("res")
-      val t = ctx.freshName("t"); val row = ctx.freshName("row")
-      s"""
-         |if ($a.numElements() != $dim) { ${ev.isNull} = true; } else {
-         |  final double[] $x = new double[$dim];
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $x[$i] = ${getX.format(i)};
-         |  }
-         |  if (!${ev.isNull}) {
-         |    long $bestDot = Long.MIN_VALUE; int $best = -1;
-         |    for (int $k = 0; $k < ${centArr.length}; $k++) {
-         |      final double[] $c = $centsRef[$k];
-         |      long $acc = 0L;
-         |      for (int $j = 0; $j < $dim; $j++) {
-         |        $acc += (long) Math.floor($x[$j] * $c[$j] * 1.0E15D);
-         |      }
-         |      if ($best < 0 || $acc > $bestDot) { $bestDot = $acc; $best = $k; }
-         |    }
-         |    final double[] $bc = $centsRef[$best];
-         |    final Object[] $res = new Object[$dim];
-         |    for (int $t = 0; $t < $dim; $t++) {
-         |      $res[$t] = (Object) Double.valueOf($x[$t] - $bc[$t]);
-         |    }
-         |    final Object[] $row = new Object[2];
-         |    $row[0] = (Object) Integer.valueOf($cidsRef[$best]);
-         |    $row[1] = new org.apache.spark.sql.catalyst.util.GenericArrayData($res);
-         |    ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow($row);
-         |  }
-         |}
-       """.stripMargin
-    })
+  protected def genVec(ctx: CodegenContext, ev: ExprCode, x: String): String = {
+    val cidsRef = ctx.addReferenceObj("cids", cidArr, "int[]")
+    val centsRef = ctx.addReferenceObj("cents", centArr, "double[][]")
+    val (argmax, best) =
+      QuantizerAssign.argmaxDotCode(ctx, x, centsRef, centArr.length, inputLen)
+    val bc = ctx.freshName("bc"); val res = ctx.freshName("res")
+    val t = ctx.freshName("t"); val row = ctx.freshName("row")
+    s"""
+       |$argmax
+       |final double[] $bc = $centsRef[$best];
+       |final Object[] $res = new Object[$inputLen];
+       |for (int $t = 0; $t < $inputLen; $t++) {
+       |  $res[$t] = (Object) Double.valueOf($x[$t] - $bc[$t]);
+       |}
+       |final Object[] $row = new Object[2];
+       |$row[0] = (Object) Integer.valueOf($cidsRef[$best]);
+       |$row[1] = new org.apache.spark.sql.catalyst.util.GenericArrayData($res);
+       |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow($row);
+     """.stripMargin
+  }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroidResidual =
     copy(child = newChild)
@@ -271,7 +272,7 @@ case class NearestCentroidResidual(child: Expression,
   * (four plan operators and two exchanges, now zero of either). */
 case class PqAssignCodes(child: Expression, subDim: Int,
     subCodes: Seq[Seq[Int]], subVecs: Seq[Seq[Seq[Double]]])
-    extends UnaryExpression {
+    extends QuantizerKernel {
 
   require(subCodes.nonEmpty && subCodes.size == subVecs.size,
     "pq_assign needs one codebook per subspace")
@@ -282,17 +283,10 @@ case class PqAssignCodes(child: Expression, subDim: Int,
 
   private val m: Int = subCodes.size
 
-  // malformed input (a null element, a length mismatch) yields null,
-  // so the result is nullable even when the input array is not
-  override def nullable: Boolean = true
-
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (QuantizerAssign.elemOk(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"pq_assign expects a float/double array, got ${child.dataType.simpleString}")
+  protected def fnName: String = "pq_assign"
+  protected val inputLen: Int = m * subDim
 
   private val codeArr: Array[Array[Int]] = subCodes.map(_.toArray).toArray
   private val vecArr: Array[Array[Array[Double]]] =
@@ -300,17 +294,7 @@ case class PqAssignCodes(child: Expression, subDim: Int,
   private val rn2Arr: Array[Array[Long]] =
     subVecs.map(_.map(QuantizerAssign.selfDot).toArray).toArray
 
-  override def nullSafeEval(av: Any): Any = {
-    val a = av.asInstanceOf[ArrayData]
-    if (a.numElements() != m * subDim) return null
-    val aD = QuantizerAssign.isDouble(child.dataType)
-    val x = new Array[Double](m * subDim)
-    var i = 0
-    while (i < x.length) {
-      if (a.isNullAt(i)) return null
-      x(i) = if (aD) a.getDouble(i) else a.getFloat(i).toDouble
-      i += 1
-    }
+  protected def evalVec(x: Array[Double]): Any = {
     val out = new Array[Any](m)
     var s = 0
     while (s < m) {
@@ -337,52 +321,113 @@ case class PqAssignCodes(child: Expression, subDim: Int,
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val codesRef = ctx.addReferenceObj("codes", codeArr, "int[][]")
-      val vecsRef = ctx.addReferenceObj("vecs", vecArr, "double[][][]")
-      val rn2Ref = ctx.addReferenceObj("rn2", rn2Arr, "long[][]")
-      val getX = if (QuantizerAssign.isDouble(child.dataType))
-        s"$a.getDouble(%s)" else s"((double) $a.getFloat(%s))"
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val k = ctx.freshName("k"); val s = ctx.freshName("s")
-      val x = ctx.freshName("x"); val c = ctx.freshName("c")
-      val vs = ctx.freshName("vs"); val r2 = ctx.freshName("r2")
-      val off = ctx.freshName("off"); val acc = ctx.freshName("acc")
-      val score = ctx.freshName("score")
-      val bestScore = ctx.freshName("bestScore"); val best = ctx.freshName("best")
-      val out = ctx.freshName("out")
-      s"""
-         |if ($a.numElements() != ${m * subDim}) { ${ev.isNull} = true; } else {
-         |  final double[] $x = new double[${m * subDim}];
-         |  for (int $i = 0; $i < ${m * subDim}; $i++) {
-         |    if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $x[$i] = ${getX.format(i)};
-         |  }
-         |  if (!${ev.isNull}) {
-         |    final Object[] $out = new Object[$m];
-         |    for (int $s = 0; $s < $m; $s++) {
-         |      final double[][] $vs = $vecsRef[$s];
-         |      final long[] $r2 = $rn2Ref[$s];
-         |      final int $off = $s * $subDim;
-         |      long $bestScore = Long.MAX_VALUE; int $best = -1;
-         |      for (int $k = 0; $k < $vs.length; $k++) {
-         |        final double[] $c = $vs[$k];
-         |        long $acc = 0L;
-         |        for (int $j = 0; $j < $subDim; $j++) {
-         |          $acc += (long) Math.floor($x[$off + $j] * $c[$j] * 1.0E15D);
-         |        }
-         |        final long $score = $r2[$k] - 2L * $acc;
-         |        if ($best < 0 || $score < $bestScore) { $bestScore = $score; $best = $k; }
-         |      }
-         |      $out[$s] = (Object) Integer.valueOf($codesRef[$s][$best]);
-         |    }
-         |    ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |  }
-         |}
-       """.stripMargin
-    })
+  protected def genVec(ctx: CodegenContext, ev: ExprCode, x: String): String = {
+    val codesRef = ctx.addReferenceObj("codes", codeArr, "int[][]")
+    val vecsRef = ctx.addReferenceObj("vecs", vecArr, "double[][][]")
+    val rn2Ref = ctx.addReferenceObj("rn2", rn2Arr, "long[][]")
+    val j = ctx.freshName("j"); val k = ctx.freshName("k")
+    val s = ctx.freshName("s"); val c = ctx.freshName("c")
+    val vs = ctx.freshName("vs"); val r2 = ctx.freshName("r2")
+    val off = ctx.freshName("off"); val acc = ctx.freshName("acc")
+    val score = ctx.freshName("score")
+    val bestScore = ctx.freshName("bestScore"); val best = ctx.freshName("best")
+    val out = ctx.freshName("out")
+    s"""
+       |final Object[] $out = new Object[$m];
+       |for (int $s = 0; $s < $m; $s++) {
+       |  final double[][] $vs = $vecsRef[$s];
+       |  final long[] $r2 = $rn2Ref[$s];
+       |  final int $off = $s * $subDim;
+       |  long $bestScore = Long.MAX_VALUE; int $best = -1;
+       |  for (int $k = 0; $k < $vs.length; $k++) {
+       |    final double[] $c = $vs[$k];
+       |    long $acc = 0L;
+       |    for (int $j = 0; $j < $subDim; $j++) {
+       |      $acc += (long) Math.floor($x[$off + $j] * $c[$j] * 1.0E15D);
+       |    }
+       |    final long $score = $r2[$k] - 2L * $acc;
+       |    if ($best < 0 || $score < $bestScore) { $bestScore = $score; $best = $k; }
+       |  }
+       |  $out[$s] = (Object) Integer.valueOf($codesRef[$s][$best]);
+       |}
+       |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+     """.stripMargin
+  }
 
   override protected def withNewChildInternal(newChild: Expression): PqAssignCodes =
+    copy(child = newChild)
+}
+
+/** `PqLut(vec)` — the per-query ADC lookup table of a dense codebook
+  * (`subVecs(s)(j)` is code `j` of subspace `s`, uniform k): element
+  * `s·k + j` is the exact scaled dot `Σ floor(x·c·1e15)` of the query's
+  * s-th contiguous `subDim` slice with entry j — bit-identical to
+  * `dot_scaled(slice(vec, s·subDim + 1, subDim), c)`, computed in one
+  * generated loop over reference state, so the table costs the same
+  * generated code at m·k = 128 as at a corpus-sized m·k. */
+case class PqLut(child: Expression, subDim: Int, subVecs: Seq[Seq[Seq[Double]]])
+    extends QuantizerKernel {
+
+  require(subVecs.nonEmpty && subVecs.forall(_.size == subVecs.head.size),
+    "pq_lut needs a uniform number of codes per subspace")
+  require(subVecs.forall(_.forall(_.size == subDim)),
+    "pq_lut needs every codebook entry to have subDim elements")
+
+  private val m: Int = subVecs.size
+  private val k: Int = subVecs.head.size
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  protected def fnName: String = "pq_lut"
+  protected val inputLen: Int = m * subDim
+
+  private val vecArr: Array[Array[Array[Double]]] =
+    subVecs.map(_.map(_.toArray).toArray).toArray
+
+  protected def evalVec(x: Array[Double]): Any = {
+    val out = new Array[Long](m * k)
+    var s = 0
+    while (s < m) {
+      val off = s * subDim
+      var j = 0
+      while (j < k) {
+        val c = vecArr(s)(j)
+        var acc = 0L
+        var i = 0
+        while (i < subDim) {
+          acc += math.floor(x(off + i) * c(i) * 1e15).toLong
+          i += 1
+        }
+        out(s * k + j) = acc
+        j += 1
+      }
+      s += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  protected def genVec(ctx: CodegenContext, ev: ExprCode, x: String): String = {
+    val vecsRef = ctx.addReferenceObj("vecs", vecArr, "double[][][]")
+    val s = ctx.freshName("s"); val j = ctx.freshName("j")
+    val i = ctx.freshName("i"); val c = ctx.freshName("c")
+    val off = ctx.freshName("off"); val acc = ctx.freshName("acc")
+    val out = ctx.freshName("out")
+    s"""
+       |final long[] $out = new long[${m * k}];
+       |for (int $s = 0; $s < $m; $s++) {
+       |  final int $off = $s * $subDim;
+       |  for (int $j = 0; $j < $k; $j++) {
+       |    final double[] $c = $vecsRef[$s][$j];
+       |    long $acc = 0L;
+       |    for (int $i = 0; $i < $subDim; $i++) {
+       |      $acc += (long) Math.floor($x[$off + $i] * $c[$i] * 1.0E15D);
+       |    }
+       |    $out[$s * $k + $j] = $acc;
+       |  }
+       |}
+       |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
+     """.stripMargin
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): PqLut =
     copy(child = newChild)
 }

@@ -2,11 +2,11 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{NoCodegenFallback, TestSpark}
 
 /** IVF-PQ composed index: losslessness of the machinery at the
   * degenerate config, recall behavior of the real one. */
-class IvfPqSpec extends AnyFunSuite {
+class IvfPqSpec extends AnyFunSuite with NoCodegenFallback {
   private lazy val spark = TestSpark.spark
 
   private lazy val emb =
@@ -392,10 +392,9 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("assignCodes array layout equals the legacy per-sub winners") {
-    // the map-only kernel path vs the distributed broadcast-join path
-    // must produce the same codes in the same subspace order — the
-    // legacy path is also the non-dense fallback, so this equivalence
-    // is what keeps both probe branches on one value contract
+    // the map-only kernel path vs an inline relational reference: per
+    // subspace the (d2, code)-smallest entry by exact integer
+    // sub-distance, reassembled in subspace order
     val cents = Ivf.train(emb, 8, 0)
     val res = IvfPq.residuals(emb, cents)
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
@@ -407,19 +406,59 @@ class IvfPqSpec extends AnyFunSuite {
       (v, j) <- seeds.zipWithIndex.toSeq
     } yield (sI, j, v.slice(sI * subDim, (sI + 1) * subDim))
     val fast = IvfPq.assignCodes(res, cb, m, subDim)
-    // force the legacy relational path by padding the codebook with
-    // unreachable entries (far from every residual, but small enough
-    // that no scaled dot nears long overflow) past the gate — winners
-    // are unchanged, the dispatch flips
-    val far = Seq.fill(subDim)(10.0d)
-    val pad: Seq[(Int, Int, Seq[Double])] =
-      (0 until m).flatMap(sI => (16 until 80).map(j => (sI, j, far)))
-    val slow = IvfPq.assignCodes(res, cb ++ pad, m, subDim)
-      .withColumnRenamed("codes", "l_codes").withColumnRenamed("cid", "l_cid")
+    import spark.implicits._
+    val slow = res
+      .select(col("vec_id"), col("cid").as("l_cid"),
+        explode(array((0 until m).map(sI => struct(lit(sI).as("sub"),
+          slice(col("res"), sI * subDim + 1, subDim).as("svec"))): _*)).as("x"))
+      .select(col("vec_id"), col("l_cid"), col("x.sub"), col("x.svec"))
+      .join(broadcast(cb.toDF("sub", "code", "rvec")), "sub")
+      .withColumn("d2", expr("dot_scaled(svec, svec)")
+        - lit(2L) * expr("dot_scaled(svec, rvec)")
+        + expr("dot_scaled(rvec, rvec)"))
+      .groupBy(col("vec_id"), col("l_cid"), col("sub"))
+      .agg(min_by(col("code"), struct(col("d2"), col("code"))).as("code"))
+      .groupBy(col("vec_id"), col("l_cid"))
+      .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
+      .select(col("vec_id"), col("l_cid"),
+        expr("transform(sc, x -> x.code)").as("l_codes"))
     assert(fast.join(slow, Seq("vec_id"))
       .filter(col("codes") =!= col("l_codes") ||
         col("cid") =!= col("l_cid")).count() == 0L)
     assert(fast.count() == emb.count())
+    assert(slow.count() == emb.count())
+  }
+
+  test("load and addToSavedIndex refuse a non-dense codebook or a per-sub codes layout") {
+    import graft.land.AtomicLanding
+    import spark.implicits._
+    val idx = IvfPq.buildIndex(emb.filter(col("vec_id") >= 10), nLists = 8)
+    val batch = emb.filter(col("vec_id") < 10)
+    // save a good index, then publish one hand-written bad member
+    def savedWith(member: String, bad: org.apache.spark.sql.DataFrame): String = {
+      val p = java.nio.file.Files.createTempDirectory("graft-ivfpqbad").toString
+      IvfPq.save(idx, p)
+      val snap = AtomicLanding.linkedSnapshot(p).get
+      val v = AtomicLanding.commit(bad.coalesce(1), s"$p/$member")
+      AtomicLanding.publishLinked(p, snap.members + (member -> v),
+        expectedRoot = Some(snap.rootVersion))
+      p
+    }
+    val gapped = savedWith("cb", idx.cb.filter(e => !(e._1 == 3 && e._2 == 15))
+      .toDF("sub", "code", "rvec"))
+    val perSub = savedWith("codes", idx.codes.select(col("neighbor_id"), col("cid"),
+      posexplode(col("codes")).as(Seq("sub", "code"))))
+    Seq(gapped -> "not dense", perSub -> "codes: array<int>").foreach { case (p, why) =>
+      val n2Before = AtomicLanding.currentVersion(s"$p/n2")
+      val refusals = Seq(
+        intercept[IllegalStateException](IvfPq.load(spark, p)),
+        intercept[IllegalStateException](IvfPq.addToSavedIndex(spark, p, batch)))
+      refusals.foreach { e =>
+        assert(e.getMessage.contains(p) && e.getMessage.contains(why), e.getMessage)
+      }
+      assert(AtomicLanding.currentVersion(s"$p/n2") == n2Before,
+        "a refused append must commit nothing")
+    }
   }
 
   test("probeShuffled equals probe row-for-row (self-join query set)") {

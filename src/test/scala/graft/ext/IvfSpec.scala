@@ -2,9 +2,9 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{NoCodegenFallback, TestSpark}
 
-class IvfSpec extends AnyFunSuite {
+class IvfSpec extends AnyFunSuite with NoCodegenFallback {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 

@@ -2,9 +2,9 @@ package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.TestSpark
+import graft.{NoCodegenFallback, TestSpark}
 
-class PqSpec extends AnyFunSuite {
+class PqSpec extends AnyFunSuite with NoCodegenFallback {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -57,5 +57,33 @@ class PqSpec extends AnyFunSuite {
     // direct ADC top-5 is intentionally NOT asserted high — at 32x
     // compression the codes order the true neighbors into the head of
     // the list, not to exact rank
+  }
+
+  test("a non-dense codebook is rejected when Codebooks is constructed") {
+    val v = Seq(1.0f)
+    // a missing subspace, a gap in the codes, a non-uniform k
+    Seq(Seq((0, 0, v)),
+        Seq((0, 0, v), (0, 2, v), (1, 0, v), (1, 1, v)),
+        Seq((0, 0, v), (0, 1, v), (1, 0, v)))
+      .foreach { cents =>
+        intercept[IllegalArgumentException](Pq.Codebooks(2, 1, cents))
+      }
+    assert(Pq.Codebooks(2, 1, Seq((1, 0, v), (0, 0, v))).entries ==
+      Seq(Seq(Seq(1.0)), Seq(Seq(1.0))))
+  }
+
+  test("a corpus-sized codebook (m*k = 1600) re-ranks to exactly brute force") {
+    // the q_cosine_pq_exact shape: every subvector is its own centroid,
+    // so ADC equals the exact dot and a full shortlist passes all
+    val e = emb.filter(col("vec_id") < 200)
+    val queries = e.filter(col("vec_id") < 10)
+    val cb = Pq.train(e, m = 8, k = 200, iters = 0)
+    assert(cb.cents.size == 1600)
+    val got = Pq.topKRerank(e, queries, 5, cb, shortlist = 201)
+      .orderBy("query_id", "rnk").collect().toSeq
+    val want = Similarity.topKBrute(e, queries, 5)
+      .orderBy("query_id", "rnk").collect().toSeq
+    assert(got.length == 50)
+    assert(got == want)
   }
 }

@@ -16,25 +16,12 @@ import graft.TestSpark
 class NonNullableInputSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private val FallbackKey = "spark.sql.codegen.fallback"
-
-  /** Runs `f` with codegen fallback off, restoring the session after. */
-  private def withoutFallback[T](f: => T): T = {
-    val prev = spark.conf.getOption(FallbackKey)
-    spark.conf.set(FallbackKey, "false")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(FallbackKey, v)
-      case None => spark.conf.unset(FallbackKey)
-    }
-  }
-
   private def native(kernel: Expression => Expression, in: Column): Column =
     GraftShims.column(kernel(GraftShims.expression(in)))
 
   /** (non-nullable input, kernel) → one result per id 0..5. */
   private def run(input: String, kernel: Column => Column): Seq[Any] =
-    withoutFallback {
+    TestSpark.withoutFallback {
       val df = spark.range(6).select(expr(input).as("v"))
       assert(!df.schema("v").nullable, s"$input must be a non-nullable column")
       val out = df.select(kernel(col("v")).as("r"))
@@ -70,5 +57,13 @@ class NonNullableInputSpec extends AnyFunSuite {
     assert(run(doubles, v => native(PqAssignCodes(_, 1, Seq(Seq(0, 1), Seq(0, 1)),
         Seq(codebook, codebook)), v)) ==
       Seq(Seq(0, 0), null, Seq(1, 0), null, Seq(1, 0), null))
+  }
+
+  test("pq_lut compiles over a non-nullable array; dim mismatch is null") {
+    val codebooks = Seq(Seq(Seq(1.0), Seq(2.0)), Seq(Seq(3.0), Seq(0.5)))
+    assert(run(doubles, v => native(PqLut(_, 1, codebooks), v)) ==
+      Seq(Seq(0L, 0L, 3000000000000000L, 500000000000000L), null,
+        Seq(2000000000000000L, 4000000000000000L, 3000000000000000L, 500000000000000L), null,
+        Seq(4000000000000000L, 8000000000000000L, 3000000000000000L, 500000000000000L), null))
   }
 }

@@ -3,19 +3,23 @@ package graft.functions
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{NoCodegenFallback, TestSpark}
 import graft.ext.{Ivf, IvfPq, Pq}
 
-/** The native quantizer-assignment kernels against the legacy
-  * distributed formulations they replaced — same winners, same
-  * residual bits, same null semantics, still inside whole-stage
-  * codegen. */
-class QuantizerAssignSpec extends AnyFunSuite {
+/** The native quantizer kernels against the distributed formulations
+  * they replaced — same winners, same residual bits, same lookup-table
+  * values, same null semantics, still inside whole-stage codegen (with
+  * codegen fallback off, so a kernel that fails to compile fails here). */
+class QuantizerAssignSpec extends AnyFunSuite with NoCodegenFallback {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def emb = spark.read
     .parquet(s"${TestSpark.Sf0001}/embeddings.parquet")
+
+  private def lut(c: org.apache.spark.sql.Column, subDim: Int,
+      subVecs: Seq[Seq[Seq[Double]]]): org.apache.spark.sql.Column =
+    GraftShims.column(PqLut(GraftShims.expression(c), subDim, subVecs))
 
   test("NearestCentroidDot == crossJoin + max_by legacy on fixture embeddings") {
     val cents = Ivf.train(emb, nLists = 8, iters = 1)
@@ -78,15 +82,17 @@ class QuantizerAssignSpec extends AnyFunSuite {
     val pq = (c: org.apache.spark.sql.Column) => GraftShims.column(
       PqAssignCodes(GraftShims.expression(c), 1,
         Seq(Seq(0), Seq(0)), Seq(Seq(Seq(1.0)), Seq(Seq(1.0)))))
+    val pl = (c: org.apache.spark.sql.Column) =>
+      lut(c, 1, Seq(Seq(Seq(1.0)), Seq(Seq(1.0))))
     val shortRow = Seq(Tuple1(Array(1.0f))).toDF("v")
-      .select(nc(col("v")), pq(col("v"))).head()
-    assert(shortRow.isNullAt(0) && shortRow.isNullAt(1))
+      .select(nc(col("v")), pq(col("v")), pl(col("v"))).head()
+    assert(shortRow.isNullAt(0) && shortRow.isNullAt(1) && shortRow.isNullAt(2))
     val nullElem = Seq(Tuple1(Array[java.lang.Float](1.0f, null)))
-      .toDF("v").select(nc(col("v")), pq(col("v"))).head()
-    assert(nullElem.isNullAt(0) && nullElem.isNullAt(1))
+      .toDF("v").select(nc(col("v")), pq(col("v")), pl(col("v"))).head()
+    assert(nullElem.isNullAt(0) && nullElem.isNullAt(1) && nullElem.isNullAt(2))
     val nullArr = Seq(Tuple1(Option.empty[Array[Float]])).toDF("v")
-      .select(nc(col("v")), pq(col("v"))).head()
-    assert(nullArr.isNullAt(0) && nullArr.isNullAt(1))
+      .select(nc(col("v")), pq(col("v")), pl(col("v"))).head()
+    assert(nullArr.isNullAt(0) && nullArr.isNullAt(1) && nullArr.isNullAt(2))
   }
 
   test("whole-stage codegen accepts the generated loops (no fallback)") {
@@ -103,9 +109,59 @@ class QuantizerAssignSpec extends AnyFunSuite {
         GraftShims.column(PqAssignCodes(
           GraftShims.expression(col("v")), 1,
           Seq(Seq(0, 1), Seq(0, 1)),
-          Seq(Seq(Seq(1.0), Seq(2.0)), Seq(Seq(1.0), Seq(2.0))))))
+          Seq(Seq(Seq(1.0), Seq(2.0)), Seq(Seq(1.0), Seq(2.0))))),
+        lut(col("v"), 1, Seq(Seq(Seq(1.0), Seq(2.0)), Seq(Seq(1.0), Seq(2.0)))))
       .queryExecution.executedPlan
     assert(plan.find(_.isInstanceOf[WholeStageCodegenExec]).isDefined,
       plan.toString)
+  }
+
+  test("PqLut == per-(sub, code) dot_scaled table on fixture embeddings") {
+    val cb = Pq.train(emb, m = 8, k = 16, iters = 0)
+    val bySub = cb.cents.groupBy(_._1)
+    val entries = (0 until cb.m).map(s => bySub(s).sortBy(_._2).map(_._3))
+    val table = array(entries.zipWithIndex.flatMap { case (es, s) =>
+      val qs = slice(col("embedding"), s * cb.subDim + 1, cb.subDim)
+      es.map(c => call_function("dot_scaled", qs, array(c.map(lit): _*)))
+    }: _*)
+    val out = emb.select(
+      lut(col("embedding"), cb.subDim, entries.map(_.map(_.map(_.toDouble)))).as("lut"),
+      table.as("ref"))
+    assert(out.schema("lut").dataType ==
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false))
+    assert(out.filter(col("lut") =!= col("ref") || col("lut").isNull).count() == 0L)
+    assert(out.count() == emb.count())
+  }
+
+  test("interpreted eval == generated code for every kernel, malformed rows included") {
+    val cents = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))
+    val codebook = Seq(Seq(0.0), Seq(3.0))
+    // a range source, not a local relation: the optimizer would fold a
+    // projection over local rows with interpreted eval
+    val in = spark.range(5).select(expr("case id " +
+      "when 0 then array(cast(1 as float), cast(2 as float)) " +
+      "when 1 then array(cast(-3 as float), cast(0.25 as float)) " +
+      "when 2 then array(cast(1 as float)) " +
+      "when 3 then array(cast(1 as float), cast(null as float)) end").as("v"))
+    def results(): Seq[org.apache.spark.sql.Row] = in.select(
+        GraftShims.column(NearestCentroidDot(GraftShims.expression(col("v")),
+          Seq(0, 1), cents)),
+        GraftShims.column(NearestCentroidResidual(GraftShims.expression(col("v")),
+          Seq(0, 1), cents)),
+        GraftShims.column(PqAssignCodes(GraftShims.expression(col("v")), 1,
+          Seq(Seq(0, 1), Seq(0, 1)), Seq(codebook, codebook))),
+        lut(col("v"), 1, Seq(codebook, codebook)))
+      .collect().toSeq
+    val generated = results()
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val interpreted = try results() finally prev.foreach {
+      case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    assert(generated == interpreted)
+    // rows 2-4 are malformed: every kernel returns null on each
+    assert(generated.drop(2).forall(r => (0 until 4).forall(r.isNullAt)))
+    assert(generated.take(2).forall(r => (0 until 4).forall(!r.isNullAt(_))))
   }
 }
