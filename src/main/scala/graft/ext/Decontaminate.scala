@@ -232,36 +232,25 @@ object Decontaminate {
   def addToBenchIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, bench: DataFrame, n: Int = 3,
       batchId: Option[Long] = None, writer: String = ""): Unit = {
-    import graft.land.AtomicLanding
-    val benchT = s"$indexPath/bench"
+    import graft.land.{AtomicLanding, LinkedIndex}
     val params = readParams(spark, indexPath)
     validateN(params, n, "addToBenchIndex")
-    if (batchId.exists(b =>
-        AtomicLanding.lastBatchId(benchT, writer).exists(_ >= b)))
-      return // known-committed replay: data + id durable in one swing
     val stopsT = s"$indexPath/stops"
-    val raw =
+    def raw =
       if (params.exists(_.stopTopK > 0) &&
           AtomicLanding.currentVersion(stopsT).isDefined)
         rawBenchShingles(bench, n).join(
           broadcast(AtomicLanding.read(spark, stopsT).select(col("h"))),
           Seq("h"), "left_anti")
       else rawBenchShingles(bench, n)
-    val delta = (batchId.filter(_ =>
-        AtomicLanding.lastBatchId(benchT, writer).isDefined) match {
-      case Some(_) => raw
-      case _ =>
-        val live = AtomicLanding.read(spark, benchT)
-          .select(col("bench_id"), col("h"))
-        raw.join(live, Seq("bench_id", "h"), "left_anti")
-          .select(col("bench_id"), col("h"))
-    }).persist()
-    try if (!delta.isEmpty || batchId.isDefined) {
-      AtomicLanding.commit(delta, benchT, append = true,
-        batchId = batchId, writer = writer)
-      params.foreach(writeBloom(spark, indexPath, _))
-    } finally delta.unpersist()
+    LinkedIndex.appendOnce(s"$indexPath/bench", raw,
+      Seq("bench_id", "h"), batchId, writer, dedupeBenchScans)
+      .foreach(_ => params.foreach(writeBloom(spark, indexPath, _)))
   }
+
+  /** O(index) dedupe scans taken by id-less [[addToBenchIndex]] appends. */
+  private[ext] val dedupeBenchScans =
+    new java.util.concurrent.atomic.AtomicLong
 
   /** [[overlaps]] of a BATCH against a persisted [[buildBenchIndex]]
     * benchmark index: bit-identical to `overlaps(batch, bench, ...)`

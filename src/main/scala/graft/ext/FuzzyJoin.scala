@@ -481,47 +481,20 @@ object FuzzyJoin {
     * pre-publish window via `beforePublish` (the
     * [[graft.land.AtomicLanding.commit]] test seam, passed through).
     *
-    * REPLAY COST: `batchId` is the at-least-once ingest's fast path
-    * (the [[graft.land.AtomicLanding.streamSink]] contract — monotone
-    * per checkpointed query, recorded inside the sigs manifest in the
-    * same atomic swing as the data; the
-    * [[Retrieval.addToIndex]]/[[Ivf.addToSavedIndex]] precedent). A
-    * known-committed id makes the append a PURE NO-OP — the single
-    * sigs table needs no root heal, so nothing is read at all; a
-    * known-new id commits directly, skipping the O(index) dedupe
-    * anti-join. Id-less appends keep the anti-join fallback. */
+    * REPLAY COST: `batchId` rides the
+    * [[graft.land.LinkedIndex.appendOnce]] ladder. A known-committed id
+    * makes the append a PURE NO-OP — the single sigs table needs no
+    * root heal, so nothing is read at all; a known-new id skips the
+    * O(index) dedupe anti-join. Id-less appends pay it. */
   def addToSigIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, batch: DataFrame, key: String,
       batchId: Option[Long] = None,
       beforePublish: () => Unit = () => (),
       writer: String = ""): Unit = {
-    import graft.land.AtomicLanding
-    val sigsT = s"$indexPath/sigs"
-    if (batchId.exists(b =>
-        AtomicLanding.lastBatchId(sigsT, writer).exists(_ >= b)))
-      return // known-committed replay: data + id durable in one swing
-    val delta = (batchId.filter(_ =>
-        AtomicLanding.lastBatchId(sigsT, writer).isDefined) match {
-      case Some(_) =>
-        // identified and known-new: monotone ids mean nothing of this
-        // batch is in the index — skip the O(index) scan. Only sound
-        // when a watermark exists; after id-less growth the first
-        // identified append pays the scan once (see Ivf.addToSavedIndex)
-        sigTable(batch, key, "key_corpus")
-      case _ =>
-        dedupeSigScans.incrementAndGet()
-        val existing = AtomicLanding.read(spark, sigsT)
-          .select(col("key_corpus"), col("sig_h"))
-        sigTable(batch, key, "key_corpus")
-          .join(existing, Seq("key_corpus", "sig_h"), "left_anti")
-    }).select(col("key_corpus"), col("sig_h")).persist()
-    // an identified batch with an empty fallback delta still records
-    // its id (O(metadata) empty append), making the watermark durable
-    try if (!delta.isEmpty || batchId.isDefined) {
-      AtomicLanding.commit(delta, sigsT, append = true,
-        beforePublish = beforePublish, batchId = batchId,
-        writer = writer); ()
-    } finally delta.unpersist()
+    graft.land.LinkedIndex.appendOnce(s"$indexPath/sigs",
+      sigTable(batch, key, "key_corpus"), Seq("key_corpus", "sig_h"),
+      batchId, writer, dedupeSigScans, beforePublish)
+    ()
   }
 
   /** O(index) dedupe scans taken by id-less [[addToSigIndex]] appends —

@@ -141,12 +141,13 @@ object Ivf {
     * list, materialize the lists. */
   def buildIndex(emb: DataFrame, nLists: Int = 16, iters: Int = 2): Index = {
     val cents = train(emb, nLists, iters)
-    val lists = assignWith(emb, cents)
-      .select(col("vec_id").as("neighbor_id"), col("cid"),
-        col("embedding").as("ce"))
-      .localCheckpoint(true)
-    Index(cents, lists)
+    Index(cents, listRows(emb, cents).localCheckpoint(true))
   }
+
+  /** `emb` as inverted-list rows (neighbor_id, cid, ce) under `cents`. */
+  private def listRows(emb: DataFrame, cents: Seq[(Int, Seq[Float])]): DataFrame =
+    assignWith(emb, cents).select(col("vec_id").as("neighbor_id"), col("cid"),
+      col("embedding").as("ce"))
 
   /** O(index) dedupe scans taken by id-less [[addToSavedIndex]]
     * appends — the proof seam that an identified batch (replayed OR
@@ -168,9 +169,7 @@ object Ivf {
         index.lists.select(col("neighbor_id").as("vec_id")),
         Seq("vec_id"), "left_anti")
       .localCheckpoint(true)
-    val lists = assignWith(fresh, index.cents)
-      .select(col("vec_id").as("neighbor_id"), col("cid"),
-        col("embedding").as("ce"))
+    val lists = listRows(fresh, index.cents)
       .unionByName(index.lists)
       .localCheckpoint(true)
     Index(index.cents, lists)
@@ -234,43 +233,37 @@ object Ivf {
       .map(r => (r.getAs[Int]("cid"),
         r.getAs[scala.collection.Seq[Float]]("cvec").toSeq))
 
+  /** The saved index's [[graft.land.LinkedIndex]] lifecycle: `cents`
+    * frozen, `lists` growing, a batch's lists rows assigned against the
+    * pinned quantizer. */
+  private val saved: graft.land.LinkedIndex = new graft.land.LinkedIndex(
+      "no saved IVF index", Seq("cents"), Seq("lists" -> Seq("neighbor_id")))(
+    (path, snap, batch) => Seq(listRows(batch,
+      centsOf(saved.member(batch.sparkSession, path, snap, "cents")))))
+
   /** Persist a built IVF index for a long-running retrieval/dedup
     * session: the trained coarse quantizer lands as `cents/` (nLists
-    * rows) and the inverted lists as `lists/`, both
-    * [[graft.land.AtomicLanding]] tables, and the PAIR publishes
-    * through one [[graft.land.AtomicLanding.publishLinked]] root
-    * generation — the single linearization point every reader resolves
-    * (the in-memory [[Index]] has no such contract: it dies with its
-    * session). A rebuild at the SAME path (the retrain-on-recall-drift
-    * loop) therefore flips probes from one complete index to the next
-    * atomically: a racing [[loadSavedIndex]] reads OLD cents with OLD
-    * lists or NEW with NEW, never new centroids routing old lists —
-    * and a crash between the part commits leaves the previous
-    * generation live, not a durable mixed state. The quantizer is
-    * FROZEN at build time — appends assign against it without
-    * retraining (recall drifts with the data distribution; rebuild
-    * when that matters), which is also what makes the grown index
-    * bit-identical to a fresh build whose training saw only the
-    * original segment. */
+    * rows) and the inverted lists as `lists/`, published together as
+    * one [[graft.land.LinkedIndex]] generation (the in-memory [[Index]]
+    * has no such contract: it dies with its session). A rebuild at the
+    * SAME path (the retrain-on-recall-drift loop) therefore flips probes
+    * from one complete index to the next atomically — never new
+    * centroids routing old lists. The quantizer is FROZEN at build
+    * time — appends assign against it without retraining (recall drifts
+    * with the data distribution; rebuild when that matters), which is
+    * also what makes the grown index bit-identical to a fresh build
+    * whose training saw only the original segment.
+    *
+    * `batchId` is the SEED WATERMARK: recording it at build vouches the
+    * build corpus below it, so the FIRST identified append can skip the
+    * dedupe scan. A streaming ingest whose engine ids start at 0 seeds
+    * with -1. */
   def buildSavedIndex(emb: DataFrame, path: String, nLists: Int = 16,
       iters: Int = 2, batchId: Option[Long] = None): String = {
-    import graft.land.AtomicLanding
-    val s = emb.sparkSession
+    saved.healPredecessor(path)
     val cents = train(emb, nLists, iters)
-    val cv = AtomicLanding.commit(
-      centroidDf(s, cents).coalesce(1), s"$path/cents")
-    // batchId is the SEED WATERMARK: recording it at build vouches the
-    // build corpus below it, so the FIRST identified append can skip
-    // the dedupe scan (a watermark-less table makes that append pay one
-    // O(index) anti-join to establish it — see addToSavedIndex). A
-    // streaming ingest whose engine ids start at 0 seeds with -1.
-    val lv = AtomicLanding.commit(
-      assignWith(emb, cents)
-        .select(col("vec_id").as("neighbor_id"), col("cid"),
-          col("embedding").as("ce")),
-      s"$path/lists", batchId = batchId)
-    AtomicLanding.publishLinked(path, Map("cents" -> cv, "lists" -> lv),
-      expectedRoot = AtomicLanding.currentRootVersion(path))
+    saved.rebuild(path, Seq(centroidDf(emb.sparkSession, cents)),
+      Seq(listRows(emb, cents)), batchId)
     path
   }
 
@@ -282,42 +275,28 @@ object Ivf {
     * or rebuilds. */
   def loadSavedIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): Index = {
-    import graft.land.AtomicLanding
-    val snap = AtomicLanding.linkedSnapshot(indexPath).getOrElse(
-      throw new IllegalStateException(s"no saved IVF index at $indexPath"))
-    Index(
-      centsOf(AtomicLanding.readVersion(spark, s"$indexPath/cents",
-        snap.members("cents"))),
-      AtomicLanding.readVersion(spark, s"$indexPath/lists",
-        snap.members("lists")))
+    val snap = saved.snapshot(indexPath)
+    Index(centsOf(saved.member(spark, indexPath, snap, "cents")),
+      saved.member(spark, indexPath, snap, "lists"))
   }
 
   /** Index MAINTENANCE: append a batch of vectors to a
     * [[buildSavedIndex]] index so the session's corpus can GROW without
     * a rebuild — one assign job that scales with the batch, against the
     * frozen quantizer (the [[addToIndex]] semantics, made durable). The
-    * append is an ACID commit: a crash mid-append publishes NOTHING
-    * (the staged dir is invisible garbage a vacuum reclaims) and the
-    * retry lands the whole batch. The anti-join dedupes at vec_id
-    * granularity so an at-least-once ingest replaying a committed
-    * batch commits nothing at all — without it a duplicate list row
-    * would make [[probe]] emit the same neighbor at two ranks and
-    * silently evict the true k-th answer. Vec ids are
+    * append is an ACID commit: a crash mid-append publishes NOTHING and
+    * the retry lands the whole batch. Replays are exactly-once by the
+    * [[graft.land.LinkedIndex.appendOnce]] ladder — without it a
+    * duplicate list row would make [[probe]] emit the same neighbor at
+    * two ranks and silently evict the true k-th answer. Vec ids are
     * immutable-by-contract: re-submitting a vec_id with a DIFFERENT
-    * embedding is undefined (the same rule every persisted index in
-    * the engine carries). `beforePublish` is
-    * [[graft.land.AtomicLanding.commit]]'s test seam, passed through
-    * so specs can probe the index mid-append.
+    * embedding is undefined (the same rule every persisted index in the
+    * engine carries). `beforePublish` is
+    * [[graft.land.AtomicLanding.commit]]'s test seam on the lists
+    * commit, `beforeRootPublish` the root swing's.
     *
-    * REPLAY COST: `batchId` is the at-least-once ingest's fast path
-    * (the [[graft.land.AtomicLanding.streamSink]] contract — monotone
-    * per checkpointed query, recorded inside the lists manifest in the
-    * same atomic swing as the data). A known-committed id
-    * short-circuits to a pure root heal with ZERO lists reads and no
-    * assign job; a known-new id skips the O(index) dedupe anti-join
-    * (exactly-once comes from the id). Id-less appends keep the
-    * anti-join fallback — exact but O(index) read per append, so a
-    * 100 TB streaming ingest should always carry its micro-batch id.
+    * A 100 TB streaming ingest should always carry its micro-batch
+    * `batchId`: id-less appends pay an O(index) anti-join.
     *
     * CONCURRENT INGESTS: batch ids are only monotone within ONE
     * issuer's sequence, so several independent streaming queries
@@ -333,133 +312,9 @@ object Ivf {
       batchId: Option[Long] = None,
       beforePublish: () => Unit = () => (),
       beforeRootPublish: () => Unit = () => (),
-      writer: String = ""): Unit = {
-    import graft.land.AtomicLanding
-    val listsT = s"$indexPath/lists"
-    var done = false
-    while (!done) {
-      val snap = AtomicLanding.linkedSnapshot(indexPath).getOrElse(
-        throw new IllegalStateException(s"no saved IVF index at $indexPath"))
-      if (batchId.exists(b =>
-          AtomicLanding.lastBatchId(listsT, writer).exists(_ >= b))) {
-        // known-committed replay: data + id became durable in one
-        // pointer swing — no scan, no assign; just heal the root over
-        // any committed-but-unpublished predecessor generation
-        val lLive = AtomicLanding.currentVersion(listsT).get
-        if (lLive == snap.members("lists")) done = true
-        else done = healLive(indexPath, snap, lLive, beforeRootPublish)
-      } else if (AtomicLanding.currentVersion(listsT).get
-          != snap.members("lists")) {
-        // live ran ahead of the pin (a crashed append OR a crashed
-        // rebalance rewrite): heal it to a consistent pair FIRST, so
-        // this append never assigns against a quantizer the live lists
-        // were not built under, then re-resolve and land on top
-        healLive(indexPath, snap,
-          AtomicLanding.currentVersion(listsT).get); ()
-      } else {
-        val cents = centsOf(AtomicLanding.readVersion(spark,
-          s"$indexPath/cents", snap.members("cents")))
-        val fresh = (batchId.filter(_ =>
-            AtomicLanding.lastBatchId(listsT, writer).isDefined) match {
-          case Some(_) =>
-            // identified and known-new: ids are monotone, so nothing of
-            // this batch can be in the lists — skip the O(index) scan.
-            // Only sound when the table HAS a watermark: a table grown
-            // by id-less appends has durable rows no id can vouch for,
-            // so the first identified append after them pays the scan
-            // (establishing the watermark for every later one).
-            batch
-          case _ =>
-            // id-less fallback: dedupe against ALL durable lists — the
-            // LIVE pointer, which may run ahead of the root pin when a
-            // predecessor crashed between its lists commit and its root
-            // swing; re-appending that batch must not duplicate rows
-            dedupeListScans.incrementAndGet()
-            val live = AtomicLanding.read(spark, listsT)
-              .select(col("neighbor_id").as("vec_id"))
-            batch.join(live, Seq("vec_id"), "left_anti")
-        }).persist()
-        try {
-          val lNew =
-            if (!fresh.isEmpty || batchId.isDefined)
-              // an identified batch whose fallback anti-join left
-              // nothing fresh still records its id — an O(metadata)
-              // empty append (the Clusters.addToSaved precedent), so
-              // the replay watermark becomes durable and later
-              // identified appends regain the zero-scan fast path
-              AtomicLanding.commit(
-                assignWith(fresh, cents)
-                  .select(col("vec_id").as("neighbor_id"), col("cid"),
-                    col("embedding").as("ce")),
-                listsT, append = true, beforePublish = beforePublish,
-                batchId = batchId, writer = writer)
-            else AtomicLanding.currentVersion(listsT).get
-          if (lNew == snap.members("lists")) done = true // true replay no-op
-          else done = casRoot(indexPath, snap, lNew, beforeRootPublish)
-        } finally fresh.unpersist()
-      }
-    }
-  }
-
-  /** CAS the root's lists pin to `lNew` — ALSO the heal path for a
-    * crashed predecessor's committed-but-unpublished batch. A CAS loss
-    * means a concurrent appender/maintainer advanced the root first:
-    * the caller re-resolves and retries (a durable lists commit
-    * survives the retry; its republish is pure metadata). */
-  private def casRoot(indexPath: String,
-      snap: graft.land.AtomicLanding.LinkedSnapshot, lNew: Long,
-      beforeRootPublish: () => Unit): Boolean =
-    try {
-      graft.land.AtomicLanding.publishLinked(indexPath,
-        Map("cents" -> snap.members("cents"), "lists" -> lNew),
-        expectedRoot = Some(snap.rootVersion),
-        beforePublish = beforeRootPublish)
-      true
-    } catch {
-      case _: java.util.ConcurrentModificationException => false
-    }
-
-  /** Heal a committed-but-unpublished LIVE lists generation forward —
-    * the one place that must tell two crash shapes apart:
-    *
-    *  - an APPEND chain (the live version's dirs are a superset of the
-    *    pinned version's — crashed [[addToSavedIndex]], or a
-    *    [[maintainSavedIndex]] fold, whose rows were all assigned
-    *    under the pinned quantizer): publish it under the PINNED
-    *    cents, the classic [[casRoot]] heal;
-    *  - a REWRITE generation (disjoint dirs — a [[rebalanceSavedIndex]]
-    *    that crashed between its lists rewrite and the root swing,
-    *    whose rows were REASSIGNED under a new quantizer): publish it
-    *    with its paired cents rewrite (the live cents version — under
-    *    the engine's one-maintainer contract only the same crashed
-    *    rebalance can have advanced it). Publishing pinned cents over
-    *    reassigned lists would route new cids through old centroids —
-    *    the mixed generation the whole root protocol exists to
-    *    prevent, so the dir-lineage check is what makes every OTHER
-    *    writer's blind forward-heal safe again. */
-  private def healLive(indexPath: String,
-      snap: graft.land.AtomicLanding.LinkedSnapshot, lLive: Long,
-      beforeRootPublish: () => Unit = () => ()): Boolean = {
-    import graft.land.AtomicLanding
-    val listsT = s"$indexPath/lists"
-    val pinnedDirs =
-      AtomicLanding.dirsOfVersion(listsT, snap.members("lists")).toSet
-    val liveDirs = AtomicLanding.dirsOfVersion(listsT, lLive).toSet
-    if (pinnedDirs.subsetOf(liveDirs))
-      casRoot(indexPath, snap, lLive, beforeRootPublish)
-    else
-      try {
-        AtomicLanding.publishLinked(indexPath,
-          Map("cents" ->
-            AtomicLanding.currentVersion(s"$indexPath/cents").get,
-            "lists" -> lLive),
-          expectedRoot = Some(snap.rootVersion),
-          beforePublish = beforeRootPublish)
-        true
-      } catch {
-        case _: java.util.ConcurrentModificationException => false
-      }
-  }
+      writer: String = ""): Unit =
+    saved.append(indexPath, batch, batchId, writer, dedupeListScans,
+      beforePublish, beforeRootPublish)
 
   /** MAJOR maintenance — the missing half of the pair whose minor half
     * is [[maintainSavedIndex]]'s physical tail fold: re-seed (iters=0)
@@ -490,63 +345,37 @@ object Ivf {
       driftTolerance: Double = 0.0,
       beforeListsCommit: () => Unit = () => (),
       beforeRootPublish: () => Unit = () => ()): Unit = {
-    import graft.land.AtomicLanding
-    val listsT = s"$indexPath/lists"
     var done = false
     while (!done) {
-      val snap = AtomicLanding.linkedSnapshot(indexPath).getOrElse(
-        throw new IllegalStateException(s"no saved IVF index at $indexPath"))
-      val lPin = snap.members("lists")
-      val lLive = AtomicLanding.currentVersion(listsT).get
-      if (lLive != lPin) {
-        // a committed-but-unpublished generation (crashed append or
-        // crashed rebalance): heal it to a consistent pair first, else
-        // the CAS'd rewrite below could never match the live version —
-        // then retry over the healed pin
-        healLive(indexPath, snap, lLive); ()
-      } else {
-        val corpus = AtomicLanding.readVersion(spark, listsT, lPin)
-          .select(col("neighbor_id").as("vec_id"), col("ce").as("embedding"))
-        val cents = train(corpus, nLists, iters)
-        // DRIFT PROBE (IvfPq.rebalanceSavedIndex's contract): the
-        // retrained quantizer is in hand either way — if it reproduces
-        // the pinned one within driftTolerance, every list row is
-        // already assigned under it and the corpus-sized reassign +
-        // rewrite is provably a no-op; skip it. tol = 0 demands the
-        // bit-stable equality deterministic iters = 0 training gives.
-        val centsOld = centsOf(AtomicLanding.readVersion(spark,
-          s"$indexPath/cents", snap.members("cents")))
-        if (IvfPq.withinDrift(centsOld.map(_._2.map(_.toDouble)),
-            cents.map(_._2.map(_.toDouble)), driftTolerance)) {
-          rebalanceSkips.incrementAndGet()
-          done = true
-        } else {
-        val cv = AtomicLanding.commit(
-          centroidDf(spark, cents).coalesce(1), s"$indexPath/cents")
-        try {
-          // test seam: fires BEFORE the rewrite reserves its version
-          // slot (a concurrent append staged inside the reservation
-          // window would deadlock on the slot, not race the CAS)
-          beforeListsCommit()
-          val lv = AtomicLanding.commit(
-            assignWith(corpus, cents)
-              .select(col("vec_id").as("neighbor_id"), col("cid"),
-                col("embedding").as("ce")),
-            listsT,
-            expectedVersion = Some(lPin),
-            batchId = AtomicLanding.lastBatchId(listsT))
-          AtomicLanding.publishLinked(indexPath,
-            Map("cents" -> cv, "lists" -> lv),
-            expectedRoot = Some(snap.rootVersion),
-            beforePublish = beforeRootPublish)
-          done = true
-        } catch {
-          // a concurrent append advanced the lists (or the root) past
-          // our snapshot: retrain over the fresh corpus — the staged
-          // rewrite is unreachable garbage a vacuum reclaims
-          case _: java.util.ConcurrentModificationException => ()
-        }
-        }
+      val snap = saved.settled(indexPath)
+      val corpus = saved.member(spark, indexPath, snap, "lists")
+        .select(col("neighbor_id").as("vec_id"), col("ce").as("embedding"))
+      val cents = train(corpus, nLists, iters)
+      // DRIFT PROBE (IvfPq.rebalanceSavedIndex's contract): the
+      // retrained quantizer is in hand either way — if it reproduces
+      // the pinned one within driftTolerance, every list row is
+      // already assigned under it and the corpus-sized reassign +
+      // rewrite is provably a no-op; skip it. tol = 0 demands the
+      // bit-stable equality deterministic iters = 0 training gives.
+      val centsOld = centsOf(saved.member(spark, indexPath, snap, "cents"))
+      if (IvfPq.withinDrift(centsOld.map(_._2.map(_.toDouble)),
+          cents.map(_._2.map(_.toDouble)), driftTolerance)) {
+        rebalanceSkips.incrementAndGet()
+        done = true
+      } else try {
+        // the lists seam fires BEFORE the rewrite reserves its version
+        // slot (a concurrent append staged inside the reservation
+        // window would deadlock on the slot, not race the CAS)
+        saved.rebuild(indexPath, Seq(centroidDf(spark, cents)),
+          Seq(listRows(corpus, cents)), base = Some(snap),
+          beforeMember = m => if (m == "lists") beforeListsCommit(),
+          beforePublish = beforeRootPublish)
+        done = true
+      } catch {
+        // a concurrent append advanced the lists (or the root) past
+        // our snapshot: retrain over the fresh corpus — the staged
+        // rewrite is unreachable garbage a vacuum reclaims
+        case _: java.util.ConcurrentModificationException => ()
       }
     }
   }
@@ -565,59 +394,16 @@ object Ivf {
       nProbe: Int): DataFrame =
     probe(loadSavedIndex(spark, indexPath), queries, k, nProbe)
 
-  /** Long-SESSION maintenance ([[FuzzyJoin.maintainSigIndex]]'s shape —
+  /** Long-SESSION maintenance ([[graft.land.LinkedIndex.maintain]]:
     * the quantizer is frozen and the lists carry no derived state, so
-    * maintenance is purely physical): fold the small-dir micro-batch
-    * tail (body dirs above `smallBytes` never rewrite; concurrent
-    * appends ride the compaction rebase), CAS the root to the folded
-    * lists generation (also healing a crashed append's
-    * committed-but-unpublished batch forward), then
-    * [[graft.land.AtomicLanding.vacuumLinked]] reclaims superseded
-    * generations — quiescence-guarded, so a member a concurrent writer
-    * pushed ahead of the root pin is never touched. One maintainer at
-    * a time; concurrent probes/appends are safe. Returns reclaimed
-    * paths. */
+    * maintenance is purely physical — fold the small-dir micro-batch
+    * tail, re-pin the root, vacuum superseded generations). One
+    * maintainer at a time; concurrent probes/appends are safe. Returns
+    * reclaimed paths. */
   def maintainSavedIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, smallBytes: Long = 64L * 1024 * 1024,
       reservationGraceMs: Long = 600000L,
-      retainRootGenerations: Int = 0): Seq[String] = {
-    import graft.land.AtomicLanding
-    val listsT = s"$indexPath/lists"
-    var done = false
-    while (!done) {
-      val snap = AtomicLanding.linkedSnapshot(indexPath).getOrElse(
-        throw new IllegalStateException(s"no saved IVF index at $indexPath"))
-      val lLive = AtomicLanding.currentVersion(listsT).get
-      if (lLive != snap.members("lists")) {
-        // a crashed predecessor (append OR rebalance rewrite): heal to
-        // a consistent pair before folding — compacting a rebalanced
-        // generation under the old quantizer pin would publish the
-        // mixed state healLive exists to prevent
-        healLive(indexPath, snap, lLive)
-      } else {
-      val folded =
-        try AtomicLanding.compactSmall(spark, listsT, smallBytes)
-        catch {
-          // a concurrent rewrite landed mid-fold: skip the fold this
-          // run (best-effort, the next maintenance retries) but still
-          // heal the root to whatever is durably committed
-          case _: java.util.ConcurrentModificationException =>
-            AtomicLanding.currentVersion(listsT).get
-        }
-      if (folded == snap.members("lists")) done = true
-      else {
-        try {
-          AtomicLanding.publishLinked(indexPath,
-            Map("cents" -> snap.members("cents"), "lists" -> folded),
-            expectedRoot = Some(snap.rootVersion))
-          done = true
-        } catch {
-          case _: java.util.ConcurrentModificationException => ()
-        }
-      }
-      }
-    }
-    AtomicLanding.vacuumLinked(indexPath, futureGraceMs = reservationGraceMs,
-      retainRoots = retainRootGenerations)
-  }
+      retainRootGenerations: Int = 0): Seq[String] =
+    saved.maintain(spark, indexPath, smallBytes, reservationGraceMs,
+      retainRootGenerations)
 }

@@ -150,6 +150,20 @@ object IvfPq {
     Index(cents, cb, m, subDim, codes, norms(emb).localCheckpoint(true))
   }
 
+  /** The saved index's [[graft.land.LinkedIndex]] lifecycle: `cents` and
+    * `cb` frozen; `codes` (the entry member probes scan) and `n2` (the
+    * re-rank's norm lookup) growing. A batch codes against the pinned
+    * quantizers, after [[pinnedMembers]] refused any layout those codes
+    * could not extend. */
+  private val saved = new graft.land.LinkedIndex("no saved IVF-PQ index",
+    Seq("cents", "cb"), Seq("codes" -> Seq("neighbor_id"), "n2" -> Seq("vec_id")))(
+    (path, snap, batch) => {
+      val (cents, cb, _) = pinnedMembers(batch.sparkSession, path, snap)
+      Seq(assignCodes(residuals(batch, cents), cb, cb.map(_._1).max + 1,
+        cb.head._3.size).withColumnRenamed("vec_id", "neighbor_id"),
+        norms(batch))
+    })
+
   /** A codebook's entries by position — `(s)(j)` is code j of
     * subspace s — enforcing the DENSE contract every assignment and
     * lookup-table path relies on: subspaces 0..m-1, codes 0..k-1 in
@@ -293,50 +307,31 @@ object IvfPq {
     * codebook table itself, so there is no side metadata file to drift
     * out of sync.
     *
-    * The four parts are [[graft.land.AtomicLanding]] tables, and the
-    * whole QUADRUPLE publishes atomically through one
-    * [[graft.land.AtomicLanding.publishLinked]] root generation (the
-    * engine-wide linked-table primitive — the BM25 and plain-IVF
-    * persisted indexes share it): each part commits first (its
-    * returned version is its generation id), then the root manifest
-    * pinning all four versions swings last — O(metadata), no fifth
-    * Spark write. A re-save (the retrain-on-drift path) therefore
-    * flips readers from one complete index to the next in one step — a
-    * [[load]] racing it resolves either four OLD parts or four NEW
-    * parts, never a cents-from-one-generation / codes-from-another
-    * mix, which a per-part `mode(overwrite)` layout could serve — and
-    * the CAS on the prior root generation makes two racing re-saves
-    * fail loudly instead of interleaving. A crash anywhere before the
-    * root swing publishes NOTHING (the staged part generations are
-    * invisible garbage [[maintainSavedIndex]] reclaims).
-    * `beforePublish` is the root swing's test seam. */
+    * The four parts publish as one [[graft.land.LinkedIndex]] generation
+    * (commit order cents, cb, codes, n2, then the root). A re-save (the
+    * retrain-on-drift path) therefore flips readers from one complete
+    * index to the next in one step — a [[load]] racing it resolves
+    * either four OLD parts or four NEW parts, never a
+    * cents-from-one-generation / codes-from-another mix, which a
+    * per-part `mode(overwrite)` layout could serve. A crash anywhere
+    * before the root swing publishes NOTHING. `beforePublish` is the
+    * root swing's test seam, `beforeMember` fires before each part
+    * commit, and `batchId` seeds the watermark of both growable members
+    * (codes and n2 carry independent watermarks).
+    *
+    * Unlike the other builds, save() does not heal a crashed
+    * predecessor forward first ([[graft.land.LinkedIndex
+    * .healPredecessor]]): a reader inside a retried re-save's publish
+    * window resolves the last PUBLISHED quadruple, and the retry
+    * replaces the crashed one. */
   def save(index: Index, path: String,
       beforePublish: () => Unit = () => (),
       beforeMember: String => Unit = _ => (),
       batchId: Option[Long] = None): Unit = {
     val s = index.codes.sparkSession
-    import graft.land.AtomicLanding
-    beforeMember("cents")
-    val centsV = AtomicLanding.commit(
-      coarseDf(s, index.cents).coalesce(1), s"$path/cents")
-    beforeMember("cb")
-    val cbV = AtomicLanding.commit(
-      cbDf(s, index.cb).coalesce(1), s"$path/cb")
-    // batchId = seed watermark on BOTH growable members (codes and n2
-    // carry independent watermarks — Ivf.buildSavedIndex's contract):
-    // vouch the build corpus so the first identified append skips the
-    // per-member dedupe scan
-    beforeMember("codes")
-    val codesV = AtomicLanding.commit(index.codes, s"$path/codes",
-      batchId = batchId)
-    beforeMember("n2")
-    val n2V = AtomicLanding.commit(index.n2, s"$path/n2",
-      batchId = batchId)
-    AtomicLanding.publishLinked(path,
-      Map("cents" -> centsV, "cb" -> cbV, "codes" -> codesV, "n2" -> n2V),
-      expectedRoot = AtomicLanding.currentRootVersion(path),
+    saved.rebuild(path, Seq(coarseDf(s, index.cents), cbDf(s, index.cb)),
+      Seq(index.codes, index.n2), batchId, beforeMember = beforeMember,
       beforePublish = beforePublish)
-    ()
   }
 
   /** Load an index saved by [[save]]: resolve the root row once, then
@@ -350,12 +345,10 @@ object IvfPq {
     * must be part of the indexed corpus (the norm join drops unknown
     * query ids). */
   def load(s: SparkSession, path: String): Index = {
-    import graft.land.AtomicLanding
-    val snap = AtomicLanding.linkedSnapshot(path).getOrElse(
-      throw new IllegalStateException(s"no saved IVF-PQ index at $path"))
+    val snap = saved.snapshot(path)
     val (cents, cb, codes) = pinnedMembers(s, path, snap)
     Index(cents, cb, cb.map(_._1).max + 1, cb.head._3.size, codes,
-      AtomicLanding.readVersion(s, s"$path/n2", snap.members("n2")))
+      saved.member(s, path, snap, "n2"))
   }
 
   /** A saved index's pinned quantizers and codes member, refusing (with
@@ -366,14 +359,10 @@ object IvfPq {
   private def pinnedMembers(s: SparkSession, path: String,
       snap: graft.land.AtomicLanding.LinkedSnapshot)
       : (Seq[(Int, Seq[Float])], Seq[(Int, Int, Seq[Double])], DataFrame) = {
-    import graft.land.AtomicLanding
-    val cents = AtomicLanding
-      .readVersion(s, s"$path/cents", snap.members("cents"))
-      .orderBy("cid").collect()
+    val cents = saved.member(s, path, snap, "cents").orderBy("cid").collect()
       .map(r => (r.getAs[Int]("cid"),
         r.getAs[scala.collection.Seq[Float]]("cvec").toSeq)).toSeq
-    val cb = AtomicLanding.readVersion(s, s"$path/cb", snap.members("cb"))
-      .orderBy("sub", "code").collect()
+    val cb = saved.member(s, path, snap, "cb").orderBy("sub", "code").collect()
       .map(r => (r.getAs[Int]("sub"), r.getAs[Int]("code"),
         r.getAs[scala.collection.Seq[Double]]("rvec").toSeq)).toSeq
     try lutEntries(cb, if (cb.isEmpty) 0 else cb.map(_._1).max + 1)
@@ -381,7 +370,7 @@ object IvfPq {
       case e: IllegalArgumentException => throw new IllegalStateException(
         s"$path: saved codebook is not dense: ${e.getMessage}", e)
     }
-    val codes = AtomicLanding.readVersion(s, s"$path/codes", snap.members("codes"))
+    val codes = saved.member(s, path, snap, "codes")
     codes.schema.find(_.name == "codes").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.IntegerType, _)) => ()
@@ -394,24 +383,21 @@ object IvfPq {
 
   /** Index MAINTENANCE: append a batch of vectors to a [[save]]d index
     * WITHOUT retraining — [[Ivf.addToSavedIndex]]'s semantics on the
-    * compressed tier, completing the engine-wide contract (every
-    * persisted index grows; IVF-PQ previously required a full
-    * re-save). The FROZEN coarse quantizer and codebooks load once at
-    * their root-pinned versions (bounded: nLists×dim + m×k×subDim
+    * compressed tier. The FROZEN coarse quantizer and codebooks load
+    * once at their root-pinned versions (bounded: nLists×dim + m×k×subDim
     * rows); the batch pays one residual + code-assignment job that
     * scales with the batch, and the codes and norms tables append
-    * through ACID commits before one root CAS publishes the new
-    * quadruple with cents/cb pinned unchanged — a probe never scores
-    * codes from one generation under another generation's codebooks.
+    * before one root CAS publishes the new quadruple with cents/cb
+    * pinned unchanged — a probe never scores codes from one generation
+    * under another generation's codebooks.
     *
-    * TWO-MEMBER EXACTNESS: codes and n2 are separate tables, so a
-    * crash can land between their commits. Each member therefore
-    * carries its own dedupe — the batch-id check (`batchId` recorded
-    * in EACH member's manifest, atomic with its data) or, id-less,
-    * an anti-join against that member's own live rows — so a retry
-    * completes exactly the missing member and never duplicates the
-    * committed one. Until the root swings, any committed half is
-    * unreachable staging; probes keep the previous quadruple.
+    * TWO-MEMBER EXACTNESS: codes and n2 are separate tables, so a crash
+    * can land between their commits. Each member therefore runs its own
+    * exactly-once ladder ([[graft.land.LinkedIndex.appendOnce]]: its own
+    * batch-id mark, or an anti-join against its own live rows), so a
+    * retry completes exactly the missing member and never duplicates
+    * the committed one. n2 commits first: a half-landed append can only
+    * publish norms no candidate reaches yet.
     *
     * With deterministic quantizers (iters = 0) the grown index is
     * bit-identical to a one-shot [[buildIndex]]+[[save]] over the
@@ -422,107 +408,9 @@ object IvfPq {
       batchId: Option[Long] = None,
       beforePublish: () => Unit = () => (),
       beforeRootPublish: () => Unit = () => (),
-      writer: String = ""): Unit = {
-    import graft.land.AtomicLanding
-    val codesT = s"$path/codes"
-    val n2T = s"$path/n2"
-    def committed(t: String): Boolean =
-      batchId.exists(b => AtomicLanding.lastBatchId(t, writer).exists(_ >= b))
-    // a member whose LIVE version is a committed-but-unpublished
-    // REWRITE (dir lineage disjoint from the pin — a [[save]] re-save
-    // that crashed before its root swing), as opposed to an append
-    // chain a crashed addToSavedIndex leaves (dirs superset)
-    def rewriteAhead(t: String, pin: Long): Boolean = {
-      val live = AtomicLanding.currentVersion(t).get
-      live != pin && !AtomicLanding.dirsOfVersion(t, pin).toSet
-        .subsetOf(AtomicLanding.dirsOfVersion(t, live).toSet)
-    }
-    var done = false
-    while (!done) {
-      val snap = AtomicLanding.linkedSnapshot(path).getOrElse(
-        throw new IllegalStateException(s"no saved IVF-PQ index at $path"))
-      // CRASHED RE-SAVE detection BEFORE any append work: appending
-      // old-quantizer codes on top of a re-save's rewritten tables
-      // would make the next publish serve a mixed generation. save()
-      // commits cents -> cb -> codes -> n2 -> root, so n2-ahead means
-      // the quadruple is COMPLETE (heal it forward and append against
-      // the new quantizers); codes-ahead without n2 is INCOMPLETE and
-      // cannot be completed here (the re-save's source corpus is not
-      // ours to re-derive) — refuse loudly, re-running save() heals.
-      if (rewriteAhead(codesT, snap.members("codes")) ||
-          rewriteAhead(n2T, snap.members("n2"))) {
-        if (rewriteAhead(n2T, snap.members("n2"))) {
-          try {
-            AtomicLanding.publishLinked(path, Map(
-              "cents" -> AtomicLanding.currentVersion(s"$path/cents").get,
-              "cb" -> AtomicLanding.currentVersion(s"$path/cb").get,
-              "codes" -> AtomicLanding.currentVersion(codesT).get,
-              "n2" -> AtomicLanding.currentVersion(n2T).get),
-              expectedRoot = Some(snap.rootVersion))
-          } catch {
-            case _: java.util.ConcurrentModificationException => ()
-          }
-        } else throw new IllegalStateException(
-          s"$path: a crashed re-save left an incomplete member rewrite " +
-            "(codes ahead of the root pin, n2 not) — re-run save() over " +
-            "the intended index to heal before appending")
-      } else {
-      // refuse a layout the codes below could not extend before any
-      // member commits
-      val (cents, cb, _) = pinnedMembers(s, path, snap)
-      def freshFor(t: String, keyCol: String): DataFrame =
-        if (batchId.isDefined &&
-            AtomicLanding.lastBatchId(t, writer).isDefined) {
-          // identified: monotone ids mean a batch below the recorded id
-          // is fully in THIS member, one above it not at all — no scan.
-          // Only sound when the member HAS a watermark: after id-less
-          // growth the first identified append pays the scan once
-          if (committed(t)) batch.limit(0) else batch
-        } else {
-          dedupeCodeScans.incrementAndGet()
-          batch.join(
-            AtomicLanding.read(s, t).select(col(keyCol).as("vec_id")).distinct(),
-            Seq("vec_id"), "left_anti")
-        }
-      val freshN2 = freshFor(n2T, "vec_id").persist()
-      val freshCodes = freshFor(codesT, "neighbor_id").persist()
-      try {
-        // an identified batch with an empty fallback delta still
-        // records its id per member (O(metadata) empty append), making
-        // the watermark durable for the zero-scan fast path
-        val nNew =
-          if (!freshN2.isEmpty || (batchId.isDefined && !committed(n2T)))
-            AtomicLanding.commit(norms(freshN2), n2T, append = true,
-              batchId = batchId, writer = writer)
-          else AtomicLanding.currentVersion(n2T).get
-        val cNew =
-          if (!freshCodes.isEmpty ||
-              (batchId.isDefined && !committed(codesT))) {
-            AtomicLanding.commit(
-              assignCodes(residuals(freshCodes, cents), cb,
-                  cb.map(_._1).max + 1, cb.head._3.size)
-                .withColumnRenamed("vec_id", "neighbor_id"),
-              codesT, append = true, beforePublish = beforePublish,
-              batchId = batchId, writer = writer)
-          } else AtomicLanding.currentVersion(codesT).get
-        if (cNew == snap.members("codes") && nNew == snap.members("n2"))
-          done = true // true replay no-op
-        else {
-          try {
-            AtomicLanding.publishLinked(path, Map(
-              "cents" -> snap.members("cents"), "cb" -> snap.members("cb"),
-              "codes" -> cNew, "n2" -> nNew),
-              expectedRoot = Some(snap.rootVersion),
-              beforePublish = beforeRootPublish)
-            done = true
-          } catch {
-            case _: java.util.ConcurrentModificationException => ()
-          }
-        }
-      } finally { freshN2.unpersist(); freshCodes.unpersist() }
-      }
-    }
-  }
+      writer: String = ""): Unit =
+    saved.append(path, batch, batchId, writer, dedupeCodeScans,
+      beforePublish, beforeRootPublish)
 
   /** O(index) dedupe scans taken by id-less [[addToSavedIndex]]
     * appends (counted per member side) — the proof seam that an
@@ -583,7 +471,8 @@ object IvfPq {
     *     not-yet-indexed extras that disable the skip); a stale corpus
     *     fails loudly instead of dropping vectors — this also covers
     *     a CRASHED append's committed-but-unpublished ids, because
-    *     the census reads the member's live version, not the root pin;
+    *     the census runs over the healed ([[graft.land.LinkedIndex
+    *     .settled]]) snapshot;
     * (b) MEMBER CAS — the codes/n2 rewrites carry `expectedVersion` =
     *     the censused versions, so an append landing after the census
     *     fails the rewrite commit, never a reader;
@@ -591,231 +480,127 @@ object IvfPq {
     * Losing any fence retries the loop: the census re-runs over the
     * fresh state (the racing append's ids are in the live norms now —
     * a corpus that covers them rebuilds them in; one that does not
-    * fails the census). A live generation AHEAD of the root pin heals
-    * first, exactly as [[addToSavedIndex]]: an n2-complete rewrite
-    * publishes forward, an incomplete one refuses (re-run save() to
-    * heal), an append chain publishes forward. A crash between this
-    * rewrite's member commits and its root swing is the same
-    * crashed-re-save window those heals already close — member commit
-    * order (cents, cb, codes, n2, root) is save()'s, so n2-ahead
-    * still certifies a complete quadruple. */
+    * fails the census). A crash before the root swing leaves a
+    * complete rewrite the next writer heals forward. */
   def rebalanceSavedIndex(s: SparkSession, path: String, corpus: DataFrame,
       nLists: Int = 16, m: Int = 8, k: Int = 16,
       itersCoarse: Int = 0, itersPq: Int = 0,
       driftTolerance: Double = 0.0,
       beforeMembersCommit: () => Unit = () => (),
       beforeRootPublish: () => Unit = () => ()): Unit = {
-    import graft.land.AtomicLanding
-    val codesT = s"$path/codes"
-    val n2T = s"$path/n2"
     var done = false
     while (!done) {
-      val snap = AtomicLanding.linkedSnapshot(path).getOrElse(
-        throw new IllegalStateException(s"no saved IVF-PQ index at $path"))
-      val cLive = AtomicLanding.currentVersion(codesT).get
-      val nLive = AtomicLanding.currentVersion(n2T).get
-      def rewriteAhead(t: String, pin: Long, live: Long): Boolean =
-        live != pin && !AtomicLanding.dirsOfVersion(t, pin).toSet
-          .subsetOf(AtomicLanding.dirsOfVersion(t, live).toSet)
-      if (cLive != snap.members("codes") || nLive != snap.members("n2")) {
-        if (rewriteAhead(codesT, snap.members("codes"), cLive) &&
-            !rewriteAhead(n2T, snap.members("n2"), nLive))
-          throw new IllegalStateException(
-            s"$path: a crashed re-save left an incomplete member rewrite " +
-              "(codes ahead of the root pin, n2 not) — re-run save() over " +
-              "the intended index to heal before rebalancing")
-        try AtomicLanding.publishLinked(path, Map(
-          "cents" -> AtomicLanding.currentVersion(s"$path/cents").get,
-          "cb" -> AtomicLanding.currentVersion(s"$path/cb").get,
-          "codes" -> cLive, "n2" -> nLive),
-          expectedRoot = Some(snap.rootVersion))
-        catch { case _: java.util.ConcurrentModificationException => () }
-      } else {
-        // CENSUS — one id-only pass serves both fences: `missing`
-        // (indexed ids absent from the corpus — always fatal) and, in
-        // the deterministic probe mode, `extras` (corpus ids not yet
-        // indexed — a grow-under-rebalance that disables the skip).
-        // A full-outer join over the two pruned id columns replaces
-        // the former missing anti-join + extras anti-join pair, so the
-        // probe pays ONE corpus-shaped shuffle of ids, not two.
-        val probeMode = itersCoarse == 0 && itersPq == 0
-        val n2ids = AtomicLanding.readVersion(s, n2T, nLive)
-          .select(col("vec_id")).withColumn("_idx", lit(1))
-        val (missing, extras) =
-          if (probeMode) {
-            val r = n2ids
-              .join(corpus.select(col("vec_id")).withColumn("_cor", lit(1)),
-                Seq("vec_id"), "full_outer")
-              .agg(
-                coalesce(sum(when(col("_cor").isNull, 1L)), lit(0L)),
-                coalesce(sum(when(col("_idx").isNull, 1L)), lit(0L)))
-              .head()
-            (r.getLong(0), r.getLong(1))
-          } else
-            (n2ids.drop("_idx")
-              .join(corpus.select(col("vec_id")), Seq("vec_id"), "left_anti")
-              .count(), -1L)
-        require(missing == 0L,
-          s"$path: rebalance corpus is stale — $missing indexed ids are " +
-            "absent from it; rebuilding would silently drop those vectors")
-        // DRIFT PROBE — skip the corpus-sized recode when retraining
-        // would reproduce the LIVE quantizer pair. Appends were encoded
-        // under exactly these tables, so unchanged tables make the
-        // rebuild provably a no-op: the skip is an exactness argument,
-        // not a recall heuristic (driftTolerance > 0 additionally skips
-        // sub-threshold centroid movement — that IS a recall trade, the
-        // caller's). Probed only in the deterministic iters = 0 mode
-        // (training there is the corpus's canonical seed slices — a few
-        // driver-side rows, O(1) next to the recode); Lloyd-trained
-        // rebalances pay corpus passes to train and always rebuild.
-        // The skip also demands corpus ≡ indexed ids both ways: a
-        // corpus carrying EXTRA ids is a grow-under-rebalance and must
-        // rebuild them in.
-        val skipRebuild = probeMode && extras == 0L && {
-          val centsOld = AtomicLanding
-            .readVersion(s, s"$path/cents", snap.members("cents"))
-            .orderBy("cid").collect()
-            .map(_.getAs[scala.collection.Seq[Float]]("cvec")
-              .map(_.toDouble).toSeq).toSeq
-          // both seed fetches below are id-prefix-bounded (Ivf.seedPrefix
-          // inside train; explicit here for the PQ seed rows), so the
-          // probe's wide-column reads are row-group-pruned to the seed
-          // prefix — the probe's only corpus-shaped work is the single
-          // id census above
-          val centsNew = Ivf.train(corpus, nLists, 0)
-          withinDrift(centsOld,
-            centsNew.map(_._2.map(_.toDouble)), driftTolerance) && {
-            val dim = corpus.select(size(col("embedding")))
-              .head().getInt(0)
-            dim % m == 0 && {
-              val subDim = dim / m
-              val seedRes = residuals(
-                  Ivf.seedPrefix(corpus, k).orderBy(col("vec_id")).limit(k),
-                  centsNew)
-                .orderBy(col("vec_id")).collect()
-                .map(_.getAs[scala.collection.Seq[Double]]("res").toSeq)
-              val cbNew = (for {
-                sI <- 0 until m
-                (v, j) <- seedRes.zipWithIndex.toSeq
-              } yield (sI, j, v.slice(sI * subDim, (sI + 1) * subDim)))
-                .sortBy(t => (t._1, t._2)).map(_._3)
-              val cbOld = AtomicLanding
-                .readVersion(s, s"$path/cb", snap.members("cb"))
-                .orderBy("sub", "code").collect()
-                .map(_.getAs[scala.collection.Seq[Double]]("rvec").toSeq)
-                .toSeq
-              withinDrift(cbOld, cbNew, driftTolerance)
-            }
+      val snap = saved.settled(path)
+      // CENSUS — one id-only pass serves both fences: `missing`
+      // (indexed ids absent from the corpus — always fatal) and, in
+      // the deterministic probe mode, `extras` (corpus ids not yet
+      // indexed — a grow-under-rebalance that disables the skip).
+      // A full-outer join over the two pruned id columns replaces
+      // the former missing anti-join + extras anti-join pair, so the
+      // probe pays ONE corpus-shaped shuffle of ids, not two.
+      val probeMode = itersCoarse == 0 && itersPq == 0
+      val n2ids = saved.member(s, path, snap, "n2")
+        .select(col("vec_id")).withColumn("_idx", lit(1))
+      val (missing, extras) =
+        if (probeMode) {
+          val r = n2ids
+            .join(corpus.select(col("vec_id")).withColumn("_cor", lit(1)),
+              Seq("vec_id"), "full_outer")
+            .agg(
+              coalesce(sum(when(col("_cor").isNull, 1L)), lit(0L)),
+              coalesce(sum(when(col("_idx").isNull, 1L)), lit(0L)))
+            .head()
+          (r.getLong(0), r.getLong(1))
+        } else
+          (n2ids.drop("_idx")
+            .join(corpus.select(col("vec_id")), Seq("vec_id"), "left_anti")
+            .count(), -1L)
+      require(missing == 0L,
+        s"$path: rebalance corpus is stale — $missing indexed ids are " +
+          "absent from it; rebuilding would silently drop those vectors")
+      // DRIFT PROBE — skip the corpus-sized recode when retraining
+      // would reproduce the LIVE quantizer pair. Appends were encoded
+      // under exactly these tables, so unchanged tables make the
+      // rebuild provably a no-op: the skip is an exactness argument,
+      // not a recall heuristic (driftTolerance > 0 additionally skips
+      // sub-threshold centroid movement — that IS a recall trade, the
+      // caller's). Probed only in the deterministic iters = 0 mode
+      // (training there is the corpus's canonical seed slices — a few
+      // driver-side rows, O(1) next to the recode); Lloyd-trained
+      // rebalances pay corpus passes to train and always rebuild.
+      // The skip also demands corpus ≡ indexed ids both ways: a
+      // corpus carrying EXTRA ids is a grow-under-rebalance and must
+      // rebuild them in.
+      val skipRebuild = probeMode && extras == 0L && {
+        val centsOld = saved.member(s, path, snap, "cents")
+          .orderBy("cid").collect()
+          .map(_.getAs[scala.collection.Seq[Float]]("cvec")
+            .map(_.toDouble).toSeq).toSeq
+        // both seed fetches below are id-prefix-bounded (Ivf.seedPrefix
+        // inside train; explicit here for the PQ seed rows), so the
+        // probe's wide-column reads are row-group-pruned to the seed
+        // prefix — the probe's only corpus-shaped work is the single
+        // id census above
+        val centsNew = Ivf.train(corpus, nLists, 0)
+        withinDrift(centsOld,
+          centsNew.map(_._2.map(_.toDouble)), driftTolerance) && {
+          val dim = corpus.select(size(col("embedding")))
+            .head().getInt(0)
+          dim % m == 0 && {
+            val subDim = dim / m
+            val seedRes = residuals(
+                Ivf.seedPrefix(corpus, k).orderBy(col("vec_id")).limit(k),
+                centsNew)
+              .orderBy(col("vec_id")).collect()
+              .map(_.getAs[scala.collection.Seq[Double]]("res").toSeq)
+            val cbNew = (for {
+              sI <- 0 until m
+              (v, j) <- seedRes.zipWithIndex.toSeq
+            } yield (sI, j, v.slice(sI * subDim, (sI + 1) * subDim)))
+              .sortBy(t => (t._1, t._2)).map(_._3)
+            val cbOld = saved.member(s, path, snap, "cb")
+              .orderBy("sub", "code").collect()
+              .map(_.getAs[scala.collection.Seq[Double]]("rvec").toSeq)
+              .toSeq
+            withinDrift(cbOld, cbNew, driftTolerance)
           }
         }
-        if (skipRebuild) {
-          rebalanceSkips.incrementAndGet()
-          done = true
-        } else {
+      }
+      if (skipRebuild) {
+        rebalanceSkips.incrementAndGet()
+        done = true
+      } else {
         val idx = buildIndex(corpus, nLists, m, k, itersCoarse, itersPq)
         // test seam: fires after the census + rebuild, before any
         // member commit — the widest window a concurrent append can
         // land in
         beforeMembersCommit()
         try {
-          val centsV = AtomicLanding.commit(
-            coarseDf(s, idx.cents).coalesce(1), s"$path/cents")
-          val cbV = AtomicLanding.commit(
-            cbDf(s, idx.cb).coalesce(1), s"$path/cb")
-          val codesV = AtomicLanding.commit(idx.codes, codesT,
-            expectedVersion = Some(cLive),
-            batchId = AtomicLanding.lastBatchId(codesT))
-          val n2V = AtomicLanding.commit(idx.n2, n2T,
-            expectedVersion = Some(nLive),
-            batchId = AtomicLanding.lastBatchId(n2T))
-          AtomicLanding.publishLinked(path,
-            Map("cents" -> centsV, "cb" -> cbV,
-              "codes" -> codesV, "n2" -> n2V),
-            expectedRoot = Some(snap.rootVersion),
+          saved.rebuild(path, Seq(coarseDf(s, idx.cents), cbDf(s, idx.cb)),
+            Seq(idx.codes, idx.n2), base = Some(snap),
             beforePublish = beforeRootPublish)
           done = true
         } catch {
           case _: java.util.ConcurrentModificationException =>
             rebalanceRetries.incrementAndGet(); ()
         }
-        }
       }
     }
   }
 
   /** Long-SESSION maintenance ([[Ivf.maintainSavedIndex]]'s shape on
-    * the compressed tier — the quantizers are frozen and the codes/n2
-    * tables carry no derived state, so maintenance is purely
-    * physical): fold each append-session micro-batch tail
-    * (`compactSmall` per member — body dirs above `smallBytes` never
-    * rewrite; a concurrent append rides the compaction rebase), CAS
-    * the root to the folded generations with cents/cb pinned
-    * unchanged, then [[graft.land.AtomicLanding.vacuumLinked]]
-    * reclaims superseded generations — quiescence-guarded, so a part
-    * a concurrent writer pushed ahead of the root pin is never
-    * touched. One maintainer at a time; concurrent probes/appends are
-    * safe (every publish is a root CAS — a losing maintainer
-    * re-resolves and retries). Returns reclaimed paths. */
+    * the compressed tier, [[graft.land.LinkedIndex.maintain]]): the
+    * quantizers are frozen and the codes/n2 tables carry no derived
+    * state, so maintenance is purely physical — fold each member's
+    * micro-batch tail, re-pin the root with cents/cb unchanged, vacuum
+    * superseded generations. One maintainer at a time; concurrent
+    * probes/appends are safe. Returns reclaimed paths. */
   def maintainSavedIndex(s: SparkSession, path: String,
       smallBytes: Long = 64L * 1024 * 1024,
       reservationGraceMs: Long = 600000L,
-      retainRootGenerations: Int = 0): Seq[String] = {
-    import graft.land.AtomicLanding
-    var done = false
-    while (!done) {
-      val snap = AtomicLanding.linkedSnapshot(path).getOrElse(
-        throw new IllegalStateException(s"no saved IVF-PQ index at $path"))
-      // same crashed re-save discipline as addToSavedIndex: folding a
-      // rewritten live table and publishing it under the OLD pinned
-      // quantizers would serve a mixed generation
-      def rewriteAhead(t: String): Boolean = {
-        val pin = snap.members(t)
-        val live = AtomicLanding.currentVersion(s"$path/$t").get
-        live != pin && !AtomicLanding.dirsOfVersion(s"$path/$t", pin).toSet
-          .subsetOf(AtomicLanding.dirsOfVersion(s"$path/$t", live).toSet)
-      }
-      if (rewriteAhead("codes") || rewriteAhead("n2")) {
-        if (rewriteAhead("n2")) {
-          try AtomicLanding.publishLinked(path, Map(
-            "cents" -> AtomicLanding.currentVersion(s"$path/cents").get,
-            "cb" -> AtomicLanding.currentVersion(s"$path/cb").get,
-            "codes" -> AtomicLanding.currentVersion(s"$path/codes").get,
-            "n2" -> AtomicLanding.currentVersion(s"$path/n2").get),
-            expectedRoot = Some(snap.rootVersion))
-          catch { case _: java.util.ConcurrentModificationException => () }
-        } else throw new IllegalStateException(
-          s"$path: a crashed re-save left an incomplete member rewrite — " +
-            "re-run save() over the intended index to heal before maintaining")
-      } else {
-      def folded(t: String): Long =
-        try AtomicLanding.compactSmall(s, s"$path/$t", smallBytes)
-        catch {
-          // a concurrent rewrite landed mid-fold: skip this member for
-          // this run (the next maintenance retries) but still heal the
-          // root to whatever is durably committed
-          case _: java.util.ConcurrentModificationException =>
-            AtomicLanding.currentVersion(s"$path/$t").get
-        }
-      val cNew = folded("codes")
-      val nNew = folded("n2")
-      if (cNew == snap.members("codes") && nNew == snap.members("n2"))
-        done = true
-      else {
-        try {
-          AtomicLanding.publishLinked(path, Map(
-            "cents" -> snap.members("cents"), "cb" -> snap.members("cb"),
-            "codes" -> cNew, "n2" -> nNew),
-            expectedRoot = Some(snap.rootVersion))
-          done = true
-        } catch {
-          case _: java.util.ConcurrentModificationException => ()
-        }
-      }
-      }
-    }
-    AtomicLanding.vacuumLinked(path, futureGraceMs = reservationGraceMs,
-      retainRoots = retainRootGenerations)
-  }
+      retainRootGenerations: Int = 0): Seq[String] =
+    saved.maintain(s, path, smallBytes, reservationGraceMs,
+      retainRootGenerations)
 
   /** Build + probe in one call (the coverage-query path). */
   def topK(emb: DataFrame, queries: DataFrame, k: Int, nLists: Int = 16,

@@ -365,74 +365,25 @@ object Retrieval {
     * over the union corpus — value-gated by `q_bm25_grown` (which
     * shares `q_bm25`'s oracle) and frame-asserted in RetrievalSpec.
     *
-    * REPLAY COST: `batchId` is the at-least-once ingest's fast path
-    * (the [[graft.land.AtomicLanding.streamSink]] contract: ids are
-    * monotone per checkpointed query and recorded INSIDE the postings
-    * manifest, durable in the same atomic swing as the batch's data).
-    * An id at or below the recorded one is a known-committed replay —
-    * the append short-circuits to a pure [[syncRoot]] heal with ZERO
-    * postings reads and ZERO batch scans; an id above it is known-new,
-    * so the batch commits directly, skipping the O(index) dedupe
-    * anti-join (exactly-once comes from the id, not the scan). Id-less
-    * appends keep the anti-join fallback: exact dedupe at (doc_id,
-    * term) granularity, at O(index) read per append — fine for manual
-    * growth, wrong for a 100 TB streaming ingest, which should always
-    * carry its micro-batch id. */
+    * REPLAY COST: `batchId` rides the
+    * [[graft.land.LinkedIndex.appendOnce]] ladder — a known-committed
+    * replay is a pure [[syncRoot]] heal with ZERO postings reads and
+    * ZERO batch scans, a known-new id skips the dedupe anti-join.
+    * Id-less appends dedupe at (doc_id, term) granularity at O(index)
+    * read per append — fine for manual growth, wrong for a 100 TB
+    * streaming ingest, which should always carry its micro-batch id. */
   def addToIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, docs: DataFrame,
       batchId: Option[Long] = None,
       beforePublish: () => Unit = () => (),
       beforeRootPublish: () => Unit = () => (),
       writer: String = ""): String = {
-    import graft.land.AtomicLanding
-    val postingsT = s"$indexPath/postings"
-    if (batchId.exists(b =>
-        AtomicLanding.lastBatchId(postingsT, writer).exists(_ >= b))) {
-      // known-committed replay: the batch's data and its id became
-      // durable in one pointer swing — nothing to dedupe, nothing to
-      // commit; just heal the root over any orphaned predecessor dirs
-      syncRoot(spark, indexPath, beforeRootPublish)
-      return indexPath
-    }
-    val batch = (batchId.filter(_ =>
-        AtomicLanding.lastBatchId(postingsT, writer).isDefined) match {
-      case Some(_) =>
-        // identified and known-new: ids are monotone, so no prefix of
-        // this batch can be in the index — commit without the dedupe
-        // scan (O(batch), not O(index)). Only sound when a watermark
-        // exists: a table grown by id-less appends has durable rows no
-        // id vouches for, so the first identified append after them
-        // pays the scan once and establishes the watermark.
-        tfOf(docs)
-      case _ =>
-        // id-less fallback: dedupe against ALL durable postings — the
-        // LIVE pointer, which may run ahead of the root pin when a
-        // predecessor crashed before its root swing; re-appending that
-        // batch must not duplicate rows
-        dedupeIndexScans.incrementAndGet()
-        val live = AtomicLanding.read(spark, postingsT)
-          .select(col("doc_id"), col("term"))
-        tfOf(docs)
-          .join(live, Seq("doc_id", "term"), "left_anti")
-          // the anti-join hoists its keys to the front; restore tfOf's
-          // column order so appended files share the index's layout
-          .select(col("doc_id"), col("dl"), col("term"), col("tf"))
-    }).persist()
-    try {
-      // an identified batch with an empty fallback delta still records
-      // its id (O(metadata) empty append — the Clusters.addToSaved
-      // precedent): the watermark becomes durable, so later identified
-      // appends regain the zero-scan fast path
-      if (!batch.isEmpty || batchId.isDefined) {
-        AtomicLanding.commit(batch, postingsT, append = true,
-          beforePublish = beforePublish, batchId = batchId,
-          writer = writer)
-        ()
-      }
-      // fold our dir (and any crashed predecessor's) into derived and
-      // publish — also the pure-heal path when our batch was a replay
-      syncRoot(spark, indexPath, beforeRootPublish)
-    } finally batch.unpersist()
+    // the ladder's known-committed replay reads nothing; syncRoot then
+    // folds our dir (and any crashed predecessor's) into derived and
+    // publishes — the pure heal when our batch was a replay
+    graft.land.LinkedIndex.appendOnce(s"$indexPath/postings", tfOf(docs),
+      Seq("doc_id", "term"), batchId, writer, dedupeIndexScans, beforePublish)
+    syncRoot(spark, indexPath, beforeRootPublish)
     indexPath
   }
 

@@ -29,7 +29,8 @@ import graft.land.AtomicLanding
   *    the only member that grows. Appends ride the per-writer
   *    batch-id idempotence channel, so an at-least-once streaming
   *    ingest replaying a committed micro-batch heals the root with
-  *    ZERO code reads ([[graft.ext.Ivf.addToSavedIndex]]'s contract).
+  *    ZERO code reads ([[graft.land.LinkedIndex]], the lifecycle every
+  *    saved index shares).
   *
   * Scale census: a batch append costs one batch-sized quantize + one
   * bounded cents broadcast + one batch-keyed argmax window — FLAT in
@@ -43,52 +44,34 @@ import graft.land.AtomicLanding
   */
 object SemDedupState {
 
-  /** Reserved writer channel on the codes member stamping the QUANTIZER
-    * GENERATION (the stats version) its chain was last (re)built under.
-    * [[buildSaved]] stamps it atomically with its codes commit; appends
-    * and folds carry it forward untouched ([[AtomicLanding]]'s wmark
-    * carry-forward), so [[healForward]] can tell a crashed rebuild's
-    * codes (mark == live stats version) from old-chain codes standing
-    * next to ORPHANED stats a crashed-earlier rebuild left behind. */
-  private val GenWriter = "__gen__"
+  /** The state's [[graft.land.LinkedIndex]] lifecycle: `stats` and
+    * `cents` frozen, `codes` growing; a batch quantizes with the pinned
+    * stats and assigns against the pinned centroids ([[assignBatch]]). */
+  private val saved = new graft.land.LinkedIndex("no semantic-dedup state",
+    Seq("stats", "cents"), Seq("codes" -> Seq("vec_id")))((path, snap, batch) =>
+    Seq(assignBatch(batch.sparkSession, path, snap, batch)))
 
   /** Freeze stats + centroids from `emb` (the seed corpus), code and
     * assign it, and publish the three members under one root. `batchId`
     * is the seed watermark ([[graft.ext.Ivf.buildSavedIndex]] note): a
     * streaming ingest whose engine ids start at 0 seeds with -1.
     *
-    * A rebuild AT AN EXISTING PATH first heals any
-    * committed-but-unpublished predecessor generation forward — without
-    * this, RETRYING a crashed rebuild would stack a second orphaned
-    * quantizer on top of the first's unpublished codes, and the heal's
-    * "only the same crashed rebuild can have advanced stats/cents past
-    * the pin" invariant would break (the crashed-retry interleaving: a
-    * later heal would re-pin the ORIGINAL quantizer under rebuild 1's
-    * codes — the mixed generation). Healing first means every rebuild
-    * starts from a CONSISTENT published root. */
+    * A rebuild AT AN EXISTING PATH is the drift rebuild; it first heals
+    * a committed-but-unpublished predecessor forward
+    * ([[graft.land.LinkedIndex.healPredecessor]]), so RETRYING a crashed
+    * rebuild never stacks a second orphaned quantizer on the first's
+    * unpublished codes. */
   def buildSaved(emb: DataFrame, path: String, nLists: Int,
       batchId: Option[Long] = None,
       beforeRootSwing: () => Unit = () => (),
       beforeCodesCommit: () => Unit = () => ()): String = {
-    var healed = AtomicLanding.linkedSnapshot(path).isEmpty
-    while (!healed) {
-      val snap = snapOf(path)
-      if (AtomicLanding.currentVersion(s"$path/codes")
-          .contains(snap.members("codes"))) healed = true
-      else { healForward(path, snap); () }
-    }
+    saved.healPredecessor(path)
     val stats = Quantize.dimStats(emb).localCheckpoint(true)
     val withN2 = coded(emb, stats)
     val cents = SemDedup.seedCents(withN2, nLists)
-    val sv = AtomicLanding.commit(stats.coalesce(1), s"$path/stats")
-    val cv = AtomicLanding.commit(cents.coalesce(1), s"$path/cents")
-    beforeCodesCommit()
-    val kv = AtomicLanding.commit(
-      SemDedup.assignToCodeCents(withN2, cents), s"$path/codes",
-      batchId = batchId, extraMarks = Map(GenWriter -> sv))
-    AtomicLanding.publishLinked(path,
-      Map("stats" -> sv, "cents" -> cv, "codes" -> kv),
-      expectedRoot = AtomicLanding.currentRootVersion(path),
+    saved.rebuild(path, Seq(stats, cents),
+      Seq(SemDedup.assignToCodeCents(withN2, cents)), batchId,
+      beforeMember = m => if (m == "codes") beforeCodesCommit(),
       beforePublish = beforeRootSwing)
     path
   }
@@ -98,177 +81,40 @@ object SemDedupState {
       .select(col("vec_id"), col("codes"),
         SemDedup.intDot(col("codes"), col("codes")).as("n2"))
 
-  private def snapOf(path: String): AtomicLanding.LinkedSnapshot =
-    AtomicLanding.linkedSnapshot(path).getOrElse(
-      throw new IllegalStateException(s"no semantic-dedup state at $path"))
-
-  private def member(spark: SparkSession, path: String,
-      snap: AtomicLanding.LinkedSnapshot, m: String): DataFrame =
-    AtomicLanding.readVersion(spark, s"$path/$m", snap.members(m))
-
   /** Quantize `batch` with the FROZEN stats and assign it against the
     * FROZEN centroids — the batch-sized pass both [[addToSaved]] and
     * [[dedupBatch]] share. */
   private def assignBatch(spark: SparkSession, path: String,
       snap: AtomicLanding.LinkedSnapshot, batch: DataFrame): DataFrame =
     SemDedup.assignToCodeCents(
-      coded(batch, member(spark, path, snap, "stats")),
-      member(spark, path, snap, "cents"))
+      coded(batch, saved.member(spark, path, snap, "stats")),
+      saved.member(spark, path, snap, "cents"))
 
   /** Append a batch of vectors to the persisted codes — quantized with
     * the frozen stats, assigned against the frozen centroids, committed
-    * under the `writer` channel's batch-id watermark. The replay ladder
-    * is [[graft.ext.Ivf.addToSavedIndex]]'s: a known-committed id heals
-    * the root with no reads; a known-new id skips the O(state) dedupe
-    * anti-join; an id-less append pays the anti-join. Vec ids are
-    * immutable-by-contract (re-submitting a vec_id with a different
+    * under the `writer` channel's batch-id watermark through the
+    * [[graft.land.LinkedIndex.appendOnce]] ladder: a known-committed id
+    * heals the root with no reads; a known-new id skips the O(state)
+    * dedupe anti-join; an id-less append pays the anti-join. Vec ids
+    * are immutable-by-contract (re-submitting a vec_id with a different
     * embedding is undefined — the engine-wide persisted-index rule). */
   def addToSaved(spark: SparkSession, path: String, batch: DataFrame,
       batchId: Option[Long] = None,
       beforePublish: () => Unit = () => (),
       beforeRootPublish: () => Unit = () => (),
-      writer: String = ""): Unit = {
-    val codesT = s"$path/codes"
-    var done = false
-    while (!done) {
-      val snap = snapOf(path)
-      if (batchId.exists(b =>
-          AtomicLanding.lastBatchId(codesT, writer).exists(_ >= b))) {
-        val kLive = AtomicLanding.currentVersion(codesT).get
-        if (kLive == snap.members("codes")) done = true
-        else done = healForward(path, snap, beforeRootPublish)
-      } else if (AtomicLanding.currentVersion(codesT).get
-          != snap.members("codes")) {
-        // a predecessor crashed between its commits and the root swing
-        // — an append/fold OR a drift rebuild ([[buildSaved]] at this
-        // path); heal to a CONSISTENT generation first ([[healForward]]
-        // tells the two apart by the generation mark), then land on top
-        healForward(path, snap, beforeRootPublish); ()
-      } else {
-        val fresh = (batchId.filter(_ =>
-            AtomicLanding.lastBatchId(codesT, writer).isDefined) match {
-          case Some(_) => batch // identified + known-new: monotone ids
-          case _ =>
-            val standing = AtomicLanding.read(spark, codesT)
-              .select(col("vec_id"))
-            batch.join(standing, Seq("vec_id"), "left_anti")
-        }).persist()
-        try {
-          val kNew =
-            if (!fresh.isEmpty || batchId.isDefined)
-              // the append ALSO stamps the chain's generation (= the
-              // pinned stats version its rows are coded under): a no-op
-              // on marked chains (monotone max of the same value), and
-              // the ADOPTION path for legacy pre-mark chains — their
-              // first post-upgrade append makes later heals
-              // mark-discriminated instead of dir-lineage-guessed
-              AtomicLanding.commit(assignBatch(spark, path, snap, fresh),
-                codesT, append = true, beforePublish = beforePublish,
-                batchId = batchId, writer = writer,
-                extraMarks = Map(GenWriter -> snap.members("stats")))
-            else AtomicLanding.currentVersion(codesT).get
-          if (kNew == snap.members("codes")) done = true
-          else done = casRoot(path, snap, kNew, beforeRootPublish)
-        } finally fresh.unpersist()
-      }
-    }
-  }
+      writer: String = ""): Unit =
+    saved.append(path, batch, batchId, writer, dedupeStateScans,
+      beforePublish, beforeRootPublish)
 
-  private def casRoot(path: String, snap: AtomicLanding.LinkedSnapshot,
-      kNew: Long, beforeRootPublish: () => Unit = () => ()): Boolean =
-    try {
-      AtomicLanding.publishLinked(path,
-        Map("stats" -> snap.members("stats"),
-          "cents" -> snap.members("cents"), "codes" -> kNew),
-        expectedRoot = Some(snap.rootVersion),
-        beforePublish = beforeRootPublish)
-      true
-    } catch {
-      case _: java.util.ConcurrentModificationException => false
-    }
-
-  /** Heal a committed-but-unpublished LIVE codes generation forward —
-    * the [[graft.ext.Ivf]] healLive discipline, because the state has
-    * TWO crash shapes to tell apart since [[buildSaved]]-at-path became
-    * the documented drift rebuild:
-    *  - an APPEND-FAMILY generation (a crashed [[addToSaved]] append or
-    *    a crashed [[maintainSaved]] fold — rows coded under the PINNED
-    *    stats/cents; a fold REPLACES tail dirs, so dir lineage cannot
-    *    tell it from a rewrite): publish live codes under the pinned
-    *    quantizer — the plain [[casRoot]];
-    *  - a REWRITE generation (a drift rebuild that crashed between its
-    *    codes commit and the root swing — rows coded under NEW
-    *    stats/cents): publish the live codes WITH the live stats/cents
-    *    versions.
-    * The shapes are told apart by QUANTIZER ADVANCEMENT, not dir
-    * lineage: the live codes belong to a rebuild iff their chain's
-    * [[GenWriter]] mark — stamped atomically by [[buildSaved]]'s codes
-    * commit, carried forward untouched by appends and folds — equals
-    * the LIVE stats version AND the quantizer moved past the pinned
-    * one (under the one-maintainer contract only a rebuild advances
-    * stats/cents). Appends and folds never touch stats/cents, so their
-    * heal always re-pins the pinned quantizer. This also heals the
-    * orphaned-stats interleaving correctly: if a rebuild crashes after
-    * committing new stats/cents but BEFORE its codes commit and is
-    * abandoned, a later crashed fold's codes still carry the OLD
-    * generation mark (≠ the orphaned live stats version), so they heal
-    * under the PINNED quantizer (the fold's rows were coded with it) —
-    * publishing the orphaned new stats over old-envelope codes would
-    * quantize future batches with the new envelope and join them into
-    * the old chain, the mixed generation the root protocol exists to
-    * prevent.
-    *
-    * LEGACY chains (built before the generation mark existed) have no
-    * [[GenWriter]] mark to consult; for those the heal falls back to
-    * the dir-lineage rule the mark replaced (live dirs ⊇ pinned dirs =
-    * append chain; disjoint = rewrite) — a pre-upgrade crashed rebuild
-    * still heals to ITS generation instead of mixing. The fallback is
-    * TRANSITIONAL: every post-upgrade append and fold stamps the
-    * chain's generation (the adoption path — see [[addToSaved]] /
-    * [[maintainSaved]]), so a markless heal only arises for a crash
-    * state created ENTIRELY by the pre-mark binary, where it decides
-    * exactly as that binary's own heal did (including its known
-    * fold-vs-rewrite ambiguity — a pre-upgrade corruption window this
-    * code cannot retroactively repair, only stop widening). */
-  private def healForward(path: String, snap: AtomicLanding.LinkedSnapshot,
-      beforeRootPublish: () => Unit = () => ()): Boolean = {
-    val codesT = s"$path/codes"
-    val kLive = AtomicLanding.currentVersion(codesT).get
-    val sLive = AtomicLanding.currentVersion(s"$path/stats").get
-    val cLive = AtomicLanding.currentVersion(s"$path/cents").get
-    val quantizerMoved = sLive != snap.members("stats") ||
-      cLive != snap.members("cents")
-    val rebuilt = quantizerMoved &&
-      (AtomicLanding.lastBatchId(codesT, GenWriter) match {
-        case Some(gen) => gen == sLive
-        case None => // legacy chain: the pre-mark dir-lineage rule
-          !AtomicLanding.dirsOfVersion(codesT, snap.members("codes"))
-            .toSet.subsetOf(AtomicLanding.dirsOfVersion(codesT, kLive).toSet)
-      })
-    if (!rebuilt)
-      casRoot(path, snap, kLive, beforeRootPublish)
-    else
-      try {
-        AtomicLanding.publishLinked(path,
-          Map("stats" -> sLive, "cents" -> cLive, "codes" -> kLive),
-          expectedRoot = Some(snap.rootVersion),
-          beforePublish = beforeRootPublish)
-        true
-      } catch {
-        case _: java.util.ConcurrentModificationException => false
-      }
-  }
+  /** O(state) dedupe scans taken by id-less [[addToSaved]] appends. */
+  private[ext] val dedupeStateScans =
+    new java.util.concurrent.atomic.AtomicLong
 
   /** State MAINTENANCE — the physical tail fold every persisted tier
-    * carries ([[graft.ext.Ivf.maintainSavedIndex]]'s shape). Note a
-    * fold REPLACES tail dirs (it is NOT an append-chain superset), and
-    * stats/cents are not frozen for life — a drift rebuild advances
-    * them — so a crashed fold's heal goes through [[healForward]]'s
-    * generation-mark discrimination, never dir lineage: a streaming
-    * ingest leaves one
-    * small dir per micro-batch; fold the sub-`smallBytes` tail into one
-    * dir ([[AtomicLanding.compactSmall]] — never rewrites the body),
-    * re-pin the root, and vacuum superseded generations
+    * carries ([[graft.land.LinkedIndex.maintain]]): a streaming ingest
+    * leaves one small dir per micro-batch; fold the sub-`smallBytes`
+    * tail into one dir ([[AtomicLanding.compactSmall]] — never rewrites
+    * the body), re-pin the root, and vacuum superseded generations
     * (quiescence-guarded). The batch-id watermark survives the fold, so
     * replay-skip keeps working. One maintainer at a time; concurrent
     * reads and appends are safe. Returns reclaimed paths.
@@ -281,33 +127,9 @@ object SemDedupState {
   def maintainSaved(spark: SparkSession, path: String,
       smallBytes: Long = 64L * 1024 * 1024,
       reservationGraceMs: Long = 600000L,
-      retainRootGenerations: Int = 0): Seq[String] = {
-    val codesT = s"$path/codes"
-    var done = false
-    while (!done) {
-      val snap = snapOf(path)
-      val kLive = AtomicLanding.currentVersion(codesT).get
-      if (kLive != snap.members("codes")) {
-        healForward(path, snap); ()
-      } else {
-        val folded =
-          // the fold stamps the chain's generation like an append does
-          // (no-op on marked chains; the legacy-chain adoption path) —
-          // a fold that then crashes pre-CAS heals mark-discriminated
-          // even when orphaned stats sit above a pre-mark chain
-          try AtomicLanding.compactSmall(spark, codesT, smallBytes,
-            extraMarks = Map(GenWriter -> snap.members("stats")))
-          catch {
-            case _: java.util.ConcurrentModificationException =>
-              AtomicLanding.currentVersion(codesT).get
-          }
-        if (folded == snap.members("codes")) done = true
-        else done = casRoot(path, snap, folded)
-      }
-    }
-    AtomicLanding.vacuumLinked(path, futureGraceMs = reservationGraceMs,
-      retainRoots = retainRootGenerations)
-  }
+      retainRootGenerations: Int = 0): Seq[String] =
+    saved.maintain(spark, path, smallBytes, reservationGraceMs,
+      retainRootGenerations)
 
   /** What the drift detector measured — both statistics estimate how
     * far the standing corpus has outgrown the FROZEN seed quantizer:
@@ -335,11 +157,11 @@ object SemDedupState {
     * rows whatever the standing size. */
   def driftProbe(spark: SparkSession, path: String, maxDirs: Int = 8,
       rowsPerDir: Int = 65536): DriftStats = {
-    val snap = snapOf(path)
+    val snap = saved.snapshot(path)
     val dirPaths = AtomicLanding.dirPathsOfVersion(
       s"$path/codes", snap.members("codes"))
     val probed = dirPaths.takeRight(maxDirs)
-    val nLists = member(spark, path, snap, "cents").count().toInt
+    val nLists = saved.member(spark, path, snap, "cents").count().toInt
     val perCid = probed.map(d => spark.read.parquet(d)
         .select(col("cid"), col("codes")).limit(rowsPerDir))
       .reduce(_ unionByName _)
@@ -394,8 +216,8 @@ object SemDedupState {
     * the member a warm serving path passes into consumers that would
     * otherwise re-train per call ([[Rerank.rerank]]'s `vecStats`). */
   def statsSaved(spark: SparkSession, path: String): DataFrame = {
-    val snap = snapOf(path)
-    member(spark, path, snap, "stats")
+    val snap = saved.snapshot(path)
+    saved.member(spark, path, snap, "stats")
   }
 
   /** Full-corpus verdicts at the current root — [[SemDedup.verdicts]]
@@ -405,8 +227,8 @@ object SemDedupState {
     * [[SemDedup.dedup]] whose quantizer saw only the seed. */
   def verdictsSaved(spark: SparkSession, path: String,
       tau: Double): DataFrame = {
-    val snap = snapOf(path)
-    SemDedup.verdicts(member(spark, path, snap, "codes"), tau)
+    val snap = saved.snapshot(path)
+    SemDedup.verdicts(saved.member(spark, path, snap, "codes"), tau)
   }
 
   /** INCREMENTAL semantic dedup — verdict an arriving batch against the
@@ -424,13 +246,13 @@ object SemDedupState {
     * every other dedup tier carries). */
   def dedupBatch(spark: SparkSession, path: String, batch: DataFrame,
       tau: Double): DataFrame = {
-    val snap = snapOf(path)
+    val snap = saved.snapshot(path)
     // the batch assignment is referenced twice below (the dup join and
     // the final spine) — pin it once or the cents read, broadcast and
     // per-vector argmax window run twice per call (the Rerank pairs-pin
     // discipline; the batch is bounded by contract)
     val asn = assignBatch(spark, path, snap, batch).localCheckpoint(true)
-    val standing = member(spark, path, snap, "codes")
+    val standing = saved.member(spark, path, snap, "codes")
       .select(col("cid"), col("vec_id").as("va"),
         col("codes").as("ca"), col("n2").as("na"))
     val dup = asn

@@ -498,4 +498,35 @@ class IvfPqSpec extends AnyFunSuite with NoCodegenFallback {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  test("a maintainer that dies between its codes and n2 folds does not brick the index") {
+    import graft.land.AtomicLanding
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqfold").toString
+    val idx = s"$dir/idx"
+    IvfPq.save(IvfPq.buildIndex(emb.filter(col("vec_id") < 300)), idx,
+      batchId = Some(0L))
+    IvfPq.addToSavedIndex(spark, idx,
+      emb.filter(col("vec_id") >= 300 && col("vec_id") < 350), batchId = Some(1L))
+    IvfPq.addToSavedIndex(spark, idx,
+      emb.filter(col("vec_id") >= 350 && col("vec_id") < 400), batchId = Some(2L))
+    // the codes fold commits; the maintainer dies before its n2 fold and
+    // before any root publish
+    val pinned = AtomicLanding.linkedSnapshot(idx).get
+    AtomicLanding.compactSmall(spark, s"$idx/codes", 512L * 1024)
+    assert(AtomicLanding.currentVersion(s"$idx/codes").get > pinned.members("codes"),
+      "the codes fold must have committed ahead of the root pin")
+    IvfPq.addToSavedIndex(spark, idx, emb.filter(col("vec_id") >= 400),
+      batchId = Some(3L))
+    IvfPq.maintainSavedIndex(spark, idx, smallBytes = 512L * 1024)
+    val healed = AtomicLanding.linkedSnapshot(idx).get
+    assert(Seq("cents", "cb").forall(m => healed.members(m) == pinned.members(m)),
+      "a crashed fold heals under the pinned quantizers")
+    val fresh = s"$dir/fresh"
+    IvfPq.save(IvfPq.buildIndex(emb), fresh)
+    def rows(p: String, t: String) = AtomicLanding.read(spark, s"$p/$t")
+      .collect().map(_.toSeq).toSet
+    for (t <- Seq("codes", "n2"))
+      assert(rows(idx, t) === rows(fresh, t),
+        s"$t must match a one-shot build over the union corpus")
+  }
 }

@@ -496,4 +496,39 @@ class IvfSpec extends AnyFunSuite with NoCodegenFallback {
     Ivf.buildSavedIndex(emb, s"$dir/fresh", nLists = 16, iters = 0)
     assert(canonProbe(idx) === canonProbe(s"$dir/fresh"))
   }
+
+  test("a crashed fold heals under the pinned quantizer even above orphaned cents from a crashed rebalance") {
+    import graft.land.AtomicLanding
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivforphan").toString
+    val idx = s"$dir/idx"
+    Ivf.buildSavedIndex(emb.filter(col("vec_id") < 300), idx,
+      nLists = 8, iters = 0, batchId = Some(0L))
+    Ivf.addToSavedIndex(spark, idx,
+      emb.filter(col("vec_id") >= 300 && col("vec_id") < 350), batchId = Some(1L))
+    Ivf.addToSavedIndex(spark, idx,
+      emb.filter(col("vec_id") >= 350 && col("vec_id") < 400), batchId = Some(2L))
+    val pinned = AtomicLanding.linkedSnapshot(idx).get
+    // a rebalance commits its 4-centroid quantizer and dies before the
+    // lists rewrite: the new cents are an orphan above the pin
+    final class Crash extends RuntimeException("die before lists commit")
+    intercept[Crash] {
+      Ivf.rebalanceSavedIndex(spark, idx, nLists = 4, iters = 1,
+        beforeListsCommit = () => throw new Crash)
+    }
+    assert(AtomicLanding.currentVersion(s"$idx/cents").get > pinned.members("cents"))
+    // then a lists fold commits (rows still assigned under 8 centroids)
+    // and its maintainer dies before the root publish
+    AtomicLanding.compactSmall(spark, s"$idx/lists", 512L * 1024)
+    assert(AtomicLanding.currentVersion(s"$idx/lists").get > pinned.members("lists"))
+    Ivf.addToSavedIndex(spark, idx, emb.filter(col("vec_id") >= 400),
+      batchId = Some(3L))
+    assert(AtomicLanding.linkedSnapshot(idx).get.members("cents")
+      == pinned.members("cents"), "the root must keep pinning the original cents")
+    assert(Ivf.loadSavedIndex(spark, idx).cents.size == 8)
+    Ivf.buildSavedIndex(emb, s"$dir/fresh", nLists = 8, iters = 0)
+    def rows(p: String) = AtomicLanding.read(spark, s"$p/lists")
+      .select("neighbor_id", "cid").as[(Long, Int)].collect().toSet
+    assert(rows(idx) === rows(s"$dir/fresh"),
+      "the lists must equal a one-shot build under the original quantizer")
+  }
 }

@@ -3,9 +3,10 @@ package graft.ext
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import graft.TestSpark
+import graft.{NoCodegenFallback, TestSpark}
 
-class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
+    with NoCodegenFallback {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
