@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — prints ONE JSON line with per-query wall times.
   *
@@ -26,23 +26,24 @@ object Bench {
       }
       .fold(0L)(_ ^ _)
 
+  /** Host-load sentinel: a FIXED trivial job (independent of sf and of
+    * the query set) timed before warm-up and again after the last pass.
+    * On a quiet host both land ~equal; a sentinel ratio far from 1 — or
+    * an absolute time several× its historic ~0.1 s — flags a run whose
+    * numbers are host-contamination, not code (see round-4 postmortem:
+    * uniform 1.6-4× drift across even trivial queries). */
+  def sentinel(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0, 20000000L, 1, 32)
+      .selectExpr("sum(id * 3 % 7) s").collect()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.build(Sessions.cpusFromEnv, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
-    // host-load sentinel: a FIXED trivial job (independent of sf and of
-    // the query set) timed before warm-up and again after the last pass.
-    // On a quiet host both land ~equal; a sentinel ratio far from 1 — or
-    // an absolute time several× its historic ~0.1 s — flags a run whose
-    // numbers are host-contamination, not code (see round-4 postmortem:
-    // uniform 1.6-4× drift across even trivial queries).
-    def sentinel(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 20000000L, 1, 32)
-        .selectExpr("sum(id * 3 % 7) s").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
     // a SECOND sentinel with a shuffle in it: the compute sentinel
     // above is blind to IO/contention-shaped host drift (r20 final
     // boards: 7 untouched sub-second rows dual-flagged while the
@@ -55,7 +56,7 @@ object Bench {
         .count().selectExpr("sum(count) s").collect()
       (System.nanoTime() - t0) / 1e9
     }
-    val sentFirst = { sentinel(); sentinel() } // its own warm-up, then timed
+    val sentFirst = { sentinel(spark); sentinel(spark) } // its own warm-up, then timed
     val sentShFirst = { sentinelShuffle(); sentinelShuffle() }
 
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -71,7 +72,7 @@ object Bench {
     val passes = Seq(pass(), pass(), pass())
     val results = qs.map { case (name, _) =>
       name -> passes.map(_(name)).min }
-    val sentLast = sentinel()
+    val sentLast = sentinel(spark)
     val sentShLast = sentinelShuffle()
 
     val qJson = results.map { case (k, v) => s"\"" + k + "\":" + v }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.land.AtomicLanding
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -159,6 +161,14 @@ object ScaleBench {
           keyCol = "c_name", idCol = "c_custkey", localSolveMax = 0L)
         .groupBy(col("component")).agg(count(lit(1)).as("n_members"))))
 
+  private def time[T](f: => T): (Double, T) = {
+    val t0 = System.nanoTime(); val r = f
+    (((System.nanoTime() - t0) / 1e9), r)
+  }
+
+  private def localFs(spark: SparkSession): FileSystem =
+    FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+
   private def span(df: DataFrame, c: String): Long =
     df.agg(max(col(c))).head().getLong(0) + 1L
 
@@ -236,15 +246,7 @@ object ScaleBench {
     * (file-count-bounded). Emits one JSON object per scale. */
   private def acidSection(spark: SparkSession, dir: String,
       scratch: String): String = {
-    import graft.land.AtomicLanding
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
     val table = s"$scratch/acid_orders"
-    def time[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      (((System.nanoTime() - t0) / 1e9), r)
-    }
     val body = Tables.t(spark, dir, "orders")
     val keySpan = span(body, "o_orderkey")
     // range-clustered body: FOUR disjoint key-quarter dirs — the layout
@@ -302,7 +304,6 @@ object ScaleBench {
       AtomicLanding.readVersion(spark, table, vPreCompact).count())
     val (tVacuum, removed) = time(AtomicLanding.vacuum(table))
     val (tRead, rows) = time(AtomicLanding.read(spark, table).count())
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
     f"""{"init_commit_sec":$tInit%.3f,"merge_pruned_sec":$tMergePruned%.3f,""" +
       f""""dirs_after_pruned":$dirsAfterPruned,"merge_sec":$tMerge%.3f,""" +
       f""""append8_sec":$tAppend%.3f,"compact_small_sec":$tCompact%.3f,""" +
@@ -337,14 +338,7 @@ object ScaleBench {
     *    scales with the table. */
   private def maintSection(spark: SparkSession, dir: String,
       scratch: String): String = {
-    import graft.land.AtomicLanding
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    def time[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      (((System.nanoTime() - t0) / 1e9), r)
-    }
+    val fs = localFs(spark)
 
     // ---- leg 1: concurrent append riding the compaction rebase ----
     val table = s"$scratch/orders_tail"
@@ -414,7 +408,6 @@ object ScaleBench {
       s"the fold must leave body + folded tail, got $dirsAfterMaint " +
         "(threshold misfit: the corpus body dir folded, or the tail did not)")
 
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
     f"""{"rebase_sec":$tRebase%.3f,"ride_rows":$rideRows,""" +
       f""""dirs_after_rebase":$rideDirs,"index_build_sec":$tBuild%.3f,""" +
       f""""index_append3_sec":$tAppend%.3f,"index_maint_sec":$tMaint%.3f,""" +
@@ -435,14 +428,6 @@ object ScaleBench {
     * probed member of a dissolved chain resolves to the merged root. */
   private def clustersSection(spark: SparkSession, dir: String,
       scratch: String): String = {
-    import graft.land.AtomicLanding
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    def time[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      (((System.nanoTime() - t0) / 1e9), r)
-    }
     val state = s"$scratch/clusters"
     val standing = Tables.t(spark, dir, "customer")
       .select(col("c_custkey").as("doc_a"))
@@ -469,7 +454,6 @@ object ScaleBench {
       .where(col("doc_id") === 350L).head().getAs[Long]("component")
     require(probe == 201L, s"member 350 must resolve to merged root 201, got $probe")
     val (tFold, _) = time(graft.ext.Clusters.maintainSaved(spark, state))
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
     f"""{"build_sec":$tBuild%.3f,"state_rows":$rows0,""" +
       f""""append_sec":$tAppend%.3f,"delta_rows":$deltaRows,""" +
       f""""fold_sec":$tFold%.3f}"""
@@ -489,14 +473,6 @@ object ScaleBench {
     * cosine ~1) are require()d at both scales. */
   private def ivfRebalSection(spark: SparkSession, dir: String,
       scratch: String): String = {
-    import graft.land.AtomicLanding
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    def time[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      (((System.nanoTime() - t0) / 1e9), r)
-    }
     val idx = s"$scratch/ivfidx"
     val e = Tables.t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -549,23 +525,11 @@ object ScaleBench {
       .select(col("cos_sim")).collect().map(_.getDouble(0))
     require(selfTop.length == 4 && selfTop.forall(_ >= 0.999),
       s"self-probe top-1 must score ~1 after the rebalance, got ${selfTop.mkString(",")}")
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
     f"""{"build_sec":$tBuild%.3f,"lists_rows":$rows0,""" +
       f""""append3_sec":$tAppend%.3f,"rebalance_nodrift_sec":$tNoDrift%.3f,""" +
       f""""rebalance_sec":$tRebal%.3f}"""
   }
 
-  /** File-pruned row-level delete at scale — the
-    * [[graft.land.AtomicLanding.deletePruned]] leg on a
-    * range-clustered table (4 corpus-sized key segments + one FIXED
-    * 2000-row appended tail). The timed rows tell the whole cost
-    * story: the shallow clone and the provable no-op delete (ghost
-    * keys outside every range) are manifest-only — FLAT; the
-    * manifest-pruned tail read and the tail-confined delete touch one
-    * fixed dir — FLAT while the 4 body segments grow 100×; victims
-    * inside a body segment rewrite that segment — corpus-shaped, the
-    * honest contrast. Row conservation and the carried-dir layout are
-    * require()d at both scales. */
   /** INCREMENTAL decontamination at scale — the r16 answer to
     * DECON_PROBE_r15's scan-bound 70×: the benchmark shingle index
     * builds ONCE (benchmark-sized — the fixed replica-0 head at every
@@ -574,13 +538,6 @@ object ScaleBench {
     * as the honest contrast: THAT is what grows with the corpus. */
   private def deconIncSection(spark: SparkSession, dir: String,
       scratch: String): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    def time[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      (((System.nanoTime() - t0) / 1e9), r)
-    }
     val docs = Tables.t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val bench = docs.filter(col("doc_id") < 10)
@@ -598,7 +555,6 @@ object ScaleBench {
         minShared = 10).count()).sum)
     val (tInline, inlineRows) = time(graft.ext.Decontaminate.overlaps(
       docs.filter(col("doc_id") >= 10), bench, minShared = 10).count())
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
     f"""{"build_sec":$tBuild%.3f,"probe3_sec":$tProbe3%.3f,""" +
       f""""flagged":$flagged,"inline_full_sec":$tInline%.3f,""" +
       f""""inline_rows":$inlineRows}"""
@@ -613,14 +569,6 @@ object ScaleBench {
     * the rebalance's rewrite window is seconds wide. */
   private def multiWriterSection(spark: SparkSession, dir: String,
       scratch: String): String = {
-    import graft.land.AtomicLanding
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    def time[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      (((System.nanoTime() - t0) / 1e9), r)
-    }
     val idx = s"$scratch/mwidx"
     val e = Tables.t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -684,21 +632,23 @@ object ScaleBench {
     // canonical one-shot bits over the union corpus
     graft.ext.Ivf.rebalanceSavedIndex(spark, idx, nLists = 16, iters = 0)
     val _ = retries0
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
     f"""{"wall_sec":$tWall%.3f,"rows":$nRows,""" +
       f""""writers":6,"lost_batches":0}"""
   }
 
+  /** File-pruned row-level delete at scale — the
+    * [[graft.land.AtomicLanding.deletePruned]] leg on a
+    * range-clustered table (4 corpus-sized key segments + one FIXED
+    * 2000-row appended tail). The timed rows tell the whole cost
+    * story: the shallow clone and the provable no-op delete (ghost
+    * keys outside every range) are manifest-only — FLAT; the
+    * manifest-pruned tail read and the tail-confined delete touch one
+    * fixed dir — FLAT while the 4 body segments grow 100×; victims
+    * inside a body segment rewrite that segment — corpus-shaped, the
+    * honest contrast. Row conservation and the carried-dir layout are
+    * require()d at both scales. */
   private def deleteSection(spark: SparkSession, dir: String,
       scratch: String): String = {
-    import graft.land.AtomicLanding
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    def time[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      (((System.nanoTime() - t0) / 1e9), r)
-    }
     val tbl = s"$scratch/orders_del"
     val o = Tables.t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -775,7 +725,6 @@ object ScaleBench {
       AtomicLanding.deletePruned(bodyVictims, tbl, "o_orderkey"))
     require(AtomicLanding.read(spark, tbl).count() == total - 1000,
       "the body delete must remove exactly its victims")
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
     f"""{"rows":$total,"clone_sec":$tClone%.3f,""" +
       f""""read_pruned_sec":$tPruned%.3f,"read_full_sec":$tFull%.3f,""" +
       f""""noop_sec":$tNoop%.3f,""" +
@@ -794,14 +743,6 @@ object ScaleBench {
     * root pin are require()d at both scales. */
   private def pqRebalSection(spark: SparkSession, dir: String,
       scratch: String): String = {
-    import graft.land.AtomicLanding
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    def time[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      (((System.nanoTime() - t0) / 1e9), r)
-    }
     val idx = s"$scratch/pqidx"
     val e = Tables.t(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
@@ -847,7 +788,6 @@ object ScaleBench {
       "a drifted rebalance must publish a fresh root generation")
     require(AtomicLanding.read(spark, s"$idx/n2").count() == rows0 + 800,
       "the rewrite must conserve rows")
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
     f"""{"build_sec":$tBuild%.3f,"n2_rows":$rows0,""" +
       f""""append3_sec":$tAppend%.3f,"rebalance_nodrift_sec":$tNoDrift%.3f,""" +
       f""""rebalance_sec":$tRebal%.3f}"""
@@ -866,14 +806,7 @@ object ScaleBench {
     * the body+folded-tail dir layout. */
   private def zmaintSection(spark: SparkSession, dir: String,
       scratch: String): String = {
-    import graft.land.AtomicLanding
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-    def time[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      (((System.nanoTime() - t0) / 1e9), r)
-    }
+    val fs = localFs(spark)
     val tbl = s"$scratch/orders_z"
     val cols = Seq("o_custkey", "o_orderkey")
     val o = Tables.t(spark, dir, "orders")
@@ -916,7 +849,6 @@ object ScaleBench {
     val local = cols.forall(c => graft.ext.Zorder.meanSpanFraction(
       spark, Seq(s"$tbl/${comp.foldDir.get}"), c) <= 0.7)
     require(local, "the folded tail must measure z-local post-fold")
-    fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
     f"""{"body_sec":$tBody%.3f,"body_rows":$rows0,""" +
       f""""append3_sec":$tAppend%.3f,"fold_sec":$tFold%.3f,""" +
       f""""fold_rows":6000,"dirs_after":$dirsAfter}"""
@@ -939,6 +871,20 @@ object ScaleBench {
     val nComp = comp.agg(countDistinct(col("component"))).head().getLong(0)
     (((System.nanoTime() - t0) / 1e9), rounds, nComp)
   }
+
+  /** The maintenance legs as (`only` token, JSON key, section): each
+    * section runs at base and then scaled on a fresh scratch dir and
+    * returns one JSON object per scale. */
+  private val Legs: Seq[(String, String, (SparkSession, String, String) => String)] = Seq(
+    ("acid", "acid", acidSection),
+    ("maint", "maint", maintSection),
+    ("clusters", "clusters", clustersSection),
+    ("ivfrebal", "ivf_rebalance", ivfRebalSection),
+    ("pqrebal", "ivfpq_rebalance", pqRebalSection),
+    ("zmaint", "zorder_maint", zmaintSection),
+    ("delete", "delete_pruned", deleteSection),
+    ("deconinc", "decon_incremental", deconIncSection),
+    ("multiwriter", "multi_writer", multiWriterSection))
 
   private def joinCensus(df: DataFrame): String = {
     val p = df.queryExecution.executedPlan.toString
@@ -971,7 +917,7 @@ object ScaleBench {
           .getOrElse(name != "q_entity_names" && name != "q_fuzzy_names_ed2" &&
             name != "q_fuzzy_names_ed2_auto")
       }
-    def time(dir: String): Map[String, (Double, String)] = {
+    def timeQueries(dir: String): Map[String, (Double, String)] = {
       qs.foreach { case (_, fn) => Bench.materialize(fn(spark, dir)) } // warm-up
       def pass(): Map[String, (Double, String)] = qs.map { case (name, fn) =>
         // construction INSIDE the timer, like graft.Bench: queries that
@@ -995,39 +941,21 @@ object ScaleBench {
     // scaled pass — far-apart or far-above-historic sentinels mean the
     // window was contaminated and the curve should be re-run, not
     // narrated around
-    def sentinel(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 20000000L, 1, 32)
-        .selectExpr("sum(id * 3 % 7) s").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val sentFirst = { sentinel(); sentinel() }
-    val baseT = time(base)
-    val sentMid = sentinel()
-    val scaledT = time(out)
-    val sentLast = sentinel()
+    val sentFirst = { Bench.sentinel(spark); Bench.sentinel(spark) }
+    val baseT = timeQueries(base)
+    val sentMid = Bench.sentinel(spark)
+    val scaledT = timeQueries(out)
+    val sentLast = Bench.sentinel(spark)
     val rows = qs.map(_._1).map { q =>
       val (b, jb) = baseT(q); val (s, js) = scaledT(q)
       f""""$q":{"base_sec":$b%.3f,"scaled_sec":$s%.3f,"ratio":${s / b}%.2f,"joins_base":"$jb","joins_scaled":"$js"}"""
     }.mkString(",")
     val rb = baseT.values.map(_._1).sum
     val rs = scaledT.values.map(_._1).sum
-    // ACID + CC sections run on the full curve (or when named via
-    // `only` as "acid" / "cc"); a filtered query probe skips them
-    val runAcid = only.forall(_.contains("acid"))
-    val runCc = only.forall(_.contains("cc"))
-    val acidJson =
-      if (!runAcid) ""
-      else {
-        // per-run scratch: two bench runs on one host must not clobber
-        // each other's live ACID tables mid-measurement
-        val runTag = java.util.UUID.randomUUID().toString.take(8)
-        val ab = acidSection(spark, base, s"/tmp/graft_acid_base_$runTag")
-        val as = acidSection(spark, out, s"/tmp/graft_acid_scaled_$runTag")
-        s""","acid":{"base":$ab,"scaled":$as}"""
-      }
+    // CC and the maintenance legs run on the full curve (or when named
+    // via `only` by their token); a filtered query probe skips them
     val ccJson =
-      if (!runCc) ""
+      if (!only.forall(_.contains("cc"))) ""
       else {
         val (cb, roundsB, compB) = ccSection(spark, base)
         val (cs, roundsS, compS) = ccSection(spark, out)
@@ -1036,79 +964,21 @@ object ScaleBench {
           f""""rounds_scaled":$roundsS,"components_base":$compB,""" +
           f""""components_scaled":$compS}"""
       }
-    val runMaint = only.forall(_.contains("maint"))
-    val maintJson =
-      if (!runMaint) ""
-      else {
-        val runTag = java.util.UUID.randomUUID().toString.take(8)
-        val mb = maintSection(spark, base, s"/tmp/graft_maint_base_$runTag")
-        val ms = maintSection(spark, out, s"/tmp/graft_maint_scaled_$runTag")
-        s""","maint":{"base":$mb,"scaled":$ms}"""
-      }
-    val runClusters = only.forall(_.contains("clusters"))
-    val clustersJson =
-      if (!runClusters) ""
-      else {
-        val runTag = java.util.UUID.randomUUID().toString.take(8)
-        val cb = clustersSection(spark, base, s"/tmp/graft_clusters_base_$runTag")
-        val cs = clustersSection(spark, out, s"/tmp/graft_clusters_scaled_$runTag")
-        s""","clusters":{"base":$cb,"scaled":$cs}"""
-      }
-    val runIvfRebal = only.forall(_.contains("ivfrebal"))
-    val ivfRebalJson =
-      if (!runIvfRebal) ""
-      else {
-        val runTag = java.util.UUID.randomUUID().toString.take(8)
-        val ib = ivfRebalSection(spark, base, s"/tmp/graft_ivfrebal_base_$runTag")
-        val is = ivfRebalSection(spark, out, s"/tmp/graft_ivfrebal_scaled_$runTag")
-        s""","ivf_rebalance":{"base":$ib,"scaled":$is}"""
-      }
-    val runDelete = only.forall(_.contains("delete"))
-    val deleteJson =
-      if (!runDelete) ""
-      else {
-        val runTag = java.util.UUID.randomUUID().toString.take(8)
-        val db = deleteSection(spark, base, s"/tmp/graft_delete_base_$runTag")
-        val ds = deleteSection(spark, out, s"/tmp/graft_delete_scaled_$runTag")
-        s""","delete_pruned":{"base":$db,"scaled":$ds}"""
-      }
-    val runPqRebal = only.forall(_.contains("pqrebal"))
-    val pqRebalJson =
-      if (!runPqRebal) ""
-      else {
-        val runTag = java.util.UUID.randomUUID().toString.take(8)
-        val pb = pqRebalSection(spark, base, s"/tmp/graft_pqrebal_base_$runTag")
-        val ps = pqRebalSection(spark, out, s"/tmp/graft_pqrebal_scaled_$runTag")
-        s""","ivfpq_rebalance":{"base":$pb,"scaled":$ps}"""
-      }
-    val runDeconInc = only.forall(_.contains("deconinc"))
-    val deconIncJson =
-      if (!runDeconInc) ""
-      else {
-        val runTag = java.util.UUID.randomUUID().toString.take(8)
-        val db = deconIncSection(spark, base, s"/tmp/graft_deconinc_base_$runTag")
-        val ds = deconIncSection(spark, out, s"/tmp/graft_deconinc_scaled_$runTag")
-        s""","decon_incremental":{"base":$db,"scaled":$ds}"""
-      }
-    val runMulti = only.forall(_.contains("multiwriter"))
-    val multiJson =
-      if (!runMulti) ""
-      else {
-        val runTag = java.util.UUID.randomUUID().toString.take(8)
-        val mb = multiWriterSection(spark, base, s"/tmp/graft_mw_base_$runTag")
-        val ms = multiWriterSection(spark, out, s"/tmp/graft_mw_scaled_$runTag")
-        s""","multi_writer":{"base":$mb,"scaled":$ms}"""
-      }
-    val runZmaint = only.forall(_.contains("zmaint"))
-    val zmaintJson =
-      if (!runZmaint) ""
-      else {
-        val runTag = java.util.UUID.randomUUID().toString.take(8)
-        val zb = zmaintSection(spark, base, s"/tmp/graft_zmaint_base_$runTag")
-        val zs = zmaintSection(spark, out, s"/tmp/graft_zmaint_scaled_$runTag")
-        s""","zorder_maint":{"base":$zb,"scaled":$zs}"""
-      }
-    println(s"""{"metric":"scale_curve","replicas":$n,"base":"$base","scaled":"$out","base_total_sec":$rb,"scaled_total_sec":$rs,"total_ratio":${rs / rb},"sentinel_first_sec":$sentFirst,"sentinel_mid_sec":$sentMid,"sentinel_last_sec":$sentLast,"queries":{$rows}$acidJson$ccJson$maintJson$clustersJson$ivfRebalJson$pqRebalJson$zmaintJson$deleteJson$deconIncJson$multiJson}""")
+    // per-run scratch: two bench runs on one host must not clobber
+    // each other's live tables mid-measurement
+    val runTag = java.util.UUID.randomUUID().toString.take(8)
+    val fs = localFs(spark)
+    val legsJson = Legs.filter { case (token, _, _) => only.forall(_.contains(token)) }
+      .map { case (token, key, section) =>
+        def run(dir: String, scale: String): String = {
+          val scratch = new Path(s"/tmp/graft_${token}_${scale}_$runTag")
+          fs.delete(scratch, true)
+          try section(spark, dir, scratch.toString)
+          finally fs.delete(scratch, true)
+        }
+        s""","$key":{"base":${run(base, "base")},"scaled":${run(out, "scaled")}}"""
+      }.mkString
+    println(s"""{"metric":"scale_curve","replicas":$n,"base":"$base","scaled":"$out","base_total_sec":$rb,"scaled_total_sec":$rs,"total_ratio":${rs / rb},"sentinel_first_sec":$sentFirst,"sentinel_mid_sec":$sentMid,"sentinel_last_sec":$sentLast,"queries":{$rows}$ccJson$legsJson}""")
     spark.stop()
   }
 }

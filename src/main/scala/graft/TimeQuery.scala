@@ -1,23 +1,67 @@
 package graft
 
-/** Dev tool: time named queries individually (warm-up + 2 passes, min),
-  * without running the whole bench suite.
-  * `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.TimeQuery q_x q_y"` */
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+
+/** Dev tool: per-query wall time and job count, without running the
+  * whole bench suite. Each query gets a warm-up evaluation and two timed
+  * ones; the wall is the faster pass, the job count that of one
+  * evaluation. The per-query fixed-overhead floor is made of
+  * driver-blocking actions (eager checkpoints, collects, commits), each
+  * one a Spark job, so the count ranks queries by barrier pressure.
+  * With no names it covers every query and adds a total line.
+  * `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.TimeQuery [q_x ...]"` */
 object TimeQuery {
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val all = args.isEmpty
+    val names = if (all) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
+    requireKnown(names)
     val spark = Sessions.build(Sessions.cpusFromEnv, "graft-time-query")
     spark.sparkContext.setLogLevel("ERROR")
-    args.foreach { name =>
-      val fn = SparkEntry.queries(name)
+    val rows = profile(spark, sfDir, names)
+    rows.foreach { case (n, j, t) => println(f"TIME $n $t%.2f s jobs=$j") }
+    if (all)
+      println(f"TIME_TOTAL queries=${rows.size} jobs=${rows.map(_._2).sum} " +
+        f"wall=${rows.map(_._3).sum}%.2f s")
+    spark.stop()
+  }
+
+  private def requireKnown(names: Seq[String]): Unit = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+  }
+
+  /** (name, jobs, wall seconds) per query, in the order given; names
+    * that are not coverage queries fail before any query runs. */
+  def profile(spark: SparkSession, sfDir: String,
+      names: Seq[String]): Seq[(String, Long, Double)] = {
+    requireKnown(names)
+    val qs = SparkEntry.queries
+    val sc = spark.sparkContext
+    val jobs = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try names.map { name =>
+      val fn = qs(name)
       Bench.materialize(fn(spark, sfDir)) // warm-up
-      val times = (1 to 2).map { _ =>
+      val passes = (1 to 2).map { _ =>
+        GraftListenerBus.drain(sc)
+        val j0 = jobs.get()
         val t0 = System.nanoTime()
         Bench.materialize(fn(spark, sfDir))
-        (System.nanoTime() - t0) / 1e9
+        val wall = (System.nanoTime() - t0) / 1e9
+        GraftListenerBus.drain(sc)
+        (jobs.get() - j0, wall)
       }
-      println(f"TIME $name ${times.min}%.2f s")
-    }
-    spark.stop()
+      (name, passes.head._1, passes.map(_._2).min)
+    } finally sc.removeSparkListener(listener)
   }
 }

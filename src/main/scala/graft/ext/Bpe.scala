@@ -179,8 +179,8 @@ object Bpe {
     * instead of recounting and remapping the whole dictionary. Per-merge
     * cost = one min-scan over the distinct-pair map + the affected
     * words — measured ~8x faster per merge than the recount loop on a
-    * 100k-word dictionary (graft.BpeTrainBench), which is what makes a
-    * production 32k-merge vocabulary a minutes-scale driver job. The
+    * 100k-word dictionary, which is what makes a production 32k-merge
+    * vocabulary a minutes-scale driver job. The
     * selection rule (max count, ties to lexicographic pair order) is a
     * total order, so the learned table is bit-identical to the naive
     * recount formulation — BpeSpec pins an exact expected merge list. */

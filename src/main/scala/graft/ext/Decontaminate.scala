@@ -210,7 +210,6 @@ object Decontaminate {
     graft.land.AtomicLanding.commit(bs, s"$path/bench", batchId = batchId)
     stops.foreach { st =>
       graft.land.AtomicLanding.commit(st, s"$path/stops", batchId = batchId)
-      st.unpersist(); ()
     }
     val ps = IndexParams(n, stopTopK, expectedItems, numBits)
     writeParams(spark, path, ps)

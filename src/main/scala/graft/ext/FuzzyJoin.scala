@@ -126,7 +126,7 @@ object FuzzyJoin {
       maxBucket: Option[Long] = None): DataFrame = {
     require(k == 1 || k == 2, s"selfJoinEdK supports k in {1,2}, got $k")
     require(maxBucket.forall(_ >= 2), s"maxBucket must be >= 2: $maxBucket")
-    // INT-KEYED candidate pipeline (the Ed2Profile-measured shape): the
+    // INT-KEYED candidate pipeline (ED2_PROFILE_r16's shape): the
     // enumerate -> distinct leg — the join's real cost, ~2× the whole
     // corpus in candidate rows — carries (kid, kid) 16-byte pairs
     // instead of (name, name) strings; names join back AFTER the
@@ -267,8 +267,8 @@ object FuzzyJoin {
     * table, (n_sig_rows, n_buckets, max_bucket, cand_pairs = Σ C(b, 2))
     * — cand_pairs is EXACTLY the candidate volume the self-join would
     * shuffle, computed by one map-side-combined aggregate with no join
-    * at all. graft.FuzzyProbe emits this census per scale leg so the
-    * exponent claims in the probe artifact are counted, not argued. */
+    * at all. ED2_PROBE_r11 records this census per scale leg, so its
+    * exponent claims are counted, not argued. */
   def sigCensus(df: DataFrame, key: String, k: Int): (Long, Long, Long, Long) = {
     val b = sigTable(df, key, "k", k).groupBy(col("sig_h"))
       .agg(count(lit(1)).as("bc"))

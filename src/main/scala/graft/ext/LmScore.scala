@@ -153,7 +153,7 @@ object LmScore {
     // model is vocabulary-bounded while the scored corpus is 100 TB);
     // size estimates alone cannot see that, because the planner prices
     // the aggregate's input, not its distinct output. Identical rows
-    // either way — LmProfile prices the two plans at the 100× dir.
+    // either way — LM_PROFILE_r17/r20 price the two plans at the 100× dir.
     def side(df: DataFrame): DataFrame =
       if (broadcastModel) broadcast(df) else df
     perDoc

@@ -55,11 +55,11 @@ object Skew {
 
   /** Hot-key-TARGETED two-phase aggregation: estimate the key histogram
     * from a seeded sample, salt ONLY the detected heavy hitters, and
-    * leave the uniform tail on the plain single-phase plan. `SkewBench`
-    * measured why blanket salting is the wrong default: with a healthy
-    * tail, salting every key multiplies the first-phase group count by
-    * `salts` and costs ~2x wall, while map-side partial aggregation
-    * already absorbs moderate skew. This is the documented defense for
+    * leave the uniform tail on the plain single-phase plan.
+    * `SKEW_CURVE_r08`..`r11` measured why blanket salting is the wrong
+    * default: with a healthy tail, salting every key multiplies the
+    * first-phase group count by `salts` and costs ~2x wall, while
+    * map-side partial aggregation already absorbs moderate skew. This is the documented defense for
     * the case AQE cannot touch (a group must be co-located, so
     * OptimizeSkewedJoin never fires on a groupBy exchange) without
     * taxing the tail.
@@ -69,7 +69,7 @@ object Skew {
     * rows-per-reducer you can tolerate (e.g. partition-bytes-target /
     * row-width). Detection is row-count-based, NOT shuffle-bytes-based,
     * deliberately: AQE's byte thresholds under-detect narrow hot rows
-    * that compress well (the SkewBench lz4 lesson).
+    * that compress well (the lz4 lesson, SURVEY.md §14.3).
     *
     * The hot set collects to the driver, bounded by `maxHotKeys`
     * (heaviest first) — heavy hitters are few by definition, and the

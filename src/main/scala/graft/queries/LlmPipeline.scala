@@ -1537,8 +1537,8 @@ object LlmPipeline {
     // brute-force top-k and gate a pinned in-envelope flag — a trained
     // quantizer that collapses (wrong assignments, degenerate
     // centroids) drags recall below the floor and hash-fails the row.
-    // Envelopes sized by graft.RecallProbe: IVF(nLists=16, nProbe=4,
-    // iters=3) measures 0.81-0.91 across sf0.001/0.01/0.1 -> floor
+    // Envelopes, from recall measured across sf0.001/0.01/0.1:
+    // IVF(nLists=16, nProbe=4, iters=3) measures 0.81-0.91 -> floor
     // 0.7; PQ(m=8, k=16, iters=2, shortlist=50) measures 0.60-0.69 ->
     // floor 0.5. Both floors sit several flipped-neighbor quanta below
     // the worst measurement, so last-bit centroid drift (the only
@@ -1563,7 +1563,7 @@ object LlmPipeline {
 
     // ---- the COMPOSED trained IVF-PQ (Lloyd coarse + Lloyd residual
     // codebooks + ADC probe + exact re-rank) under the same
-    // measured-recall envelope: graft.RecallProbe measures recall@10 =
+    // measured-recall envelope: recall@10 measures
     // 0.69-0.79 across sf0.001/0.01/0.1 (nLists=16 itersCoarse=3, m=8
     // k=16 itersPq=2, nProbe=4, shortlist=50) -> floor 0.5, 38
     // flipped-neighbor quanta below the worst measurement ----

@@ -1,0 +1,25 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The per-query profiler: job counts come from one drained listener, so
+  * repeated calls on one session count the same jobs. */
+class TimeQuerySpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  private val names = Seq("q_agg_pricing", "q_pagerank_converged", "q_stream_window")
+
+  test("profile counts every query's jobs, the same on a repeated call") {
+    val first = TimeQuery.profile(spark, TestSpark.Sf0001, names)
+    val second = TimeQuery.profile(spark, TestSpark.Sf0001, names)
+    assert(first.map(_._1) == names)
+    assert(first.forall { case (_, jobs, wall) => jobs > 0 && wall > 0 }, first)
+    assert(first.map(_._2) == second.map(_._2))
+  }
+
+  test("an unknown query name is refused, and the message names it") {
+    val e = intercept[IllegalArgumentException](
+      TimeQuery.profile(spark, TestSpark.Sf0001, Seq("q_agg_pricing", "q_no_such")))
+    assert(e.getMessage.contains("q_no_such"))
+    assert(!e.getMessage.contains("q_agg_pricing"))
+  }
+}

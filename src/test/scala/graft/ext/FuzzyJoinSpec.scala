@@ -177,7 +177,7 @@ class FuzzyJoinSpec extends AnyFunSuite {
 
   test("maxBucket advisor: inert on the sparse entity corpus, engages on the dense one") {
     // sparse = the realistic entity shape (hash-suffixed keys, planted
-    // typo twins — FuzzyProbe's sparse leg): hottest bucket within
+    // typo twins — ED2_PROBE_r11's sparse leg): hottest bucket within
     // headroom of typical, so the advice must NOT engage, and applying
     // the advised cap anyway must return the exact output (inert)
     val base = spark.range(1, 3001).select(col("id"),

@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{NoCodegenFallback, TestSpark}
+import graft.TestSpark
 
 /** Randomized-schedule property for the SAVED IVF index lifecycle —
   * the generative counterpart to IvfSpec's directed grown/replay/
@@ -21,7 +21,7 @@ import graft.{NoCodegenFallback, TestSpark}
   * vec_id), which is what makes frozen-quantizer growth — and therefore
   * any schedule of it — bit-identical to the one-shot build (IvfSpec's
   * "saved grown index == one-shot" directed case). */
-class IvfLifecyclePropertySpec extends AnyFunSuite with NoCodegenFallback {
+class IvfLifecyclePropertySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 

@@ -2,11 +2,11 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{NoCodegenFallback, TestSpark}
+import graft.TestSpark
 
 /** IVF-PQ composed index: losslessness of the machinery at the
   * degenerate config, recall behavior of the real one. */
-class IvfPqSpec extends AnyFunSuite with NoCodegenFallback {
+class IvfPqSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private lazy val emb =

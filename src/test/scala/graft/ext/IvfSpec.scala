@@ -2,9 +2,9 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{NoCodegenFallback, TestSpark}
+import graft.TestSpark
 
-class IvfSpec extends AnyFunSuite with NoCodegenFallback {
+class IvfSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 

@@ -2,9 +2,9 @@ package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.{NoCodegenFallback, TestSpark}
+import graft.TestSpark
 
-class PqSpec extends AnyFunSuite with NoCodegenFallback {
+class PqSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 

@@ -3,10 +3,9 @@ package graft.ext
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import graft.{NoCodegenFallback, TestSpark}
+import graft.TestSpark
 
-class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper
-    with NoCodegenFallback {
+class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 

@@ -2,12 +2,12 @@ package graft.ext
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{NoCodegenFallback, TestSpark}
+import graft.TestSpark
 
 /** The persisted semantic-dedup lifecycle: build / append / replay /
   * heal / incremental verdict — the seventh index tier held to the same
   * contract suite as the IVF/BM25/fuzzy/cluster states. */
-class SemDedupStateSpec extends AnyFunSuite with NoCodegenFallback {
+class SemDedupStateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 

@@ -20,15 +20,14 @@ class NonNullableInputSpec extends AnyFunSuite {
     GraftShims.column(kernel(GraftShims.expression(in)))
 
   /** (non-nullable input, kernel) → one result per id 0..5. */
-  private def run(input: String, kernel: Column => Column): Seq[Any] =
-    TestSpark.withoutFallback {
-      val df = spark.range(6).select(expr(input).as("v"))
-      assert(!df.schema("v").nullable, s"$input must be a non-nullable column")
-      val out = df.select(kernel(col("v")).as("r"))
-      val rows = out.collect().map(_.get(0)).toSeq
-      assert(out.schema("r").nullable)
-      rows
-    }
+  private def run(input: String, kernel: Column => Column): Seq[Any] = {
+    val df = spark.range(6).select(expr(input).as("v"))
+    assert(!df.schema("v").nullable, s"$input must be a non-nullable column")
+    val out = df.select(kernel(col("v")).as("r"))
+    val rows = out.collect().map(_.get(0)).toSeq
+    assert(out.schema("r").nullable)
+    rows
+  }
 
   private val doubles = "if(id % 2 = 0, array(cast(id as double), 1.0D), array(cast(id as double)))"
   private val longs = "if(id % 2 = 0, array(id, 1L), array(id))"

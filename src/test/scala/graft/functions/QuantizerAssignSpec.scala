@@ -3,14 +3,14 @@ package graft.functions
 import org.apache.spark.sql.GraftShims
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{NoCodegenFallback, TestSpark}
+import graft.TestSpark
 import graft.ext.{Ivf, IvfPq, Pq}
 
 /** The native quantizer kernels against the distributed formulations
   * they replaced — same winners, same residual bits, same lookup-table
   * values, same null semantics, still inside whole-stage codegen (with
   * codegen fallback off, so a kernel that fails to compile fails here). */
-class QuantizerAssignSpec extends AnyFunSuite with NoCodegenFallback {
+class QuantizerAssignSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 

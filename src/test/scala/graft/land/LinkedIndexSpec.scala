@@ -4,12 +4,12 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{NoCodegenFallback, TestSpark}
+import graft.TestSpark
 
 /** The shared persisted-index lifecycle over a tiny index: one frozen
   * member `q` and two growing members `a` (entry) and `b`, each keyed by
   * `id`. */
-class LinkedIndexSpec extends AnyFunSuite with NoCodegenFallback {
+class LinkedIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
