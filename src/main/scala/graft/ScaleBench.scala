@@ -439,20 +439,42 @@ object ScaleBench {
     // for i < 50 at member offset 50, plus 100 pairs of unseen ids far
     // above any replica's keyspan
     val spark2 = spark; import spark2.implicits._
-    val batch = ((0 until 50).map(i =>
+    val pairs = (0 until 50).map(i =>
         (200L * i + 50L, 200L * i + 150L)) ++
       (0 until 100).map(j =>
-        (4000000000000L + 2 * j, 4000000000000L + 2 * j + 1)))
-      .toDF("doc_a", "doc_b").localCheckpoint()
+        (4000000000000L + 2 * j, 4000000000000L + 2 * j + 1))
+    val batch = pairs.toDF("doc_a", "doc_b").localCheckpoint()
+    // the expected write, derived from the batch as drawn against the
+    // standing state: its first-seen endpoints plus every member of a
+    // component it merges under a smaller root. A driver-side union-find
+    // over component labels; where the keyspace holds all 50 chain pairs
+    // (sf0.1) that is 50 chains x 100 + 200 fresh = 5200
+    val before = graft.ext.Clusters.snapshot(spark, state)
+    val ends = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+    val rootOf = before.join(ends.toDF("doc_id"), "doc_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = parent.get(x).fold(x)(find)
+    def label(id: Long): Long = find(rootOf.getOrElse(id, id))
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (label(a), label(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val dissolved = rootOf.values.toSeq.distinct.filter(r => find(r) != r)
+    val expectRows = ends.count(id => !rootOf.contains(id)) +
+      (if (dissolved.isEmpty) 0L
+       else before.where(col("component").isin(dissolved: _*)).count())
     val (tAppend, _) = time(
       graft.ext.Clusters.addToSaved(spark, state, batch, batchId = Some(1L)))
     val deltaRows = AtomicLanding.read(spark, state).count() - rows0
-    require(deltaRows == 5200L,
-      s"append must write exactly the affected rows (5200), got $deltaRows")
-    // chain 3 ([301,400], root 301) dissolved into chain 2's root 201
+    require(deltaRows == expectRows,
+      s"append must write exactly the affected rows ($expectRows), got $deltaRows")
+    // at sf0.1 chain 3 ([301,400], root 301) dissolves into chain 2's
+    // root 201; below that, member 350 is first-seen and joins 250
     val probe = graft.ext.Clusters.snapshot(spark, state)
       .where(col("doc_id") === 350L).head().getAs[Long]("component")
-    require(probe == 201L, s"member 350 must resolve to merged root 201, got $probe")
+    require(probe == label(350L),
+      s"member 350 must resolve to merged root ${label(350L)}, got $probe")
     val (tFold, _) = time(graft.ext.Clusters.maintainSaved(spark, state))
     f"""{"build_sec":$tBuild%.3f,"state_rows":$rows0,""" +
       f""""append_sec":$tAppend%.3f,"delta_rows":$deltaRows,""" +
@@ -584,8 +606,6 @@ object ScaleBench {
         .select((col("vec_id") + lit(shift)).as("vec_id"),
           col("embedding")).localCheckpoint()
     }
-    AtomicLanding.currentRootVersion(idx).get
-    val retries0 = graft.ext.Ivf.rebalanceSkips.get() // touch counters
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     // each appender is an INDEPENDENT issuer (five concurrent streaming
     // queries in production), so each writes on its own idempotence
@@ -631,7 +651,6 @@ object ScaleBench {
     // a post-race drifted rebalance converges the index to the
     // canonical one-shot bits over the union corpus
     graft.ext.Ivf.rebalanceSavedIndex(spark, idx, nLists = 16, iters = 0)
-    val _ = retries0
     f"""{"wall_sec":$tWall%.3f,"rows":$nRows,""" +
       f""""writers":6,"lost_batches":0}"""
   }
@@ -818,6 +837,8 @@ object ScaleBench {
     // fine — the table has no uniqueness contract), so batch content,
     // size, and key-domain shape are identical at every scale
     val batchSrc = o.orderBy(col("o_orderkey")).limit(2000).localCheckpoint()
+    // 6000 where orders holds 2000 rows or more; the whole table below
+    val foldRows = 3 * batchSrc.count()
     val (tAppend, _) = time {
       (1 to 3).foreach { i =>
         graft.ext.Zorder.appendUnordered(batchSrc, tbl, cols,
@@ -841,8 +862,8 @@ object ScaleBench {
       smallBytes = dirBytes(bodyDir) - 1, nFiles = 8))
     require(comp.foldDir.nonEmpty, "the tail must have folded")
     val rowsAfter = AtomicLanding.read(spark, tbl).count()
-    require(rowsAfter == rows0 + 6000,
-      s"the fold must conserve rows: $rows0 + 6000 != $rowsAfter")
+    require(rowsAfter == rows0 + foldRows,
+      s"the fold must conserve rows: $rows0 + $foldRows != $rowsAfter")
     val dirsAfter = AtomicLanding.liveDirCount(tbl)
     require(dirsAfter == 2,
       s"the fold must leave body + folded tail, got $dirsAfter dirs")
@@ -851,7 +872,7 @@ object ScaleBench {
     require(local, "the folded tail must measure z-local post-fold")
     f"""{"body_sec":$tBody%.3f,"body_rows":$rows0,""" +
       f""""append3_sec":$tAppend%.3f,"fold_sec":$tFold%.3f,""" +
-      f""""fold_rows":6000,"dirs_after":$dirsAfter}"""
+      f""""fold_rows":$foldRows,"dirs_after":$dirsAfter}"""
   }
 
   /** Distributed CC on an ENTITY-SHAPED graph — bounded components

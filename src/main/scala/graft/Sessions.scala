@@ -34,9 +34,8 @@ object Sessions {
       // loader type-dispatches either way.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // bucketed tables (co-located joins) need a writable warehouse;
-      // local sessions park it under the system tmp dir
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
+      // local sessions park it in a temp dir deleted at JVM exit
+      .config("spark.sql.warehouse.dir", graft.queries.Spool.dir("graft-warehouse"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 

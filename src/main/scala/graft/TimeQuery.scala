@@ -6,13 +6,18 @@ import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Spool
+
 /** Dev tool: per-query wall time and job count, without running the
   * whole bench suite. Each query gets a warm-up evaluation and two timed
   * ones; the wall is the faster pass, the job count that of one
   * evaluation. The per-query fixed-overhead floor is made of
   * driver-blocking actions (eager checkpoints, collects, commits), each
   * one a Spark job, so the count ranks queries by barrier pressure.
-  * With no names it covers every query and adds a total line.
+  * `spool=` is the time the untimed warm-up spent building the query's
+  * fixture spools ([[graft.queries.Spool]]): the first-run cost that the
+  * timed passes never see. With no names it covers every query and adds
+  * a total line.
   * `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.TimeQuery [q_x ...]"` */
 object TimeQuery {
 
@@ -24,10 +29,11 @@ object TimeQuery {
     val spark = Sessions.build(Sessions.cpusFromEnv, "graft-time-query")
     spark.sparkContext.setLogLevel("ERROR")
     val rows = profile(spark, sfDir, names)
-    rows.foreach { case (n, j, t) => println(f"TIME $n $t%.2f s jobs=$j") }
+    rows.foreach(r =>
+      println(f"TIME ${r.name} ${r.wallS}%.2f s jobs=${r.jobs} spool=${r.spoolS}%.2f"))
     if (all)
-      println(f"TIME_TOTAL queries=${rows.size} jobs=${rows.map(_._2).sum} " +
-        f"wall=${rows.map(_._3).sum}%.2f s")
+      println(f"TIME_TOTAL queries=${rows.size} jobs=${rows.map(_.jobs).sum} " +
+        f"wall=${rows.map(_.wallS).sum}%.2f s spool=${rows.map(_.spoolS).sum}%.2f")
     spark.stop()
   }
 
@@ -36,10 +42,13 @@ object TimeQuery {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
   }
 
-  /** (name, jobs, wall seconds) per query, in the order given; names
-    * that are not coverage queries fail before any query runs. */
-  def profile(spark: SparkSession, sfDir: String,
-      names: Seq[String]): Seq[(String, Long, Double)] = {
+  /** One query's profile: jobs of one evaluation, the faster timed wall,
+    * and the spool build seconds of its warm-up. */
+  final case class Timing(name: String, jobs: Long, wallS: Double, spoolS: Double)
+
+  /** One [[Timing]] per query, in the order given; names that are not
+    * coverage queries fail before any query runs. */
+  def profile(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[Timing] = {
     requireKnown(names)
     val qs = SparkEntry.queries
     val sc = spark.sparkContext
@@ -51,7 +60,9 @@ object TimeQuery {
     sc.addSparkListener(listener)
     try names.map { name =>
       val fn = qs(name)
+      val spool0 = Spool.buildSeconds
       Bench.materialize(fn(spark, sfDir)) // warm-up
+      val spool = Spool.buildSeconds - spool0
       val passes = (1 to 2).map { _ =>
         GraftListenerBus.drain(sc)
         val j0 = jobs.get()
@@ -61,7 +72,7 @@ object TimeQuery {
         GraftListenerBus.drain(sc)
         (jobs.get() - j0, wall)
       }
-      (name, passes.head._1, passes.map(_._2).min)
+      Timing(name, passes.head._1, passes.map(_._2).min, spool)
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -148,19 +148,6 @@ object Dedup {
         call_function("shingle_hash", col("text"), lit(n)).as("hx"))
       .withColumn("sig", call_function("minhash_sig", col("hx")))
 
-  /** Built-ins-only signature (equivalence target for the native
-    * [[graft.functions.MinHashSig]] expression). */
-  def minhashSignaturesHof(docs: DataFrame, n: Int = 3): DataFrame = {
-    val aArr = array(minhashSeeds.map(s => lit(s._1)): _*)
-    val bArr = array(minhashSeeds.map(s => lit(s._2)): _*)
-    docs
-      .select(col("doc_id"), shingles(col("text"), n).as("sh"))
-      .withColumn("hx", transform(col("sh"), s => pmod(xxhash64(s), lit(P))))
-      .withColumn("sig", zip_with(aArr, bArr,
-        (a, b) => array_min(transform(col("hx"), x => pmod(a * x + b, lit(P))))))
-      .drop("hx")
-  }
-
   /** One row per (doc, band): the band key is the xxhash64 of the
     * signature slice (a long, not the concatenated string — band rows are
     * the corpus x 24, so key width matters at scale). Join within
@@ -298,52 +285,16 @@ object Dedup {
   /** 60-bit SimHash over the distinct shingle set: bit j is set iff the
     * majority of feature hashes have bit j set. Resolves to the codegen'd
     * [[graft.functions.SimHash60]] expression (one generated O(60n) loop;
-    * the HOF formulation below runs 60 interpreted aggregates per row and
-    * was the slowest query in the bench). `hx` must be an array<long>
-    * column of 60-bit feature hashes. */
+    * the HOF formulation the specs keep runs 60 interpreted aggregates
+    * per row and was the slowest query in the bench). `hx` must be an
+    * array<long> column of 60-bit feature hashes. */
   def simhash60(hxCol: String): Column = call_function("simhash60", col(hxCol))
-
-  /** Built-ins-only formulation — equivalence-test target for the native
-    * expression, and the literal shape the DuckDB oracle reproduces. */
-  def simhash60Hof(hxCol: String): Column = expr(
-    s"""aggregate(
-       |  transform(sequence(0, 59), j ->
-       |    IF(aggregate($hxCol, 0L,
-       |         (acc, h) -> acc + (shiftright(h, j) & 1L) * 2L - 1L) > 0L,
-       |       shiftleft(1L, j), 0L)),
-       |  0L, (a, x) -> a + x)""".stripMargin)
 
   /** doc_id, sim (the 60-bit SimHash). */
   def simhashSignatures(docs: DataFrame, n: Int = 3): DataFrame =
     docs.select(col("doc_id"), shingles(col("text"), n).as("sh"))
       .withColumn("hx", transform(col("sh"), s => hash60(s)))
       .select(col("doc_id"), simhash60("hx").as("sim"))
-
-  /** Dictionary-join variant of [[simhashSignatures]] for DEGENERATE
-    * vocabularies: when the distinct-shingle count is far below the total
-    * shingle occurrences (tiny vocab, template-heavy corpora), computing
-    * the md5-based hash60 per occurrence wastes the dominant cost on
-    * re-hashing the same strings. Here each distinct shingle is hashed
-    * ONCE into a dictionary, occurrences pick their hash up via an
-    * equi-join (broadcast when the dictionary is small enough — vocab is
-    * small by assumption), and the per-doc hash multiset is reassembled
-    * with collect_list. Same signature bit-for-bit: the majority vote in
-    * simhash60 is order-independent and shingle sets are distinct per doc.
-    * Trade-off: one explode + shuffle-groupBy per doc vs per-occurrence
-    * md5 — wins only when occurrences >> distinct shingles. Measured on
-    * the sf0.01 fixture (healthy vocab, ~1 occurrence per distinct
-    * shingle): 0.94 s vs 0.24 s for the occurrence path — i.e. ~4x
-    * SLOWER there, which is why [[simhashSignatures]] stays the default
-    * and this is an explicit opt-in for template-heavy corpora. */
-  def simhashSignaturesDict(docs: DataFrame, n: Int = 3): DataFrame = {
-    val occ = docs.select(col("doc_id"), explode(shingles(col("text"), n)).as("s"))
-    val dict = occ.select(col("s")).distinct()
-      .withColumn("h", hash60(col("s")))
-    occ.join(broadcast(dict), "s")
-      .groupBy(col("doc_id"))
-      .agg(collect_list(col("h")).as("hx"))
-      .select(col("doc_id"), simhash60("hx").as("sim"))
-  }
 
   /** 8 pigeonhole bands over the 60 bits: (offset, width). A pair within
     * Hamming distance 7 differs in at most 7 bands, so at least one of

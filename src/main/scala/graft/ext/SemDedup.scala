@@ -50,11 +50,6 @@ object SemDedup {
   private[ext] def intDot(a: Column, b: Column): Column =
     call_function("int_dot", a, b)
 
-  /** The pure-built-in formulation of the same value — the equivalence
-    * test target for [[graft.functions.IntDot]] (SURVEY §7.3 step 1). */
-  private[ext] def intDotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
-
   /** Quantized cosine with the zero-norm sentinel (-2: below any true
     * cosine, so zero vectors are never duplicates and never win an
     * assignment tie they shouldn't). */

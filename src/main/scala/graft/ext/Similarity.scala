@@ -26,16 +26,6 @@ object Similarity {
   def dotScaled(a: Column, b: Column): Column =
     call_function("dot_scaled", a, b)
 
-  /** The pure-built-in formulation of the same value (SURVEY §7.3 step 1:
-    * higher-order functions first, codegen expression after measuring).
-    * Kept for sessions without the extension and as the equivalence test
-    * target for [[graft.functions.DotScaled]]. */
-  def dotScaledHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) =>
-        floor(x.cast("double") * y.cast("double") * lit(1e15)).cast("long")),
-      lit(0L), (acc, v) => acc + v)
-
   /** vec_id, n2: exact scaled squared norm per vector. */
   def norms(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), dotScaled(col("embedding"), col("embedding")).as("n2"))

@@ -73,18 +73,9 @@ object Zorder {
     else expr(s"((cast($colName as bigint) - $lo) * $mask) div ${hi - lo}")
   }
 
-  /** SQL twin of [[scaled]] for oracle generation (`//` = DuckDB
-    * integer division). */
-  def scaledSql(c: String, lo: Long, hi: Long, bits: Int): String =
-    if (hi == lo) "0"
-    else s"((($c - $lo) * ${(1L << bits) - 1L}) // ${hi - lo})"
-
   /** [[zkey]] over domain-scaled columns (named). */
   def zkeyScaled(cols: Seq[(String, Long, Long)], bits: Int = 16): Column =
     zkey(cols.map { case (c, lo, hi) => scaled(c, lo, hi, bits) }, bits)
-
-  def zkeyScaledSql(cols: Seq[(String, Long, Long)], bits: Int = 16): String =
-    zkeySql(cols.map { case (c, lo, hi) => scaledSql(c, lo, hi, bits) }, bits)
 
   /** `df` plus the scaled Morton key as `_zkey`. */
   def withKey(df: DataFrame, domains: Seq[(String, Long, Long)],

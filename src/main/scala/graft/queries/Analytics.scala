@@ -15,12 +15,6 @@ object Analytics {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Persisted fuzzy signature index, built once per (jvm, sf dir) —
-    * the q_bm25_indexed caching precedent. Index dirs live under /tmp
-    * and are deleted on JVM exit (shutdown hook below): without that a
-    * harness run leaves one orphan tree per (jvm, sf dir) behind. */
-  private val fuzzyIdx = scala.collection.concurrent.TrieMap[String, String]()
-
   /** 60 DISTINCT chars (no lowercase 'm'): the q_fuzzy_ed2_auto_lossless
     * planted-core constant, duplicated literally in its oracle SQL.
     * Distinctness matters — a repeated substring could put two 'mm'
@@ -28,19 +22,6 @@ object Analytics {
     * pairwise-ed-4 construction the lossless gate relies on. */
   private[graft] val LosslessCore =
     "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklnopqrstuvwxy"
-
-  private def tempIndexDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(d)) {
-        val it = Files.walk(d).sorted(Comparator.reverseOrder[Path]()).iterator()
-        while (it.hasNext) { try Files.delete(it.next()) catch { case _: Exception => } }
-      }
-    }))
-    d.toString
-  }
 
   val queries: Map[String, Q] = Map(
 
@@ -104,16 +85,16 @@ object Analytics {
     }),
 
     // ---- the same batch-vs-corpus match through a PERSISTED signature
-    // index (built once per session, no corpus scan per batch); must
+    // index (spooled: built once, no corpus scan per batch); must
     // reproduce the inline path's bits exactly, so its oracle IS
     // q_fuzzy_incremental's ----
     "q_fuzzy_indexed" -> ((s, dir) => {
       val c = t(s, dir, "customer")
-      val idx = fuzzyIdx.getOrElseUpdate(dir, {
-        val d = tempIndexDir("graft-fuzzyidx") + "/idx"
+      val idx = Spool.once(s"fuzzyIdx#$dir") {
+        val d = Spool.dir("graft-fuzzyidx") + "/idx"
         FuzzyJoin.buildSigIndex(
           c.where(col("c_custkey") % 10 =!= 0), "c_name", d)
-      })
+      }
       FuzzyJoin.againstIndexEd1(s, idx,
           c.where(col("c_custkey") % 10 === 0), "c_name")
         .select(col("key_new").as("name_new"),
@@ -129,8 +110,8 @@ object Analytics {
     "q_fuzzy_grown" -> ((s, dir) => {
       val c = t(s, dir, "customer")
       val corpus = c.where(col("c_custkey") % 10 =!= 0)
-      val idx = fuzzyIdx.getOrElseUpdate(dir + "#grown", {
-        val d = tempIndexDir("graft-fuzzygrown") + "/idx"
+      val idx = Spool.once(s"fuzzyIdx#$dir#grown") {
+        val d = Spool.dir("graft-fuzzygrown") + "/idx"
         FuzzyJoin.buildSigIndex(
           corpus.where(col("c_custkey") % 2 === 1), "c_name", d,
           batchId = Some(0L)) // seed watermark vouches the build half
@@ -140,7 +121,7 @@ object Analytics {
           corpus.where(col("c_custkey") % 2 === 0), "c_name",
           batchId = Some(1L))
         d
-      })
+      }
       FuzzyJoin.againstIndexEd1(s, idx,
           c.where(col("c_custkey") % 10 === 0), "c_name")
         .select(col("key_new").as("name_new"),
@@ -161,8 +142,8 @@ object Analytics {
     "q_stream_fuzzy_ingest" -> ((s, dir) => {
       val c = t(s, dir, "customer")
       val corpus = c.where(col("c_custkey") % 10 =!= 0)
-      val idx = fuzzyIdx.getOrElseUpdate(dir + "#stream", {
-        val root = tempIndexDir("graft-fuzzystream")
+      val idx = Spool.once(s"fuzzyIdx#$dir#stream") {
+        val root = Spool.dir("graft-fuzzystream")
         val d = s"$root/idx"
         FuzzyJoin.buildSigIndex(
           corpus.where(col("c_custkey") % 2 === 1), "c_name", d,
@@ -173,7 +154,7 @@ object Analytics {
           (df, b) => FuzzyJoin.addToSigIndex(s, d, df, "c_name",
             batchId = Some(b)))
         d
-      })
+      }
       FuzzyJoin.againstIndexEd1(s, idx,
           c.where(col("c_custkey") % 10 === 0), "c_name")
         .select(col("key_new").as("name_new"),

@@ -23,12 +23,6 @@ object LlmPipeline {
   private def docs(s: SparkSession, dir: String): DataFrame = t(s, dir, "documents")
   private def emb(s: SparkSession, dir: String): DataFrame = t(s, dir, "embeddings")
 
-  /** Once-per-(jvm, sf dir) spool of a small media directory for the
-    * binaryFile-source query — same idiom as the streaming fixture. */
-  private val binSpooled = scala.collection.concurrent.TrieMap[String, String]()
-
-  private val fmtSpooled = scala.collection.concurrent.TrieMap[String, String]()
-
   /** Lossless CSV round-trip options: RFC-4180 quoting (escape = quote),
     * an explicit nullValue sentinel so NULL and "" stay distinct (the
     * writer emits NULL as \N unquoted and "" as a quoted empty), and NO
@@ -41,41 +35,12 @@ object LlmPipeline {
     "ignoreLeadingWhiteSpace" -> "false",
     "ignoreTrailingWhiteSpace" -> "false")
 
-  /** Once-per-(jvm, sf dir) ACID table for the time-travel gate. */
-  private val acidSpooled = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Once-per-(jvm, sf dir) ACID table for the MERGE (upsert) gate. */
-  private val mergeSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val mergePrunedSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val deletePrunedSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val cloneSpooled = scala.collection.concurrent.TrieMap[String, (String, String)]()
-  private val retentionSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val txnRootSpooled = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Once-per-(jvm, sf dir) persisted semantic-dedup state (batch build
-    * for the incremental gate / seed-plus-stream for the ingest gate). */
-  private val semStateSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val semStreamSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val semRebuildSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val readPrunedSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val cdfDeleteSpooled = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Once-per-(jvm, sf dir) ACID table for the COMPACTION gate. */
-  private val compactSpooled = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Once-per-(jvm, sf dir) ACID table for the VACUUM gate. */
-  private val vacuumSpooled = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Once-per-(jvm, sf dir) ACID table for the SCHEMA-EVOLUTION gate. */
-  private val evolveSpooled = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Once-per-(jvm, sf dir) ACID table for the CHANGE-DATA-FEED and
-    * incremental-aggregate gates: v0 = docs >= 20, v1 appends 10..19,
-    * v2 merges (update 10..14 to n = -1, insert 5 shifted keys at -2). */
-  private val cdfSpooled = scala.collection.concurrent.TrieMap[String, String]()
-
+  /** The spooled ACID table the CHANGE-DATA-FEED and incremental-
+    * aggregate gates share (its history is the fixture): v0 = docs >= 20,
+    * v1 appends 10..19, v2 merges (update 10..14 to n = -1, insert 5
+    * shifted keys at -2). */
   private def cdfBuild(s: SparkSession, dir: String): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-acidcdf").toString + "/t"
+    val d = Spool.dir("graft-acidcdf") + "/t"
     val ds = docs(s, dir)
       .select(col("doc_id"), length(col("text")).cast("long").as("n"))
     graft.land.AtomicLanding.commit(ds.filter(col("doc_id") >= 20), d)
@@ -89,21 +54,6 @@ object LlmPipeline {
     graft.land.AtomicLanding.merge(upd, d, "doc_id")
     d
   }
-
-  /** Once-per-(jvm, sf dir) deterministic bucketed z-layout of `orders`
-    * (path + probed cluster-column domains) for the pruning gate. */
-  private val zorderSpooled =
-    scala.collection.concurrent.TrieMap[String, (String, Seq[(String, Long, Long)])]()
-
-  /** Once-per-(jvm, sf dir) MAINTAINED z-ordered ACID table for the
-    * layout-maintenance gate: (table path, pre-fold decay evidence,
-    * fold dir name). */
-  private val zorderMaintSpooled =
-    scala.collection.concurrent.TrieMap[String, (String, Boolean, String)]()
-
-  /** Once-per-(jvm, sf dir) persisted BM25 inverted index (postings +
-    * corpus df + stats) — the build-once/probe-many retrieval split. */
-  private val bm25IdxSpooled = scala.collection.concurrent.TrieMap[String, String]()
 
   /** Drain `data` through a file-source micro-batch stream into `sink` —
     * the shared scaffold of the six `q_stream_*_ingest` gates: spool as
@@ -132,32 +82,6 @@ object LlmPipeline {
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Once-per-(jvm, sf dir) persisted IVF-PQ index — the production
-    * split: the corpus pass builds + saves once, every probe loads the
-    * parquet index (so the gate row exercises save/load, and the bench
-    * measures the probe a user actually repeats; the BUILD cost stays
-    * measured by q_cosine_ivf/q_cosine_pq, which train per run). */
-  private val ivfpqSpooled = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Once-per-(jvm, sf dir) GROWN persisted IVF index: built on the
-    * corpus prefix, then extended by two [[graft.ext.Ivf.addToSavedIndex]]
-    * batches — the live-ingest ANN shape (batches assign against the
-    * frozen quantizer; no retrain, no corpus re-scan). */
-  private val ivfGrownSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val ivfStreamSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val deconIdxSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val ivfpqGrownSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val ivfpqStreamSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val ivfRebalSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val ivfpqRebalSpooled = scala.collection.concurrent.TrieMap[String, String]()
-  private val clustersSpooled = scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Once-per-(jvm, sf dir) duplicate-span set (n = 5), spooled to
-    * parquet like the sibling memos (a cached DataFrame would pin
-    * localCheckpoint blocks to one SparkContext): q_scrub_spans APPLIES
-    * spans the pipeline already detected (q_dup_spans measures
-    * detection itself each time) — the pair no longer runs the gram
-    * explode twice per suite pass. */
   /** The funnel rows' shared test corpus: docs + id-shifted copies of
     * the first 50 (so the exact-dedup stage has real work). */
   private def dupedDocs(s: SparkSession, dir: String): DataFrame = {
@@ -166,32 +90,35 @@ object LlmPipeline {
       .select((col("doc_id") + 10000).as("doc_id"), col("text")))
   }
 
-  /** Once-per-(jvm, dir, corpus-tag) verified near-dup pair graph at
-    * threshold 0.6, spooled to parquet (same idiom as the span memo):
-    * the LSH detection runs once; the curation rows measure their
-    * POLICIES over it. Soundness of reuse: Curation.pairGraph restricts
-    * to the stage corpus, valid because the memo corpus is a superset. */
-  private val pairsSpooled = scala.collection.concurrent.TrieMap[String, String]()
+  /** The verified near-dup pair graph at threshold 0.6, spooled to
+    * parquet per corpus tag: the LSH detection runs once and the
+    * curation rows measure their POLICIES over it. Soundness of reuse:
+    * Curation.pairGraph restricts to the stage corpus, valid because the
+    * spooled corpus is a superset. */
   private def pairsFor(s: SparkSession, dir: String, tag: String,
       corpus: DataFrame): graft.ext.Curation.PairSet = {
-    val p = pairsSpooled.getOrElseUpdate(s"$dir#$tag", {
-      val d = java.nio.file.Files.createTempDirectory("graft-pairs").toString + "/pairs"
+    val p = Spool.once(s"pairs#$dir#$tag") {
+      val d = Spool.dir("graft-pairs") + "/pairs"
       Dedup.minhashNearDupPairs(corpus, threshold = 0.6)
         .select(col("doc_a"), col("doc_b")).write.parquet(d)
       d
-    })
+    }
     // the PairSet carries the verification threshold so a consumer
     // asking for a different one fails loudly (Curation.pairGraph)
     graft.ext.Curation.PairSet(s.read.parquet(p), threshold = 0.6)
   }
 
-  private val spansSpooled = scala.collection.concurrent.TrieMap[String, String]()
+  /** The duplicate-span set (n = 5), spooled to parquet (a cached
+    * DataFrame would pin localCheckpoint blocks to one SparkContext):
+    * q_scrub_spans APPLIES spans the pipeline already detected
+    * (q_dup_spans measures detection itself each time), so the pair runs
+    * the gram explode once per suite pass, not twice. */
   private def spansFor(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val p = spansSpooled.getOrElseUpdate(dir, {
-      val d = java.nio.file.Files.createTempDirectory("graft-spans").toString + "/spans"
+    val p = Spool.once(s"spans#$dir") {
+      val d = Spool.dir("graft-spans") + "/spans"
       Dedup.duplicateSpans(docs(s, dir), n = 5).write.parquet(d)
       d
-    })
+    }
     s.read.parquet(p)
   }
 
@@ -202,16 +129,15 @@ object LlmPipeline {
   private val TrainedNMerges = 64
   private val TrainedMaxWords = 20000
 
-  /** Once-per-(jvm, sf dir) TRAINED merges table + the dir last trained,
-    * so the Verify-time oracle dump (which runs AFTER all queries — see
+  /** The spooled TRAINED merges table, and the one last handed out, so
+    * the Verify-time oracle dump (which runs AFTER all queries — see
     * [[graft.Verify]]) can replay the learned merge list through the same
     * recursive-CTE oracle as the standard table. */
-  private val trainedCache = scala.collection.concurrent.TrieMap[String, graft.ext.BpeTable]()
-  @volatile private var trainedDirLast: Option[String] = None
+  @volatile private var trainedLast: Option[graft.ext.BpeTable] = None
   private def trainedTableFor(s: SparkSession, dir: String): graft.ext.BpeTable = {
-    val t = trainedCache.getOrElseUpdate(dir,
+    val t = Spool.once(s"bpeTrained#$dir")(
       graft.ext.Bpe.train(docs(s, dir), col("text"), TrainedNMerges, TrainedMaxWords))
-    trainedDirLast = Some(dir)
+    trainedLast = Some(t)
     t
   }
 
@@ -297,14 +223,14 @@ object LlmPipeline {
     // isolation, and the read path all gated on exact counts the oracle
     // re-derives from the raw table ----
     "q_acid_timetravel" -> ((s, dir) => {
-      val tbl = acidSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files.createTempDirectory("graft-acid").toString + "/t"
+      val tbl = Spool.once(s"acid#$dir") {
+        val d = Spool.dir("graft-acid") + "/t"
         val ds = docs(s, dir).select(col("doc_id"), col("source"))
         graft.land.AtomicLanding.commit(ds, d)
         graft.land.AtomicLanding.commit(ds.filter(col("doc_id") % 2 === 0), d,
           append = true)
         d
-      })
+      }
       val v0 = graft.land.AtomicLanding.readVersion(s, tbl, 0L)
         .groupBy(lit(0L).as("version")).agg(count(lit(1)).as("n_rows"))
       val v1 = graft.land.AtomicLanding.readVersion(s, tbl, 1L)
@@ -318,8 +244,8 @@ object LlmPipeline {
     // expectedVersion guards lost concurrent commits). The oracle
     // derives the exact post-merge state from the raw table ----
     "q_acid_merge" -> ((s, dir) => {
-      val tbl = mergeSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files.createTempDirectory("graft-acidmerge").toString + "/t"
+      val tbl = Spool.once(s"merge#$dir") {
+        val d = Spool.dir("graft-acidmerge") + "/t"
         val base = docs(s, dir)
           .select(col("doc_id"), col("source"), length(col("text")).as("n"))
         graft.land.AtomicLanding.commit(base, d)
@@ -330,7 +256,7 @@ object LlmPipeline {
               lit(-2).as("n")))
         graft.land.AtomicLanding.merge(upd, d, "doc_id")
         d
-      })
+      }
       graft.land.AtomicLanding.read(s, tbl)
         .select(col("doc_id"), col("n"))
         .orderBy(col("doc_id"))
@@ -345,9 +271,8 @@ object LlmPipeline {
     // (3 carried + 1 rewrite): a silent fallback to full rewrite (1 dir)
     // or a missed fold hash-fails ----
     "q_acid_merge_pruned" -> ((s, dir) => {
-      val tbl = mergePrunedSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-acidmergep").toString + "/t"
+      val tbl = Spool.once(s"mergePruned#$dir") {
+        val d = Spool.dir("graft-acidmergep") + "/t"
         val base = docs(s, dir)
           .select(col("doc_id"), col("source"), length(col("text")).as("n"))
         graft.land.AtomicLanding.commit(base.filter(col("doc_id") < 125), d)
@@ -363,7 +288,7 @@ object LlmPipeline {
               lit(-2).as("n")))
         graft.land.AtomicLanding.mergePruned(upd, d, "doc_id")
         d
-      })
+      }
       graft.land.AtomicLanding.read(s, tbl)
         .select(col("doc_id"), col("n"))
         .withColumn("n_live_dirs",
@@ -379,9 +304,8 @@ object LlmPipeline {
     // column-gated so an unpruned table-wide rewrite (1 dir) or a
     // skipped delete hash-fails alongside the surviving rows ----
     "q_acid_delete_pruned" -> ((s, dir) => {
-      val tbl = deletePrunedSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-aciddelp").toString + "/t"
+      val tbl = Spool.once(s"deletePruned#$dir") {
+        val d = Spool.dir("graft-aciddelp") + "/t"
         val base = docs(s, dir)
           .select(col("doc_id"), col("source"), length(col("text")).as("n"))
         graft.land.AtomicLanding.commit(base.filter(col("doc_id") < 125), d,
@@ -397,7 +321,7 @@ object LlmPipeline {
             .select(col("doc_id")),
           d, "doc_id")
         d
-      })
+      }
       graft.land.AtomicLanding.read(s, tbl)
         .select(col("doc_id"), col("n"))
         .withColumn("n_live_dirs",
@@ -412,9 +336,8 @@ object LlmPipeline {
     // whole, so a clone that copied nothing yet shared mutable state
     // with its source hash-fails either way ----
     "q_acid_clone" -> ((s, dir) => {
-      val (src, cln) = cloneSpooled.getOrElseUpdate(dir, {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-acidclone").toString
+      val (src, cln) = Spool.once(s"clone#$dir") {
+        val root = Spool.dir("graft-acidclone")
         val sT = s"$root/src"; val cT = s"$root/clone"
         val base = docs(s, dir)
           .select(col("doc_id"), col("source"), length(col("text")).as("n"))
@@ -428,7 +351,7 @@ object LlmPipeline {
             .select(col("doc_id")),
           cT, "doc_id")
         (sT, cT)
-      })
+      }
       graft.land.AtomicLanding.read(s, cln)
         .select(col("doc_id"), col("n"))
         .withColumn("n_src_rows",
@@ -444,9 +367,8 @@ object LlmPipeline {
     // that tore the pair — data without its record or vice versa —
     // loses the join row and hash-fails ----
     "q_txn_ingest" -> ((s, dir) => {
-      val root = txnRootSpooled.getOrElseUpdate(dir, {
-        val r = java.nio.file.Files
-          .createTempDirectory("graft-txnroot").toString + "/root"
+      val root = Spool.once(s"txnRoot#$dir") {
+        val r = Spool.dir("graft-txnroot") + "/root"
         val base = docs(s, dir).select(col("doc_id"), col("source"))
         (0 to 2).foreach { i =>
           graft.app.TransactionalIngest.ingest(s, r,
@@ -463,7 +385,7 @@ object LlmPipeline {
             batchId = Some(i.toLong))
         }
         r
-      })
+      }
       val (land, cat) = graft.app.TransactionalIngest.snapshot(s, root).get
       land.groupBy((col("doc_id") % 3).as("m"))
         .agg(count(lit(1)).as("n_rows"))
@@ -481,9 +403,8 @@ object LlmPipeline {
     // reclaimed — a vacuum that kept nothing, kept everything, or
     // dropped live rows hash-fails ----
     "q_acid_retention" -> ((s, dir) => {
-      val tbl = retentionSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-acidretain").toString + "/t"
+      val tbl = Spool.once(s"retention#$dir") {
+        val d = Spool.dir("graft-acidretain") + "/t"
         val base = docs(s, dir).select(col("doc_id"), col("source"))
         graft.land.AtomicLanding.commit(base.filter(col("doc_id") % 4 === 0), d)
         (1 to 2).foreach(i => graft.land.AtomicLanding.commit(
@@ -491,7 +412,7 @@ object LlmPipeline {
         graft.land.AtomicLanding.compact(s, d, numFiles = 1)
         graft.land.AtomicLanding.vacuum(d, retainVersions = 2)
         d
-      })
+      }
       val counts = (1L to 3L).map(v =>
         graft.land.AtomicLanding.readVersion(s, tbl, v).count())
       val v0Gone =
@@ -509,9 +430,8 @@ object LlmPipeline {
     // stopped pruning (4 dirs) or over-pruned (dropped rows) hash-fails
     // alongside the row values ----
     "q_acid_read_pruned" -> ((s, dir) => {
-      val tbl = readPrunedSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-acidreadp").toString + "/t"
+      val tbl = Spool.once(s"readPruned#$dir") {
+        val d = Spool.dir("graft-acidreadp") + "/t"
         val base = docs(s, dir)
           .select(col("doc_id"), col("source"), length(col("text")).as("n"))
         graft.land.AtomicLanding.commit(base.filter(col("doc_id") < 125), d,
@@ -522,7 +442,7 @@ object LlmPipeline {
             d, append = true)
         }
         d
-      })
+      }
       graft.land.AtomicLanding.readPruned(s, tbl, "doc_id", 130L, 240L)
         .select(col("doc_id"), col("n"))
         .withColumn("n_planned_dirs",
@@ -537,9 +457,8 @@ object LlmPipeline {
     // rewrote a dir, so dir identity no longer tracks row identity);
     // surviving rows of the rewritten dir emit nothing ----
     "q_acid_cdf_delete" -> ((s, dir) => {
-      val tbl = cdfDeleteSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-acidcdfdel").toString + "/t"
+      val tbl = Spool.once(s"cdfDelete#$dir") {
+        val d = Spool.dir("graft-acidcdfdel") + "/t"
         val base = docs(s, dir)
           .select(col("doc_id"), col("source"), length(col("text")).as("n"))
         graft.land.AtomicLanding.commit(base.filter(col("doc_id") < 125), d,
@@ -555,7 +474,7 @@ object LlmPipeline {
             .select(col("doc_id")),
           d, "doc_id")
         d
-      })
+      }
       val vNew = graft.land.AtomicLanding.currentVersion(tbl).get
       graft.land.ChangeFeed.changes(s, tbl, vNew - 1, vNew, "doc_id")
         .select(col("change_type"), col("doc_id"), col("n"))
@@ -569,15 +488,15 @@ object LlmPipeline {
     // live-dir count is column-gated so a compaction that silently
     // skipped (or dropped rows) hash-fails ----
     "q_acid_compact" -> ((s, dir) => {
-      val tbl = compactSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files.createTempDirectory("graft-acidcompact").toString + "/t"
+      val tbl = Spool.once(s"compact#$dir") {
+        val d = Spool.dir("graft-acidcompact") + "/t"
         val base = docs(s, dir).select(col("doc_id"), col("source"))
         graft.land.AtomicLanding.commit(base.filter(col("doc_id") % 4 === 0), d)
         (1 to 3).foreach(i => graft.land.AtomicLanding.commit(
           base.filter(col("doc_id") % 4 === i), d, append = true))
         graft.land.AtomicLanding.compact(s, d, numFiles = 1)
         d
-      })
+      }
       graft.land.AtomicLanding.read(s, tbl)
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("doc_id")).as("n_ids"))
@@ -595,7 +514,7 @@ object LlmPipeline {
     // change rows are hash-gated: the oracle re-derives every image
     // from the raw table ----
     "q_acid_cdf" -> ((s, dir) => {
-      val tbl = cdfSpooled.getOrElseUpdate(dir, cdfBuild(s, dir))
+      val tbl = Spool.once(s"cdf#$dir")(cdfBuild(s, dir))
       graft.land.ChangeFeed.changes(s, tbl, 0L, 1L, "doc_id")
         .withColumn("span", lit("v0_v1"))
         .unionByName(graft.land.ChangeFeed.changes(s, tbl, 1L, 2L, "doc_id")
@@ -613,7 +532,7 @@ object LlmPipeline {
     // drift in the signed-delta algebra, the NULL convention, or the
     // vanished-group rule hash-fails ----
     "q_acid_incragg" -> ((s, dir) => {
-      val tbl = cdfSpooled.getOrElseUpdate(dir, cdfBuild(s, dir))
+      val tbl = Spool.once(s"cdf#$dir")(cdfBuild(s, dir))
       val keys = Seq("grp"); val ms = Seq("n")
       def keyed(df: DataFrame) = df.withColumn("grp", col("doc_id") % 7)
       val v0 = graft.land.IncrementalAgg.full(
@@ -631,7 +550,7 @@ object LlmPipeline {
     // untouched groups keep their v1 rows verbatim. Oracle = the v2
     // truth, so a stale untouched row or a missed touched group fails ----
     "q_acid_incragg_minmax" -> ((s, dir) => {
-      val tbl = cdfSpooled.getOrElseUpdate(dir, cdfBuild(s, dir))
+      val tbl = Spool.once(s"cdf#$dir")(cdfBuild(s, dir))
       val keys = Seq("grp"); val ms = Seq("n")
       def keyed(df: DataFrame) = df.withColumn("grp", col("doc_id") % 7)
       graft.land.IncrementalAgg.refreshMinMax(
@@ -653,8 +572,8 @@ object LlmPipeline {
     // it. Enforcement (the same append WITHOUT the flag throws) is
     // spec-pinned in AtomicLandingSpec ----
     "q_acid_evolve" -> ((s, dir) => {
-      val tbl = evolveSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files.createTempDirectory("graft-acidevolve").toString + "/t"
+      val tbl = Spool.once(s"evolve#$dir") {
+        val d = Spool.dir("graft-acidevolve") + "/t"
         val ds = docs(s, dir)
         graft.land.AtomicLanding.commit(
           ds.filter(col("doc_id") >= 10).select(col("doc_id"), col("source")), d)
@@ -663,7 +582,7 @@ object LlmPipeline {
             length(col("text")).cast("long").as("n_chars")),
           d, append = true, evolveSchema = true)
         d
-      })
+      }
       graft.land.AtomicLanding.read(s, tbl, mergeSchema = true)
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("n_chars").isNull, 1L).otherwise(0L)).as("n_missing"),
@@ -679,8 +598,8 @@ object LlmPipeline {
     // and NONE of the live snapshot — superseded count is column-gated
     // at 0 alongside the intact row identity ----
     "q_acid_vacuum" -> ((s, dir) => {
-      val tbl = vacuumSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files.createTempDirectory("graft-acidvacuum").toString + "/t"
+      val tbl = Spool.once(s"vacuum#$dir") {
+        val d = Spool.dir("graft-acidvacuum") + "/t"
         val base = docs(s, dir).select(col("doc_id"), col("source"))
         graft.land.AtomicLanding.commit(base.filter(col("doc_id") % 2 === 0), d)
         graft.land.AtomicLanding.commit(base.filter(col("doc_id") % 2 === 1), d,
@@ -688,7 +607,7 @@ object LlmPipeline {
         graft.land.AtomicLanding.compact(s, d, numFiles = 1)
         graft.land.AtomicLanding.vacuum(d)
         d
-      })
+      }
       graft.land.AtomicLanding.read(s, tbl)
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("doc_id")).as("n_ids"))
@@ -721,9 +640,8 @@ object LlmPipeline {
     // q_decontaminate's, restricted to the batch slice ----
     "q_decontaminate_incremental" -> ((s, dir) => {
       val d = docs(s, dir)
-      val idx = deconIdxSpooled.getOrElseUpdate(dir, {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-deconidx").toString + "/idx"
+      val idx = Spool.once(s"deconIdx#$dir") {
+        val p = Spool.dir("graft-deconidx") + "/idx"
         // build on the benchmark's front half, grow with the rest —
         // the index lifecycle under the same hash gate
         graft.ext.Decontaminate.buildBenchIndex(
@@ -732,7 +650,7 @@ object LlmPipeline {
           d.filter(col("doc_id") >= 5 && col("doc_id") < 10),
           batchId = Some(1L))
         p
-      })
+      }
       graft.ext.Decontaminate.overlapsIncremental(s, idx,
           d.filter(col("doc_id") >= 10 && col("doc_id") % 7 === 0),
           minShared = 10)
@@ -745,16 +663,15 @@ object LlmPipeline {
     // false positives — bit-identical to q_decontaminate_incremental ----
     "q_decontaminate_inc_bloom" -> ((s, dir) => {
       val d = docs(s, dir)
-      val idx = deconIdxSpooled.getOrElseUpdate(dir, {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-deconidx").toString + "/idx"
+      val idx = Spool.once(s"deconIdx#$dir") {
+        val p = Spool.dir("graft-deconidx") + "/idx"
         graft.ext.Decontaminate.buildBenchIndex(
           d.filter(col("doc_id") < 5), p, batchId = Some(0L))
         graft.ext.Decontaminate.addToBenchIndex(s, p,
           d.filter(col("doc_id") >= 5 && col("doc_id") < 10),
           batchId = Some(1L))
         p
-      })
+      }
       graft.ext.Decontaminate.overlapsIncrementalBloom(s, idx,
           d.filter(col("doc_id") >= 10 && col("doc_id") % 7 === 0),
           minShared = 10)
@@ -774,9 +691,8 @@ object LlmPipeline {
     // torn from its table version hash-fails here ----
     "q_stream_decon_ingest" -> ((s, dir) => {
       val d = docs(s, dir)
-      val idx = deconIdxSpooled.getOrElseUpdate(dir + "#stream", {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-deconstream").toString
+      val idx = Spool.once(s"deconIdx#$dir#stream") {
+        val root = Spool.dir("graft-deconstream")
         val p = s"$root/idx"
         graft.ext.Decontaminate.buildBenchIndex(
           d.filter(col("doc_id") < 5), p,
@@ -787,7 +703,7 @@ object LlmPipeline {
           (df, b) => graft.ext.Decontaminate.addToBenchIndex(s, p, df,
             batchId = Some(b)))
         p
-      })
+      }
       graft.ext.Decontaminate.overlapsIncremental(s, idx,
           d.filter(col("doc_id") >= 10 && col("doc_id") % 7 === 0),
           minShared = 10)
@@ -1003,11 +919,10 @@ object LlmPipeline {
           transform(col("embedding"),
             x => (x.cast("double") * lit(1.01d)).cast("float")).as("embedding"))
       val base = e.unionByName(pert)
-      val idx = bm25IdxSpooled.getOrElseUpdate(dir + "#semivf", {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-semivf").toString + "/idx"
+      val idx = Spool.once(s"bm25Idx#$dir#semivf") {
+        val d = Spool.dir("graft-semivf") + "/idx"
         graft.ext.Ivf.buildSavedIndex(base, d, nLists = 16, iters = 0)
-      })
+      }
       graft.ext.SemDedup.dedupWithIndex(base, idx, tau = 0.9)
         .orderBy(col("vec_id"))
     }),
@@ -1026,11 +941,10 @@ object LlmPipeline {
     // witness = the original) and sign-flipped vectors (novel) ----
     "q_semantic_dedup_incremental" -> ((s, dir) => {
       val e = emb(s, dir).select(col("vec_id"), col("embedding"))
-      val st = semStateSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-semstate").toString + "/state"
+      val st = Spool.once(s"semState#$dir") {
+        val d = Spool.dir("graft-semstate") + "/state"
         graft.ext.SemDedupState.buildSaved(e, d, nLists = 16)
-      })
+      }
       val batch = e.filter(col("vec_id") < 50)
         .select((col("vec_id") + 10000).as("vec_id"),
           transform(col("embedding"),
@@ -1055,9 +969,8 @@ object LlmPipeline {
     // one-shot replays exactly (frozen-quantizer determinism) ----
     "q_semantic_dedup_rebuilt" -> ((s, dir) => {
       val e = emb(s, dir).select(col("vec_id"), col("embedding"))
-      val st = semRebuildSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-semrebuild").toString + "/state"
+      val st = Spool.once(s"semRebuild#$dir") {
+        val d = Spool.dir("graft-semrebuild") + "/state"
         val seed = e.filter(col("vec_id") < 200)
         val drifted = e.filter(col("vec_id") >= 200)
           .select(col("vec_id"),
@@ -1072,7 +985,7 @@ object LlmPipeline {
         require(!graft.ext.SemDedupState.rebuildIfDrifted(s, d, full,
           nLists = 16), "a freshly rebuilt envelope must re-arm low")
         d
-      })
+      }
       graft.ext.SemDedupState.verdictsSaved(s, st, tau = 0.9)
         .orderBy(col("vec_id"))
     }),
@@ -1092,9 +1005,8 @@ object LlmPipeline {
     // within-cluster pairs, min-id witness ----
     "q_stream_semdedup_ingest" -> ((s, dir) => {
       val e = emb(s, dir).select(col("vec_id"), col("embedding"))
-      val st = semStreamSpooled.getOrElseUpdate(dir, {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-semstream").toString
+      val st = Spool.once(s"semStream#$dir") {
+        val root = Spool.dir("graft-semstream")
         val d = s"$root/state"
         graft.ext.SemDedupState.buildSaved(
           e.filter(col("vec_id") < 200), d, nLists = 16,
@@ -1109,7 +1021,7 @@ object LlmPipeline {
           (df, b) => graft.ext.SemDedupState.addToSaved(s, d, df,
             batchId = Some(b)))
         d
-      })
+      }
       graft.ext.SemDedupState.verdictsSaved(s, st, tau = 0.9)
         .orderBy(col("vec_id"))
     }),
@@ -1150,9 +1062,8 @@ object LlmPipeline {
           .select((col("vec_id") + 10000).as("vec_id"),
             transform(col("embedding"),
               x => (x.cast("double") * lit(1.01d)).cast("float")).as("embedding"))
-      val path = clustersSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-clusters").toString + "/state"
+      val path = Spool.once(s"clusters#$dir") {
+        val d = Spool.dir("graft-clusters") + "/state"
         val standing = e.unionByName(pert(0, 25))
         graft.ext.Clusters.buildSaved(
           Similarity.embedNearDupPairs(standing, threshold = 0.9)
@@ -1168,7 +1079,7 @@ object LlmPipeline {
         graft.ext.Clusters.addToSaved(s, d, newEdges, batchId = Some(1L))
         graft.ext.Clusters.maintainSaved(s, d)
         d
-      })
+      }
       graft.ext.Clusters.snapshot(s, path)
         .groupBy(col("component")).agg(count(lit(1)).as("n_members"))
         .orderBy(col("component"))
@@ -1192,9 +1103,8 @@ object LlmPipeline {
           .select((col("vec_id") + 10000).as("vec_id"),
             transform(col("embedding"),
               x => (x.cast("double") * lit(1.01d)).cast("float")).as("embedding"))
-      val path = clustersSpooled.getOrElseUpdate(dir + "#stream", {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-clusterstream").toString
+      val path = Spool.once(s"clusters#$dir#stream") {
+        val root = Spool.dir("graft-clusterstream")
         val d = s"$root/state"
         val standing = e.unionByName(pert(0, 25))
         graft.ext.Clusters.buildSaved(
@@ -1210,7 +1120,7 @@ object LlmPipeline {
           (df, b) => graft.ext.Clusters.addToSaved(s, d, df,
             batchId = Some(b)))
         d
-      })
+      }
       graft.ext.Clusters.snapshot(s, path)
         .groupBy(col("component")).agg(count(lit(1)).as("n_members"))
         .orderBy(col("component"))
@@ -1300,11 +1210,14 @@ object LlmPipeline {
     // Lloyd-trained quantizers stay covered by IvfPqSpec recall T ----
     "q_cosine_ivfpq" -> ((s, dir) => {
       val e = emb(s, dir)
-      val p = ivfpqSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString + "/idx"
+      // spooled: the corpus pass builds and saves once and every probe
+      // loads the saved index, the probe a user repeats (q_cosine_ivf
+      // and q_cosine_pq keep measuring the build, training per run)
+      val p = Spool.once(s"ivfpq#$dir") {
+        val d = Spool.dir("graft-ivfpq") + "/idx"
         graft.ext.IvfPq.save(graft.ext.IvfPq.buildIndex(e), d)
         d
-      })
+      }
       graft.ext.IvfPq.probe(e, graft.ext.IvfPq.load(s, p),
           e.filter(col("vec_id") < 10), k = 5, nProbe = 4, shortlist = 50)
         .orderBy(col("query_id"), col("rnk"))
@@ -1322,9 +1235,8 @@ object LlmPipeline {
     // one-shot build, so the same replay oracle gates it unchanged ----
     "q_cosine_ivfpq_grown" -> ((s, dir) => {
       val e = emb(s, dir)
-      val p = ivfpqGrownSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-ivfpqgrown").toString + "/idx"
+      val p = Spool.once(s"ivfpqGrown#$dir") {
+        val d = Spool.dir("graft-ivfpqgrown") + "/idx"
         graft.ext.IvfPq.save(
           graft.ext.IvfPq.buildIndex(e.filter(col("vec_id") < 200)), d,
           batchId = Some(0L)) // seed watermark vouches the build prefix
@@ -1334,7 +1246,7 @@ object LlmPipeline {
         graft.ext.IvfPq.addToSavedIndex(s, d,
           e.filter(col("vec_id") >= 350), batchId = Some(2L))
         d
-      })
+      }
       graft.ext.IvfPq.probe(e, graft.ext.IvfPq.load(s, p),
           e.filter(col("vec_id") < 10), k = 5, nProbe = 4, shortlist = 50)
         .orderBy(col("query_id"), col("rnk"))
@@ -1377,9 +1289,8 @@ object LlmPipeline {
     // full corpus and q_cosine_ivf's replay oracle gates it unchanged ----
     "q_cosine_ivf_grown" -> ((s, dir) => {
       val e = emb(s, dir)
-      val idx = ivfGrownSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-ivfgrown").toString + "/idx"
+      val idx = Spool.once(s"ivfGrown#$dir") {
+        val d = Spool.dir("graft-ivfgrown") + "/idx"
         graft.ext.Ivf.buildSavedIndex(
           e.filter(col("vec_id") < 200), d, nLists = 16, iters = 0,
           batchId = Some(0L)) // seed watermark vouches the build prefix
@@ -1391,7 +1302,7 @@ object LlmPipeline {
         graft.ext.Ivf.addToSavedIndex(s, d, e.filter(col("vec_id") >= 350),
           batchId = Some(2L))
         d
-      })
+      }
       graft.ext.Ivf.probeSavedIndex(s, idx,
           e.filter(col("vec_id") < 10), k = 5, nProbe = 4)
         .orderBy(col("query_id"), col("rnk"))
@@ -1411,9 +1322,8 @@ object LlmPipeline {
     // hash-fails ----
     "q_cosine_ivf_rebalanced" -> ((s, dir) => {
       val e = emb(s, dir)
-      val idx = ivfRebalSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-ivfrebal").toString + "/idx"
+      val idx = Spool.once(s"ivfRebal#$dir") {
+        val d = Spool.dir("graft-ivfrebal") + "/idx"
         graft.ext.Ivf.buildSavedIndex(
           e.filter(col("vec_id") >= 350), d, nLists = 16, iters = 0,
           batchId = Some(0L))
@@ -1424,7 +1334,7 @@ object LlmPipeline {
           batchId = Some(2L))
         graft.ext.Ivf.rebalanceSavedIndex(s, d, nLists = 16, iters = 0)
         d
-      })
+      }
       graft.ext.Ivf.probeSavedIndex(s, idx,
           e.filter(col("vec_id") < 10), k = 5, nProbe = 4)
         .orderBy(col("query_id"), col("rnk"))
@@ -1446,9 +1356,8 @@ object LlmPipeline {
     // generation all hash-fail ----
     "q_cosine_ivfpq_rebalanced" -> ((s, dir) => {
       val e = emb(s, dir)
-      val p = ivfpqRebalSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-ivfpqrebal").toString + "/idx"
+      val p = Spool.once(s"ivfpqRebal#$dir") {
+        val d = Spool.dir("graft-ivfpqrebal") + "/idx"
         graft.ext.IvfPq.save(
           graft.ext.IvfPq.buildIndex(e.filter(col("vec_id") >= 350)), d,
           batchId = Some(0L))
@@ -1459,7 +1368,7 @@ object LlmPipeline {
           batchId = Some(2L))
         graft.ext.IvfPq.rebalanceSavedIndex(s, d, e)
         d
-      })
+      }
       graft.ext.IvfPq.probe(e, graft.ext.IvfPq.load(s, p),
           e.filter(col("vec_id") < 10), k = 5, nProbe = 4, shortlist = 50)
         .orderBy(col("query_id"), col("rnk"))
@@ -1478,9 +1387,8 @@ object LlmPipeline {
     // oracle gates the whole streaming lifecycle for free ----
     "q_stream_ivf_ingest" -> ((s, dir) => {
       val e = emb(s, dir)
-      val idx = ivfStreamSpooled.getOrElseUpdate(dir, {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-ivfstream").toString
+      val idx = Spool.once(s"ivfStream#$dir") {
+        val root = Spool.dir("graft-ivfstream")
         val d = s"$root/idx"
         // prefix build freezes the seed quantizer (first 16 by vec_id)
         graft.ext.Ivf.buildSavedIndex(
@@ -1492,7 +1400,7 @@ object LlmPipeline {
           (df, b) => graft.ext.Ivf.addToSavedIndex(s, d, df,
             batchId = Some(b)))
         d
-      })
+      }
       graft.ext.Ivf.probeSavedIndex(s, idx,
           e.filter(col("vec_id") < 10), k = 5, nProbe = 4)
         .orderBy(col("query_id"), col("rnk"))
@@ -1511,9 +1419,8 @@ object LlmPipeline {
     // q_cosine_ivfpq's replay oracle gates the streaming lifecycle ----
     "q_stream_ivfpq_ingest" -> ((s, dir) => {
       val e = emb(s, dir)
-      val p = ivfpqStreamSpooled.getOrElseUpdate(dir, {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-ivfpqstream").toString
+      val p = Spool.once(s"ivfpqStream#$dir") {
+        val root = Spool.dir("graft-ivfpqstream")
         val d = s"$root/idx"
         // prefix build freezes both seed sets (coarse = first 16 by
         // vec_id, PQ codebooks = first 16 residual slices)
@@ -1524,7 +1431,7 @@ object LlmPipeline {
           (df, b) => graft.ext.IvfPq.addToSavedIndex(s, d, df,
             batchId = Some(b)))
         d
-      })
+      }
       graft.ext.IvfPq.probe(e, graft.ext.IvfPq.load(s, p),
           e.filter(col("vec_id") < 10), k = 5, nProbe = 4, shortlist = 50)
         .orderBy(col("query_id"), col("rnk"))
@@ -1657,8 +1564,8 @@ object LlmPipeline {
     // length from the source's own metadata column, verified against the
     // documents the files were spooled from ----
     "q_binary_objects" -> ((s, dir) => {
-      val tmp = binSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files.createTempDirectory("graft-binobj").toString
+      val tmp = Spool.once(s"bin#$dir") {
+        val d = Spool.dir("graft-binobj")
         docs(s, dir).filter(col("doc_id") < 20)
           .select(col("doc_id"), col("text")).collect().foreach { r =>
             java.nio.file.Files.write(
@@ -1666,7 +1573,7 @@ object LlmPipeline {
               r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
         d
-      })
+      }
       Multimodal.binaryObjects(s, s"$tmp/*.bin")
         .select(
           regexp_extract(col("path"), "([0-9]+)\\.bin$", 1)
@@ -1688,12 +1595,12 @@ object LlmPipeline {
     // ---- the composed curation funnel: exact dedup -> near-dup removal
     // -> quality filter, with per-stage corpus sizes (exact dups derived
     // by unioning id-shifted copies so stage 2 has real work to do).
-    // The verified pair graph is memoized per (jvm, dir) and RESTRICTED
+    // The verified pair graph is spooled (see pairsFor) and RESTRICTED
     // per stage corpus (sound: LSH collision is pairwise — see
     // Curation.pairGraph) — q_dedup_minhash keeps measuring detection
     // itself; these rows measure the curation POLICIES, the same
     // detection/application split as the q_dup_spans/q_scrub_spans
-    // memo ----
+    // spool ----
     "q_curation_funnel" -> ((s, dir) => {
       val withDups = dupedDocs(s, dir)
       val pg = Some(pairsFor(s, dir, "withdups", withDups))
@@ -1919,12 +1826,11 @@ object LlmPipeline {
     "q_rerank_vec_frozen" -> ((s, dir) => {
       import s.implicits._
       val e = emb(s, dir)
-      val st = semStateSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-semstate").toString + "/state"
+      val st = Spool.once(s"semState#$dir") {
+        val d = Spool.dir("graft-semstate") + "/state"
         graft.ext.SemDedupState.buildSaved(
           e.select(col("vec_id"), col("embedding")), d, nLists = 16)
-      })
+      }
       val stats = graft.ext.SemDedupState.statsSaved(s, st)
       val qs = Seq(
         (0L, "spark query engine"), (1L, "join filter window"),
@@ -1963,13 +1869,13 @@ object LlmPipeline {
     // round-trip is lossless in both formats ----
     "q_format_roundtrip" -> ((s, dir) => {
       val csvOpts = LosslessCsvOptions
-      val tmp = fmtSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files.createTempDirectory("graft-fmt").toString
+      val tmp = Spool.once(s"fmt#$dir") {
+        val d = Spool.dir("graft-fmt")
         val ds = docs(s, dir)
         ds.write.mode("overwrite").orc(s"$d/orc")
         ds.write.mode("overwrite").options(csvOpts).csv(s"$d/csv")
         d
-      })
+      }
       val schema = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
       def agg(df: org.apache.spark.sql.DataFrame, fmt: String) =
         df.groupBy(lit(fmt).as("fmt"))
@@ -2109,11 +2015,10 @@ object LlmPipeline {
     // hash-fails here ----
     "q_bm25_indexed" -> ((s, dir) => {
       import s.implicits._
-      val idx = bm25IdxSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-bm25idx").toString + "/idx"
+      val idx = Spool.once(s"bm25Idx#$dir") {
+        val d = Spool.dir("graft-bm25idx") + "/idx"
         Retrieval.buildIndex(docs(s, dir).select(col("doc_id"), col("text")), d)
-      })
+      }
       val qs = Seq(
         (0L, "spark query engine"), (1L, "join filter window"),
         (2L, "customer order stream"), (3L, "table scan merge sort"))
@@ -2130,9 +2035,8 @@ object LlmPipeline {
     // oracle IS q_bm25's ----
     "q_bm25_grown" -> ((s, dir) => {
       import s.implicits._
-      val idx = bm25IdxSpooled.getOrElseUpdate(dir + "#grown", {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-bm25grown").toString + "/idx"
+      val idx = Spool.once(s"bm25Idx#$dir#grown") {
+        val d = Spool.dir("graft-bm25grown") + "/idx"
         val corpus = docs(s, dir).select(col("doc_id"), col("text"))
         Retrieval.buildIndex(corpus.where(col("doc_id") % 2 === 1), d,
           batchId = Some(0L)) // seed watermark vouches the build half
@@ -2141,7 +2045,7 @@ object LlmPipeline {
         Retrieval.addToIndex(s, d, corpus.where(col("doc_id") % 2 === 0),
           batchId = Some(1L))
         d
-      })
+      }
       val qs = Seq(
         (0L, "spark query engine"), (1L, "join filter window"),
         (2L, "customer order stream"), (3L, "table scan merge sort"))
@@ -2160,9 +2064,8 @@ object LlmPipeline {
     // bits, so q_bm25's oracle gates the whole streaming lifecycle ----
     "q_stream_bm25_ingest" -> ((s, dir) => {
       import s.implicits._
-      val idx = bm25IdxSpooled.getOrElseUpdate(dir + "#stream", {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft-bm25stream").toString
+      val idx = Spool.once(s"bm25Idx#$dir#stream") {
+        val root = Spool.dir("graft-bm25stream")
         val d = s"$root/idx"
         val corpus = docs(s, dir).select(col("doc_id"), col("text"))
         Retrieval.buildIndex(corpus.where(col("doc_id") % 4 === 0), d,
@@ -2171,7 +2074,7 @@ object LlmPipeline {
           (df, b) => { Retrieval.addToIndex(s, d, df,
             batchId = Some(b)); () })
         d
-      })
+      }
       val qs = Seq(
         (0L, "spark query engine"), (1L, "join filter window"),
         (2L, "customer order stream"), (3L, "table scan merge sort"))
@@ -2228,11 +2131,10 @@ object LlmPipeline {
     // the save/load round trip are both under the hash gate ----
     "q_lm_score_frozen" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val path = bm25IdxSpooled.getOrElseUpdate(dir + "#lmfrozen", {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft-lmmodel").toString + "/model"
+      val path = Spool.once(s"bm25Idx#$dir#lmfrozen") {
+        val p = Spool.dir("graft-lmmodel") + "/model"
         LmScore.save(LmScore.train(d.where(col("doc_id") % 10 === 0)), p)
-      })
+      }
       LmScore.score(d, LmScore.load(s, path), broadcastModel = true)
         .orderBy(col("doc_id"))
     }),
@@ -2291,14 +2193,13 @@ object LlmPipeline {
     // values themselves pin the payoff: each probe reads a fraction of
     // the 16 buckets on EITHER dimension ----
     "q_zorder_prune" -> ((s, dir) => {
-      val (path, domains) = zorderSpooled.getOrElseUpdate(dir, {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-zprune").toString + "/orders_z"
+      val (path, domains) = Spool.once(s"zorder#$dir") {
+        val d = Spool.dir("graft-zprune") + "/orders_z"
         val doms = graft.ext.Zorder.bucketedWrite(
           t(s, dir, "orders"), d, Seq("o_custkey", "o_orderkey"),
           bits = 16, nBuckets = 16)
         (d, doms)
-      })
+      }
       val Seq((_, lo1, hi1), (_, lo2, hi2)) = domains
       val (p1lo, p1hi) = { val sp = hi1 - lo1; val a = lo1 + sp / 4; (a, a + sp / 20) }
       val (p2lo, p2hi) = { val sp = hi2 - lo2; val a = lo2 + sp / 2; (a, a + sp / 20) }
@@ -2334,9 +2235,8 @@ object LlmPipeline {
     "q_zorder_maintained" -> ((s, dir) => {
       import graft.land.AtomicLanding
       val cols = Seq("o_custkey", "o_orderkey")
-      val (path, decayed, foldDir) = zorderMaintSpooled.getOrElseUpdate(dir, {
-        val tbl = java.nio.file.Files
-          .createTempDirectory("graft-zmaint").toString + "/orders_zm"
+      val (path, decayed, foldDir) = Spool.once(s"zorderMaint#$dir") {
+        val tbl = Spool.dir("graft-zmaint") + "/orders_zm"
         val o = t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         graft.ext.Zorder.zorderedCommit(
@@ -2364,7 +2264,7 @@ object LlmPipeline {
         val comp = graft.ext.Zorder.maintainZordered(s, tbl, cols,
           bits = 16, smallBytes = dirBytes(bodyDir) - 1, nFiles = 8)
         (tbl, decay, comp.foldDir.get)
-      })
+      }
       val live = AtomicLanding.read(s, path)
       val nDirs = AtomicLanding.dirsOfVersion(path,
         AtomicLanding.currentVersion(path).get).size.toLong
@@ -2520,7 +2420,7 @@ object LlmPipeline {
     // (pairless corpus — the legitimate identity tokenizer) has no
     // VALUES form, so the entry is omitted (rows-only downgrade for
     // that one row) rather than crashing the whole dump.
-    trainedDirLast.flatMap(trainedCache.get).filter(_.merges.nonEmpty).map(t =>
+    trainedLast.filter(_.merges.nonEmpty).map(t =>
       "q_bpe_trained" -> bpeTokensOracle(bpeEncodeCtes(mergesValuesSql(t.merges))))
 
   private val staticOracles: Map[String, String] = Map(

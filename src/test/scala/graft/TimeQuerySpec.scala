@@ -11,9 +11,15 @@ class TimeQuerySpec extends AnyFunSuite {
   test("profile counts every query's jobs, the same on a repeated call") {
     val first = TimeQuery.profile(spark, TestSpark.Sf0001, names)
     val second = TimeQuery.profile(spark, TestSpark.Sf0001, names)
-    assert(first.map(_._1) == names)
-    assert(first.forall { case (_, jobs, wall) => jobs > 0 && wall > 0 }, first)
-    assert(first.map(_._2) == second.map(_._2))
+    assert(first.map(_.name) == names)
+    assert(first.forall(r => r.jobs > 0 && r.wallS > 0), first)
+    assert(first.map(_.jobs) == second.map(_.jobs))
+  }
+
+  test("a warm-up that finds its spools built charges no spool time") {
+    TimeQuery.profile(spark, TestSpark.Sf0001, Seq("q_stream_window"))
+    val again = TimeQuery.profile(spark, TestSpark.Sf0001, Seq("q_stream_window"))
+    assert(again.map(_.spoolS) == Seq(0.0))
   }
 
   test("an unknown query name is refused, and the message names it") {

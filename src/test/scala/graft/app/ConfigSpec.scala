@@ -1,11 +1,12 @@
 package graft.app
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.Spool
 
 class ConfigSpec extends AnyFunSuite {
 
   test("config loads from a properties file and validates required keys") {
-    val f = java.nio.file.Files.createTempFile("graft-cfg", ".properties")
+    val f = java.nio.file.Paths.get(Spool.dir("graft-cfg"), "app.properties")
     java.nio.file.Files.writeString(f,
       """fm.prefix=dl-fw
         |region=us-east-2
@@ -37,7 +38,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("props-file credential provider reads <dir>/<name>.properties") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-secrets")
+    val dir = java.nio.file.Paths.get(Spool.dir("graft-secrets"))
     java.nio.file.Files.writeString(dir.resolve("control-db.properties"),
       "password=s3cret\nhost=ctrl\n")
     val creds = new PropsFileCredentialProvider(dir.toString)
@@ -47,7 +48,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("secrets-store provider: reference key scheme + SecretString JSON payload") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sm")
+    val dir = java.nio.file.Paths.get(Spool.dir("graft-sm"))
     // the per-source ingestion secret: {fm_prefix}-ingstn-db-secrets-{src_sys_id}
     // whose SecretString is {"<src_sys_id>": "<password>"}
     // (dataIngestionUtils.py:71,108-111)
@@ -69,7 +70,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("secrets-store provider: SecretBinary decodes base64 to raw bytes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-smb")
+    val dir = java.nio.file.Paths.get(Spool.dir("graft-smb"))
     val raw = Array[Byte](0, 1, 2, -1, 127, 10, 34, 92)
     val b64 = java.util.Base64.getEncoder.encodeToString(raw)
     java.nio.file.Files.writeString(dir.resolve("dl-fw-ingstn-db-secrets-9.secret"),
@@ -117,7 +118,7 @@ class ConfigSpec extends AnyFunSuite {
     assert(log.timed("ok-step")(41 + 1) == 42)
     assertThrows[RuntimeException](
       log.timed("bad-step")(throw new RuntimeException("boom")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-log").toString
+    val tmp = Spool.dir("graft-log")
     val relay = new graft.files.FileRelay()
     log.ship(buf, relay, s"$tmp/logs/run.log")
     val shipped = relay.readUtf8(new org.apache.hadoop.fs.Path(s"$tmp/logs/run.log"))

@@ -1,6 +1,7 @@
 package graft.app
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.Spool
 
 /** C4 contract: placeholder substitution per the reference generator,
   * plus the generated-id / trigger-id round trip the reference breaks
@@ -29,7 +30,7 @@ class DagRendererSpec extends AnyFunSuite {
   }
 
   test("generated file name round-trips through the event trigger's dag id") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dags")
+    val dir = java.nio.file.Paths.get(Spool.dir("graft-dags"))
     val p = DagRenderer.write(dir, template, 7, 42, None)
     // the trigger posts to dags/{dagId}/dagRuns — the generated file must
     // carry THAT id, or (as in the reference) no event ever runs the DAG

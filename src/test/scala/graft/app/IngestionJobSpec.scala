@@ -7,6 +7,7 @@ import graft.catalog.InMemoryMetadataStore
 import graft.files.FileRelay
 import graft.ingest.ParquetTableSource
 import graft.model._
+import graft.queries.Spool
 
 /** End-to-end driver dispatch over file:// fixtures — all three ingestion
   * patterns (VERDICT r1 item 4): database (via ParquetTableSource seam),
@@ -29,7 +30,7 @@ class IngestionJobSpec extends AnyFunSuite {
     SourceSystem(id, pattern, None, None, None, None, None, None, Some(bucket))
 
   test("database pattern: extract, land parquet, record watermark") {
-    val root = java.nio.file.Files.createTempDirectory("graft-app-db").toString
+    val root = Spool.dir("graft-app-db")
     val store = new InMemoryMetadataStore(
       sources = Seq(srcSys(1, IngestionPattern.Database, s"$root/inbound")),
       assets = Seq(DataAsset(7, "events", None, TriggerMechanism.TimeDriven,
@@ -45,7 +46,7 @@ class IngestionJobSpec extends AnyFunSuite {
   }
 
   test("database pattern with atomic landing: data publishes as a snapshot, then records") {
-    val root = java.nio.file.Files.createTempDirectory("graft-app-acid").toString
+    val root = Spool.dir("graft-app-acid")
     val store = new InMemoryMetadataStore(
       sources = Seq(srcSys(1, IngestionPattern.Database, s"$root/inbound")),
       assets = Seq(DataAsset(7, "events", None, TriggerMechanism.TimeDriven,
@@ -63,7 +64,7 @@ class IngestionJobSpec extends AnyFunSuite {
   }
 
   test("transactional catalog mode: landing + run record + watermark publish in ONE swing; the watermark of record lives in the root") {
-    val root = java.nio.file.Files.createTempDirectory("graft-app-txn").toString
+    val root = Spool.dir("graft-app-txn")
     def freshStore() = new InMemoryMetadataStore(
       sources = Seq(srcSys(1, IngestionPattern.Database, s"$root/inbound")),
       assets = Seq(DataAsset(7, "events", None, TriggerMechanism.TimeDriven,
@@ -103,7 +104,7 @@ class IngestionJobSpec extends AnyFunSuite {
 
   test("maintain compacts a many-batch streaming table and keeps replay-skip") {
     import graft.land.AtomicLanding
-    val table = java.nio.file.Files.createTempDirectory("graft-app-mnt").toString + "/t"
+    val table = Spool.dir("graft-app-mnt") + "/t"
     val nation = graft.Tables.t(spark, TestSpark.Sf0001, "nation")
     val sink = AtomicLanding.streamSink(table)
     (0L to 5L).foreach(b => sink(nation.limit(2), b))     // 6 micro-batches
@@ -128,7 +129,7 @@ class IngestionJobSpec extends AnyFunSuite {
 
   test("maintain vacuums an overwrite-per-run table once old snapshots pile up") {
     import graft.land.AtomicLanding
-    val table = java.nio.file.Files.createTempDirectory("graft-app-ow").toString + "/t"
+    val table = Spool.dir("graft-app-ow") + "/t"
     val nation = graft.Tables.t(spark, TestSpark.Sf0001, "nation")
     // five overwrite commits: liveDirCount stays 1, garbage accumulates
     (1 to 5).foreach(i => AtomicLanding.commit(nation.limit(i), table))
@@ -142,7 +143,7 @@ class IngestionJobSpec extends AnyFunSuite {
   }
 
   test("file pattern: relay inbound objects to raw zone and archive them") {
-    val root = java.nio.file.Files.createTempDirectory("graft-app-f").toString
+    val root = Spool.dir("graft-app-f")
     val relay = new FileRelay()
     val bucket = s"$root/inbound"
     relay.writeUtf8(new Path(s"$bucket/init/2/8/a.csv"), "x,y\n1,2")
@@ -162,7 +163,7 @@ class IngestionJobSpec extends AnyFunSuite {
   }
 
   test("stream pattern: merge concatenated JSON and record the run") {
-    val root = java.nio.file.Files.createTempDirectory("graft-app-s").toString
+    val root = Spool.dir("graft-app-s")
     val relay = new FileRelay()
     val bucket = s"$root/inbound"
     relay.writeUtf8(new Path(s"$bucket/init/3/9/e1.json"), """{"a":1}{"a":2}""")
@@ -181,7 +182,7 @@ class IngestionJobSpec extends AnyFunSuite {
   }
 
   test("file pattern in transactional mode: objects land as rows WITH the run record in one swing, then archive") {
-    val root = java.nio.file.Files.createTempDirectory("graft-app-ftxn").toString
+    val root = Spool.dir("graft-app-ftxn")
     val relay = new FileRelay()
     val bucket = s"$root/inbound"
     relay.writeUtf8(new Path(s"$bucket/init/2/8/a.csv"), "x,y\n1,2")
@@ -205,7 +206,7 @@ class IngestionJobSpec extends AnyFunSuite {
   }
 
   test("stream pattern in transactional mode: merged events land as rows WITH the run record in one swing") {
-    val root = java.nio.file.Files.createTempDirectory("graft-app-stxn").toString
+    val root = Spool.dir("graft-app-stxn")
     val relay = new FileRelay()
     val bucket = s"$root/inbound"
     relay.writeUtf8(new Path(s"$bucket/init/3/9/e1.json"), """{"a":1}{"a":2}""")
@@ -228,7 +229,7 @@ class IngestionJobSpec extends AnyFunSuite {
   }
 
   test("transactional mode's RDBMS mirror is best-effort and idempotent: a mirror failure does not fail a published run; a retry does not duplicate the row (ADVICE r18)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-app-mirror").toString
+    val root = Spool.dir("graft-app-mirror")
     val relay = new FileRelay()
     val bucket = s"$root/inbound"
     relay.writeUtf8(new Path(s"$bucket/init/2/8/a.csv"), "x,y\n1,2")
@@ -268,7 +269,7 @@ class IngestionJobSpec extends AnyFunSuite {
   }
 
   test("unknown ids fail loudly (no reference-style exception swallowing)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-app-x").toString
+    val root = Spool.dir("graft-app-x")
     val store = new InMemoryMetadataStore()
     assertThrows[NoSuchElementException](
       IngestionJob.run(newEnv(store, root),

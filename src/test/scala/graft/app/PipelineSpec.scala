@@ -6,6 +6,7 @@ import graft.catalog.InMemoryMetadataStore
 import graft.files.FileRelay
 import graft.ingest.ParquetTableSource
 import graft.model._
+import graft.queries.Spool
 
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -41,7 +42,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("pipeline chain flips catalog statuses in stage order") {
     val st = store()
-    val root = java.nio.file.Files.createTempDirectory("graft-pipe").toString
+    val root = Spool.dir("graft-pipe")
     val seen = scala.collection.mutable.ArrayBuffer[String]()
     Pipeline.run(env(st), args(root), Pipeline.defaultStages(
       quality = _ => seen += "q", masking = _ => seen += "m",
@@ -56,7 +57,7 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import graft.operators.{DataQuality, Masking}
     val st = store()
-    val root = java.nio.file.Files.createTempDirectory("graft-pipe3").toString
+    val root = Spool.dir("graft-pipe3")
     val a = args(root)
     // region fixture: r_regionkey 0..4, unique, non-null -> rules pass
     Pipeline.run(env(st), a, Pipeline.defaultStages(
@@ -74,7 +75,7 @@ class PipelineSpec extends AnyFunSuite {
 
     // a rule the data violates: range too tight -> failed + chain stops
     val st2 = store()
-    val root2 = java.nio.file.Files.createTempDirectory("graft-pipe4").toString
+    val root2 = Spool.dir("graft-pipe4")
     val ex = intercept[IllegalStateException] {
       Pipeline.run(env(st2), args(root2), Pipeline.defaultStages(
         quality = Pipeline.qualityStage(spark, Seq(
@@ -88,7 +89,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("a failing stage is marked failed, later stages never run") {
     val st = store()
-    val root = java.nio.file.Files.createTempDirectory("graft-pipe2").toString
+    val root = Spool.dir("graft-pipe2")
     val seen = scala.collection.mutable.ArrayBuffer[String]()
     assertThrows[RuntimeException] {
       Pipeline.run(env(st), args(root), Pipeline.defaultStages(

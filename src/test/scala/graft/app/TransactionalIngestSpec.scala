@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.land.AtomicLanding
 import graft.model.CatalogEntry
+import graft.queries.Spool
 
 class TransactionalIngestSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft-txn").toString + "/root"
+    Spool.dir("graft-txn") + "/root"
 
   private def entry(execId: String): CatalogEntry = CatalogEntry(
     execId = execId, srcSysId = 1, assetId = 101,
@@ -78,7 +79,7 @@ class TransactionalIngestSpec extends AnyFunSuite {
 
   test("file pattern one-swing: crash before the swing exposes nothing and keeps inbound; the retry converges with byte fidelity") {
     val root = freshRoot()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-txn-f").toString
+    val tmp = Spool.dir("graft-txn-f")
     val inbound = s"$tmp/inbound"; val processed = s"$tmp/processed"
     val relay = new graft.files.FileRelay()
     import org.apache.hadoop.fs.Path
@@ -119,7 +120,7 @@ class TransactionalIngestSpec extends AnyFunSuite {
 
   test("file pattern: crash AFTER the swing but before the archive — retry skips the land (no duplicates) and finishes the move") {
     val root = freshRoot()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-txn-f2").toString
+    val tmp = Spool.dir("graft-txn-f2")
     val inbound = s"$tmp/inbound"; val processed = s"$tmp/processed"
     var failMove = true
     val relay = new graft.files.FileRelay() {
@@ -147,7 +148,7 @@ class TransactionalIngestSpec extends AnyFunSuite {
 
   test("file pattern: an object arriving AFTER the run's listing is never archived unlanded — it stays for the next batch (ADVICE r18 high)") {
     val root = freshRoot()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-txn-late").toString
+    val tmp = Spool.dir("graft-txn-late")
     val inbound = s"$tmp/inbound"; val processed = s"$tmp/processed"
     // inject: late.csv lands immediately after the run's ONE listing —
     // the window where the old fresh-listing archive swept it to
@@ -183,7 +184,7 @@ class TransactionalIngestSpec extends AnyFunSuite {
 
   test("file pattern: covered-batchId retry archives ONLY the batch's landed objects; a post-crash arrival survives for its own batch") {
     val root = freshRoot()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-txn-cret").toString
+    val tmp = Spool.dir("graft-txn-cret")
     val inbound = s"$tmp/inbound"; val processed = s"$tmp/processed"
     var failMove = true
     val relay = new graft.files.FileRelay() {
@@ -220,7 +221,7 @@ class TransactionalIngestSpec extends AnyFunSuite {
 
   test("stream pattern: covered-batchId retry archives only objects whose events landed; a post-crash arrival survives") {
     val root = freshRoot()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-txn-scret").toString
+    val tmp = Spool.dir("graft-txn-scret")
     val inbound = s"$tmp/inbound"; val processed = s"$tmp/processed"
     var failMove = true
     val relay = new graft.files.FileRelay() {
@@ -257,7 +258,7 @@ class TransactionalIngestSpec extends AnyFunSuite {
 
   test("file pattern: glob metacharacters in object names load LITERALLY — never a different file's bytes, never a wedged batch") {
     val root = freshRoot()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-txn-glob").toString
+    val tmp = Spool.dir("graft-txn-glob")
     val inbound = s"$tmp/inbound"; val processed = s"$tmp/processed"
     val relay = new graft.files.FileRelay()
     import org.apache.hadoop.fs.Path
@@ -279,7 +280,7 @@ class TransactionalIngestSpec extends AnyFunSuite {
 
   test("stream pattern one-swing: events land as rows with the record; crash/retry ladder converges") {
     val root = freshRoot()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-txn-s").toString
+    val tmp = Spool.dir("graft-txn-s")
     val inbound = s"$tmp/inbound"; val processed = s"$tmp/processed"
     val relay = new graft.files.FileRelay()
     import org.apache.hadoop.fs.Path

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.queries.Spool
 
 class AnalyticsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -60,8 +61,7 @@ class AnalyticsSpec extends AnyFunSuite {
       .limit(400)
     val batch = all.where(col("c_custkey") % 10 === 0)
     val corpus = all.where(col("c_custkey") % 10 =!= 0)
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-fuzzyidx-spec").toString + "/idx"
+    val idx = Spool.dir("graft-fuzzyidx-spec") + "/idx"
     FuzzyJoin.buildSigIndex(corpus, "k", idx)
     val indexed = FuzzyJoin.againstIndexEd1(spark, idx, batch, "k")
     val inline = FuzzyJoin.againstCorpusEd1(batch, corpus, "k")

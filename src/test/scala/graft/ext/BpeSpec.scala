@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.TestSpark
+import graft.queries.Spool
 
 class BpeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -102,7 +103,7 @@ class BpeSpec extends AnyFunSuite {
   test("trained table round-trips through parquet save/load, rank order intact") {
     val docs = spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet")
     val trained = Bpe.train(docs, col("text"), nMerges = 20)
-    val p = java.nio.file.Files.createTempDirectory("graft-bpe").toString + "/merges"
+    val p = Spool.dir("graft-bpe") + "/merges"
     Bpe.save(spark, trained, p)
     val loaded = Bpe.load(spark, p)
     assert(loaded.merges == trained.merges) // order IS semantics

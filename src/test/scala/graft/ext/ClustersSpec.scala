@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.land.AtomicLanding
+import graft.queries.Spool
 
 /** [[Clusters]] — exact incremental connected components (contraction)
   * plus the persisted grow-in-place lifecycle. The core claim under
@@ -67,8 +68,7 @@ class ClustersSpec extends AnyFunSuite {
   }
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-clusters-spec")
-      .toString + "/state"
+    Spool.dir("graft-clusters-spec") + "/state"
 
   test("saved lifecycle: build -> grow -> grow == one-shot; folds compose across batches") {
     val p = tmp()

@@ -3,6 +3,7 @@ package graft.ext
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.queries.Spool
 
 class DecontaminateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -35,8 +36,7 @@ class DecontaminateSpec extends AnyFunSuite {
 
   test("incremental: persisted bench index reproduces the inline bits; growth + replay follow the contract") {
     import graft.land.AtomicLanding
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-deconidx").toString + "/idx"
+    val idx = Spool.dir("graft-deconidx") + "/idx"
     val bench2 = bench.unionByName(Seq(
       (101L, "name the longest river in south america and its primary tributaries listed"))
       .toDF("doc_id", "text"))
@@ -67,8 +67,7 @@ class DecontaminateSpec extends AnyFunSuite {
 
   test("streaming ingest: micro-batched foreachBatch appends reproduce the one-shot index bits, replay-safe") {
     import graft.land.AtomicLanding
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-deconstream").toString
+    val root = Spool.dir("graft-deconstream")
     val idx = s"$root/idx"
     val bench2 = bench.unionByName(Seq(
       (101L, "name the longest river in south america and its primary tributaries listed"),
@@ -141,8 +140,7 @@ class DecontaminateSpec extends AnyFunSuite {
   }
 
   test("index params persist at build and validate on append/probe: an n mismatch fails loudly") {
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-deconidx").toString + "/idx"
+    val idx = Spool.dir("graft-deconidx") + "/idx"
     Decontaminate.buildBenchIndex(bench, idx, n = 3, batchId = Some(0L))
     val ps = Decontaminate.readParams(spark, idx)
     assert(ps.contains(Decontaminate.IndexParams(3, 0, 1L << 20, 1L << 23)),
@@ -172,8 +170,7 @@ class DecontaminateSpec extends AnyFunSuite {
       (100L, "a b c d e"),
       (101L, "a b c x y")
     ).toDF("doc_id", "text")
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-deconidx").toString + "/idx"
+    val idx = Spool.dir("graft-deconidx") + "/idx"
     Decontaminate.buildBenchIndex(b2, idx, stopTopK = 1, batchId = Some(0L))
     assert(Decontaminate.readParams(spark, idx).exists(_.stopTopK == 1))
     assert(AtomicLanding.currentVersion(s"$idx/stops").isDefined,
@@ -198,8 +195,7 @@ class DecontaminateSpec extends AnyFunSuite {
 
   test("overlapsIncrementalBloom: bit-identical to overlapsIncremental; persisted sketch in the plan; missing sketch file rebuilds") {
     import graft.land.AtomicLanding
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-deconidx").toString + "/idx"
+    val idx = Spool.dir("graft-deconidx") + "/idx"
     val bench2 = bench.unionByName(Seq(
       (101L, "name the longest river in south america and its primary tributaries listed"))
       .toDF("doc_id", "text"))

@@ -172,7 +172,7 @@ class DedupSpec extends AnyFunSuite {
     val fixture = spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet")
     val base = Dedup.simhashSignatures(fixture).orderBy("doc_id")
       .as[(Long, Long)].collect().toSeq
-    val dict = Dedup.simhashSignaturesDict(fixture).orderBy("doc_id")
+    val dict = Reference.simhashSignaturesDict(fixture).orderBy("doc_id")
       .as[(Long, Long)].collect().toSeq
     assert(base == dict)
     assert(base.nonEmpty)

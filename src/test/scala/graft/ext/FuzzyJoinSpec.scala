@@ -3,6 +3,7 @@ package graft.ext
 import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.Spool
 
 /** The ed ≤ 2 deletion-neighborhood scheme: signature COMPLETENESS
   * (every true ed ≤ 2 pair shares a signature — the property the join's
@@ -68,7 +69,7 @@ class FuzzyJoinSpec extends AnyFunSuite {
   }
 
   test("addToSigIndex: grown index == rebuilt index, and replays no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigidx").toString
+    val dir = Spool.dir("graft-sigidx")
     val corpusA = (1 to 400).map(i => f"Customer#$i%09d").toDF("name")
     val batchB = (380 to 600).map(i => f"Customer#$i%09d").toDF("name")
     val probes = Seq(150, 390, 555, 999).map(i => f"Customer#$i%09d").toDF("name")
@@ -99,7 +100,7 @@ class FuzzyJoinSpec extends AnyFunSuite {
 
   test("addToSigIndex identified batches: replay is a pure no-op; new ids skip the dedupe scan") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigidxbid").toString
+    val dir = Spool.dir("graft-sigidxbid")
     val idx = s"$dir/idx"
     val corpusA = (1 to 400).map(i => f"Customer#$i%09d").toDF("name")
     val batchB = (401 to 600).map(i => f"Customer#$i%09d").toDF("name")
@@ -135,7 +136,7 @@ class FuzzyJoinSpec extends AnyFunSuite {
 
   test("a watermark-less sig index makes the first identified append pay the scan") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-signowm").toString
+    val dir = Spool.dir("graft-signowm")
     val idx = s"$dir/idx"
     val corpusA = (1 to 200).map(i => f"Customer#$i%09d").toDF("name")
     val batchB = (201 to 300).map(i => f"Customer#$i%09d").toDF("name")
@@ -320,7 +321,7 @@ class FuzzyJoinSpec extends AnyFunSuite {
     // mid-append (before the pointer swing) leaves the index snapshot
     // byte-identical — there is no partial state for the retry to heal,
     // it simply commits the full batch
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigcrash").toString
+    val dir = Spool.dir("graft-sigcrash")
     val corpusA = (1 to 300).map(i => f"Customer#$i%09d").toDF("name")
     val batchB = (290 to 450).map(i => f"Customer#$i%09d").toDF("name")
     FuzzyJoin.buildSigIndex(corpusA, "name", s"$dir/grown")
@@ -345,7 +346,7 @@ class FuzzyJoinSpec extends AnyFunSuite {
   }
 
   test("maintainSigIndex folds the append-session tail and vacuums; probes unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigmaint").toString
+    val dir = Spool.dir("graft-sigmaint")
     val corpusA = (1 to 200).map(i => f"Customer#$i%09d").toDF("name")
     FuzzyJoin.buildSigIndex(corpusA, "name", s"$dir/grown")
     for (lo <- Seq(201, 301, 401))
@@ -375,7 +376,7 @@ class FuzzyJoinSpec extends AnyFunSuite {
   }
 
   test("a probe racing an append reads a complete snapshot (never torn)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigrace").toString
+    val dir = Spool.dir("graft-sigrace")
     val corpusA = (1 to 300).map(i => f"Customer#$i%09d").toDF("name")
     val batchB = (290 to 450).map(i => f"Customer#$i%09d").toDF("name")
     val probes = Seq(150, 295, 420).map(i => f"Customer#$i%09d").toDF("name")

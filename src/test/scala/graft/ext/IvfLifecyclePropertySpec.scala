@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.queries.Spool
 
 /** Randomized-schedule property for the SAVED IVF index lifecycle —
   * the generative counterpart to IvfSpec's directed grown/replay/
@@ -38,8 +39,7 @@ class IvfLifecyclePropertySpec extends AnyFunSuite {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val prop = Prop.forAllNoShrink(Gen.choose(0L, Long.MaxValue)) { seed =>
       val rnd = new scala.util.Random(seed)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-ivflife").toString
+      val dir = Spool.dir("graft-ivflife")
       val idx = s"$dir/idx"
       // prefix [0, c0) covers the 16 seed vectors; the rest splits into
       // 1..3 consecutive id-range batches
@@ -115,8 +115,7 @@ class IvfLifecyclePropertySpec extends AnyFunSuite {
       val rnd = new scala.util.Random(seed)
       val paired = first
       first = false
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-ivfcrash").toString
+      val dir = Spool.dir("graft-ivfcrash")
       val idx = s"$dir/idx"
       val c0 = 100 + rnd.nextInt((nEmb / 2).toInt - 100)
       val nBatches = 1 + rnd.nextInt(3)

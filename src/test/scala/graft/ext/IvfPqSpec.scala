@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.queries.Spool
 
 /** IVF-PQ composed index: losslessness of the machinery at the
   * degenerate config, recall behavior of the real one. */
@@ -47,7 +48,7 @@ class IvfPqSpec extends AnyFunSuite {
   test("a saved index probes identically after reload in a fresh lineage") {
     val idx = IvfPq.buildIndex(emb, nLists = 8, m = 8, k = 16,
       itersCoarse = 1, itersPq = 1)
-    val p = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val p = Spool.dir("graft-ivfpq")
     IvfPq.save(idx, p)
     val loaded = IvfPq.load(spark, p)
     assert(loaded.m == idx.m && loaded.subDim == idx.subDim)
@@ -61,7 +62,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("addToSavedIndex: grown == one-shot; identified replay zero-scan; half-crash heals exactly") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqgrow").toString
+    val dir = Spool.dir("graft-ivfpqgrow")
     val idx = s"$dir/idx"
     // deterministic quantizers (iters = 0); the prefix holds both seed
     // sets (coarse first-16 vectors, PQ first-16 residual slices)
@@ -139,7 +140,7 @@ class IvfPqSpec extends AnyFunSuite {
     // racing the re-save (inside the root commit's pre-publish window,
     // when all four part tables ALREADY hold their v2 generations)
     // must resolve the complete OLD quadruple
-    val p = java.nio.file.Files.createTempDirectory("graft-ivfpqacid").toString
+    val p = Spool.dir("graft-ivfpqacid")
     val v1 = IvfPq.buildIndex(emb, nLists = 8, m = 8, k = 16)
     IvfPq.save(v1, p)
     def probed() = IvfPq.probe(emb, IvfPq.load(spark, p), queries,
@@ -185,16 +186,14 @@ class IvfPqSpec extends AnyFunSuite {
     val v2 = IvfPq.buildIndex(head, nLists = 8)   // re-trained config
 
     // the oracle lineage: a CLEAN re-save + append
-    val q = java.nio.file.Files
-      .createTempDirectory("graft-ivfpqclean").toString
+    val q = Spool.dir("graft-ivfpqclean")
     IvfPq.save(v1, q); IvfPq.save(v2, q)
     IvfPq.addToSavedIndex(spark, q, tail, batchId = Some(1L))
 
     // COMPLETE crash: all four members staged, root never swung — the
     // next append must heal the quadruple forward and assign the batch
     // under the RE-SAVED quantizers, never the pinned old ones
-    val p1 = java.nio.file.Files
-      .createTempDirectory("graft-ivfpqcrashc").toString
+    val p1 = Spool.dir("graft-ivfpqcrashc")
     IvfPq.save(v1, p1)
     intercept[RuntimeException] {
       IvfPq.save(v2, p1,
@@ -209,8 +208,7 @@ class IvfPqSpec extends AnyFunSuite {
     // INCOMPLETE crash (cents/cb/codes rewritten, n2 still at its pin):
     // un-completable here — the append and the maintainer both refuse
     // rather than publish a mix; re-running save() is the heal
-    val p2 = java.nio.file.Files
-      .createTempDirectory("graft-ivfpqcrashi").toString
+    val p2 = Spool.dir("graft-ivfpqcrashi")
     IvfPq.save(v1, p2)
     val before = IvfPq.probe(emb, IvfPq.load(spark, p2), queries,
       k = 5, nProbe = 2, shortlist = 20).orderBy("query_id", "rnk")
@@ -238,7 +236,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("rebalanceSavedIndex: drifted seeds re-cluster to canonical bits; a stale corpus refuses loudly") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqrebal").toString
+    val dir = Spool.dir("graft-pqrebal")
     val idx = s"$dir/idx"
     // suffix build: coarse seeds = vectors 350-365 and PQ codebooks =
     // their residual slices — both drifted off the canonical first-16
@@ -278,7 +276,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("a no-drift rebalance skips the corpus-sized rebuild and publishes nothing") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqnodrift").toString
+    val dir = Spool.dir("graft-pqnodrift")
     val idx = s"$dir/idx"
     // canonical-prefix build + identified growth with HIGHER ids: the
     // corpus's first-16 (coarse seeds) and first-16 residual slices
@@ -317,7 +315,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("a concurrent append during rebalance is never lost: the member CAS forces a retry over the fresh state") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqrebalrace").toString
+    val dir = Spool.dir("graft-pqrebalrace")
     val idx = s"$dir/idx"
     IvfPq.save(IvfPq.buildIndex(emb.filter(col("vec_id") < 480)), idx)
     // the racing append lands inside the rebalance's widest window —
@@ -348,7 +346,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("a rebalance crash before the root swing is unobservable, then heals forward") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-pqrebalcrash").toString
+    val dir = Spool.dir("graft-pqrebalcrash")
     val idx = s"$dir/idx"
     IvfPq.save(IvfPq.buildIndex(emb.filter(col("vec_id") >= 350)), idx)
     IvfPq.addToSavedIndex(spark, idx, emb.filter(col("vec_id") < 350),
@@ -436,7 +434,7 @@ class IvfPqSpec extends AnyFunSuite {
     val batch = emb.filter(col("vec_id") < 10)
     // save a good index, then publish one hand-written bad member
     def savedWith(member: String, bad: org.apache.spark.sql.DataFrame): String = {
-      val p = java.nio.file.Files.createTempDirectory("graft-ivfpqbad").toString
+      val p = Spool.dir("graft-ivfpqbad")
       IvfPq.save(idx, p)
       val snap = AtomicLanding.linkedSnapshot(p).get
       val v = AtomicLanding.commit(bad.coalesce(1), s"$p/$member")
@@ -501,7 +499,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("a maintainer that dies between its codes and n2 folds does not brick the index") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqfold").toString
+    val dir = Spool.dir("graft-ivfpqfold")
     val idx = s"$dir/idx"
     IvfPq.save(IvfPq.buildIndex(emb.filter(col("vec_id") < 300)), idx,
       batchId = Some(0L))

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.queries.Spool
 
 class IvfSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -142,7 +143,7 @@ class IvfSpec extends AnyFunSuite {
     // micro-batch assigned to the FROZEN quantizer and unioned into the
     // lists (addToIndex is replay-safe, so at-least-once is fine)
     val corpus = emb.filter(col("vec_id") >= 100)
-    val d = java.nio.file.Files.createTempDirectory("graft-ivfstream").toString
+    val d = Spool.dir("graft-ivfstream")
     emb.filter(col("vec_id") < 50)
       .coalesce(1).write.mode("append").parquet(s"$d/in")
     emb.filter(col("vec_id") >= 50 && col("vec_id") < 100)
@@ -172,7 +173,7 @@ class IvfSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("saved grown index == one-shot full-corpus build; replays no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsaved").toString
+    val dir = Spool.dir("graft-ivfsaved")
     // prefix build (contains the seed quantizer's first-16 vectors),
     // then two append batches against the frozen quantizer
     Ivf.buildSavedIndex(emb.filter(col("vec_id") < 200), s"$dir/grown",
@@ -199,7 +200,7 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("a probe racing a saved-index append reads a complete snapshot; crashed appends publish nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfrace").toString
+    val dir = Spool.dir("graft-ivfrace")
     Ivf.buildSavedIndex(emb.filter(col("vec_id") < 300), s"$dir/idx",
       nLists = 16, iters = 0)
     val before = canonProbe(s"$dir/idx")
@@ -215,7 +216,7 @@ class IvfSpec extends AnyFunSuite {
     assert(after === canonProbe(s"$dir/full"))
 
     // a crash mid-append publishes NOTHING; the retry lands the whole batch
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-ivfcrash").toString
+    val dir2 = Spool.dir("graft-ivfcrash")
     Ivf.buildSavedIndex(emb.filter(col("vec_id") < 300), s"$dir2/idx",
       nLists = 16, iters = 0)
     val v0 = graft.land.AtomicLanding.currentVersion(s"$dir2/idx/lists")
@@ -231,7 +232,7 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("maintainSavedIndex folds the append-session tail and vacuums; probes unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfmaint").toString
+    val dir = Spool.dir("graft-ivfmaint")
     Ivf.buildSavedIndex(emb.filter(col("vec_id") < 200), s"$dir/idx",
       nLists = 16, iters = 0)
     for (lo <- Seq(200, 300, 400))
@@ -263,7 +264,7 @@ class IvfSpec extends AnyFunSuite {
 
   test("identified batches: replay heals with zero scans; new ids skip the dedupe anti-join") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfbatchid").toString
+    val dir = Spool.dir("graft-ivfbatchid")
     val idx = s"$dir/idx"
     Ivf.buildSavedIndex(emb.filter(col("vec_id") < 300), idx,
       nLists = 16, iters = 0, batchId = Some(0L)) // seed watermark
@@ -321,7 +322,7 @@ class IvfSpec extends AnyFunSuite {
 
   test("a watermark-less table makes the first identified append pay the dedupe scan") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfnowm").toString
+    val dir = Spool.dir("graft-ivfnowm")
     val idx = s"$dir/idx"
     // UNSEEDED build (no batchId): no watermark exists, so no id can
     // vouch the durable rows — the monotone-id skip would be unsound
@@ -355,7 +356,7 @@ class IvfSpec extends AnyFunSuite {
 
   test("rebalanceSavedIndex: drifted seeds re-cluster to canonical bits; crash keeps the old generation") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfrebal").toString
+    val dir = Spool.dir("graft-ivfrebal")
     val idx = s"$dir/idx"
     // SUFFIX build: seed quantizer = vectors 350-365, then grow with
     // the earlier segments — every routing decision uses drifted seeds
@@ -404,7 +405,7 @@ class IvfSpec extends AnyFunSuite {
 
   test("a no-drift rebalance skips the lists rewrite and publishes nothing") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfnodrift").toString
+    val dir = Spool.dir("graft-ivfnodrift")
     val idx = s"$dir/idx"
     // canonical-prefix build + identified growth with HIGHER ids: the
     // lists corpus's first-16 seeds are unchanged, so retraining
@@ -426,7 +427,7 @@ class IvfSpec extends AnyFunSuite {
 
   test("rebalance racing an append retries and keeps the appended rows") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfrebalrace").toString
+    val dir = Spool.dir("graft-ivfrebalrace")
     val idx = s"$dir/idx"
     Ivf.buildSavedIndex(emb.filter(col("vec_id") >= 350), idx,
       nLists = 16, iters = 0)
@@ -455,7 +456,7 @@ class IvfSpec extends AnyFunSuite {
 
   test("independent ingest writers: per-channel ids never cross-skip; replays no-op per channel; a rebalance carries every channel's mark") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfwriters").toString
+    val dir = Spool.dir("graft-ivfwriters")
     val idx = s"$dir/idx"
     Ivf.buildSavedIndex(emb.filter(col("vec_id") < 300), idx,
       nLists = 16, iters = 0, batchId = Some(0L))
@@ -499,7 +500,7 @@ class IvfSpec extends AnyFunSuite {
 
   test("a crashed fold heals under the pinned quantizer even above orphaned cents from a crashed rebalance") {
     import graft.land.AtomicLanding
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivforphan").toString
+    val dir = Spool.dir("graft-ivforphan")
     val idx = s"$dir/idx"
     Ivf.buildSavedIndex(emb.filter(col("vec_id") < 300), idx,
       nLists = 8, iters = 0, batchId = Some(0L))

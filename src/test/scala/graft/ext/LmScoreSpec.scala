@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import graft.TestSpark
+import graft.queries.Spool
 
 class LmScoreSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
@@ -137,7 +138,7 @@ class LmScoreSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val scored = Seq((1L, "a b a b"), (2L, "a b c"), (3L, "z q a b"))
       .toDF("doc_id", "text") // doc 3 brings OOV n-grams AND contexts
     val m = LmScore.train(ref)
-    val dir = java.nio.file.Files.createTempDirectory("lmsave").toString + "/m"
+    val dir = Spool.dir("lmsave") + "/m"
     LmScore.save(m, dir)
     val loaded = LmScore.load(spark, dir)
     assert(loaded.n == m.n)

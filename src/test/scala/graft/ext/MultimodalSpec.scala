@@ -3,6 +3,7 @@ package graft.ext
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.queries.Spool
 
 class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -114,7 +115,7 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("binaryObjects reads opaque files with path + length + content") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bin")
+    val tmp = java.nio.file.Paths.get(Spool.dir("graft-bin"))
     java.nio.file.Files.write(tmp.resolve("a.bin"), Array[Byte](1, 2, 3))
     java.nio.file.Files.write(tmp.resolve("b.bin"), Array[Byte](4, 5))
     val df = Multimodal.binaryObjects(spark, tmp.toString)

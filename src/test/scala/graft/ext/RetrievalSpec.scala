@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.queries.Spool
 
 class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
@@ -172,8 +173,7 @@ class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("indexed path is bit-identical to inline, incl. capped and shuffle duals") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bm25idx-spec").toString + "/idx"
+    val dir = Spool.dir("graft-bm25idx-spec") + "/idx"
     Retrieval.buildIndex(corpus, dir)
     val queries = q(0L -> "spark the query", 1L -> "dogs chase",
       2L -> "query query engines", 3L -> "nomatch")
@@ -194,8 +194,7 @@ class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("addToIndex: grown == rebuilt; replay no-op; df maintenance is O(batch)") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25grow").toString
+    val base = Spool.dir("graft-bm25grow")
     val half1 = corpus.where($"doc_id" <= 2)
     val half2 = corpus.where($"doc_id" > 2)
     Retrieval.buildIndex(half1, s"$base/grown")
@@ -238,8 +237,7 @@ class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // unchanged, so probes read the all-old pinned generation (exact,
     // read-only); the next writer folds the orphaned dir additively.
     import graft.land.AtomicLanding
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25crash").toString
+    val base = Spool.dir("graft-bm25crash")
     Retrieval.buildIndex(corpus, s"$base/grown")
     val batch3 = Seq((6L, "query planner dogs")).toDF("doc_id", "text")
     val root0 = AtomicLanding.linkedSnapshot(s"$base/grown").get
@@ -298,8 +296,7 @@ class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("maintainIndex: folds the append tail, restamps derived without a rebuild, vacuums") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25maint").toString
+    val base = Spool.dir("graft-bm25maint")
     val idx = s"$base/idx"
     Retrieval.buildIndex(corpus.where($"doc_id" <= 2), idx)
     // a 3-batch append session: postings grow one dir per batch
@@ -342,8 +339,7 @@ class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // the compaction rebase can carry a micro-batch INTO the compacted
     // manifest; maintainIndex must identify it (the fold dir is the
     // last manifest line) and fold its delta instead of rebuilding
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25maintrace").toString
+    val base = Spool.dir("graft-bm25maintrace")
     val idx = s"$base/idx"
     Retrieval.buildIndex(corpus.where($"doc_id" <= 2), idx)
     for (d <- 3L to 4L)
@@ -373,8 +369,7 @@ class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a probe racing an index append reads a complete snapshot") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25race").toString
+    val base = Spool.dir("graft-bm25race")
     Retrieval.buildIndex(corpus, s"$base/idx")
     val queries = q(0L -> "query planner dogs")
     def probe() = Retrieval.bm25TopKIndexed(spark, s"$base/idx", queries, k = 5)
@@ -395,8 +390,7 @@ class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("identified batches: replay heals with zero scans; new ids skip the dedupe anti-join") {
     import graft.land.AtomicLanding
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25batchid").toString
+    val base = Spool.dir("graft-bm25batchid")
     val idx = s"$base/idx"
     Retrieval.buildIndex(corpus.where($"doc_id" <= 3), idx,
       batchId = Some(0L)) // seed watermark vouches the build corpus
@@ -462,8 +456,7 @@ class RetrievalSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("indexed scoring plans no Generate: the text explode ran at build") {
     import org.apache.spark.sql.execution.SparkPlan
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-bm25idx-plan").toString + "/idx"
+    val dir = Spool.dir("graft-bm25idx-plan") + "/idx"
     Retrieval.buildIndex(corpus, dir)
     val plan = Retrieval.bm25TopKIndexed(spark, dir, q(0L -> "spark query"),
       k = 3).queryExecution.executedPlan

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.queries.Spool
 
 class SemDedupSpec extends AnyFunSuite
     with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
@@ -70,8 +71,7 @@ class SemDedupSpec extends AnyFunSuite
 
   test("dedupWithIndex: a persisted IVF index's lists drive the verdicts; planted copies still drop") {
     val (e, base) = fixture
-    val dir = java.nio.file.Files
-      .createTempDirectory("semivf").toString + "/idx"
+    val dir = Spool.dir("semivf") + "/idx"
     Ivf.buildSavedIndex(base, dir, nLists = 8, iters = 0)
     val out = SemDedup.dedupWithIndex(base, dir, tau = 0.9).collect()
     assert(out.length == base.count(), "every indexed vector gets a verdict")

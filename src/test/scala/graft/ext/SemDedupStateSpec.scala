@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.queries.Spool
 
 /** The persisted semantic-dedup lifecycle: build / append / replay /
   * heal / incremental verdict — the seventh index tier held to the same
@@ -12,7 +13,7 @@ class SemDedupStateSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshPath(): String =
-    java.nio.file.Files.createTempDirectory("graft-semstate").toString + "/st"
+    Spool.dir("graft-semstate") + "/st"
 
   private lazy val e = spark.read
     .parquet(s"${TestSpark.Sf0001}/embeddings.parquet")

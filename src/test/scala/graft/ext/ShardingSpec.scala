@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.queries.Spool
 
 class ShardingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -14,7 +15,7 @@ class ShardingSpec extends AnyFunSuite {
   }
 
   test("writeShards deals every row into exactly one shard dir, reproducibly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val dir = Spool.dir("graft-shards")
     val df = fixture
     val manifest = Sharding.writeShards(df, col("doc_id"), col("text"),
       nShards = 8, outDir = dir)
@@ -47,7 +48,7 @@ class ShardingSpec extends AnyFunSuite {
       m.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
 
     // determinism: a second run assigns identical shards
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-shards2").toString
+    val dir2 = Spool.dir("graft-shards2")
     Sharding.writeShards(df, col("doc_id"), col("text"), 8, dir2)
     val a = spark.read.parquet(dir).select("doc_id", "shard")
     val b = spark.read.parquet(dir2).select("doc_id", "shard")

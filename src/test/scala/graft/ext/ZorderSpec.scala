@@ -3,6 +3,7 @@ package graft.ext
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.queries.Spool
 
 class ZorderSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -46,8 +47,7 @@ class ZorderSpec extends AnyFunSuite {
   }
 
   test("bucketedWrite: one file per non-empty bucket, deterministic assignment") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-zbucket").toString + "/orders"
+    val dir = Spool.dir("graft-zbucket") + "/orders"
     val orders = graft.Tables.t(spark, TestSpark.Sf0001, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
     val domains = Zorder.bucketedWrite(orders, dir,
@@ -70,8 +70,7 @@ class ZorderSpec extends AnyFunSuite {
   }
 
   test("statsPrune never false-skips: pruned-read counts equal full counts") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-zpruneprop").toString + "/orders"
+    val dir = Spool.dir("graft-zpruneprop") + "/orders"
     val orders = graft.Tables.t(spark, TestSpark.Sf0001, "orders")
       .select(col("o_orderkey"), col("o_custkey"))
     val Seq((_, lo1, hi1), (_, lo2, hi2)) = Zorder.bucketedWrite(orders, dir,
@@ -100,8 +99,7 @@ class ZorderSpec extends AnyFunSuite {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-zorder").toString + "/orders"
+    val dir = Spool.dir("graft-zorder") + "/orders"
     val orders = graft.Tables.t(spark, TestSpark.Sf0001, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     val nFiles = 8
@@ -142,8 +140,7 @@ class ZorderSpec extends AnyFunSuite {
 
   test("ACID layout lifecycle: appends decay locality, maintainZordered restores it, concurrent appends ride the fold") {
     import graft.land.AtomicLanding
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft-zlife").toString + "/orders_zm"
+    val tbl = Spool.dir("graft-zlife") + "/orders_zm"
     val cols = Seq("o_custkey", "o_orderkey")
     val o = graft.Tables.t(spark, TestSpark.Sf0001, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))

@@ -2,11 +2,12 @@ package graft.files
 
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.Spool
 
 class FileRelaySpec extends AnyFunSuite {
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-relay").toString
+    Spool.dir("graft-relay")
 
   test("copyAll relays every object, names preserved, source intact") {
     val t = tmpDir(); val relay = new FileRelay()

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.ext.Similarity
+import graft.ext.{Reference, Similarity}
 
 class DotScaledSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -16,7 +16,7 @@ class DotScaledSpec extends AnyFunSuite {
         col("ai") < col("bi") && col("ai") < 30 && col("bi") < 60)
     val mismatches = pairs.select(
         Similarity.dotScaled(col("a"), col("b")).as("native"),
-        Similarity.dotScaledHof(col("a"), col("b")).as("hof"))
+        Reference.dotScaledHof(col("a"), col("b")).as("hof"))
       .filter(col("native") =!= col("hof")).count()
     assert(mismatches == 0)
   }
@@ -30,9 +30,9 @@ class DotScaledSpec extends AnyFunSuite {
         col("ai") < col("bi") && col("ai") < 20 && col("bi") < 40)
     val mismatches = pairs.select(
         Similarity.dotScaled(col("da"), col("db")).as("dd"),
-        Similarity.dotScaledHof(col("da"), col("db")).as("ddHof"),
+        Reference.dotScaledHof(col("da"), col("db")).as("ddHof"),
         Similarity.dotScaled(col("fa"), col("db")).as("fd"),
-        Similarity.dotScaledHof(col("fa"), col("db")).as("fdHof"))
+        Reference.dotScaledHof(col("fa"), col("db")).as("fdHof"))
       .filter(col("dd") =!= col("ddHof") || col("fd") =!= col("fdHof"))
       .count()
     assert(mismatches == 0)

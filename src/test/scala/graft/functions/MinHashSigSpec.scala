@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.ext.Dedup
+import graft.ext.{Dedup, Reference}
 
 class MinHashSigSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -13,7 +13,7 @@ class MinHashSigSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet")
     val native = Dedup.minhashSignatures(docs).orderBy("doc_id")
       .select("sig").as[Seq[Long]].collect().toSeq
-    val hof = Dedup.minhashSignaturesHof(docs).orderBy("doc_id")
+    val hof = Reference.minhashSignaturesHof(docs).orderBy("doc_id")
       .select("sig").as[Seq[Long]].collect().toSeq
     assert(native == hof)
     assert(native.forall(_.length == Dedup.MinhashK))

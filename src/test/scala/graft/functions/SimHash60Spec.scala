@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.ext.{Dedup, TextOps}
+import graft.ext.{Dedup, Reference, TextOps}
 
 class SimHash60Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -15,7 +15,7 @@ class SimHash60Spec extends AnyFunSuite {
       transform(TextOps.shingles(col("text")), s => TextOps.hash60(s)).as("hx"))
     val mism = hx.select(
         Dedup.simhash60("hx").as("native"),
-        Dedup.simhash60Hof("hx").as("hof"))
+        Reference.simhash60Hof("hx").as("hof"))
       .filter(col("native") =!= col("hof")).count()
     assert(mism == 0)
   }

@@ -4,6 +4,7 @@ import java.sql.DriverManager
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.model.DbType
+import graft.queries.Spool
 
 /** Live JDBC reads against embedded Derby — in particular the PARTITIONED
   * full scan, which round 1 shipped broken (partitionColumn without
@@ -87,7 +88,7 @@ class JdbcSourceSpec extends AnyFunSuite {
     val store = new InMemoryMetadataStore()
     val asset = DataAsset(11, "readings", None, TriggerMechanism.TimeDriven,
       ExtractionMethod.Incremental, Some("ts"))
-    val out = java.nio.file.Files.createTempDirectory("graft-jdbc-wm").toString
+    val out = Spool.dir("graft-jdbc-wm")
 
     // run 1: no watermark -> full extract of 5 rows, watermark = max ts
     IncrementalExtractor.run(store, src, asset, 1, "jr1",

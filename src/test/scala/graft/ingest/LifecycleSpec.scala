@@ -6,6 +6,7 @@ import graft.TestSpark
 import graft.catalog.InMemoryMetadataStore
 import graft.land.Landing
 import graft.model._
+import graft.queries.Spool
 
 /** End-to-end §3.2 lifecycle over the parquet fixture: extract → land →
   * catalog record; re-run reads only the (empty) delta. */
@@ -20,7 +21,7 @@ class LifecycleSpec extends AnyFunSuite {
   test("first incremental run lands everything and records the probed max") {
     val store = new InMemoryMetadataStore()
     val src = new ParquetTableSource(spark, TestSpark.Sf0001, "events")
-    val out = java.nio.file.Files.createTempDirectory("graft-land").toString
+    val out = Spool.dir("graft-land")
 
     val e1 = IncrementalExtractor.run(store, src, asset(ExtractionMethod.Incremental),
       srcSysId = 1, execId = "run1", land = df => Landing.parquet(df, s"$out/r1"))
@@ -42,7 +43,7 @@ class LifecycleSpec extends AnyFunSuite {
   test("full-method run lands everything and records a NULL watermark") {
     val store = new InMemoryMetadataStore()
     val src = new ParquetTableSource(spark, TestSpark.Sf0001, "events")
-    val out = java.nio.file.Files.createTempDirectory("graft-land-f").toString
+    val out = Spool.dir("graft-land-f")
     val e = IncrementalExtractor.run(store, src, asset(ExtractionMethod.Full),
       srcSysId = 1, execId = "runF", land = df => Landing.parquet(df, s"$out/rf"))
     assert(e.lastExtTime.isEmpty)            // dataIngestionUtils.py:43,193-194
@@ -53,7 +54,7 @@ class LifecycleSpec extends AnyFunSuite {
   test("proc_start_ts precedes created_ts (start vs insert wall clock)") {
     val store = new InMemoryMetadataStore()
     val src = new ParquetTableSource(spark, TestSpark.Sf0001, "region")
-    val out = java.nio.file.Files.createTempDirectory("graft-land-t").toString
+    val out = Spool.dir("graft-land-t")
     val e = IncrementalExtractor.run(store, src, DataAsset(8, "region", None,
       TriggerMechanism.TimeDriven, ExtractionMethod.Full, None),
       srcSysId = 1, execId = "runT", land = df => Landing.parquet(df, s"$out/rt"))

@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.TestSpark
+import graft.queries.Spool
 
 class AtomicLandingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshTable(): String =
-    java.nio.file.Files.createTempDirectory("graft-acid").resolve("t").toString
+    Spool.dir("graft-acid") + "/t"
 
   test("commit publishes atomically; versions increment; append accumulates") {
     val table = freshTable()
@@ -74,7 +75,7 @@ class AtomicLandingSpec extends AnyFunSuite {
 
   test("streaming foreachBatch sink: every micro-batch lands as an atomic append") {
     val table = freshTable()
-    val in = java.nio.file.Files.createTempDirectory("graft-acid-stream").toString
+    val in = Spool.dir("graft-acid-stream")
     // three inbound files -> three micro-batches (maxFilesPerTrigger=1)
     (1 to 3).foreach { i =>
       java.nio.file.Files.writeString(

@@ -3,14 +3,14 @@ package graft.land
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.queries.Spool
 
 class ChangeFeedSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def freshTable(): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-cdf").toString + "/t"
+    val d = Spool.dir("graft-cdf") + "/t"
     // v0: three rows
     AtomicLanding.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), d)
     // v1: append two

@@ -3,6 +3,7 @@ package graft.land
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.queries.Spool
 
 /** The maintenance invariant: advancing the materialized aggregate by a
   * change-feed span equals re-aggregating the span's end snapshot —
@@ -14,8 +15,7 @@ class IncrementalAggSpec extends AnyFunSuite {
 
   // groups keyed id % 3; measure x nullable
   private def table(): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft-incragg").toString + "/t"
+    val d = Spool.dir("graft-incragg") + "/t"
     AtomicLanding.commit(Seq(
       (1L, Some(10L)), (2L, Some(20L)), (3L, Some(30L)), (4L, Some(40L)),
       (5L, None)).toDF("id", "x"), d)                      // v0

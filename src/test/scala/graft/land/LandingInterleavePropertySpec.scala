@@ -2,6 +2,7 @@ package graft.land
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.queries.Spool
 
 /** Randomized-schedule exactly-once property for the landing layer —
   * the generative counterpart to AtomicLandingSpec's directed cases
@@ -78,8 +79,7 @@ class LandingInterleavePropertySpec extends AnyFunSuite {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     val prop = Prop.forAllNoShrink(Gen.choose(0L, Long.MaxValue)) { seed =>
       val ops = schedule(seed)
-      val t = java.nio.file.Files
-        .createTempDirectory("graft-interleave").resolve("t").toString
+      val t = Spool.dir("graft-interleave") + "/t"
       AtomicLanding.commit(payload("seed", 0L), t) // table exists, v0
       ops.foreach {
         case App(ch, id) =>

@@ -3,12 +3,13 @@ package graft.land
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.queries.Spool
 
 class LandingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("csvCompat writes ONE csv part file with a header") {
-    val out = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val out = Spool.dir("graft-csv")
     val df = graft.Tables.t(spark, TestSpark.Sf0001, "region")
     Landing.csvCompat(df, s"$out/raw")
     val parts = new java.io.File(s"$out/raw").listFiles()
@@ -19,7 +20,7 @@ class LandingSpec extends AnyFunSuite {
   }
 
   test("csv, json and orc round-trip: values survive every source format") {
-    val out = java.nio.file.Files.createTempDirectory("graft-fmt").toString
+    val out = Spool.dir("graft-fmt")
     val src = graft.Tables.t(spark, TestSpark.Sf0001, "nation")
     src.write.option("header", "true").csv(s"$out/csv")
     src.write.json(s"$out/json")
@@ -35,7 +36,7 @@ class LandingSpec extends AnyFunSuite {
   }
 
   test("parquet landing partitions by the given columns (hive layout)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-parq").toString
+    val out = Spool.dir("graft-parq")
     val df = graft.Tables.t(spark, TestSpark.Sf0001, "nation")
     Landing.parquet(df, s"$out/raw", partitionBy = Seq("n_regionkey"))
     val dirs = new java.io.File(s"$out/raw").listFiles()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.queries.Spool
 
 /** The shared persisted-index lifecycle over a tiny index: one frozen
   * member `q` and two growing members `a` (entry) and `b`, each keyed by
@@ -21,7 +22,7 @@ class LinkedIndexSpec extends AnyFunSuite {
   private def quantizer(g: Int): DataFrame = Seq(g).toDF("g")
 
   private def freshPath(): String =
-    java.nio.file.Files.createTempDirectory("graft-linked").resolve("ix").toString
+    Spool.dir("graft-linked") + "/ix"
 
   /** A built index grown by two appends (so a tail fold has work). */
   private def grown(): String = {

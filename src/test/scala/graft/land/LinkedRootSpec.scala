@@ -3,6 +3,7 @@ package graft.land
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.queries.Spool
 
 /** The linked-table root: one pointer naming a consistent version per
   * member table — the shared primitive the persisted BM25 / IVF / IVF-PQ
@@ -11,7 +12,7 @@ class LinkedRootSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft-root").resolve("ix").toString
+    Spool.dir("graft-root") + "/ix"
 
   test("publish pins every member; readers resolve the pinned versions") {
     import spark.implicits._

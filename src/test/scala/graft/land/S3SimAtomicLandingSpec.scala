@@ -2,6 +2,7 @@ package graft.land
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.queries.Spool
 
 /** The full ACID multi-writer suite running against [[NoRenameFs]] — a
   * store with S3 semantics: no overwriting rename, non-atomic
@@ -23,8 +24,7 @@ class S3SimAtomicLandingSpec extends AnyFunSuite {
   }
 
   private def freshTable(): String =
-    "nors3://" + java.nio.file.Files.createTempDirectory("graft-s3sim")
-      .resolve("t").toString
+    "nors3://" + Spool.dir("graft-s3sim") + "/t"
 
   private def localPath(table: String, parts: String*): java.nio.file.Path =
     java.nio.file.Paths.get(table.stripPrefix("nors3://"),

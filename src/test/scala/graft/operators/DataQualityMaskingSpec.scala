@@ -3,6 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.queries.Spool
 
 class DataQualityMaskingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -43,7 +44,7 @@ class DataQualityMaskingSpec extends AnyFunSuite {
       .toDF("id", "v")
     val (instrumented, obs) = observed(df,
       Seq(NotNull("id"), InRange("v", 0, 100)))
-    val out = java.nio.file.Files.createTempDirectory("graft-obs").toString + "/p"
+    val out = Spool.dir("graft-obs") + "/p"
     instrumented.write.parquet(out) // the ONLY action that runs
     assert(obs.get("not_null:id") == 1L)
     assert(obs.get("in_range:v") == 2L)

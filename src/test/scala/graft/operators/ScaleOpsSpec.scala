@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.land.Landing
+import graft.queries.Spool
 
 /** Scale plumbing: salted joins/aggregations preserve exact semantics,
   * and bucketed tables join with zero exchanges. */
@@ -120,7 +121,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cluster").toString + "/orders"
+    val dir = Spool.dir("graft-cluster") + "/orders"
     val orders = graft.Tables.t(spark, TestSpark.Sf0001, "orders")
     Landing.clusteredParquet(orders, dir, Seq("o_orderkey"), nFiles = 8)
 
@@ -167,7 +168,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("runtime bloom filter prunes the fact side of a selective join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom").toString
+    val dir = Spool.dir("graft-bloom")
     // parquet-backed (the injection rule keys off scan statistics)
     spark.range(0, 200000).selectExpr("id AS k", "id * 7 AS payload")
       .write.parquet(s"$dir/fact")

@@ -27,7 +27,7 @@ class FormatRoundtripSpec extends AnyFunSuite {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), schema)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-csvrt").toString + "/csv"
+    val dir = Spool.dir("graft-csvrt") + "/csv"
     df.write.options(LlmPipeline.LosslessCsvOptions).csv(dir)
     val back = spark.read
       .options(LlmPipeline.LosslessCsvOptions + ("multiLine" -> "true"))

@@ -5,6 +5,7 @@ import org.apache.spark.SparkException
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.TestSpark
+import graft.queries.Spool
 
 /** Malformed-input contract of the ingestion sources: the engine must
   * offer all three industry policies — capture (PERMISSIVE + corrupt
@@ -16,7 +17,7 @@ class SourceRobustnessSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private lazy val inDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-robust").toString
+    val d = Spool.dir("graft-robust")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(d, "mixed.json"),
       """{"k": 1, "s": "good"}

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.files.FileRelay
+import graft.queries.Spool
 
 class JdbcBatchSinkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -30,7 +31,7 @@ class JdbcBatchSinkSpec extends AnyFunSuite {
       "CREATE TABLE events_out (k BIGINT, batch_id BIGINT)")
     finally c.close()
 
-    val t = java.nio.file.Files.createTempDirectory("graft-jdbcsink").toString
+    val t = Spool.dir("graft-jdbcsink")
     val relay = new FileRelay()
     relay.writeUtf8(new Path(s"$t/in/b1.json"),
       (1 to 4).map(i => s"""{"k":$i}""").mkString("\n"))

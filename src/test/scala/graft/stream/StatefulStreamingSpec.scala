@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.files.FileRelay
+import graft.queries.Spool
 
 class StatefulStreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -20,7 +21,7 @@ class StatefulStreamingSpec extends AnyFunSuite {
 
   test("flatMapGroupsWithState keeps per-user state across restarts") {
     import spark.implicits._
-    val t = java.nio.file.Files.createTempDirectory("graft-state").toString
+    val t = Spool.dir("graft-state")
     val relay = new FileRelay()
     relay.writeUtf8(new Path(s"$t/in/b1.json"),
       """{"userId":1,"eventId":10}
@@ -55,7 +56,7 @@ class StatefulStreamingSpec extends AnyFunSuite {
   }
 
   test("streaming dedup suppresses ids replayed in a later batch") {
-    val t = java.nio.file.Files.createTempDirectory("graft-sdedup").toString
+    val t = Spool.dir("graft-sdedup")
     val relay = new FileRelay()
     relay.writeUtf8(new Path(s"$t/in/b1.json"),
       """{"userId":1,"eventId":100}
@@ -84,7 +85,7 @@ class StatefulStreamingSpec extends AnyFunSuite {
   }
 
   test("watermarked dedup bounds state: old keys evicted, out-of-watermark replay dropped") {
-    val t = java.nio.file.Files.createTempDirectory("graft-wdedup").toString
+    val t = Spool.dir("graft-wdedup")
     val relay = new FileRelay()
     val tsSchema = StructType(Seq(
       StructField("eventId", LongType), StructField("ts", TimestampType)))

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.apache.hadoop.fs.Path
 import graft.files.FileRelay
+import graft.queries.Spool
 
 class StreamMergerSpec extends AnyFunSuite {
 
@@ -39,7 +40,7 @@ class StreamMergerSpec extends AnyFunSuite {
   }
 
   test("mergeCompat merges objects into one JSON array and archives inputs") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-merge").toString
+    val tmp = Spool.dir("graft-merge")
     val relay = new FileRelay()
     relay.writeUtf8(new Path(s"$tmp/in/p1.json"), """{"a":1}{"a":2}""")
     relay.writeUtf8(new Path(s"$tmp/in/p2.json"), """{"a":3}""")

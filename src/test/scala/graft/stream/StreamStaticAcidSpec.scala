@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.files.FileRelay
 import graft.land.AtomicLanding
+import graft.queries.Spool
 
 /** Stream-static enrichment where the static side is an ACID landing
   * table being rewritten WHILE the stream runs — the slowly-changing-
@@ -20,12 +21,11 @@ class StreamStaticAcidSpec extends AnyFunSuite {
 
   test("each micro-batch joins the dimension version current at its run") {
     import spark.implicits._
-    val dim = java.nio.file.Files.createTempDirectory("graft-scd")
-      .resolve("dim").toString
+    val dim = Spool.dir("graft-scd") + "/dim"
     AtomicLanding.commit(
       Seq((1L, "bronze"), (2L, "bronze")).toDF("user_id", "segment"), dim)
 
-    val t = java.nio.file.Files.createTempDirectory("graft-scdstream").toString
+    val t = Spool.dir("graft-scdstream")
     val relay = new FileRelay()
     relay.writeUtf8(new Path(s"$t/in/a.json"), """{"user_id":1}""")
     relay.writeUtf8(new Path(s"$t/in/b.json"), """{"user_id":2}""")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.files.FileRelay
+import graft.queries.Spool
 
 /** SURVEY §7.4 risk 4 / r1 VERDICT item 7: the Structured Streaming path
   * actually runs, and its parsed events match the batch-compat merge
@@ -24,7 +25,7 @@ class StreamingPathSpec extends AnyFunSuite {
   }
 
   test("streaming merge (AvailableNow) lands the same events as mergeCompat") {
-    val t = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val t = Spool.dir("graft-stream")
     writeFixtures(t)
 
     // scale path: streaming read of the raw concatenated format → parquet
@@ -48,7 +49,7 @@ class StreamingPathSpec extends AnyFunSuite {
   }
 
   test("streaming restart processes only new files (exactly-once bookkeeping)") {
-    val t = java.nio.file.Files.createTempDirectory("graft-stream2").toString
+    val t = Spool.dir("graft-stream2")
     writeFixtures(t)
     val stream = StreamMerger.streamConcatenated(spark, schema, s"$t/in")
     StreamMerger.runAvailableNow(stream, s"$t/out", s"$t/ckpt")
@@ -66,7 +67,7 @@ class StreamingPathSpec extends AnyFunSuite {
   }
 
   test("watermarked tumbling-window aggregation over a stream") {
-    val t = java.nio.file.Files.createTempDirectory("graft-stream3").toString
+    val t = Spool.dir("graft-stream3")
     val relay = new FileRelay()
     relay.writeUtf8(new Path(s"$t/in/e.json"),
       """{"ts":"2024-01-10 10:05:00","kind":"x"}""" +
