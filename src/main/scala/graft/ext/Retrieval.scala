@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * same hash.
   *
   * Tokenization is the engine's standard single-space split
-  * ([[graft.functions.WordCounts]] ≡ DuckDB `string_split(text, ' ')`);
+  * ([[graft.functions.NgramCounts]] at n = 1 ≡ DuckDB `string_split(text, ' ')`);
   * `dl` counts split tokens (spaces+1), consistent with the tf table.
   *
   * Shuffle census at 100 TB (the plan-walk spec asserts the broadcast

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,30 +17,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * which makes each merge pass conflict-free — the property that lets the
   * `q_bpe_tokens` oracle replay the loop as a parallel list rewrite.
   *
-  * The loop is inherently imperative, so codegen emits one call into the
-  * table object (kept inside the whole-stage-codegen span, like Spark's
-  * own regexp expressions) rather than inlining it.
+  * The loop is inherently imperative, so codegen emits one call into
+  * the kernel (the [[StringKernel]] shape) rather than inlining it.
   */
 case class BpeEncode(child: Expression, table: graft.ext.BpeTable)
-    extends UnaryExpression {
+    extends StringKernel {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bpe_encode expects string, got ${other.simpleString}")
-  }
+  def fnName: String = "bpe_encode"
 
-  override def nullSafeEval(wv: Any): Any =
-    table.encodeArrayData(wv.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, w => {
-      val tableRef = ctx.addReferenceObj("bpeTable", table,
-        classOf[graft.ext.BpeTable].getName)
-      s"${ev.value} = $tableRef.encodeArrayData($w);"
-    })
+  def compute(s: UTF8String): Any = table.encodeArrayData(s)
 
   override protected def withNewChildInternal(newChild: Expression): BpeEncode =
     copy(child = newChild)

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,31 +13,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * candidate filter first used: same JVM md5 + KM-mix code path as the
   * sketch-building aggregator (writer/reader agreement stays
   * structural), but evaluated directly on the UTF8String's bytes — no
-  * ScalaUDF row conversion, no String allocation — and codegen emits
-  * one call into the evaluator object, keeping the filter inside the
-  * whole-stage-codegen span (the same shape Spark's own regexp
-  * expressions use).
+  * ScalaUDF row conversion, no String allocation — and codegen calls
+  * the typed [[est]] (the [[StringKernel]] shape, unboxed), keeping the
+  * filter inside the whole-stage-codegen span.
   */
 case class CmsEst(child: Expression, eval: graft.ext.CountMin.Evaluator)
-    extends UnaryExpression {
+    extends StringKernel {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"cms_est expects string, got ${other.simpleString}")
-  }
+  def fnName: String = "cms_est"
 
-  override def nullSafeEval(v: Any): Any =
-    eval.est(v.asInstanceOf[UTF8String])
+  def compute(s: UTF8String): Any = est(s)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val ref = ctx.addReferenceObj("cmsEval", eval,
-        classOf[graft.ext.CountMin.Evaluator].getName)
-      s"${ev.value} = $ref.est($t);"
-    })
+  def est(s: UTF8String): Long = eval.est(s)
+
+  override protected def javaCall(ref: String, text: String): String =
+    s"$ref.est($text)"
 
   override protected def withNewChildInternal(newChild: Expression): CmsEst =
     copy(child = newChild)

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -171,199 +169,4 @@ case class IntDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IntDot =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session extensions: registers the engine's native expressions so
-  * `expr("dot_scaled(a, b)")` / `call_function` resolve. Wired into
-  * [[graft.Sessions.build]]; external sessions opt in via
-  * `.withExtensions(GraftExtensions)`. */
-object GraftExtensions extends (SparkSessionExtensions => Unit) {
-  def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("dot_scaled"),
-      new ExpressionInfo(classOf[DotScaled].getName, "dot_scaled"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "dot_scaled takes exactly 2 arguments")
-        DotScaled(children.head, children(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("int_dot"),
-      new ExpressionInfo(classOf[IntDot].getName, "int_dot"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "int_dot takes exactly 2 arguments")
-        IntDot(children.head, children(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "simhash60"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "simhash60 takes exactly 1 argument")
-        SimHash60(children.head)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "minhash_sig takes exactly 1 argument")
-        // the engine's standard permutation set; other seed sets
-        // construct MinHashSig directly
-        MinHashSig(children.head, graft.ext.Dedup.minhashSeeds)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "bloom_filter_agg takes (hash, estimatedItems, numBits)")
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          children.head, children(1), children(2))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "might_contain"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "might_contain takes exactly 2 arguments")
-        // Spark ships the expression (codegen probe over a bloom_filter_agg
-        // sketch) but registers it only for the runtime-filter rewrite;
-        // the engine exposes it for explicit bloom pre-filters
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          children.head, children(1))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("bpe_encode"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "bpe_encode"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "bpe_encode takes exactly 1 argument")
-        // the engine's standard merges table; trained tables construct
-        // BpeEncode directly
-        BpeEncode(children.head, graft.ext.Bpe.Standard)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("shingle_hash"),
-      new ExpressionInfo(classOf[ShingleHash].getName, "shingle_hash"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "shingle_hash takes (text, n) with n an int literal")
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"shingle_hash n must be an int literal, got $other")
-        }
-        ShingleHash(children.head, n)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("shingle_hash64"),
-      new ExpressionInfo(classOf[ShingleHash].getName, "shingle_hash64"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "shingle_hash64 takes (text, n) with n an int literal")
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"shingle_hash64 n must be an int literal, got $other")
-        }
-        // raw 64-bit xxhash64 — the join-key domain (decontamination);
-        // the 2-arg shingle_hash keeps the MinHash pmod-P domain
-        ShingleHash(children.head, n, raw = true)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "word_ngrams takes (text, n) with n an int literal")
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"word_ngrams n must be an int literal, got $other")
-        }
-        WordNgrams(children.head, n)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("word_chunks"),
-      new ExpressionInfo(classOf[WordChunks].getName, "word_chunks"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "word_chunks takes (text, chunk, stride) with chunk/stride int literals")
-        def intLit(e: Expression, what: String): Int = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"word_chunks $what must be an int literal, got $other")
-        }
-        WordChunks(children.head, intLit(children(1), "chunk"),
-          intLit(children(2), "stride"))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("word_chunk_spans"),
-      new ExpressionInfo(classOf[WordChunkSpans].getName, "word_chunk_spans"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "word_chunk_spans takes (text, chunk, stride) with chunk/stride int literals")
-        def intLit(e: Expression, what: String): Int = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"word_chunk_spans $what must be an int literal, got $other")
-        }
-        WordChunkSpans(children.head, intLit(children(1), "chunk"),
-          intLit(children(2), "stride"))
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("word_profile"),
-      new ExpressionInfo(classOf[WordProfile].getName, "word_profile"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "word_profile takes (text, spec, with_uniq) with spec a string " +
-            "literal and with_uniq a boolean literal")
-        val spec = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(
-              s: org.apache.spark.unsafe.types.UTF8String, StringType) => s.toString
-          case other => throw new IllegalArgumentException(
-            s"word_profile spec must be a string literal, got $other")
-        }
-        val withUniq = children(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(b: Boolean, BooleanType) => b
-          case other => throw new IllegalArgumentException(
-            s"word_profile with_uniq must be a boolean literal, got $other")
-        }
-        WordProfile(children.head, spec, withUniq)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("word_counts"),
-      new ExpressionInfo(classOf[WordCounts].getName, "word_counts"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "word_counts takes exactly 1 argument")
-        WordCounts(children.head)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("ngram_counts"),
-      new ExpressionInfo(classOf[NgramCounts].getName, "ngram_counts"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "ngram_counts takes (text, n) with n an int literal")
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(i: Int, IntegerType) => i
-          case other => throw new IllegalArgumentException(
-            s"ngram_counts n must be an int literal, got $other")
-        }
-        NgramCounts(children.head, n)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("token_runs"),
-      new ExpressionInfo(classOf[TokenCount].getName, "token_runs"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "token_runs takes (text, mode) with mode a string literal")
-        val mode = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(
-              s: org.apache.spark.unsafe.types.UTF8String, StringType) => s.toString
-          case other => throw new IllegalArgumentException(
-            s"token_runs mode must be a string literal, got $other")
-        }
-        TokenCount(children.head, mode)
-      }))
-  }
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,10 +11,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * exploding [[WordNgrams]] and grouping — but without materializing one
   * string per window position, and without the corpus-wide exchange an
   * `explode -> groupBy(doc_id, b)` formulation forces (Spark cannot know
-  * doc rows never span partitions). `ngram_counts(text, 1)` agrees with
-  * [[WordCounts]]; a doc with fewer than n tokens yields an EMPTY array
-  * (the occurrence semantics — contrast [[ShingleHash]]'s whole-text
-  * clamp for SET semantics).
+  * doc rows never span partitions). A doc with fewer than n tokens
+  * yields an EMPTY array (the occurrence semantics — contrast
+  * [[ShingleHash]]'s whole-text clamp for SET semantics).
+  *
+  * `word_counts(text)` is this kernel at n = 1: per-document term
+  * frequencies, value-equivalent to
+  * {{{ SELECT term, count(*) FROM unnest(split(text, ' ')) GROUP BY term }}}
+  * in first-occurrence order. It is the map-side half of every corpus
+  * term statistic: the tf table materializes shuffle-free, and document
+  * frequency and corpus unigram counts start from one row per distinct
+  * term per doc instead of one row per token.
   *
   * This is the map-side half of the n-gram language model
   * ([[graft.ext.LmScore]]): per-doc n-gram counts need no
@@ -26,18 +30,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * start from one row per distinct n-gram per doc instead of one row per
   * window position of the corpus.
   *
-  * Mechanics: single-space token boundaries (= `split(text, ' ')`,
-  * empty tokens from separator runs are tokens) collected in one pass;
-  * each window is then a CONTIGUOUS byte slice of the original string
-  * (tokens rejoined with the same separator reconstruct the input —
-  * the [[WordNgrams]]/[[ShingleHash]] identity), hashed and counted in
-  * an open-addressing table of (start, len) ranges with byte-compare on
-  * collision; each distinct n-gram's bytes are copied out once, in
-  * first-occurrence order. Null text => NULL array.
+  * Mechanics: the [[Tokens]] scan (empty tokens from separator runs are
+  * tokens); each window is a CONTIGUOUS byte slice of the original
+  * string, counted in the [[Terms]] table; each distinct n-gram's bytes
+  * are copied out once, in first-occurrence order. Null text => NULL
+  * array. `fnName` is the SQL name the kernel was registered under, so
+  * a type error names `word_counts` or `ngram_counts` as called.
   */
-case class NgramCounts(child: Expression, n: Int) extends UnaryExpression {
+case class NgramCounts(child: Expression, n: Int, fnName: String = "ngram_counts")
+    extends StringKernel {
 
-  require(n >= 1, s"ngram_counts needs n >= 1, got $n")
+  require(n >= 1, s"$fnName needs n >= 1, got $n")
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -45,104 +48,34 @@ case class NgramCounts(child: Expression, n: Int) extends UnaryExpression {
       StructField("cnt", IntegerType, nullable = false))),
     containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"ngram_counts expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(tv: Any): Any =
-    NgramCounts.compute(tv.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.NgramCounts$$.MODULE$$.compute($t, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): NgramCounts =
-    copy(child = newChild)
-}
-
-object NgramCounts {
-  def compute(s: UTF8String, n: Int): GenericArrayData = {
-    val bytes = s.getBytes
-    val nb = bytes.length
-    // pass 1: token starts (a token begins at 0 and after every space)
-    var spaces = 0
-    var i = 0
-    while (i < nb) {
-      if (bytes(i) == 0x20) spaces += 1
-      i += 1
-    }
-    val m = spaces + 1
+  def compute(s: UTF8String): Any = {
+    val nb = s.numBytes()
+    val m = Tokens.count(s)
     val wins = m - n + 1
     if (wins <= 0) return new GenericArrayData(new Array[Any](0))
-
-    val starts = new Array[Int](m)
-    starts(0) = 0
-    var tok = 1
-    i = 0
-    while (i < nb) {
-      if (bytes(i) == 0x20) { starts(tok) = i + 1; tok += 1 }
-      i += 1
-    }
-    // token j ends at starts(j+1)-1 (the space) or nb for the last;
-    // window w spans [starts(w), end(w+n-1))
-    @inline def tokEnd(j: Int): Int = if (j == m - 1) nb else starts(j + 1) - 1
-
-    var cap = 4
-    while (cap < wins * 2) cap <<= 1
-    val mask = cap - 1
-    val packed = new Array[Long](cap)
-    java.util.Arrays.fill(packed, -1L)
-    val cnt = new Array[Int](cap)
+    val starts = Tokens.starts(s, m)
+    val table = Terms.table(wins)
+    val cnt = new Array[Int](table.length)
     val order = new Array[Int](wins)
     var nUniq = 0
-
     var w = 0
     while (w < wins) {
-      val start = starts(w)
-      val end = tokEnd(w + n - 1)
-      val len = end - start
-      var h = 0x811c9dc5
-      var b = start
-      while (b < end) { h = (h ^ (bytes(b) & 0xff)) * 0x01000193; b += 1 }
-      var slot = h & mask
-      var done = false
-      while (!done) {
-        val p = packed(slot)
-        if (p == -1L) {
-          packed(slot) = (start.toLong << 32) | (len.toLong & 0xffffffffL)
-          cnt(slot) = 1
-          order(nUniq) = slot
-          nUniq += 1
-          done = true
-        } else {
-          val os = (p >>> 32).toInt
-          val ol = (p & 0xffffffffL).toInt
-          if (ol == len) {
-            var b2 = 0
-            while (b2 < len && bytes(os + b2) == bytes(start + b2)) b2 += 1
-            if (b2 == len) { cnt(slot) += 1; done = true }
-            else slot = (slot + 1) & mask
-          } else slot = (slot + 1) & mask
-        }
-      }
+      val slot = Terms.add(s, table, starts(w), Tokens.end(starts, w + n - 1, nb))
+      if (slot >= 0) cnt(slot) += 1
+      else { cnt(~slot) = 1; order(nUniq) = ~slot; nUniq += 1 }
       w += 1
     }
-
     val out = new Array[Any](nUniq)
     var j = 0
     while (j < nUniq) {
-      val slot = order(j)
-      val p = packed(slot)
-      val os = (p >>> 32).toInt
-      val ol = (p & 0xffffffffL).toInt
-      // copy out: `bytes` may alias a reusable scan buffer
+      val p = table(order(j))
       out(j) = new GenericInternalRow(Array[Any](
-        UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, os, os + ol)),
-        cnt(slot)))
+        Tokens.slice(s, Terms.start(p), Terms.start(p) + Terms.len(p)), cnt(order(j))))
       j += 1
     }
     new GenericArrayData(out)
   }
+
+  override protected def withNewChildInternal(newChild: Expression): NgramCounts =
+    copy(child = newChild)
 }

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -37,32 +33,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * dominant cost of the MinHash dedup stack at the 100x scale point.
   */
 case class ShingleHash(child: Expression, n: Int, raw: Boolean = false)
-    extends UnaryExpression {
+    extends StringKernel {
 
-  require(n >= 1, s"shingle_hash needs n >= 1, got $n")
+  def fnName: String = if (raw) "shingle_hash64" else "shingle_hash"
+
+  require(n >= 1, s"$fnName needs n >= 1, got $n")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingle_hash expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(tv: Any): Any =
-    ShingleHash.compute(tv.asInstanceOf[UTF8String], n, raw)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.ShingleHash$$.MODULE$$.compute($t, $n, $raw);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHash =
-    copy(child = newChild)
-}
-
-object ShingleHash {
-  /** Spark's `xxhash64` default seed. */
-  val Seed = 42L
 
   /** `raw = false`: MinHash domain — `pmod(xxhash64(shingle), P)` with
     * `P = TextOps.P` (2^31 − 1), the permutation modulus the signature
@@ -72,28 +49,10 @@ object ShingleHash {
     * domain decontamination uses, where a 31-bit space would make
     * cross-document birthday collisions routine at benchmark-index
     * scale. */
-  def compute(s: UTF8String, n: Int, raw: Boolean = false): ArrayData = {
-    val bytes = s.numBytes()
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    // token boundaries: a token ends at each 0x20 byte (or EOF) and the
-    // next starts one past it — exactly split(text, " ") with limit -1
-    var spaces = 0
-    var i = 0
-    while (i < bytes) {
-      if (s.getByte(i) == 0x20) spaces += 1
-      i += 1
-    }
-    val m = spaces + 1
-    val starts = new Array[Int](m)
-    val ends = new Array[Int](m)
-    var t = 0
-    i = 0
-    while (i < bytes) {
-      if (s.getByte(i) == 0x20) { ends(t) = i; t += 1; starts(t) = i + 1 }
-      i += 1
-    }
-    ends(t) = bytes
+  def compute(s: UTF8String): Any = {
+    val nb = s.numBytes()
+    val m = Tokens.count(s)
+    val starts = Tokens.starts(s, m)
     val nWin = math.max(m - n + 1, 1)
     // distinct via a per-row open-addressed set (power-of-two capacity)
     var cap = 4
@@ -105,9 +64,9 @@ object ShingleHash {
     var w = 0
     while (w < nWin) {
       val s0 = starts(w)
-      val last = math.min(w + n - 1, m - 1) // slice clamps short docs
-      val e = ends(last)
-      val h = XXH64.hashUnsafeBytes(base, off + s0, e - s0, Seed)
+      val e = Tokens.end(starts, math.min(w + n - 1, m - 1), nb) // slice clamps short docs
+      val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset + s0, e - s0,
+        ShingleHash.Seed)
       val hp = if (raw) h else {
         val r = h % graft.ext.TextOps.P
         if (r < 0) r + graft.ext.TextOps.P else r // pmod
@@ -129,4 +88,12 @@ object ShingleHash {
     UnsafeArrayData.fromPrimitiveArray(
       if (cnt == out.length) out else java.util.Arrays.copyOf(out, cnt))
   }
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleHash =
+    copy(child = newChild)
+}
+
+object ShingleHash {
+  /** Spark's `xxhash64` default seed. */
+  val Seed = 42L
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,107 +24,83 @@ import org.apache.spark.unsafe.types.UTF8String
   *    runs + single punctuation code points (the BPE-ish pre-token
   *    segmentation in [[graft.ext.TextOps.bpeTokenCount]]).
   *
-  * The generated code is a branchy byte loop over the UTF8String —
-  * no allocation, stays inside whole-stage codegen. Null text => NULL,
-  * matching the regex forms.
+  * Each mode is one branchy byte loop over the UTF8String, chosen once
+  * per row; generated code calls the typed [[count]], so the int is
+  * never boxed. No allocation, inside whole-stage codegen. Null text =>
+  * NULL, matching the regex forms.
   */
-case class TokenCount(child: Expression, mode: String) extends UnaryExpression {
+case class TokenCount(child: Expression, mode: String) extends StringKernel {
 
   require(TokenCount.Modes.contains(mode),
     s"token_runs mode must be one of ${TokenCount.Modes.mkString("/")}, got '$mode'")
 
+  def fnName: String = "token_runs"
+
   override def dataType: DataType = IntegerType
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"token_runs expects string, got ${other.simpleString}")
-  }
+  def compute(s: UTF8String): Any = count(s)
 
-  override def nullSafeEval(tv: Any): Any = {
-    val s = tv.asInstanceOf[UTF8String]
-    val n = s.numBytes()
-    var count = 0
-    // prev byte class: 0 = start/whitespace, 1 = letter, 2 = digit, 3 = other
-    var prev = 0
-    var i = 0
-    while (i < n) {
-      val ub = s.getByte(i) & 0xff
-      if ((ub & 0xc0) == 0x80) { // continuation byte: inside a non-ASCII code point
-        if (mode == "ws") () else prev = 3
-      } else {
-        val isWs = ub == 0x20 || (ub >= 0x09 && ub <= 0x0d)
-        val isLetter = (ub | 0x20) >= 'a' && (ub | 0x20) <= 'z'
-        val isDigit = ub >= '0' && ub <= '9'
-        mode match {
-          case "ws" =>
-            if (!isWs && prev == 0) count += 1
-            prev = if (isWs) 0 else 3
-          case "punct" =>
-            if (!isWs && !isLetter && !isDigit) count += 1
-          case "bpe" =>
-            if (isLetter) { if (prev != 1) count += 1; prev = 1 }
-            else if (isDigit) { if (prev != 2) count += 1; prev = 2 }
-            else { if (!isWs) count += 1; prev = if (isWs) 0 else 3 }
-        }
-      }
-      i += 1
-    }
-    count
-  }
+  override protected def javaCall(ref: String, text: String): String =
+    s"$ref.count($text)"
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val ub = ctx.freshName("ub")
-      val cnt = ctx.freshName("cnt")
-      val prev = ctx.freshName("prev")
-      val isWs = ctx.freshName("isWs")
-      val isLetter = ctx.freshName("isLetter")
-      val isDigit = ctx.freshName("isDigit")
-      val body = mode match {
-        case "ws" =>
-          s"""if (($ub & 0xc0) != 0x80) {
-             |  final boolean $isWs = $ub == 0x20 || ($ub >= 0x09 && $ub <= 0x0d);
-             |  if (!$isWs && $prev == 0) $cnt++;
-             |  $prev = $isWs ? 0 : 3;
-             |}""".stripMargin
-        case "punct" =>
-          s"""if (($ub & 0xc0) != 0x80) {
-             |  final boolean $isWs = $ub == 0x20 || ($ub >= 0x09 && $ub <= 0x0d);
-             |  final boolean $isLetter = ($ub | 0x20) >= 'a' && ($ub | 0x20) <= 'z';
-             |  final boolean $isDigit = $ub >= '0' && $ub <= '9';
-             |  if (!$isWs && !$isLetter && !$isDigit) $cnt++;
-             |}""".stripMargin
-        case "bpe" =>
-          s"""if (($ub & 0xc0) == 0x80) {
-             |  $prev = 3;
-             |} else {
-             |  final boolean $isWs = $ub == 0x20 || ($ub >= 0x09 && $ub <= 0x0d);
-             |  final boolean $isLetter = ($ub | 0x20) >= 'a' && ($ub | 0x20) <= 'z';
-             |  final boolean $isDigit = $ub >= '0' && $ub <= '9';
-             |  if ($isLetter) { if ($prev != 1) $cnt++; $prev = 1; }
-             |  else if ($isDigit) { if ($prev != 2) $cnt++; $prev = 2; }
-             |  else { if (!$isWs) $cnt++; $prev = $isWs ? 0 : 3; }
-             |}""".stripMargin
-      }
-      s"""
-         |final int $n = $t.numBytes();
-         |int $cnt = 0;
-         |int $prev = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final int $ub = $t.getByte($i) & 0xff;
-         |  $body
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
+  def count(s: UTF8String): Int = mode match {
+    case "ws" => TokenCount.wsRuns(s)
+    case "punct" => TokenCount.punct(s)
+    case _ => TokenCount.bpe(s)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): TokenCount =
     copy(child = newChild)
 }
 
 object TokenCount {
+  import Tokens._
+
   val Modes: Set[String] = Set("ws", "punct", "bpe")
+
+  /** Maximal non-whitespace runs; continuation bytes change nothing. */
+  def wsRuns(s: UTF8String): Int = {
+    var count = 0
+    var prevWs = true
+    var i = 0
+    while (i < s.numBytes()) {
+      val ub = s.getByte(i) & 0xff
+      if (!isCont(ub)) {
+        val white = isWs(ub)
+        if (!white && prevWs) count += 1
+        prevWs = white
+      }
+      i += 1
+    }
+    count
+  }
+
+  /** Code points outside alnum + whitespace, counted at lead bytes. */
+  def punct(s: UTF8String): Int = {
+    var count = 0
+    var i = 0
+    while (i < s.numBytes()) {
+      val ub = s.getByte(i) & 0xff
+      if (!isCont(ub) && !isWs(ub) && !isLetter(ub) && !isDigit(ub)) count += 1
+      i += 1
+    }
+    count
+  }
+
+  /** Letter runs + digit runs + single punctuation code points. */
+  def bpe(s: UTF8String): Int = {
+    var count = 0
+    var prev = 0 // 0 = start/whitespace, 1 = letter, 2 = digit, 3 = other
+    var i = 0
+    while (i < s.numBytes()) {
+      val ub = s.getByte(i) & 0xff
+      if (isCont(ub)) prev = 3
+      else if (isLetter(ub)) { if (prev != 1) count += 1; prev = 1 }
+      else if (isDigit(ub)) { if (prev != 2) count += 1; prev = 2 }
+      else if (isWs(ub)) prev = 0
+      else { count += 1; prev = 3 }
+      i += 1
+    }
+    count
+  }
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `word_chunks(text, chunk, stride)` — sliding-window document chunking
@@ -25,48 +23,41 @@ import org.apache.spark.unsafe.types.UTF8String
   * chain. `stride > chunk` (gapped sampling) is allowed.
   */
 case class WordChunks(child: Expression, chunk: Int, stride: Int)
-    extends UnaryExpression {
+    extends WindowKernel {
 
   require(chunk >= 1, s"word_chunks needs chunk >= 1, got $chunk")
   require(stride >= 1, s"word_chunks needs stride >= 1, got $stride")
 
+  def fnName: String = "word_chunks"
+
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_chunks expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(tv: Any): Any =
-    WordChunks.compute(tv.asInstanceOf[UTF8String], chunk, stride)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.WordChunks$$.MODULE$$.compute($t, $chunk, $stride);")
+  protected def window(s: UTF8String, starts: Array[Int], first: Int, last: Int): Any =
+    Tokens.slice(s, starts(first), Tokens.end(starts, last, s.numBytes()))
 
   override protected def withNewChildInternal(newChild: Expression): WordChunks =
     copy(child = newChild)
 }
 
-object WordChunks {
-  def compute(s: UTF8String, chunk: Int, stride: Int): ArrayData = {
-    val bytes = s.numBytes()
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val (starts, ends, m) = WordChunkSpans.boundaries(s)
+/** The sliding token windows both chunk kernels emit: `chunk` tokens
+  * every `stride` tokens, the last one clamped at the document end. */
+abstract class WindowKernel extends StringKernel {
+  def chunk: Int
+  def stride: Int
+
+  /** One output element for the window of tokens [first, last]. */
+  protected def window(s: UTF8String, starts: Array[Int], first: Int, last: Int): Any
+
+  def compute(s: UTF8String): Any = {
+    val m = Tokens.count(s)
+    val starts = Tokens.starts(s, m)
     val nChunks =
       if (m <= chunk) 1 else (m - chunk + stride - 1) / stride + 1
     val out = new Array[Any](nChunks)
     var k = 0
     while (k < nChunks) {
       val first = k * stride
-      val last = math.min(first + chunk - 1, m - 1)
-      val s0 = starts(first)
-      val len = ends(last) - s0
-      val b = new Array[Byte](len)
-      Platform.copyMemory(base, off + s0, b, Platform.BYTE_ARRAY_OFFSET, len)
-      out(k) = UTF8String.fromBytes(b)
+      out(k) = window(s, starts, first, math.min(first + chunk - 1, m - 1))
       k += 1
     }
     new GenericArrayData(out)
@@ -91,77 +82,28 @@ object WordChunks {
   * the UTF-8 encoding (multi-byte-safe), not character offsets.
   */
 case class WordChunkSpans(child: Expression, chunk: Int, stride: Int)
-    extends UnaryExpression {
+    extends WindowKernel {
 
   require(chunk >= 1, s"word_chunk_spans needs chunk >= 1, got $chunk")
   require(stride >= 1, s"word_chunk_spans needs stride >= 1, got $stride")
 
+  def fnName: String = "word_chunk_spans"
+
   override def dataType: DataType =
     ArrayType(WordChunkSpans.spanType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_chunk_spans expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(tv: Any): Any =
-    WordChunkSpans.compute(tv.asInstanceOf[UTF8String], chunk, stride)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.WordChunkSpans$$.MODULE$$.compute($t, $chunk, $stride);")
+  protected def window(s: UTF8String, starts: Array[Int], first: Int, last: Int): Any =
+    InternalRow(first, last - first + 1, starts(first),
+      Tokens.end(starts, last, s.numBytes()) - starts(first))
 
   override protected def withNewChildInternal(newChild: Expression): WordChunkSpans =
     copy(child = newChild)
 }
 
 object WordChunkSpans {
-
   val spanType: StructType = StructType(Seq(
     StructField("start_tok", IntegerType, nullable = false),
     StructField("n_tok", IntegerType, nullable = false),
     StructField("start_byte", IntegerType, nullable = false),
     StructField("len_bytes", IntegerType, nullable = false)))
-
-  /** Single-space token boundaries of `s`: (starts, exclusive ends, m).
-    * One byte scan; shared by the slice and span kernels so the two can
-    * never disagree about where a token begins. */
-  def boundaries(s: UTF8String): (Array[Int], Array[Int], Int) = {
-    val bytes = s.numBytes()
-    var spaces = 0
-    var i = 0
-    while (i < bytes) {
-      if (s.getByte(i) == 0x20) spaces += 1
-      i += 1
-    }
-    val m = spaces + 1
-    val starts = new Array[Int](m)
-    val ends = new Array[Int](m)
-    var t = 0
-    i = 0
-    while (i < bytes) {
-      if (s.getByte(i) == 0x20) { ends(t) = i; t += 1; starts(t) = i + 1 }
-      i += 1
-    }
-    ends(t) = bytes
-    (starts, ends, m)
-  }
-
-  def compute(s: UTF8String, chunk: Int, stride: Int): ArrayData = {
-    val (starts, ends, m) = boundaries(s)
-    val nChunks =
-      if (m <= chunk) 1 else (m - chunk + stride - 1) / stride + 1
-    val out = new Array[Any](nChunks)
-    var k = 0
-    while (k < nChunks) {
-      val first = k * stride
-      val last = math.min(first + chunk - 1, m - 1)
-      val s0 = starts(first)
-      out(k) = org.apache.spark.sql.catalyst.InternalRow(
-        first, last - first + 1, s0, ends(last) - s0)
-      k += 1
-    }
-    new GenericArrayData(out)
-  }
 }

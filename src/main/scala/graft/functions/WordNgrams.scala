@@ -1,11 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `word_ngrams(text, n)` — ALL word n-grams of a document (one entry
@@ -24,62 +21,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * this is one allocation per window, the floor for a string-keyed
   * aggregation.
   */
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class WordNgrams(child: Expression, n: Int) extends StringKernel {
 
   require(n >= 1, s"word_ngrams needs n >= 1, got $n")
 
+  def fnName: String = "word_ngrams"
+
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_ngrams expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(tv: Any): Any =
-    WordNgrams.compute(tv.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.WordNgrams$$.MODULE$$.compute($t, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgrams =
-    copy(child = newChild)
-}
-
-object WordNgrams {
-  def compute(s: UTF8String, n: Int): ArrayData = {
-    val bytes = s.numBytes()
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    var spaces = 0
-    var i = 0
-    while (i < bytes) {
-      if (s.getByte(i) == 0x20) spaces += 1
-      i += 1
-    }
-    val m = spaces + 1
+  def compute(s: UTF8String): Any = {
+    val m = Tokens.count(s)
     if (m < n) return new GenericArrayData(Array.empty[Any])
-    val starts = new Array[Int](m)
-    val ends = new Array[Int](m)
-    var t = 0
-    i = 0
-    while (i < bytes) {
-      if (s.getByte(i) == 0x20) { ends(t) = i; t += 1; starts(t) = i + 1 }
-      i += 1
-    }
-    ends(t) = bytes
-    val nWin = m - n + 1
-    val out = new Array[Any](nWin)
+    val starts = Tokens.starts(s, m)
+    val out = new Array[Any](m - n + 1)
     var w = 0
-    while (w < nWin) {
-      val s0 = starts(w)
-      val len = ends(w + n - 1) - s0
-      val b = new Array[Byte](len)
-      Platform.copyMemory(base, off + s0, b, Platform.BYTE_ARRAY_OFFSET, len)
-      out(w) = UTF8String.fromBytes(b)
+    while (w < out.length) {
+      out(w) = Tokens.slice(s, starts(w), Tokens.end(starts, w + n - 1, s.numBytes()))
       w += 1
     }
     new GenericArrayData(out)
   }
+
+  override protected def withNewChildInternal(newChild: Expression): WordNgrams =
+    copy(child = newChild)
 }

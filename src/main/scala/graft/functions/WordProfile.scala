@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,9 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * array copy per removed vocab word for every document — at 100 TB
   * that tier's dominant cost (the 100× curve's worst surviving row).
   * Token identity here is byte-range identity, which for UTF-8 equals
-  * string equality; distinctness uses an open-addressing table of
-  * (start,len) ranges with byte-compare on collision, so no token is
-  * ever materialized. Vocab words are pre-encoded to UTF-8 at
+  * string equality; distinctness uses the [[Terms]] table of byte
+  * ranges, so no token is ever materialized. Vocab words are pre-encoded to UTF-8 at
   * construction and compared length-first.
   *
   * Value-identity with the split-based forms is asserted by
@@ -43,7 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `split`'s null propagation.
   */
 case class WordProfile(child: Expression, spec: String, withUniq: Boolean)
-    extends UnaryExpression {
+    extends StringKernel {
 
   private val groups: Array[Array[Array[Byte]]] =
     spec.split("\\|", -1).map(_.split(",", -1).filter(_.nonEmpty)
@@ -51,6 +46,8 @@ case class WordProfile(child: Expression, spec: String, withUniq: Boolean)
 
   require(groups.nonEmpty && groups.forall(_.nonEmpty),
     s"word_profile spec needs at least one non-empty vocab group, got '$spec'")
+
+  def fnName: String = "word_profile"
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_tok", IntegerType, nullable = false),
@@ -60,20 +57,13 @@ case class WordProfile(child: Expression, spec: String, withUniq: Boolean)
     StructField("ws_runs", IntegerType, nullable = false),
     StructField("punct", IntegerType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_profile expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(tv: Any): Any = profile(tv.asInstanceOf[UTF8String])
-
-  def profile(s: UTF8String): InternalRow = {
+  def compute(s: UTF8String): Any = {
+    import Tokens._
     val n = s.numBytes()
     // pass 1: spaces -> token count (split(' ') semantics: m = spaces+1),
     // plus the token_runs ws/punct classification in the same loop
-    // (byte-for-byte the TokenCount semantics: continuation bytes are
-    // non-whitespace and skip the punct count)
+    // (byte-for-byte the TokenCount semantics: a continuation byte is a
+    // strict no-op — ws-run state unchanged, no punct count)
     var spaces = 0
     var wsRuns = 0
     var punct = 0
@@ -82,42 +72,24 @@ case class WordProfile(child: Expression, spec: String, withUniq: Boolean)
     while (i < n) {
       val ub = s.getByte(i) & 0xff
       if (ub == 0x20) spaces += 1
-      if ((ub & 0xc0) == 0x80) {
-        // continuation byte: strict no-op (TokenCount ws semantics) —
-        // ws-run state unchanged, no punct count
-      } else {
-        val isWs = ub == 0x20 || (ub >= 0x09 && ub <= 0x0d)
-        val isLetter = (ub | 0x20) >= 'a' && (ub | 0x20) <= 'z'
-        val isDigit = ub >= '0' && ub <= '9'
-        if (!isWs && prevWs) wsRuns += 1
-        if (!isWs && !isLetter && !isDigit) punct += 1
-        prevWs = isWs
+      if (!isCont(ub)) {
+        val white = isWs(ub)
+        if (!white && prevWs) wsRuns += 1
+        if (!white && !isLetter(ub) && !isDigit(ub)) punct += 1
+        prevWs = white
       }
       i += 1
     }
     val m = spaces + 1
     val hits = new Array[Int](groups.length)
-
-    // open-addressing table of packed (start << 32 | len), -1 = empty;
-    // sized 2x tokens rounded to a power of two so probes stay short
-    var table: Array[Long] = null
-    var mask = 0
-    if (withUniq) {
-      var cap = 4
-      while (cap < m * 2) cap <<= 1
-      table = new Array[Long](cap)
-      java.util.Arrays.fill(table, -1L)
-      mask = cap - 1
-    }
+    val table = if (withUniq) Terms.table(m) else null
     var nUniq = 0
 
     var start = 0
-    var tokEnd = 0 // exclusive; walks to each 0x20 and the final end
     i = 0
     while (i <= n) {
       if (i == n || s.getByte(i) == 0x20) {
-        tokEnd = i
-        val len = tokEnd - start
+        val len = i - start
         // vocab hits: length-first byte compare against each group
         var g = 0
         while (g < groups.length) {
@@ -136,31 +108,7 @@ case class WordProfile(child: Expression, spec: String, withUniq: Boolean)
           if (matched) hits(g) += 1
           g += 1
         }
-        if (withUniq) {
-          // FNV-1a over the token bytes (internal only — not a gated value)
-          var h = 0x811c9dc5
-          var b = start
-          while (b < tokEnd) { h = (h ^ (s.getByte(b) & 0xff)) * 0x01000193; b += 1 }
-          var slot = h & mask
-          var done = false
-          while (!done) {
-            val packed = table(slot)
-            if (packed == -1L) {
-              table(slot) = (start.toLong << 32) | (len.toLong & 0xffffffffL)
-              nUniq += 1
-              done = true
-            } else {
-              val os = (packed >>> 32).toInt
-              val ol = (packed & 0xffffffffL).toInt
-              if (ol == len) {
-                var b2 = 0
-                while (b2 < len && s.getByte(os + b2) == s.getByte(start + b2)) b2 += 1
-                if (b2 == len) done = true // duplicate token
-                else slot = (slot + 1) & mask
-              } else slot = (slot + 1) & mask
-            }
-          }
-        }
+        if (withUniq && Terms.add(s, table, start, i) < 0) nUniq += 1
         start = i + 1
       }
       i += 1
@@ -168,11 +116,6 @@ case class WordProfile(child: Expression, spec: String, withUniq: Boolean)
 
     new GenericInternalRow(Array[Any](m, if (withUniq) nUniq else -1,
       new GenericArrayData(hits), wsRuns, punct))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("wordProfile", this, classOf[WordProfile].getName)
-    nullSafeCodeGen(ctx, ev, t => s"${ev.value} = $ref.profile($t);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): WordProfile =

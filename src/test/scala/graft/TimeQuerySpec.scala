@@ -28,4 +28,13 @@ class TimeQuerySpec extends AnyFunSuite {
     assert(e.getMessage.contains("q_no_such"))
     assert(!e.getMessage.contains("q_agg_pricing"))
   }
+
+  test("a TIME line reads the job range when the two timed evaluations differ") {
+    val r = TimeQuery.profile(spark, TestSpark.Sf0001, Seq("q_agg_pricing")).head
+    assert(r.jobs > 0 && r.jobs <= r.maxJobs, r)
+    assert(TimeQuery.line(TimeQuery.Timing("q_sessions", 8, 9, 1.234, 0.5)) ==
+      "TIME q_sessions 1.23 s jobs=8-9 spool=0.50")
+    assert(TimeQuery.line(TimeQuery.Timing("q_sessions", 8, 8, 1.234, 0.0)) ==
+      "TIME q_sessions 1.23 s jobs=8 spool=0.00")
+  }
 }

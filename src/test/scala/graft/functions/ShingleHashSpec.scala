@@ -75,4 +75,13 @@ class ShingleHashSpec extends AnyFunSuite {
     assert(plan.find(_.isInstanceOf[WholeStageCodegenExec]).isDefined,
       plan.toString)
   }
+
+  test("shingle_hash64 errors name shingle_hash64, the function called") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.range(1).select(call_function("shingle_hash64", col("id"), lit(3))).collect())
+    assert(e.getMessage.contains("shingle_hash64 expects string, got bigint"), e.getMessage)
+    val n0 = intercept[IllegalArgumentException](
+      ShingleHash(org.apache.spark.sql.catalyst.expressions.Literal("a"), 0, raw = true))
+    assert(n0.getMessage.contains("shingle_hash64 needs n >= 1, got 0"), n0.getMessage)
+  }
 }
