@@ -1,6 +1,8 @@
 package graft.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.functions
 import graft.land.AtomicLanding
 import graft.model.CatalogEntry
 
@@ -87,11 +89,13 @@ object TransactionalIngest {
       evolveLanding: Boolean = false): Long = {
     val landingT = s"$root/$LandingMember"
     val catalogT = s"$root/$CatalogMember"
-    def commitOnce(df: DataFrame, t: String): Long =
-      if (batchId.exists(b => AtomicLanding.lastBatchId(t).exists(_ >= b)))
-        AtomicLanding.currentVersion(t).get // replay: data + id durable
+    // one manifest read per member decides replay vs commit
+    def commitOnce(df: DataFrame, t: String): Long = {
+      val live = AtomicLanding.manifest(t)
+      if (batchId.exists(b => live.flatMap(_.batch).exists(_ >= b)))
+        live.get.version // replay: data + id durable
       else AtomicLanding.commit(df, t,
-        append = AtomicLanding.currentVersion(t).isDefined,
+        append = live.isDefined,
         batchId = batchId,
         // the file/stream patterns own their landing schema and may add
         // columns across engine releases (batch_id/src_obj arrived after
@@ -99,7 +103,17 @@ object TransactionalIngest {
         // evolution keeps an upgraded engine from bricking a standing
         // root on its first post-upgrade batch (schema enforcement
         // would throw on EVERY retry — a ladder that never converges)
-        evolveSchema = evolveLanding && t == landingT)
+        evolveSchema = evolveLanding && t == landingT,
+        extraMarks = if (t == catalogT) watermarkMark(live) else Map.empty)
+    }
+    // the run's watermark rides the catalog commit as a monotone mark,
+    // durable in the same swing as the run record; a catalog written
+    // before marks existed seeds it with the aggregate once
+    def watermarkMark(live: Option[AtomicLanding.Manifest]): Map[String, Long] =
+      entry.lastExtTime.map { t =>
+        WatermarkMark -> (micros(t) +: live.toSeq.flatMap(m =>
+          recordedWatermark(spark, catalogT, m))).max
+      }.toMap
     // catalog first: the only state a crash between the member commits
     // can leave is a run record whose root never swung — invisible to
     // root-resolving readers, retried into the same versions. (Order is
@@ -196,11 +210,11 @@ object TransactionalIngest {
         // covered retry: the batch's own durable landing rows say what
         // to archive; anything else under inbound arrived after the
         // crashed attempt's listing and belongs to a future batch
-        // mergeSchema: a standing root from an older engine may have
-        // pre-evolution dirs without batch_id — a single-footer read
-        // could fail to resolve the column on EVERY retry (the
-        // non-converging ladder evolveLanding exists to prevent)
-        val names = AtomicLanding.read(spark, landingT, mergeSchema = true)
+        // a standing root from an older engine may have pre-evolution
+        // dirs without batch_id: the recorded schema still names the
+        // column (null in those rows), so the filter resolves on every
+        // retry (the converging ladder evolveLanding exists to keep)
+        val names = AtomicLanding.read(spark, landingT)
           .where(col("batch_id") === lit(bid))
           .select(col("obj_name")).distinct()
           .collect().map(_.getString(0)).toSet
@@ -264,7 +278,7 @@ object TransactionalIngest {
     val toArchive =
       if (!covered) listed
       else {
-        val names = AtomicLanding.read(spark, landingT, mergeSchema = true)
+        val names = AtomicLanding.read(spark, landingT)
           .where(col("batch_id") === lit(bid))
           .select(col("src_obj")).distinct()
           .collect().map(_.getString(0)).toSet
@@ -274,18 +288,37 @@ object TransactionalIngest {
     gen
   }
 
+  /** The catalog member's writer channel holding the highest
+    * `lastExtTime` its runs recorded, in microseconds since the epoch. */
+  val WatermarkMark = "__ext_time__"
+
+  private def micros(t: java.sql.Timestamp): Long = DateTimeUtils.fromJavaTimestamp(t)
+
+  /** `max(lastExtTime)` of the catalog snapshot `m` publishes, in
+    * microseconds: its [[WatermarkMark]], or — on a manifest without
+    * the mark (a catalog written before marks existed) — one aggregate
+    * over the snapshot. */
+  private def recordedWatermark(spark: SparkSession, catalogT: String,
+      m: AtomicLanding.Manifest): Option[Long] =
+    m.marks.get(WatermarkMark).orElse(
+      Option(AtomicLanding.readVersion(spark, catalogT, m.version)
+        .agg(functions.max("lastExtTime")).head().getTimestamp(0)).map(micros))
+
   /** The highest extraction watermark recorded in the root's catalog
     * member — for [[IngestionJob]]'s transactional mode the watermark
     * OF RECORD: it became durable in the same root swing as the data
     * it describes, so a crash can never leave landed data whose
     * interval the next run would re-extract (the separate-store
-    * ordering's residual window). None until a publish completes or if
-    * every recorded run was a full extract. */
+    * ordering's residual window). Read from the mark in the catalog
+    * manifest the live root pins — the root and one manifest, no Spark
+    * job. None until a publish completes or if every recorded run was
+    * a full extract. */
   def highestWatermark(spark: SparkSession, root: String): Option[java.sql.Timestamp] =
-    snapshot(spark, root).flatMap { case (_, cat) =>
-      Option(cat.agg(org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.col("lastExtTime"))).head().getTimestamp(0))
-    }
+    AtomicLanding.linkedSnapshot(root).flatMap { s =>
+      val catalogT = s"$root/$CatalogMember"
+      recordedWatermark(spark, catalogT,
+        AtomicLanding.manifestOf(catalogT, s.members(CatalogMember)))
+    }.map(DateTimeUtils.toJavaTimestamp)
 
   /** One consistent (landing, catalog) pair — both members read AT the
     * same root generation's pins, so the pair can never be torn by a
@@ -293,7 +326,7 @@ object TransactionalIngest {
   def snapshot(spark: SparkSession, root: String): Option[(DataFrame, DataFrame)] =
     AtomicLanding.linkedSnapshot(root).map { s =>
       (AtomicLanding.readVersion(spark, s"$root/$LandingMember",
-          s.members(LandingMember), mergeSchema = true),
+          s.members(LandingMember)),
         AtomicLanding.readVersion(spark, s"$root/$CatalogMember",
           s.members(CatalogMember)))
     }

@@ -7,6 +7,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, max, when}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** ACID landing commits.
   *
@@ -90,12 +91,18 @@ object AtomicLanding {
 
   private def hp(parts: String*): HPath = new HPath(parts.mkString("/"))
 
+  /** One open per read: no length probe first (a second metadata call,
+    * one more request on an object store). */
   private def readUtf8(fs: FileSystem, p: HPath): String = {
-    val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
     val in = fs.open(p)
-    try in.readFully(buf) finally in.close()
-    new String(buf, StandardCharsets.UTF_8)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
+
+  /** [[readUtf8]], or None when `p` does not exist — the open IS the
+    * existence probe. */
+  private def readIfExists(p: HPath): Option[String] =
+    try Some(readUtf8(fsOf(p), p))
+    catch { case _: java.io.FileNotFoundException => None }
 
   /** Exclusively reserve manifest slot `m` and write its content — the
     * per-version lock of the optimistic protocol. Readers never look at
@@ -128,24 +135,82 @@ object AtomicLanding {
   }
 
   /** The published version, if any commit has ever completed. */
-  def currentVersion(table: String): Option[Long] = {
-    val p = hp(table, Pointer)
-    val fs = fsOf(p)
-    if (fs.exists(p)) Some(readUtf8(fs, p).trim.stripPrefix("m-").toLong)
-    else None
-  }
+  def currentVersion(table: String): Option[Long] =
+    readIfExists(hp(table, Pointer)).map(_.trim.stripPrefix("m-").toLong)
 
-  private def manifestLines(table: String): Seq[String] =
-    currentVersion(table) match {
-      case None => Nil
-      case Some(v) =>
-        val m = hp(table, "manifests", manifestName(v))
-        readUtf8(fsOf(m), m).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+  /** One parsed manifest: the version it publishes and its lines. A
+    * reader or a commit attempt parses the manifest it works from ONCE
+    * and takes everything from it — the live dirs, the `# range` lines,
+    * the `# batch` and `# wmark` marks and the `# schema` line — so one
+    * resolution costs one pointer read and one manifest read (one GET
+    * each on an object store), however many of those facts it needs. */
+  final case class Manifest(version: Long, lines: Seq[String]) {
+
+    /** The data dirs, in manifest order (relative to the table, or
+      * absolute for a [[cloneShallow]] target's inherited dirs). */
+    lazy val dirs: Seq[String] = lines.filterNot(_.startsWith("#"))
+
+    /** The default channel's batch-id high-water mark (`# batch`). */
+    lazy val batch: Option[Long] = lines.collectFirst {
+      case l if l.startsWith("# batch ") => l.stripPrefix("# batch ").trim.toLong
     }
 
-  /** The data dirs of the published snapshot (relative to `table`). */
-  private def liveDirs(table: String): Seq[String] =
-    manifestLines(table).filterNot(_.startsWith("#"))
+    /** Every named writer channel's high-water mark (`# wmark`). */
+    lazy val marks: Map[String, Long] = lines.collect {
+      case l if l.startsWith("# wmark ") =>
+        l.stripPrefix("# wmark ").trim.split(" ") match {
+          case Array(w, id) => dec(w) -> id.toLong
+        }
+    }.toMap
+
+    /** The mark of `writer`'s channel; `""` is the default channel. */
+    def mark(writer: String): Option[Long] =
+      if (writer.isEmpty) batch else marks.get(writer)
+
+    /** The schema the commit recorded, None on a manifest written before
+      * schema lines existed. */
+    lazy val schema: Option[StructType] = lines.collectFirst {
+      case l if l.startsWith("# schema ") =>
+        DataType.fromJson(l.stripPrefix("# schema ")).asInstanceOf[StructType]
+    }
+
+    /** (dir, key) -> range, from the `# range` lines. Bounds are
+      * URL-encoded in the manifest so arbitrary string keys (spaces,
+      * newlines) survive the line format. */
+    private[land] lazy val ranges: Map[(String, String), KeyRange] = lines.collect {
+      case l if l.startsWith("# range ") =>
+        l.stripPrefix("# range ").trim.split(" ") match {
+          case Array(d, k, t, lo, hi) => ((dec(d), dec(k)), (t, dec(lo), dec(hi)))
+          case other => throw new IllegalStateException(
+            s"malformed range line (${other.length} fields): $l")
+        }
+    }.toMap
+  }
+
+  private def parseManifest(v: Long, text: String): Manifest =
+    Manifest(v, text.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
+
+  /** The published snapshot's manifest, if any commit has completed. */
+  def manifest(table: String): Option[Manifest] =
+    currentVersion(table).map { v =>
+      val m = hp(table, "manifests", manifestName(v))
+      parseManifest(v, readUtf8(fsOf(m), m))
+    }
+
+  /** The manifest a PAST commit published. Only versions at or below the
+    * published pointer are readable: a crash between manifest write and
+    * pointer swing leaves an orphaned FUTURE manifest on disk, and that
+    * snapshot was never committed. Works until [[vacuum]] reclaims the
+    * version. */
+  def manifestOf(table: String, version: Long): Manifest = {
+    val cur = currentVersion(table)
+    require(cur.exists(_ >= version),
+      s"version $version was never published (current: ${cur.getOrElse(-1L)}) — " +
+        "orphaned future manifests from crashed commits are not readable")
+    val text = readIfExists(hp(table, "manifests", manifestName(version)))
+    require(text.isDefined, s"version $version not found (vacuumed?)")
+    parseManifest(version, text.get)
+  }
 
   /** Resolve a manifest dir entry to a readable path. Entries written
     * by a table's own commits are RELATIVE ("data/<uuid>"); a
@@ -166,9 +231,7 @@ object AtomicLanding {
     * mark would make an already-committed batch's replay re-append
     * (duplicates), the exactly-once hole the monotone max closes. */
   def lastBatchId(table: String): Option[Long] =
-    manifestLines(table).collectFirst {
-      case l if l.startsWith("# batch ") => l.stripPrefix("# batch ").trim.toLong
-    }
+    manifest(table).flatMap(_.batch)
 
   /** [[lastBatchId]] for a named WRITER CHANNEL — the Delta
     * transaction-appId analogue. Batch ids are only comparable within
@@ -182,70 +245,67 @@ object AtomicLanding {
     * replay idempotence is judged against the issuer's own history
     * only. `writer = ""` is the default shared channel (`# batch`). */
   def lastBatchId(table: String, writer: String): Option[Long] =
-    if (writer.isEmpty) lastBatchId(table)
-    else writerMarks(table).get(writer)
-
-  /** Every named writer channel's high-water mark in the live manifest. */
-  private[land] def writerMarks(table: String): Map[String, Long] =
-    manifestLines(table).collect {
-      case l if l.startsWith("# wmark ") =>
-        l.stripPrefix("# wmark ").trim.split(" ") match {
-          case Array(w, id) => dec(w) -> id.toLong
-        }
-    }.toMap
+    manifest(table).flatMap(_.mark(writer))
 
   /** The published snapshot's schema, recorded in the manifest at commit
-    * time — schema enforcement reads one small manifest line instead of
-    * listing the table and merging parquet footers (which, with
-    * mergeSchema off, would also SAMPLE one file's footer and could miss
-    * an evolved column entirely). Tables written before schema lines
-    * existed fall back to a merged-footer read. */
-  def liveSchema(spark: SparkSession, table: String): Option[org.apache.spark.sql.types.StructType] =
-    manifestLines(table).collectFirst {
-      case l if l.startsWith("# schema ") =>
-        org.apache.spark.sql.types.DataType.fromJson(
-          l.stripPrefix("# schema ")).asInstanceOf[org.apache.spark.sql.types.StructType]
-    }.orElse(currentVersion(table).map(_ => read(spark, table, mergeSchema = true).schema))
+    * time — schema enforcement and every reader take one small manifest
+    * line instead of listing the table and merging parquet footers.
+    * Tables written before schema lines existed fall back to a
+    * merged-footer read. */
+  def liveSchema(spark: SparkSession, table: String): Option[StructType] =
+    manifest(table).map(schemaOf(spark, table, _))
 
-  /** Read the current snapshot — only ever sees fully-committed data.
-    * `mergeSchema = true` unions the schemas of all live data dirs
-    * (columns added by later appends surface as nulls in older rows) at
-    * the cost of reading every dir's footer — leave it off for tables
-    * whose schema never evolved. */
-  def read(spark: SparkSession, table: String,
-      mergeSchema: Boolean = false): DataFrame = {
-    val dirs = liveDirs(table)
-    require(dirs.nonEmpty, s"no committed snapshot at $table")
-    spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(dirs.map(d => resolveDir(table, d)): _*)
+  private def schemaOf(spark: SparkSession, table: String, m: Manifest): StructType =
+    m.schema.getOrElse(relation(spark, table, m, m.dirs).schema)
+
+  /** The one landed-snapshot reader: `dirs` (all of `m`'s, or a subset a
+    * rewrite plans) read at the schema `m` records. The recorded schema
+    * is already the merged one — live columns in order, then explicitly
+    * evolved additions — so every column surfaces whichever dir a path
+    * listing puts first, older rows read null in evolved columns, and
+    * creating the DataFrame runs no Spark job and opens no footer. A
+    * manifest written before schema lines existed falls back to
+    * merged-footer inference: the only place footers are read for a
+    * schema. */
+  private def relation(spark: SparkSession, table: String, m: Manifest,
+      dirs: Seq[String]): DataFrame = {
+    val paths = dirs.map(d => resolveDir(table, d))
+    m.schema match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
   }
 
-  /** Time travel: read the snapshot a PAST commit published. Works until
-    * [[vacuum]] reclaims the superseded manifests/data (the same
-    * retention trade Delta's VACUUM makes). Only versions at or below
-    * the published pointer are readable: a crash between manifest write
-    * and pointer swing leaves an orphaned FUTURE manifest on disk, and
-    * that snapshot was never committed. */
-  def readVersion(spark: SparkSession, table: String, version: Long,
-      mergeSchema: Boolean = false): DataFrame =
-    spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(dirsOfVersion(table, version).map(d => resolveDir(table, d)): _*)
+  /** Read the current snapshot — only ever sees fully-committed data,
+    * at the schema its manifest records (columns added by evolved
+    * appends surface as nulls in older rows). */
+  def read(spark: SparkSession, table: String): DataFrame = {
+    val m = snapshotOf(table)
+    relation(spark, table, m, m.dirs)
+  }
+
+  /** The live manifest of a table that has a committed snapshot. */
+  private def snapshotOf(table: String): Manifest = {
+    val m = manifest(table)
+    require(m.exists(_.dirs.nonEmpty), s"no committed snapshot at $table")
+    m.get
+  }
+
+  /** Time travel: read the snapshot a PAST commit published, at the
+    * schema that commit recorded. Works until [[vacuum]] reclaims the
+    * superseded manifests/data (the same retention trade Delta's VACUUM
+    * makes); same reachability rule as [[manifestOf]]. */
+  def readVersion(spark: SparkSession, table: String, version: Long): DataFrame = {
+    val m = manifestOf(table, version)
+    relation(spark, table, m, m.dirs)
+  }
 
   /** The data dirs a committed version references (relative to `table`)
     * — the manifest-level delta primitive [[ChangeFeed]] diffs to serve
     * incremental reads. Same reachability rule as [[readVersion]]: only
     * versions at or below the published pointer exist. */
-  def dirsOfVersion(table: String, version: Long): Seq[String] = {
-    val cur = currentVersion(table)
-    require(cur.exists(_ >= version),
-      s"version $version was never published (current: ${cur.getOrElse(-1L)}) — " +
-        "orphaned future manifests from crashed commits are not readable")
-    val manifest = hp(table, "manifests", manifestName(version))
-    val fs = fsOf(manifest)
-    require(fs.exists(manifest), s"version $version not found (vacuumed?)")
-    readUtf8(fs, manifest).split("\n").toSeq
-      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-  }
+  def dirsOfVersion(table: String, version: Long): Seq[String] =
+    manifestOf(table, version).dirs
 
   /** [[dirsOfVersion]] resolved to ABSOLUTE paths, in manifest order
     * (body first, newest append last) — for bounded maintenance probes
@@ -275,8 +335,10 @@ object AtomicLanding {
     * Dirs without a recorded range for `key` are conservatively
     * included. The planning surface of [[readPruned]], exposed so
     * callers (and gates) can observe how many dirs a scan will touch. */
-  def planPrunedDirs(table: String, key: String, lo: Any, hi: Any): Seq[String] = {
-    val recorded = liveRanges(table)
+  def planPrunedDirs(table: String, key: String, lo: Any, hi: Any): Seq[String] =
+    manifest(table).toSeq.flatMap(prunedDirs(_, key, lo, hi))
+
+  private def prunedDirs(m: Manifest, key: String, lo: Any, hi: Any): Seq[String] = {
     def overlaps(r: KeyRange): Boolean = r match {
       case ("long", dlo, dhi) =>
         // a probe that can't parse as Long proves nothing about the
@@ -291,7 +353,7 @@ object AtomicLanding {
       case (other, _, _) =>
         throw new IllegalArgumentException(s"unknown range type '$other'")
     }
-    liveDirs(table).filter(d => recorded.get((d, key)).forall(overlaps))
+    m.dirs.filter(d => m.ranges.get((d, key)).forall(overlaps))
   }
 
   /** Manifest-pruned range read: the snapshot filtered to
@@ -305,10 +367,11 @@ object AtomicLanding {
     * so the result is row-identical to `read().filter(between)`. */
   def readPruned(spark: SparkSession, table: String, key: String,
       lo: Any, hi: Any): DataFrame = {
-    val kept = planPrunedDirs(table, key, lo, hi)
+    val m = snapshotOf(table)
+    val kept = prunedDirs(m, key, lo, hi)
     val body =
-      if (kept.isEmpty) read(spark, table).limit(0)
-      else spark.read.parquet(kept.map(d => resolveDir(table, d)): _*)
+      if (kept.isEmpty) relation(spark, table, m, m.dirs).limit(0)
+      else relation(spark, table, m, kept)
     body.filter(col(key).between(lit(lo), lit(hi)))
   }
 
@@ -353,7 +416,7 @@ object AtomicLanding {
       else fsOf(hp(source)).makeQualified(hp(source)).toString
     def absolutize(d: String): String =
       if (d.startsWith("/") || d.contains(":/")) d else s"$absRoot/$d"
-    def snapshotLines(): Seq[String] = manifestLines(source).flatMap {
+    def snapshotLines(): Seq[String] = manifest(source).toSeq.flatMap(_.lines).flatMap {
       case l if l.startsWith("# batch ") => None
       case l if l.startsWith("# wmark ") => None // fresh sink: no channel carries
       case l if l.startsWith("# range ") =>
@@ -447,8 +510,8 @@ object AtomicLanding {
   def merge(updates: DataFrame, table: String, key: String,
       allowMissingColumns: Boolean = false): Long = {
     val spark = updates.sparkSession
-    val base = currentVersion(table)
-    val live = read(spark, table, mergeSchema = true)
+    val m = snapshotOf(table)
+    val live = relation(spark, table, m, m.dirs)
     // an updates frame missing a live column would silently rewrite
     // every matched row with NULL there (unionByName pads) — refuse
     // unless the caller explicitly asks for that
@@ -467,7 +530,7 @@ object AtomicLanding {
     // swings the pointer. expectedVersion fails the publish if a
     // concurrent commit landed after our snapshot read (the rewrite
     // would erase it otherwise).
-    commit(merged, table, expectedVersion = base)
+    commit(merged, table, expectedVersion = Some(m.version))
   }
 
   /** A dir's key range as recorded in (or derived for) the manifest:
@@ -477,7 +540,10 @@ object AtomicLanding {
     * evaluated by Spark agrees with the footer-derived bounds (a Java
     * String.compareTo would not: UTF-16 code-unit order diverges from
     * code-point order beyond the BMP). */
-  private type KeyRange = (String, String, String)
+  private[land] type KeyRange = (String, String, String)
+
+  /** Dirs of a pruning plan, each with its key range when one is known. */
+  private type DirPlan = Seq[(String, Option[KeyRange])]
 
   /** Per-parquet-file footer reads performed by merge PLANNING (the
     * manifest-fallback path). Test seam: a spec asserts this stays flat
@@ -576,18 +642,9 @@ object AtomicLanding {
     s"# range ${enc(d)} ${enc(k)} ${r._1} ${enc(r._2)} ${enc(r._3)}"
 
   /** (dir, key) -> range, from the live manifest's "# range" lines —
-    * the manifest-only planning surface [[mergePruned]] reads. Bounds
-    * are URL-encoded in the manifest so arbitrary string keys (spaces,
-    * newlines) survive the line format. */
+    * the manifest-only planning surface [[mergePruned]] reads. */
   private[land] def liveRanges(table: String): Map[(String, String), KeyRange] =
-    manifestLines(table).collect {
-      case l if l.startsWith("# range ") =>
-        l.stripPrefix("# range ").trim.split(" ") match {
-          case Array(d, k, t, lo, hi) => ((dec(d), dec(k)), (t, dec(lo), dec(hi)))
-          case other => throw new IllegalStateException(
-            s"malformed range line (${other.length} fields): $l")
-        }
-    }.toMap
+    manifest(table).fold(Map.empty[(String, String), KeyRange])(_.ranges)
 
   /** File-level MERGE — the 100-TB refinement [[merge]]'s scaladoc
     * names: rewrite ONLY the live data dirs whose footer key range
@@ -635,13 +692,11 @@ object AtomicLanding {
     // exactly the window a concurrent append can land in, which is what
     // the rebase specs need to stage deterministically
     val spark = updates.sparkSession
-    val base = currentVersion(table)
+    // one manifest plans the whole rewrite: schema, ranges and dirs
+    val live = manifest(table)
     if (!allowMissingColumns) {
-      // the manifest's schema line, not a mergeSchema read: the check
-      // needs column NAMES only, and a footer-merging read of every
-      // live dir would cost more than the pruning saves
-      val liveCols = liveSchema(spark, table)
-        .map(_.fieldNames.toSet).getOrElse(Set.empty)
+      val liveCols = live.map(schemaOf(spark, table, _).fieldNames.toSet)
+        .getOrElse(Set.empty)
       val missing = liveCols -- updates.columns.toSet
       require(missing.isEmpty,
         s"merge updates are missing live column(s) ${missing.mkString(", ")} — " +
@@ -649,11 +704,11 @@ object AtomicLanding {
           "allowMissingColumns = true to do that deliberately")
     }
     // manifest-first planning; footer listing only for pre-upgrade dirs
-    val (touched, kept) = prunePlan(updates, table, key)
+    val (touched, kept) =
+      live.fold[(DirPlan, DirPlan)]((Nil, Nil))(prunePlan(updates, table, _, key))
     val touchedData: Option[DataFrame] = touched.map(_._1) match {
       case Nil => None
-      case ds => Some(spark.read.option("mergeSchema", "true")
-        .parquet(ds.map(d => resolveDir(table, d)): _*))
+      case ds => Some(relation(spark, table, live.get, ds))
     }
     val merged = touchedData match {
       case Some(t) => t.join(updates.select(key), Seq(key), "left_anti")
@@ -670,8 +725,8 @@ object AtomicLanding {
     // id would let the engine double-commit the replayed batch)
     beforeCommit()
     commit(merged, table, keepDirs = kept.map(_._1),
-      expectedVersion = base, statsKeys = Seq(key), knownRanges = known,
-      rebaseAppends = rebaseDisjoint(updates, table, key))
+      expectedVersion = live.map(_.version), statsKeys = Seq(key),
+      knownRanges = known, rebaseAppends = rebaseDisjoint(updates, table, key))
   }
 
   /** Manifest-first pruning plan for a keyed snapshot rewrite: every
@@ -680,12 +735,11 @@ object AtomicLanding {
     * (range hit — or no range at all, which rewrites conservatively)
     * and dirs provably untouched. ONE aggregate over `probe` computes
     * every dir's flag. Shared by [[mergePruned]] and [[deletePruned]]. */
-  private def prunePlan(probe: DataFrame, table: String, key: String)
-      : (Seq[(String, Option[KeyRange])], Seq[(String, Option[KeyRange])]) = {
+  private def prunePlan(probe: DataFrame, table: String, m: Manifest,
+      key: String): (DirPlan, DirPlan) = {
     val spark = probe.sparkSession
-    val recorded = liveRanges(table)
-    val ranges = liveDirs(table).map { d =>
-      d -> recorded.get((d, key))
+    val ranges = m.dirs.map { d =>
+      d -> m.ranges.get((d, key))
         .orElse(footerKeyRange(spark, resolveDir(table, d), key, planning = true))
     }
     val flagged = ranges.zipWithIndex.collect {
@@ -757,13 +811,11 @@ object AtomicLanding {
   def deletePruned(deleteKeys: DataFrame, table: String, key: String,
       beforeCommit: () => Unit = () => ()): Long = {
     val spark = deleteKeys.sparkSession
-    val base = currentVersion(table)
-    require(base.isDefined, s"no committed snapshot at $table")
+    val m = snapshotOf(table)
     val keys = deleteKeys.select(col(key))
-    val (touched, kept) = prunePlan(keys, table, key)
-    if (touched.isEmpty) return base.get
-    val remaining = spark.read.option("mergeSchema", "true")
-      .parquet(touched.map(d => resolveDir(table, d._1)): _*)
+    val (touched, kept) = prunePlan(keys, table, m, key)
+    if (touched.isEmpty) return m.version
+    val remaining = relation(spark, table, m, touched.map(_._1))
       .join(keys, Seq(key), "left_anti")
     // an all-rows-deleted rewrite still needs a schema-bearing footer:
     // zero partitions would write no part file and break later reads
@@ -771,8 +823,8 @@ object AtomicLanding {
     val known = kept.collect { case (d, Some(r)) => (d, key) -> r }.toMap
     beforeCommit()
     commit(body, table, keepDirs = kept.map(_._1),
-      expectedVersion = base, statsKeys = Seq(key), knownRanges = known,
-      rebaseAppends = rebaseDisjoint(keys, table, key))
+      expectedVersion = Some(m.version), statsKeys = Seq(key),
+      knownRanges = known, rebaseAppends = rebaseDisjoint(keys, table, key))
   }
 
   /** Write `df` and publish atomically; returns the committed version.
@@ -873,24 +925,24 @@ object AtomicLanding {
 
     // schema enforcement (Delta's rule): an append may never silently
     // drop or retype a live column; ADDING columns is explicit
-    // (evolveSchema), and readers see them via read(mergeSchema = true).
-    // The live schema comes from the manifest's schema line — one small
-    // read, covering EVERY live column including previously-evolved
-    // ones, with no footer listing per micro-batch. Recomputed on every
-    // reservation attempt: a losing writer rebases onto a snapshot whose
-    // schema a concurrent evolveSchema append may have just changed, so
-    // a stale pre-loop schema would silently drop the evolved column
-    // from the manifest it records.
+    // (evolveSchema), and readers see them through the schema line.
+    // The live schema comes from the manifest's schema line — covering
+    // EVERY live column including previously-evolved ones, with no
+    // footer listing per micro-batch. Recomputed on every reservation
+    // attempt from that attempt's one manifest parse: a losing writer
+    // rebases onto a snapshot whose schema a concurrent evolveSchema
+    // append may have just changed, so a stale pre-loop schema would
+    // silently drop the evolved column from the manifest it records.
     // `carried` = concurrently-appended dirs riding a rebase: their
     // rows may carry a column evolveSchema added AFTER the rewrite's
     // base snapshot, and the LIVE manifest's schema line (not the base
     // df's schema) is the only record of it — recording the base schema
     // would drop the evolved column, making every later append fail
     // enforcement while the data silently drifts from the schema line.
-    def enforcedSchema(carried: Seq[String]): org.apache.spark.sql.types.StructType = {
-      val liveSch: Option[org.apache.spark.sql.types.StructType] =
+    def enforcedSchema(live: Option[Manifest], carried: Seq[String]): StructType = {
+      val liveSch: Option[StructType] =
         if (append || keepDirs.nonEmpty || carried.nonEmpty)
-          liveSchema(df.sparkSession, table) else None
+          live.map(schemaOf(df.sparkSession, table, _)) else None
       if (append) liveSch.foreach { live =>
         live.foreach { f =>
           val inc = df.schema.find(_.name == f.name).getOrElse(
@@ -908,13 +960,14 @@ object AtomicLanding {
         val extras = df.schema.map(_.name).toSet -- live.map(_.name).toSet
         require(extras.isEmpty || evolveSchema,
           s"append adds columns [${extras.mkString(", ")}] — pass " +
-            "evolveSchema = true (and read with mergeSchema = true)")
+            "evolveSchema = true to record them (readers then see them, " +
+            "null in older rows)")
       }
       // the schema the NEW manifest records: live columns (in order) plus
       // any explicitly-evolved additions; overwrite takes df's schema
       liveSch match {
-        case Some(live) => org.apache.spark.sql.types.StructType(
-          live.fields ++ df.schema.fields.filterNot(f => live.fieldNames.contains(f.name)))
+        case Some(sch) => StructType(
+          sch.fields ++ df.schema.fields.filterNot(f => sch.fieldNames.contains(f.name)))
         case None => df.schema
       }
     }
@@ -939,7 +992,11 @@ object AtomicLanding {
     def newDirRange(k: String): Option[KeyRange] =
       newDirRangeCache.getOrElseUpdate(k,
         footerKeyRange(df.sparkSession, dataDir.toString, k, planning = false))
-    var next = currentVersion(table).getOrElse(-1L) + 1L
+    // ONE pointer + manifest read per reservation attempt: the live
+    // dirs, range lines, marks and schema the attempt carries all come
+    // from `live`, and `live` is always the manifest of version next - 1
+    var live = manifest(table)
+    var next = live.fold(0L)(_.version + 1L)
     var waitedMs = 0L
     var reserved = false
     while (!reserved) {
@@ -966,7 +1023,7 @@ object AtomicLanding {
       // staged dir becomes vacuum-able garbage.
       val carried: Seq[String] = expectedVersion match {
         case Some(e) if next != e + 1L =>
-          val curDirs = liveDirs(table)
+          val curDirs = live.toSeq.flatMap(_.dirs)
           val eDirs = dirsOfVersion(table, e)
           val removed = eDirs.filterNot(curDirs.toSet)
           val extras = curDirs.filterNot(eDirs.toSet)
@@ -981,8 +1038,9 @@ object AtomicLanding {
           extras
         case _ => Nil
       }
-      val dirs = (if (append) liveDirs(table) else keepDirs ++ carried) :+ s"data/$dirName"
-      val recorded = liveRanges(table)
+      val dirs = (if (append) live.toSeq.flatMap(_.dirs) else keepDirs ++ carried) :+
+        s"data/$dirName"
+      val recorded = live.fold(Map.empty[(String, String), KeyRange])(_.ranges)
       val rangeKeys = (statsKeys ++ recorded.keysIterator.map(_._2)).distinct
       val rangeLs = for {
         d <- dirs
@@ -997,8 +1055,8 @@ object AtomicLanding {
       // not erase any writer's replay history), with this commit's
       // channel folded in by max
       val defaultMark =
-        (if (writer.isEmpty) batchId.toSeq else Nil) ++ lastBatchId(table).toSeq
-      val marks0 = writerMarks(table)
+        (if (writer.isEmpty) batchId.toSeq else Nil) ++ live.flatMap(_.batch).toSeq
+      val marks0 = live.fold(Map.empty[String, Long])(_.marks)
       val marks1 =
         if (writer.isEmpty || batchId.isEmpty) marks0
         else marks0.updated(writer,
@@ -1011,7 +1069,7 @@ object AtomicLanding {
       }
       val lines = defaultMark.maxOption.map(b => s"# batch $b").toSeq ++
         marks.toSeq.sortBy(_._1).map { case (w, b) => s"# wmark ${enc(w)} $b" } ++
-        Seq(s"# schema ${enforcedSchema(carried).json}") ++ rangeLs ++ dirs
+        Seq(s"# schema ${enforcedSchema(live, carried).json}") ++ rangeLs ++ dirs
       reserved = reserveManifest(fs,
         hp(table, "manifests", manifestName(next)), lines.mkString("\n"))
       if (!reserved) {
@@ -1026,7 +1084,8 @@ object AtomicLanding {
             "(retry with a longer maxConflictWaitMs) or its writer died " +
             "(vacuum() reclaims the orphaned slot once no writer is active)")
         Thread.sleep(25); waitedMs += 25
-        currentVersion(table).foreach(cv => if (cv >= next) next = cv + 1L)
+        live = manifest(table)
+        live.foreach(m => if (m.version >= next) next = m.version + 1L)
       }
     }
 
@@ -1077,7 +1136,7 @@ object AtomicLanding {
 
   /** Data dirs in the live snapshot — the maintenance trigger metric: a
     * long-appending stream grows this by one per micro-batch. */
-  def liveDirCount(table: String): Int = liveDirs(table).size
+  def liveDirCount(table: String): Int = manifest(table).fold(0)(_.dirs.size)
 
   /** Superseded (unreachable but unreclaimed) manifests — the OTHER
     * maintenance trigger: an overwrite-per-run table keeps liveDirCount
@@ -1115,15 +1174,14 @@ object AtomicLanding {
   def compact(spark: SparkSession, table: String,
       numFiles: Int = 0,
       beforeCommit: () => Unit = () => ()): Long = {
-    val base = currentVersion(table)
-    // mergeSchema: a schema-evolved table has columns that live only in
-    // newer data dirs; the default single-footer sample could silently
-    // drop them from the rewrite — and vacuum() then deletes the only
-    // dirs that had the data, making the loss permanent
-    val df0 = read(spark, table, mergeSchema = true)
+    // the recorded schema: a schema-evolved table has columns that live
+    // only in newer data dirs, and a rewrite that dropped them would
+    // make the loss permanent once vacuum() deletes the original dirs
+    val m = snapshotOf(table)
+    val df0 = relation(spark, table, m, m.dirs)
     val df = if (numFiles > 0) df0.coalesce(numFiles) else df0
     beforeCommit()
-    commit(df, table, expectedVersion = base, rebaseAppends = _ => true)
+    commit(df, table, expectedVersion = Some(m.version), rebaseAppends = _ => true)
   }
 
   /** Bin-packing compaction: rewrite ONLY the data dirs at or below
@@ -1182,21 +1240,21 @@ object AtomicLanding {
       transform: Option[DataFrame => DataFrame] = None,
       extraMarks: Map[String, Long] = Map.empty): SmallCompaction = {
     val fs = fsOf(hp(table))
-    val base = currentVersion(table).getOrElse(
+    val m = manifest(table).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $table"))
+    val base = m.version
     expectedBase.foreach { e =>
       if (e != base) throw new java.util.ConcurrentModificationException(
         s"$table is at version $base, not the expected $e — re-sync and retry")
     }
-    val (small, big) = dirsOfVersion(table, base).partition { d =>
+    val (small, big) = m.dirs.partition { d =>
       fs.getContentSummary(new HPath(resolveDir(table, d))).getLength <= smallBytes
     }
     if (small.size < 2) SmallCompaction(base, None)
     else {
-      // mergeSchema for the same reason as compact(): an evolved column
-      // present in only some of the small dirs must survive the fold
-      val merged0 = spark.read.option("mergeSchema", "true")
-        .parquet(small.map(d => resolveDir(table, d)): _*)
+      // the recorded schema for the same reason as compact(): an evolved
+      // column present in only some of the small dirs must survive the fold
+      val merged0 = relation(spark, table, m, small)
       val merged = transform.map(_(merged0))
         .getOrElse(merged0.coalesce(numFiles))
       beforeCommit()
@@ -1384,12 +1442,8 @@ object AtomicLanding {
   final case class LinkedSnapshot(rootVersion: Long, members: Map[String, Long])
 
   /** The published root generation, if any publish ever completed. */
-  def currentRootVersion(root: String): Option[Long] = {
-    val p = hp(root, RootPointer)
-    val fs = fsOf(p)
-    if (fs.exists(p)) Some(readUtf8(fs, p).trim.stripPrefix("r-").toLong)
-    else None
-  }
+  def currentRootVersion(root: String): Option[Long] =
+    readIfExists(hp(root, RootPointer)).map(_.trim.stripPrefix("r-").toLong)
 
   /** Resolve the live root generation to its member pins — ONE read;
     * every member then reads via [[readVersion]] at its pin, so the
@@ -1402,17 +1456,14 @@ object AtomicLanding {
     * [[readVersion]] gives tables. Retained generations (see
     * [[vacuumLinked]]'s `retainRoots`) stay resolvable after
     * maintenance; reclaimed ones return None. */
-  def linkedSnapshotAt(root: String, v: Long): Option[LinkedSnapshot] = {
-    val p = hp(root, "roots", rootName(v))
-    if (!fsOf(p).exists(p)) None
-    else Some(LinkedSnapshot(v,
-      readUtf8(fsOf(p), p).split("\n").toSeq
+  def linkedSnapshotAt(root: String, v: Long): Option[LinkedSnapshot] =
+    readIfExists(hp(root, "roots", rootName(v))).map(text => LinkedSnapshot(v,
+      text.split("\n").toSeq
         .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
         .map { l =>
           val i = l.lastIndexOf(' ')
           l.substring(0, i) -> l.substring(i + 1).toLong
         }.toMap))
-  }
 
   /** Publish a consistent member-version set as the next root
     * generation. Members must already be committed [[AtomicLanding]]

@@ -583,7 +583,7 @@ object LlmPipeline {
           d, append = true, evolveSchema = true)
         d
       }
-      graft.land.AtomicLanding.read(s, tbl, mergeSchema = true)
+      graft.land.AtomicLanding.read(s, tbl)
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("n_chars").isNull, 1L).otherwise(0L)).as("n_missing"),
           sum(coalesce(col("n_chars"), lit(0L))).as("sum_new"))

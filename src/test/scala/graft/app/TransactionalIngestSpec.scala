@@ -3,7 +3,7 @@ package graft.app
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.TestSpark
+import graft.{JobCounter, TestSpark}
 import graft.land.AtomicLanding
 import graft.model.CatalogEntry
 import graft.queries.Spool
@@ -325,5 +325,84 @@ class TransactionalIngestSpec extends AnyFunSuite {
       "a resolved snapshot must be immune to later publishes")
     val Some((landNew, catNew)) = TransactionalIngest.snapshot(spark, root)
     assert(catNew.count() == 2 && landNew.count() > nOld)
+  }
+
+  /** `max(lastExtTime)` of the catalog member the live root pins, by
+    * aggregate — what the watermark of record must equal. */
+  private def pinnedMax(root: String): Option[Timestamp] =
+    TransactionalIngest.snapshot(spark, root).flatMap { case (_, cat) =>
+      Option(cat.agg(max("lastExtTime")).head().getTimestamp(0))
+    }
+
+  private def run(root: String, id: Long, w: Option[String],
+      beforeRootSwing: () => Unit = () => ()): Unit = {
+    TransactionalIngest.ingest(spark, root,
+      docs.filter(col("doc_id") >= id * 10 && col("doc_id") < id * 10 + 10),
+      entry(s"e$id").copy(lastExtTime = w.map(Timestamp.valueOf)),
+      batchId = Some(id), beforeRootSwing = beforeRootSwing)
+    ()
+  }
+
+  test("the watermark of record is a catalog manifest mark: max(lastExtTime) of the pinned member to the microsecond, read with no Spark job") {
+    val root = freshRoot()
+    assert(TransactionalIngest.highestWatermark(spark, root).isEmpty)
+    run(root, 1, None) // a run without a watermark stamps nothing
+    assert(TransactionalIngest.highestWatermark(spark, root).isEmpty)
+    for ((w, id) <- Seq("2024-01-10 00:00:00.123456", "2024-01-12 08:30:00.000001",
+        "2024-01-11 00:00:00.999999").zip(Seq(2L, 3L, 4L))) {
+      run(root, id, Some(w))
+      val (hw, jobs) = JobCounter.jobsDuring(spark)(
+        TransactionalIngest.highestWatermark(spark, root))
+      assert(jobs == 0, s"highestWatermark ran $jobs Spark jobs")
+      assert(hw.isDefined && hw == pinnedMax(root), s"$hw vs ${pinnedMax(root)}")
+    }
+    // a lower watermark never regresses the mark: the max stays
+    assert(TransactionalIngest.highestWatermark(spark, root).contains(
+      Timestamp.valueOf("2024-01-12 08:30:00.000001")))
+  }
+
+  test("a crash before the root swing leaves the watermark at the pinned generation's value") {
+    val root = freshRoot()
+    run(root, 1, Some("2024-01-10 00:00:00.5"))
+    intercept[RuntimeException] {
+      run(root, 2, Some("2024-02-01 00:00:00.25"),
+        () => throw new RuntimeException("crash before the root swing"))
+    }
+    // the catalog member committed the newer run (and its mark), but the
+    // root still pins the older generation
+    val catalogT = s"$root/${TransactionalIngest.CatalogMember}"
+    assert(AtomicLanding.currentVersion(catalogT).contains(1L))
+    assert(TransactionalIngest.highestWatermark(spark, root).contains(
+      Timestamp.valueOf("2024-01-10 00:00:00.5")))
+    run(root, 2, Some("2024-02-01 00:00:00.25")) // the retry publishes it
+    assert(TransactionalIngest.highestWatermark(spark, root).contains(
+      Timestamp.valueOf("2024-02-01 00:00:00.25")))
+  }
+
+  test("a catalog manifest without the mark falls back to the aggregate, and the next stamp carries its max") {
+    val root = freshRoot()
+    run(root, 1, Some("2024-03-01 00:00:00.000123"))
+    run(root, 2, Some("2024-03-05 00:00:00.000456"))
+    val before = TransactionalIngest.highestWatermark(spark, root)
+    // strip the mark from the pinned catalog manifest: the shape of a
+    // root written before the mark existed
+    val catalogT = s"$root/${TransactionalIngest.CatalogMember}"
+    val v = AtomicLanding.linkedSnapshot(root).get.members(TransactionalIngest.CatalogMember)
+    val mPath = java.nio.file.Paths.get(catalogT, "manifests", f"m-$v%010d")
+    val text = new String(java.nio.file.Files.readAllBytes(mPath), "UTF-8")
+    java.nio.file.Files.write(mPath, text.split("\n")
+      .filterNot(_.startsWith(s"# wmark ${TransactionalIngest.WatermarkMark} "))
+      .mkString("\n").getBytes("UTF-8"))
+    assert(AtomicLanding.manifestOf(catalogT, v).marks.get(
+      TransactionalIngest.WatermarkMark).isEmpty)
+    val (legacy, jobs) = JobCounter.jobsDuring(spark)(
+      TransactionalIngest.highestWatermark(spark, root))
+    assert(jobs > 0, "a markless manifest answers by aggregate")
+    assert(legacy == before && legacy == pinnedMax(root))
+    // a run with a LOWER watermark than the legacy rows: the first stamp
+    // on the markless catalog is seeded with their max
+    run(root, 3, Some("2024-03-02 00:00:00"))
+    assert(TransactionalIngest.highestWatermark(spark, root) == before)
+    assert(pinnedMax(root) == before)
   }
 }

@@ -252,7 +252,7 @@ class AtomicLandingSpec extends AnyFunSuite {
     assert(addEx.getMessage.contains("evolveSchema"))
     // ...and with it, merged reads surface the new column as null for old rows
     AtomicLanding.commit(evolved, table, append = true, evolveSchema = true)
-    val merged = AtomicLanding.read(spark, table, mergeSchema = true)
+    val merged = AtomicLanding.read(spark, table)
     assert(merged.columns.toSet == Set("id", "name", "score"))
     assert(merged.count() == 3)
     assert(merged.filter(col("score").isNull).count() == 2)
@@ -278,6 +278,37 @@ class AtomicLandingSpec extends AnyFunSuite {
       AtomicLanding.commit(Seq((5L, "e")).toDF("id", "name"), table, append = true)
     }
     assert(legacy.getMessage.contains("score"))
+  }
+
+  test("a default read keeps an evolved column whichever dir's path sorts first") {
+    import spark.implicits._
+    val table = freshTable()
+    AtomicLanding.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), table)
+    val old = AtomicLanding.dirsOfVersion(table, 0L).head
+    AtomicLanding.commit(Seq((3L, "c", 0.5)).toDF("id", "name", "score"),
+      table, append = true, evolveSchema = true)
+    // commit dirs are random data/<uuid> names: put the pre-evolution dir
+    // first in path order ('-' sorts below every hex digit), the layout
+    // in which a one-footer schema sample misses `score`
+    val first = "data/0-pre-evolution"
+    java.nio.file.Files.move(java.nio.file.Paths.get(table, old),
+      java.nio.file.Paths.get(table, first))
+    val v = AtomicLanding.currentVersion(table).get
+    val mPath = java.nio.file.Paths.get(table, "manifests", f"m-$v%010d")
+    val text = new String(java.nio.file.Files.readAllBytes(mPath), "UTF-8")
+    java.nio.file.Files.write(mPath,
+      text.split("\n").map(l => if (l == old) first else l).mkString("\n")
+        .getBytes("UTF-8"))
+    assert(AtomicLanding.dirsOfVersion(table, v).sorted.head == first)
+
+    for ((how, df) <- Seq(
+        "read" -> AtomicLanding.read(spark, table),
+        "readPruned" -> AtomicLanding.readPruned(spark, table, "id", 0L, 10L))) {
+      assert(df.columns.toSeq == Seq("id", "name", "score"), how)
+      val rows = df.orderBy("id").collect()
+        .map(r => (r.getLong(0), Option(r.get(2)))).toSeq
+      assert(rows == Seq((1L, None), (2L, None), (3L, Some(0.5))), how)
+    }
   }
 
   test("append nullability: NARROWING into a relaxed live column is accepted, WIDENING is refused") {
@@ -396,7 +427,7 @@ class AtomicLandingSpec extends AnyFunSuite {
     // original dirs
     AtomicLanding.compact(spark, table, numFiles = 1)
     AtomicLanding.vacuum(table)
-    val df = AtomicLanding.read(spark, table, mergeSchema = true)
+    val df = AtomicLanding.read(spark, table)
     assert(df.columns.toSet == Set("id", "name", "score"))
     assert(df.filter(col("score") === 0.5).count() == 1)
     // the manifest schema still advertises the column, and enforcement
@@ -410,7 +441,7 @@ class AtomicLandingSpec extends AnyFunSuite {
       t2, append = true, evolveSchema = true)
     AtomicLanding.compactSmall(spark, t2, smallBytes = 1024 * 1024)
     AtomicLanding.vacuum(t2)
-    val df2 = AtomicLanding.read(spark, t2, mergeSchema = true)
+    val df2 = AtomicLanding.read(spark, t2)
     assert(df2.columns.toSet == Set("id", "name", "extra"))
     assert(df2.filter(col("extra") === 7L).count() == 1)
   }
@@ -438,7 +469,7 @@ class AtomicLandingSpec extends AnyFunSuite {
     AtomicLanding.commit(Seq((5L, "e", 1.5)).toDF("id", "name", "score"),
       table, append = true)
     // ...and the data is all there
-    val df = AtomicLanding.read(spark, table, mergeSchema = true)
+    val df = AtomicLanding.read(spark, table)
     assert(df.count() == 5)
     assert(df.filter(col("score").isNotNull).count() == 2)
   }
