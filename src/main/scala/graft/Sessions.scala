@@ -37,6 +37,24 @@ object Sessions {
       // local sessions park it in a temp dir deleted at JVM exit
       .config("spark.sql.warehouse.dir", graft.queries.Spool.dir("graft-warehouse"))
       .config("spark.ui.enabled", "false")
+      // A plan shape compiles once per JVM (DESIGN.md principle 19).
+      // Spark keys its codegen cache on (task context loader, source).
+      // With artifact isolation on, every cloned session (each streaming
+      // query, each persist's CacheManager clone) tags its jobs with its
+      // own artifact state, and the executor gives each state a fresh
+      // class loader: q_stream_window recompiled 13 classes per run and
+      // Dedup.minhashNearDupPairs 20, from identical source. graft adds
+      // no session artifacts, so isolation buys it nothing.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // The default 100 entries sit below the working set, so the LRU
+      // evicts a class before its reuse: one ops_small pass loads 101
+      // classes (95-100 recompiles a warm pass), one pass of the coverage
+      // suite at sf0.001 about 2,560 (2,685 cached after three passes).
+      // 4,000 holds the suite with room for one-off classes, which the
+      // LRU drops first. Holding the suite's classes cost about 18 MB of
+      // metaspace and 71 MB of heap after GC over 100 entries, and cut a
+      // warm pass's compiles from about 3,480 (29-35 s) to 39-68.
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
 
   def cpusFromEnv: Int =

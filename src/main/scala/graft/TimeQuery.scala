@@ -3,8 +3,10 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.GraftListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.queries.Spool
 
@@ -17,10 +19,14 @@ import graft.queries.Spool
   * evaluation, so when the two timed counts differ the line reads
   * `jobs=8-9`. `spool=` is the time the untimed warm-up spent building
   * the query's fixture spools ([[graft.queries.Spool]]): the first-run
-  * cost that the timed passes never see. Before the first query, `main`
-  * evaluates [[WarmQuery]] once, untimed, so the first row's `spool=`
-  * does not carry the JVM's cold start. With no names it covers every
-  * query and adds a total line.
+  * cost that the timed passes never see. `compiles=<cold>/<warm>` counts
+  * the classes Janino compiled during the warm-up and during the two
+  * timed evaluations: a plan shape compiles once per JVM, so a warm count
+  * above 0 names a query whose generated source changes per evaluation
+  * or whose classes fell out of the codegen cache. Before the first
+  * query, `main` evaluates [[WarmQuery]] once, untimed, so the first
+  * row's `spool=` and cold compiles do not carry the JVM's cold start.
+  * With no names it covers every query and adds a total line.
   * `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.TimeQuery [q_x ...]"` */
 object TimeQuery {
 
@@ -34,17 +40,26 @@ object TimeQuery {
     Bench.materialize(SparkEntry.queries(WarmQuery)(spark, sfDir))
     val rows = profile(spark, sfDir, names)
     rows.foreach(r => println(line(r)))
-    if (all)
+    if (all) {
+      val (cold, warm) = (sum(rows.flatMap(_.cold)), sum(rows.flatMap(_.warm)))
       println(f"TIME_TOTAL queries=${rows.size} jobs=${range(rows.map(_.jobs).sum,
         rows.map(_.maxJobs).sum)} wall=${rows.map(_.wallS).sum}%.2f s " +
-        f"spool=${rows.map(_.spoolS).sum}%.2f")
+        f"spool=${rows.map(_.spoolS).sum}%.2f " +
+        f"compile_s=${cold.seconds}%.2f/${warm.seconds}%.2f compiles=${cold.count}/${warm.count}")
+    }
     spark.stop()
   }
 
-  /** `TIME q 0.12 s jobs=7 spool=0.00`, or `jobs=7-8` when the two
-    * timed evaluations counted different jobs. */
-  def line(r: Timing): String =
-    f"TIME ${r.name} ${r.wallS}%.2f s jobs=${range(r.jobs, r.maxJobs)} spool=${r.spoolS}%.2f"
+  /** `TIME q 0.12 s jobs=7 spool=0.00 compiles=12/0`, or `jobs=7-8` when
+    * the two timed evaluations counted different jobs. A timing without
+    * compile counts prints no `compiles=` column. */
+  def line(r: Timing): String = {
+    val compiles = for (c <- r.cold; w <- r.warm) yield s" compiles=${c.count}/${w.count}"
+    f"TIME ${r.name} ${r.wallS}%.2f s jobs=${range(r.jobs, r.maxJobs)} " +
+      f"spool=${r.spoolS}%.2f${compiles.getOrElse("")}"
+  }
+
+  private def sum(cs: Seq[Compiles]): Compiles = cs.foldLeft(Compiles(0, 0))(_ + _)
 
   private def range(lo: Long, hi: Long): String = if (lo == hi) s"$lo" else s"$lo-$hi"
 
@@ -56,11 +71,25 @@ object TimeQuery {
   /** The JVM warm-up query: it reads one table and builds no spool. */
   private val WarmQuery = "q_agg_pricing"
 
+  /** The classes Janino compiled over some evaluations, and the seconds
+    * it spent on them. */
+  final case class Compiles(count: Long, seconds: Double) {
+    def +(o: Compiles): Compiles = Compiles(count + o.count, seconds + o.seconds)
+    def -(o: Compiles): Compiles = Compiles(count - o.count, seconds - o.seconds)
+  }
+
+  /** Spark's JVM-wide compile counters: every codegen cache miss
+    * compiles once and adds to both. */
+  private def compiledSoFar(): Compiles =
+    Compiles(CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime / 1e9)
+
   /** One query's profile: the smaller and the larger job count of the
-    * two timed evaluations, the faster timed wall, and the spool build
-    * seconds of its warm-up. */
+    * two timed evaluations, the faster timed wall, the spool build
+    * seconds of its warm-up, and the compiles of the warm-up (`cold`)
+    * and of both timed evaluations (`warm`). */
   final case class Timing(name: String, jobs: Long, maxJobs: Long, wallS: Double,
-      spoolS: Double)
+      spoolS: Double, cold: Option[Compiles] = None, warm: Option[Compiles] = None)
 
   /** One [[Timing]] per query, in the order given; names that are not
     * coverage queries fail before any query runs. */
@@ -77,8 +106,11 @@ object TimeQuery {
     try names.map { name =>
       val fn = qs(name)
       val spool0 = Spool.buildSeconds
+      val cold0 = compiledSoFar()
       Bench.materialize(fn(spark, sfDir)) // warm-up
+      val cold = compiledSoFar() - cold0
       val spool = Spool.buildSeconds - spool0
+      val warm0 = compiledSoFar()
       val passes = (1 to 2).map { _ =>
         GraftListenerBus.drain(sc)
         val j0 = jobs.get()
@@ -88,7 +120,8 @@ object TimeQuery {
         GraftListenerBus.drain(sc)
         (jobs.get() - j0, wall)
       }
-      Timing(name, passes.map(_._1).min, passes.map(_._1).max, passes.map(_._2).min, spool)
+      Timing(name, passes.map(_._1).min, passes.map(_._1).max, passes.map(_._2).min, spool,
+        Some(cold), Some(compiledSoFar() - warm0))
     } finally sc.removeSparkListener(listener)
   }
 }

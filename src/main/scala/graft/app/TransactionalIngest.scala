@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions
 import graft.land.AtomicLanding
@@ -48,10 +48,12 @@ object TransactionalIngest {
   val LandingMember = "landing"
   val CatalogMember = "catalog"
 
-  private def entryDf(spark: SparkSession, e: CatalogEntry): DataFrame = {
-    import spark.implicits._
-    Seq(e).toDS().toDF()
-  }
+  /** Derived once: `spark.implicits`' product encoder reflects over the
+    * case class on every call. */
+  private val entryEncoder = Encoders.product[CatalogEntry]
+
+  private def entryDf(spark: SparkSession, e: CatalogEntry): DataFrame =
+    spark.createDataset(Seq(e))(entryEncoder).toDF()
 
   /** Spark's load() glob-expands its paths, so an inbound object named
     * with glob metacharacters ("data[1].csv") would either match a

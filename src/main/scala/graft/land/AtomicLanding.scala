@@ -218,7 +218,7 @@ object AtomicLanding {
     * dirs ABSOLUTELY (path- or scheme-qualified), and those resolve
     * as-is. Dir entries stay opaque strings everywhere else, so the
     * two kinds coexist in one manifest as a clone diverges. */
-  private[land] def resolveDir(table: String, d: String): String =
+  private def resolveDir(table: String, d: String): String =
     if (d.startsWith("/") || d.contains(":/")) d else s"$table/$d"
 
   /** The batch-id HIGH-WATER MARK of the live snapshot. Lives INSIDE
@@ -267,7 +267,7 @@ object AtomicLanding {
     * manifest written before schema lines existed falls back to
     * merged-footer inference: the only place footers are read for a
     * schema. */
-  private def relation(spark: SparkSession, table: String, m: Manifest,
+  private[land] def relation(spark: SparkSession, table: String, m: Manifest,
       dirs: Seq[String]): DataFrame = {
     val paths = dirs.map(d => resolveDir(table, d))
     m.schema match {

@@ -40,9 +40,11 @@ object ChangeFeed {
 
   /** (added, removed) data dirs between two committed versions — the
     * bounded manifest-level delta that picks the serving path. */
-  def dirDelta(table: String, vOld: Long, vNew: Long): (Seq[String], Seq[String]) = {
-    val o = AtomicLanding.dirsOfVersion(table, vOld).toSet
-    val n = AtomicLanding.dirsOfVersion(table, vNew).toSet
+  def dirDelta(table: String, vOld: Long, vNew: Long): (Seq[String], Seq[String]) =
+    delta(AtomicLanding.dirsOfVersion(table, vOld), AtomicLanding.dirsOfVersion(table, vNew))
+
+  private def delta(oldDirs: Seq[String], newDirs: Seq[String]): (Seq[String], Seq[String]) = {
+    val (o, n) = (oldDirs.toSet, newDirs.toSet)
     ((n -- o).toSeq.sorted, (o -- n).toSeq.sorted)
   }
 
@@ -52,18 +54,21 @@ object ChangeFeed {
   def changes(spark: SparkSession, table: String, vOld: Long, vNew: Long,
       key: String): DataFrame = {
     require(vNew >= vOld, s"changes wants vOld <= vNew, got $vOld > $vNew")
-    val (added, removed) = dirDelta(table, vOld, vNew)
+    val mNew = AtomicLanding.manifestOf(table, vNew)
+    val (added, removed) = delta(AtomicLanding.dirsOfVersion(table, vOld), mNew.dirs)
     if (removed.isEmpty) {
-      // append fast path: delta = the added dirs, read directly
+      // append fast path: delta = the added dirs, read directly at the
+      // schema vNew records (no inference job; evolved columns kept
+      // whichever added dir sorts first)
       val adds =
-        if (added.isEmpty) AtomicLanding.readVersion(spark, table, vNew).limit(0)
-        else spark.read.parquet(added.map(d => AtomicLanding.resolveDir(table, d)): _*)
+        if (added.isEmpty) AtomicLanding.relation(spark, table, mNew, mNew.dirs).limit(0)
+        else AtomicLanding.relation(spark, table, mNew, added)
       val dataCols = adds.columns.filter(_ != key).toSeq
       adds.select(lit("insert").as("change_type") +: col(key) +:
         dataCols.map(col): _*)
     } else {
       val pre = AtomicLanding.readVersion(spark, table, vOld)
-      val post = AtomicLanding.readVersion(spark, table, vNew)
+      val post = AtomicLanding.relation(spark, table, mNew, mNew.dirs)
       val dataCols = pre.columns.filter(_ != key).toSeq
       require(post.columns.filter(_ != key).toSeq == dataCols,
         "keyed snapshot diff requires both versions to share a schema " +

@@ -37,4 +37,16 @@ class TimeQuerySpec extends AnyFunSuite {
     assert(TimeQuery.line(TimeQuery.Timing("q_sessions", 8, 8, 1.234, 0.0)) ==
       "TIME q_sessions 1.23 s jobs=8 spool=0.00")
   }
+
+  test("a TIME line ends with the warm-up's and the timed evaluations' compiles") {
+    val r = TimeQuery.profile(spark, TestSpark.Sf0001, Seq("q_stream_window")).head
+    assert(r.cold.exists(c => c.count >= 0 && c.seconds >= 0), r)
+    // each evaluation starts a new streaming query; its classes are
+    // already in the codegen cache
+    assert(r.warm.map(_.count).contains(0L), r)
+    assert(TimeQuery.line(r).endsWith(s" compiles=${r.cold.get.count}/0"))
+    assert(TimeQuery.line(TimeQuery.Timing("q_sessions", 8, 9, 1.234, 0.5,
+      Some(TimeQuery.Compiles(12, 0.3)), Some(TimeQuery.Compiles(2, 0.01)))) ==
+      "TIME q_sessions 1.23 s jobs=8-9 spool=0.50 compiles=12/2")
+  }
 }

@@ -75,4 +75,30 @@ class ChangeFeedSpec extends AnyFunSuite {
     assert(ChangeFeed.changes(spark, t, 1L, 1L, "id").count() == 0L)
     assert(ChangeFeed.changes(spark, t, 3L, 3L, "id").count() == 0L)
   }
+
+  test("append fast path reads the added dirs at the new version's schema, with no job") {
+    val t = Spool.dir("graft-cdf-evolve") + "/t"
+    AtomicLanding.commit(Seq((1L, "a")).toDF("id", "name"), t)
+    AtomicLanding.commit(Seq((2L, "b")).toDF("id", "name"), t, append = true)
+    val pre = AtomicLanding.dirsOfVersion(t, 1L).last
+    AtomicLanding.commit(Seq((3L, "c", 0.5)).toDF("id", "name", "score"), t,
+      append = true, evolveSchema = true)
+    // put the pre-evolution added dir first in path order ('-' sorts below
+    // every hex digit), where a one-footer schema sample misses `score`
+    val first = "data/0-pre-evolution"
+    java.nio.file.Files.move(java.nio.file.Paths.get(t, pre), java.nio.file.Paths.get(t, first))
+    for (v <- 1L to 2L) {
+      val m = java.nio.file.Paths.get(t, "manifests", f"m-$v%010d")
+      val text = new String(java.nio.file.Files.readAllBytes(m), "UTF-8")
+      java.nio.file.Files.write(m,
+        text.split("\n").map(l => if (l == pre) first else l).mkString("\n").getBytes("UTF-8"))
+    }
+    val (added, _) = ChangeFeed.dirDelta(t, 0L, 2L)
+    assert(added.size == 2 && added.head == first)
+    val (df, jobs) = graft.JobCounter.jobsDuring(spark)(ChangeFeed.changes(spark, t, 0L, 2L, "id"))
+    assert(df.columns.toSeq == Seq("change_type", "id", "name", "score"))
+    assert(df.orderBy("id").collect().map(r => (r.getLong(1), Option(r.get(3)))).toSeq ==
+      Seq((2L, None), (3L, Some(0.5))))
+    assert(jobs == 0L, "building the change feed ran Spark jobs")
+  }
 }
