@@ -195,11 +195,11 @@ object TransactionalIngest {
     // obj_name derives from the scan's `path` column via
     // [[rawPathName]] — the name must match the relay listing's
     // Path.getName at archive time or a covered retry would skip the
-    // object forever.
+    // object forever. An empty batch is a local relation, so its
+    // commit writes on the driver with no Spark job.
     val data =
       if (covered || listed.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
       else spark.read.format("binaryFile")
         .load(listed.map(p => globEscape(p.toString)): _*)
         .select(rawPathName(col("path")).as("obj_name"),

@@ -61,17 +61,24 @@ class FileRelay(conf: Configuration = new Configuration()) {
     * arriving under the same prefix after that snapshot is never swept
     * in ([[moveAll]]'s no-fresh-listing rule, pushed all the way to the
     * caller: a transactional ingest lists once, lands exactly that set,
-    * and archives exactly that set). A source already absent is skipped,
-    * and a copy that crashed before its delete re-copies (overwrite) —
-    * so a retried partial move converges. */
+    * and archives exactly that set). Each object moves by a rename
+    * within its file system — one metadata operation, a server-side
+    * copy on S3A like the reference's `copy_object` — and falls back to
+    * copy (overwrite) + delete across file systems or when the rename
+    * is refused (say, by a destination left from a crashed attempt). A
+    * source already absent is skipped, so a retried partial move
+    * converges. */
   def moveExact(paths: Seq[Path], destPrefix: String): Seq[Path] = {
     val destDir = new Path(destPrefix)
     val dfs = fs(destDir)
     dfs.mkdirs(destDir)
     paths.filter(p => fs(p).exists(p)).map { src =>
       val dest = new Path(destDir, src.getName)
-      FileUtil.copy(fs(src), src, dfs, dest, false, true, conf)
-      fs(src).delete(src, false)
+      val sfs = fs(src)
+      if (sfs.getUri != dfs.getUri || !sfs.rename(src, dest)) {
+        FileUtil.copy(sfs, src, dfs, dest, false, true, conf)
+        sfs.delete(src, false)
+      }
       dest
     }
   }

@@ -2,7 +2,10 @@ package graft.ingest
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.jdbc.{JDBCOptions, JdbcUtils}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.jdbc.JdbcDialects
 import graft.model._
 
 /** Extraction SQL pushed to the source database — re-expression of
@@ -27,19 +30,23 @@ object ExtractionSql {
     * reference emits `ORDER BY ... LIMIT 1` for every flavor; LIMIT is
     * invalid on Oracle (< 23c) and SQL Server, so the single-row clause is
     * branched per dialect (`FETCH FIRST` / `TOP 1`) — same semantics.
+    * NULLs are filtered out: Postgres, Oracle and Derby sort them FIRST
+    * under `DESC`, so one NULL watermark cell would otherwise be the
+    * probed max (`max()` ignores NULLs; so does this probe).
     */
   def probeMax(db: DbType, schema: Option[String], table: String,
       extCol: String): String = {
-    val t = qualified(db, schema, table)
+    val from = s"from ${qualified(db, schema, table)} WHERE $extCol IS NOT NULL " +
+      s"ORDER BY $extCol DESC"
     db match {
       case DbType.Oracle =>
-        s"select $extCol from $t ORDER BY $extCol DESC FETCH FIRST 1 ROWS ONLY"
+        s"select $extCol $from FETCH FIRST 1 ROWS ONLY"
       case c: DbType.Custom if c.fetchFirst =>
-        s"select $extCol from $t ORDER BY $extCol DESC FETCH FIRST 1 ROWS ONLY"
+        s"select $extCol $from FETCH FIRST 1 ROWS ONLY"
       case DbType.SqlServer =>
-        s"select TOP 1 $extCol from $t ORDER BY $extCol DESC"
+        s"select TOP 1 $extCol $from"
       case _ =>
-        s"select $extCol from $t ORDER BY $extCol DESC LIMIT 1"
+        s"select $extCol $from LIMIT 1"
     }
   }
 
@@ -98,20 +105,35 @@ final class JdbcTableSource(
     numPartitions: Int = 1,
     partitionColumn: Option[String] = None) extends TableSource {
 
-  private def reader(query: String) =
-    spark.read.format("jdbc")
-      .option("driver", db.driver)
-      .option("url", db.url(host, port, database))
-      .option("user", user)
-      .option("password", password)
-      .option("query", query)
+  private val connection: Map[String, String] = Map(
+    "driver" -> db.driver,
+    "url" -> db.url(host, port, database),
+    "user" -> user, "password" -> password)
 
+  private def reader(query: String) =
+    spark.read.format("jdbc").options(connection + ("query" -> query))
+
+  /** The reference collects a 1-row ORDER BY DESC LIMIT 1 result
+    * (`dataIngestionUtils.py:183-184`); the same single round trip here,
+    * on one driver connection from Spark's own JDBC connection factory
+    * (same driver registration and connection providers as a read), so
+    * the probe is no Spark job. The value is kept at the microsecond
+    * precision a Spark JDBC read keeps, through the dialect's timestamp
+    * hook, so the watermark, the batch id and the interval literals are
+    * what a `spark.read` probe would give. */
   def probeMax(extCol: String): Option[Timestamp] = {
-    // The reference collects a 1-row ORDER BY DESC LIMIT 1 result
-    // (`dataIngestionUtils.py:183-184`); same single round trip here.
-    val rows = reader(ExtractionSql.probeMax(db, schema, table, extCol))
-      .load().collect()
-    rows.headOption.map(_.getTimestamp(0))
+    val sql = ExtractionSql.probeMax(db, schema, table, extCol)
+    val opts = new JDBCOptions(connection + ("query" -> sql))
+    val dialect = JdbcDialects.get(opts.url)
+    JdbcUtils.withConnection(opts) { c =>
+      val st = c.createStatement()
+      try {
+        val rs = st.executeQuery(sql)
+        if (!rs.next()) None
+        else Option(rs.getTimestamp(1)).map(t => DateTimeUtils.toJavaTimestamp(
+          DateTimeUtils.fromJavaTimestamp(dialect.convertJavaTimestampToTimestamp(t))))
+      } finally st.close()
+    }
   }
 
   /** The option map for a bounded parallel scan. Spark's JDBC source
@@ -121,10 +143,7 @@ final class JdbcTableSource(
     * Exposed for unit tests; [[readFull]] applies it.
     */
   def partitionedScanOptions(pc: String, lower: String, upper: String): Map[String, String] =
-    Map(
-      "driver" -> db.driver,
-      "url" -> db.url(host, port, database),
-      "user" -> user, "password" -> password,
+    connection ++ Map(
       "dbtable" -> s"(${ExtractionSql.full(db, schema, table)}) src",
       "partitionColumn" -> pc,
       "lowerBound" -> lower,
@@ -145,11 +164,8 @@ final class JdbcTableSource(
         val (lo, hi) = (bounds.headOption.map(_.get(0)).orNull,
                         bounds.headOption.map(_.get(1)).orNull)
         if (lo == null || hi == null) reader(base).load() // empty table: 1 task
-        else {
-          val r = spark.read.format("jdbc")
-          partitionedScanOptions(pc, lo.toString, hi.toString)
-            .foldLeft(r)((acc, kv) => acc.option(kv._1, kv._2)).load()
-        }
+        else spark.read.format("jdbc")
+          .options(partitionedScanOptions(pc, lo.toString, hi.toString)).load()
       case _ => reader(base).load()
     }
   }

@@ -5,7 +5,11 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path => HPath}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit, max, when}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -29,7 +33,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * }}}
   *
   * Commit protocol: (1) write the batch into a fresh staging dir;
-  * (2) require the writer's `_SUCCESS` marker; (3) move the staging dir
+  * (2) require the writer's completion mark — Spark's `_SUCCESS`
+  * marker, or, for rows already on the driver, the driver writer's
+  * `close()` returning (see [[stage]]); (3) move the staging dir
   * under `data/` (same-filesystem rename — the dir is still unreachable:
   * no manifest lists it); (4) write the next manifest (previous dirs +
   * new dir for an append, just the new dir for an overwrite);
@@ -906,6 +912,33 @@ object AtomicLanding {
     case other => other
   }
 
+  /** Steps (1) and (2): write `df` into `staging` and require its
+    * completion mark. A plan that optimizes to a [[LocalRelation]] holds
+    * its rows on the driver already (a `createDataFrame(Seq...)` run
+    * record, an empty batch), so the driver writes them itself through
+    * the output writer Spark's write tasks use — the same codec, schema
+    * conversion and footer metadata, with no Spark job. There the mark
+    * is `close()` returning: a failed write or close throws before the
+    * dir is moved. Every other plan is a `df.write` job and must leave
+    * `_SUCCESS`. */
+  private def stage(df: DataFrame, staging: HPath, fs: FileSystem): Unit =
+    df.queryExecution.optimizedPlan match {
+      case r: LocalRelation if !r.isStreaming =>
+        val spark = df.sparkSession
+        val job = Job.getInstance(spark.sessionState.newHadoopConf())
+        val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, r.schema)
+        val id = staging.getName
+        val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+          new TaskAttemptID(new TaskID(new JobID(id, 0), TaskType.MAP, 0), 0))
+        val file = new HPath(staging, s"part-00000-$id-c000${factory.getFileExtension(ctx)}")
+        val writer = factory.newInstance(file.toString, r.schema, ctx)
+        try r.data.foreach(writer.write) finally writer.close()
+      case _ =>
+        df.write.parquet(staging.toString)
+        require(fs.exists(new HPath(staging, "_SUCCESS")),
+          s"writer did not mark $staging complete; refusing to publish")
+    }
+
   /** [[commit]] plus the manifest-relative name of the dir this commit
     * wrote — what [[compactSmallFrom]] needs to tell its fold output
     * apart from concurrently-appended dirs that rode the rebase. */
@@ -973,10 +1006,7 @@ object AtomicLanding {
     }
 
     val staging = hp(table, ".staging", UUID.randomUUID().toString)
-
-    df.write.parquet(staging.toString)
-    require(fs.exists(new HPath(staging, "_SUCCESS")),
-      s"writer did not mark $staging complete; refusing to publish")
+    stage(df, staging, fs)
 
     val dirName = staging.getName
     val dataDir = hp(table, "data", dirName)

@@ -102,6 +102,36 @@ class IngestionJobSpec extends AnyFunSuite {
     assert(e1.getMessage.contains("landing.atomic"))
   }
 
+  test("a transactional database run over live JDBC starts exactly one Spark job: the landing write") {
+    import java.sql.DriverManager
+    val derby = DbType.Custom("derby", "org.apache.derby.iapi.jdbc.AutoloadedDriver",
+      (_, _, d) => s"jdbc:derby:memory:$d",
+      fetchFirst = true, tsLiteralFn = Some(s => s"TIMESTAMP('$s')"))
+    val c = DriverManager.getConnection("jdbc:derby:memory:graftjob;create=true")
+    c.createStatement().execute("create table orders(id int, ts timestamp)")
+    def add(ids: Range): Unit = ids.foreach(i => c.createStatement().execute(
+      s"insert into orders values ($i, TIMESTAMP('2024-01-${"%02d".format(i)} 00:00:00'))"))
+    add(1 to 5)
+    val root = Spool.dir("graft-app-txnjdbc")
+    val store = new InMemoryMetadataStore(
+      sources = Seq(srcSys(1, IngestionPattern.Database, s"$root/inbound")),
+      assets = Seq(DataAsset(9, "orders", None, TriggerMechanism.TimeDriven,
+        ExtractionMethod.Incremental, Some("ts"))))
+    val env = newEnv(store, root).copy(
+      config = cfg.copy(atomicLanding = true, transactionalCatalog = true),
+      sourceFactory = (s, _, asset, _, _) => new graft.ingest.JdbcTableSource(
+        s, derby, "ignored", 0, "graftjob", "", "", None, asset.srcTableName))
+    val dest = s"$root/raw/9/init/20240110120000"
+    def run(ts: String): Long = graft.JobCounter.jobsDuring(spark)(
+      IngestionJob.run(env, IngestionJob.Args(dest, 1, 9, s"1_9_$ts")))._2
+    assert(run("20240110120000") == 1, "first run: full extract + run record")
+    add(6 to 7)
+    assert(run("20240110130000") == 1, "incremental run: interval + run record")
+    val (land, cat) = TransactionalIngest.snapshot(spark, dest).get
+    assert(land.count() == 7 && cat.count() == 2)
+    c.close()
+  }
+
   test("maintain compacts a many-batch streaming table and keeps replay-skip") {
     import graft.land.AtomicLanding
     val table = Spool.dir("graft-app-mnt") + "/t"

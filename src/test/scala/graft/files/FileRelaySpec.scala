@@ -79,4 +79,15 @@ class FileRelaySpec extends AnyFunSuite {
     assert(relay.list(s"$t/in").isEmpty)
     assert(relay.list(s"$t/processed").map(_.getName).sorted == Seq("a.csv", "b.csv"))
   }
+
+  test("moveExact over a destination left with stale bytes leaves the source's bytes there and the source gone") {
+    val t = tmpDir(); val relay = new FileRelay()
+    relay.writeUtf8(new Path(s"$t/in/a.csv"), "fresh bytes")
+    relay.writeUtf8(new Path(s"$t/processed/a.csv"), "stale")
+    val moved = relay.moveExact(Seq(new Path(s"$t/in/a.csv")), s"$t/processed")
+    assert(moved == Seq(new Path(s"$t/processed/a.csv")))
+    assert(relay.readUtf8(new Path(s"$t/processed/a.csv")) == "fresh bytes")
+    assert(relay.list(s"$t/in").isEmpty)
+    assert(relay.list(s"$t/processed").map(_.getName) == Seq("a.csv"))
+  }
 }

@@ -10,13 +10,13 @@ class ExtractionSqlSpec extends AnyFunSuite {
 
   test("probe SQL is dialect-correct for all four flavors") {
     assert(ExtractionSql.probeMax(DbType.Postgres, Some("s"), "t", "ts") ==
-      "select ts from s.t ORDER BY ts DESC LIMIT 1")
+      "select ts from s.t WHERE ts IS NOT NULL ORDER BY ts DESC LIMIT 1")
     assert(ExtractionSql.probeMax(DbType.MySql, Some("s"), "t", "ts") ==
-      "select ts from t ORDER BY ts DESC LIMIT 1") // mysql: no schema qualify
+      "select ts from t WHERE ts IS NOT NULL ORDER BY ts DESC LIMIT 1") // mysql: no schema qualify
     assert(ExtractionSql.probeMax(DbType.Oracle, None, "t", "ts") ==
-      "select ts from t ORDER BY ts DESC FETCH FIRST 1 ROWS ONLY")
+      "select ts from t WHERE ts IS NOT NULL ORDER BY ts DESC FETCH FIRST 1 ROWS ONLY")
     assert(ExtractionSql.probeMax(DbType.SqlServer, None, "t", "ts") ==
-      "select TOP 1 ts from t ORDER BY ts DESC")
+      "select TOP 1 ts from t WHERE ts IS NOT NULL ORDER BY ts DESC")
   }
 
   test("incremental interval is half-open (last, max] with quoted literals") {

@@ -111,4 +111,48 @@ class JdbcSourceSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/r3").count() == 0)
     c.close()
   }
+
+  test("a NULL in the watermark column is never the probed max: the probe and an incremental run skip it") {
+    import graft.catalog.InMemoryMetadataStore
+    import graft.land.Landing
+    import graft.model.{DataAsset, ExtractionMethod, TriggerMechanism}
+    val c = DriverManager.getConnection("jdbc:derby:memory:graftsrc")
+    c.createStatement().execute("create table holey(id int, ts timestamp)")
+    c.createStatement().execute("insert into holey values " +
+      "(1, TIMESTAMP('2024-01-01 00:00:00')), (2, NULL), (3, TIMESTAMP('2024-01-03 00:00:00'))")
+    val src = new JdbcTableSource(TestSpark.spark, derbyDialect,
+      "ignored", 0, "graftsrc", "", "", None, "holey")
+    assert(src.probeMax("ts") == Some(java.sql.Timestamp.valueOf("2024-01-03 00:00:00")))
+
+    val store = new InMemoryMetadataStore()
+    val asset = DataAsset(12, "holey", None, TriggerMechanism.TimeDriven,
+      ExtractionMethod.Incremental, Some("ts"))
+    val out = Spool.dir("graft-jdbc-null")
+    val first = IncrementalExtractor.run(store, src, asset, 1, "h1",
+      land = df => Landing.parquet(df, s"$out/h1"))
+    assert(first.lastExtTime.contains(java.sql.Timestamp.valueOf("2024-01-03 00:00:00")))
+    c.createStatement().execute(
+      "insert into holey values (4, NULL), (5, TIMESTAMP('2024-01-05 00:00:00'))")
+    IncrementalExtractor.run(store, src, asset, 1, "h2",
+      land = df => Landing.parquet(df, s"$out/h2"))
+    val ids = TestSpark.spark.read.parquet(s"$out/h2").collect().map(_.getInt(0))
+    assert(ids.toSeq == Seq(5))
+    c.close()
+  }
+
+  test("probeMax of a nanosecond timestamp equals what a Spark JDBC read collects") {
+    val c = DriverManager.getConnection("jdbc:derby:memory:graftsrc")
+    c.createStatement().execute("create table fine(id int, ts timestamp)")
+    c.createStatement().execute(
+      "insert into fine values (1, TIMESTAMP('2024-03-01 12:34:56.123456789'))")
+    c.close()
+    val src = new JdbcTableSource(TestSpark.spark, derbyDialect,
+      "ignored", 0, "graftsrc", "", "", None, "fine")
+    val probed = src.probeMax("ts").get
+    val read = TestSpark.spark.read.format("jdbc")
+      .option("driver", derbyType.driver).option("url", "jdbc:derby:memory:graftsrc")
+      .option("query", "select ts from fine").load().collect().head.getTimestamp(0)
+    assert(probed == read)
+    assert(probed.getNanos == 123456000, "a Spark JDBC read keeps microseconds")
+  }
 }
