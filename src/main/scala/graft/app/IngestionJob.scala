@@ -169,11 +169,13 @@ object IngestionJob {
       case IngestionPattern.File =>
         log.timed(s"file relay asset=${args.assetId}") {
           // copy inbound -> raw zone, then archive inbound -> processed
-          // (`dataIngestionUtils.py:196-232`)
+          // (`dataIngestionUtils.py:196-232`): ONE listing, copied and
+          // then archived exactly, so an object arriving after it is
+          // never archived without landing
           val inbound = s"$bucket/${paths.inboundPrefix(src.srcSysId, args.assetId)}"
-          val copied = env.relay.copyAll(inbound, args.sourcePath)
+          val copied = env.relay.copyPairs(inbound, args.sourcePath)
           log.info(s"relayed ${copied.size} objects to ${args.sourcePath}")
-          env.relay.moveAll(inbound,
+          env.relay.moveExact(copied.map(_._1),
             s"$bucket/${paths.processedPrefix(src.srcSysId, args.assetId)}")
           record(env, args, src, startTs, logPath, lastExt = None)
         }

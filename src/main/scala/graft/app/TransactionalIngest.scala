@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions
 import graft.land.AtomicLanding
@@ -48,12 +48,18 @@ object TransactionalIngest {
   val LandingMember = "landing"
   val CatalogMember = "catalog"
 
-  /** Derived once: `spark.implicits`' product encoder reflects over the
-    * case class on every call. */
-  private val entryEncoder = Encoders.product[CatalogEntry]
+  /** The run record's schema, derived once from the case class (the
+    * product encoder reflects over it on every derivation). */
+  private val entrySchema = Encoders.product[CatalogEntry].schema
 
+  /** The run record as a one-row local relation. Built from a `Row`, not
+    * through the encoder: `createDataset` generates an `UnsafeProjection`
+    * on every call, the `Row` path converts without code generation, and
+    * the schema, nullability included, is the encoder's. */
   private def entryDf(spark: SparkSession, e: CatalogEntry): DataFrame =
-    spark.createDataset(Seq(e))(entryEncoder).toDF()
+    spark.createDataFrame(java.util.List.of(Row(e.execId, e.srcSysId, e.assetId,
+      e.dqValidation, e.dataPublish, e.dataMasking, e.srcFilePath, e.s3LogPath,
+      e.procStartTs, e.createdTs, e.lastExtTime.orNull)), entrySchema)
 
   /** Spark's load() glob-expands its paths, so an inbound object named
     * with glob metacharacters ("data[1].csv") would either match a

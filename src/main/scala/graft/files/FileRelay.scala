@@ -17,8 +17,9 @@ class FileRelay(conf: Configuration = new Configuration()) {
 
   /** List objects under a prefix (S4) —
     * `bucket.objects.filter(Prefix=...)` (`dataIngestionUtils.py:204`).
-    * Overridable: the test suite injects a late-arriving object between
-    * copy and delete to pin the moveAll no-data-loss contract. */
+    * Overridable: the test suite injects a late-arriving object right
+    * after a listing to pin the one-listing rule (an object is archived
+    * only by the run that listed, and so landed, it). */
   def list(prefix: String): Seq[Path] = {
     val p = new Path(prefix)
     val f = fs(p)
@@ -28,7 +29,8 @@ class FileRelay(conf: Configuration = new Configuration()) {
 
   /** Cross-zone copy (S5) — `dataIngestionUtils.py:196-213`: every object
     * under `srcPrefix` lands under `destPrefix`, names preserved. Returns
-    * (source, destination) pairs for the copied set. */
+    * (source, destination) pairs for the copied set: the one listing a
+    * caller archives with [[moveExact]]. */
   def copyPairs(srcPrefix: String, destPrefix: String): Seq[(Path, Path)] = {
     val destDir = new Path(destPrefix)
     val dfs = fs(destDir)
@@ -43,18 +45,15 @@ class FileRelay(conf: Configuration = new Configuration()) {
   def copyAll(srcPrefix: String, destPrefix: String): Seq[Path] =
     copyPairs(srcPrefix, destPrefix).map(_._2)
 
-  /** Move = copy + delete (S6) — `dataIngestionUtils.py:215-232`: archive
-    * inbound files to the processed prefix. Deletes EXACTLY the objects
-    * that were copied — never a fresh listing, so an object landing
-    * between copy and delete survives for the next run (the reference
-    * deletes each object only after copying that same object,
-    * `dataIngestionUtils.py:225-231`).
-    */
-  def moveAll(srcPrefix: String, destPrefix: String): Seq[Path] = {
-    val pairs = copyPairs(srcPrefix, destPrefix)
-    pairs.foreach { case (src, _) => fs(src).delete(src, false) }
-    pairs.map(_._2)
-  }
+  /** Move (S6) — `dataIngestionUtils.py:215-232`: archive every object
+    * listed under `srcPrefix` to the processed prefix, by
+    * [[moveExact]] over that one listing. An object that lands after
+    * the listing stays for the next run. A caller that lands objects
+    * before archiving them must archive its own listing with
+    * [[moveExact]] instead: a second listing here would archive an
+    * object that arrived in between without ever landing it. */
+  def moveAll(srcPrefix: String, destPrefix: String): Seq[Path] =
+    moveExact(list(srcPrefix), destPrefix)
 
   /** Archive EXACTLY the given objects — the listing is the CALLER's,
     * captured before whatever work the archive concludes, so an object

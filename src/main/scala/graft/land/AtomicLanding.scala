@@ -7,8 +7,10 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path => HPath}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.FileFormatWriter
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit, max, when}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -33,9 +35,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * }}}
   *
   * Commit protocol: (1) write the batch into a fresh staging dir;
-  * (2) require the writer's completion mark — Spark's `_SUCCESS`
-  * marker, or, for rows already on the driver, the driver writer's
-  * `close()` returning (see [[stage]]); (3) move the staging dir
+  * (2) require the writer's completion mark — a write job returning
+  * after every authorized task commit ([[StagingCommitProtocol]]), or,
+  * for rows already on the driver, the driver writer's `close()`
+  * returning (see [[stage]]); (3) move the staging dir
   * under `data/` (same-filesystem rename — the dir is still unreachable:
   * no manifest lists it); (4) write the next manifest (previous dirs +
   * new dir for an append, just the new dir for an overwrite);
@@ -46,11 +49,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * All IO goes through the Hadoop `FileSystem`/`FileContext` abstraction
   * (the same one `graft.files.FileRelay` uses), so the identical protocol
-  * runs on `file://`, `hdfs://`, `s3a://`, or any mounted Hadoop FS.
+  * runs on `file://`, `hdfs://`, `s3a://`, or any mounted Hadoop FS. On
+  * `file:` the metadata steps (the staging, `data/` and `manifests/`
+  * dirs, the manifest reservation, the pointer swing) go through NIO
+  * instead: without libhadoop, Hadoop's local FS forks a `chmod` for
+  * every file it creates and every dir it makes.
   * Atomicity of step (5) is the [[PointerStore]] seam:
-  *   - local FS: one POSIX `rename(2)` (the raw, non-checksummed FS is
-  *     used for metadata so no stale `.crc` sidecars shadow the
-  *     overwritten pointer);
+  *   - local FS: one POSIX `rename(2)` (NIO `ATOMIC_MOVE`; no `.crc`
+  *     sidecars shadow the overwritten pointer);
   *   - HDFS: `FileSystem.rename` refuses an existing destination, so the
   *     swing falls back to `FileContext.rename(..., OVERWRITE)` — HDFS's
   *     documented atomic overwriting rename;
@@ -81,21 +87,39 @@ object AtomicLanding {
 
   private def manifestName(v: Long): String = f"m-$v%010d"
 
-  private def hconf: Configuration =
+  /** The Hadoop conf of ONE public operation: the active session's, so
+    * its `spark.hadoop.*` settings apply. Each call copies the whole
+    * session conf, so an operation resolves it once and passes it to
+    * every path lookup it makes. */
+  private def hconf(): Configuration =
     SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
   /** FileSystem for `p`. Local FS: unwrap the checksum layer — manifest
     * and pointer files need no `.crc` sidecars, and the raw rename is a
-    * single POSIX `rename(2)`, which is the atomic overwrite the pointer
-    * swing relies on. (Spark's own parquet writes keep their usual FS.) */
-  private def fsOf(p: HPath): FileSystem = p.getFileSystem(hconf) match {
-    case c: ChecksumFileSystem => c.getRawFileSystem
-    case f => f
-  }
+    * single POSIX `rename(2)`. (Spark's own parquet writes keep their
+    * usual FS.) */
+  private def fsOf(p: HPath, conf: Configuration): FileSystem =
+    p.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
 
   private def hp(parts: String*): HPath = new HPath(parts.mkString("/"))
+
+  /** `p` as an NIO path when `fs` is the local file system. */
+  private[land] def localPath(fs: FileSystem, p: HPath): Option[java.nio.file.Path] =
+    if (fs.getUri.getScheme == "file")
+      Some(java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath))
+    else None
+
+  /** `mkdirs`; through NIO on the local file system, where Hadoop forks
+    * a `chmod` for each dir it makes. */
+  private def mkdirs(fs: FileSystem, p: HPath): Unit = localPath(fs, p) match {
+    case Some(l) => java.nio.file.Files.createDirectories(l)
+    case None => fs.mkdirs(p)
+  }
 
   /** One open per read: no length probe first (a second metadata call,
     * one more request on an object store). */
@@ -106,8 +130,8 @@ object AtomicLanding {
 
   /** [[readUtf8]], or None when `p` does not exist — the open IS the
     * existence probe. */
-  private def readIfExists(p: HPath): Option[String] =
-    try Some(readUtf8(fsOf(p), p))
+  private def readIfExists(p: HPath, conf: Configuration): Option[String] =
+    try Some(readUtf8(fsOf(p, conf), p))
     catch { case _: java.io.FileNotFoundException => None }
 
   /** Exclusively reserve manifest slot `m` and write its content — the
@@ -122,27 +146,31 @@ object AtomicLanding {
     * server-side, and an S3-class store supplies the conditional PUT. */
   private def reserveManifest(fs: FileSystem, m: HPath, content: String): Boolean = {
     val bytes = content.getBytes(StandardCharsets.UTF_8)
-    if (fs.getUri.getScheme == "file") {
-      val p = java.nio.file.Paths.get(fs.makeQualified(m).toUri.getPath)
-      java.nio.file.Files.createDirectories(p.getParent)
-      try {
-        val out = java.nio.file.Files.newOutputStream(p,
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        try out.write(bytes) finally out.close()
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else if (fs.exists(m)) false
-    else try {
-      val out = fs.create(m, false) // create-fails-if-exists: the lock
-      try out.write(bytes) finally out.close()
-      true
-    } catch { case _: java.io.IOException if fs.exists(m) => false }
+    localPath(fs, m) match {
+      case Some(p) =>
+        java.nio.file.Files.createDirectories(p.getParent)
+        try {
+          val out = java.nio.file.Files.newOutputStream(p,
+            java.nio.file.StandardOpenOption.CREATE_NEW,
+            java.nio.file.StandardOpenOption.WRITE)
+          try out.write(bytes) finally out.close()
+          true
+        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      case None if fs.exists(m) => false
+      case None =>
+        try {
+          val out = fs.create(m, false) // create-fails-if-exists: the lock
+          try out.write(bytes) finally out.close()
+          true
+        } catch { case _: java.io.IOException if fs.exists(m) => false }
+    }
   }
 
   /** The published version, if any commit has ever completed. */
-  def currentVersion(table: String): Option[Long] =
-    readIfExists(hp(table, Pointer)).map(_.trim.stripPrefix("m-").toLong)
+  def currentVersion(table: String): Option[Long] = versionOf(table, hconf())
+
+  private def versionOf(table: String, conf: Configuration): Option[Long] =
+    readIfExists(hp(table, Pointer), conf).map(_.trim.stripPrefix("m-").toLong)
 
   /** One parsed manifest: the version it publishes and its lines. A
     * reader or a commit attempt parses the manifest it works from ONCE
@@ -197,10 +225,12 @@ object AtomicLanding {
     Manifest(v, text.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
 
   /** The published snapshot's manifest, if any commit has completed. */
-  def manifest(table: String): Option[Manifest] =
-    currentVersion(table).map { v =>
+  def manifest(table: String): Option[Manifest] = manifestIn(table, hconf())
+
+  private def manifestIn(table: String, conf: Configuration): Option[Manifest] =
+    versionOf(table, conf).map { v =>
       val m = hp(table, "manifests", manifestName(v))
-      parseManifest(v, readUtf8(fsOf(m), m))
+      parseManifest(v, readUtf8(fsOf(m, conf), m))
     }
 
   /** The manifest a PAST commit published. Only versions at or below the
@@ -208,12 +238,15 @@ object AtomicLanding {
     * pointer swing leaves an orphaned FUTURE manifest on disk, and that
     * snapshot was never committed. Works until [[vacuum]] reclaims the
     * version. */
-  def manifestOf(table: String, version: Long): Manifest = {
-    val cur = currentVersion(table)
+  def manifestOf(table: String, version: Long): Manifest =
+    manifestOf(table, version, hconf())
+
+  private def manifestOf(table: String, version: Long, conf: Configuration): Manifest = {
+    val cur = versionOf(table, conf)
     require(cur.exists(_ >= version),
       s"version $version was never published (current: ${cur.getOrElse(-1L)}) — " +
         "orphaned future manifests from crashed commits are not readable")
-    val text = readIfExists(hp(table, "manifests", manifestName(version)))
+    val text = readIfExists(hp(table, "manifests", manifestName(version)), conf)
     require(text.isDefined, s"version $version not found (vacuumed?)")
     parseManifest(version, text.get)
   }
@@ -286,13 +319,13 @@ object AtomicLanding {
     * at the schema its manifest records (columns added by evolved
     * appends surface as nulls in older rows). */
   def read(spark: SparkSession, table: String): DataFrame = {
-    val m = snapshotOf(table)
+    val m = snapshotOf(table, hconf())
     relation(spark, table, m, m.dirs)
   }
 
   /** The live manifest of a table that has a committed snapshot. */
-  private def snapshotOf(table: String): Manifest = {
-    val m = manifest(table)
+  private def snapshotOf(table: String, conf: Configuration): Manifest = {
+    val m = manifestIn(table, conf)
     require(m.exists(_.dirs.nonEmpty), s"no committed snapshot at $table")
     m.get
   }
@@ -373,7 +406,7 @@ object AtomicLanding {
     * so the result is row-identical to `read().filter(between)`. */
   def readPruned(spark: SparkSession, table: String, key: String,
       lo: Any, hi: Any): DataFrame = {
-    val m = snapshotOf(table)
+    val m = snapshotOf(table, hconf())
     val kept = prunedDirs(m, key, lo, hi)
     val body =
       if (kept.isEmpty) relation(spark, table, m, m.dirs).limit(0)
@@ -413,16 +446,17 @@ object AtomicLanding {
     * by the next vacuum — self-healing, so dropped clones don't pin
     * source garbage forever. */
   def cloneShallow(source: String, target: String): Long = {
-    require(currentVersion(source).isDefined,
+    val conf = hconf()
+    require(versionOf(source, conf).isDefined,
       s"no committed snapshot at $source")
-    require(currentVersion(target).isEmpty,
+    require(versionOf(target, conf).isEmpty,
       s"refusing to clone onto existing table $target")
     val absRoot =
       if (source.startsWith("/") || source.contains(":/")) source
-      else fsOf(hp(source)).makeQualified(hp(source)).toString
+      else fsOf(hp(source), conf).makeQualified(hp(source)).toString
     def absolutize(d: String): String =
       if (d.startsWith("/") || d.contains(":/")) d else s"$absRoot/$d"
-    def snapshotLines(): Seq[String] = manifest(source).toSeq.flatMap(_.lines).flatMap {
+    def snapshotLines(): Seq[String] = manifestIn(source, conf).toSeq.flatMap(_.lines).flatMap {
       case l if l.startsWith("# batch ") => None
       case l if l.startsWith("# wmark ") => None // fresh sink: no channel carries
       case l if l.startsWith("# range ") =>
@@ -434,7 +468,7 @@ object AtomicLanding {
       case l if l.startsWith("#") => Some(l)
       case d => Some(absolutize(d))
     }
-    val fs = fsOf(hp(target))
+    val fs = fsOf(hp(target), conf)
     val m0 = hp(target, "manifests", manifestName(0L))
     var lines = snapshotLines()
     require(reserveManifest(fs, m0, lines.mkString("\n")),
@@ -454,7 +488,7 @@ object AtomicLanding {
         if (i > 0) Some(d.substring(0, i)) else None
       }.distinct.foreach { srcRoot =>
         val reg = hp(srcRoot, ClonesDir, enc(targetAbs))
-        val rfs = fsOf(reg)
+        val rfs = fsOf(reg, conf)
         val out = rfs.create(reg, true)
         try out.write(targetAbs.getBytes(StandardCharsets.UTF_8))
         finally out.close()
@@ -469,7 +503,7 @@ object AtomicLanding {
     // the (moved-on) source into our still-unpublished m-0 and retry.
     def missingDir(ls: Seq[String]): Option[String] =
       ls.filterNot(_.startsWith("#")).find { d =>
-        val p = hp(d); !fsOf(p).exists(p)
+        val p = hp(d); !fsOf(p, conf).exists(p)
       }
     var attempts = 0
     while (missingDir(lines).isDefined) {
@@ -485,7 +519,7 @@ object AtomicLanding {
       finally out.close()
       register(lines)
     }
-    PointerStore.forPointer(fs, hconf, hp(target, Pointer))
+    PointerStore.forPointer(fs, conf, hp(target, Pointer))
       .publish(manifestName(0L))
     0L
   }
@@ -502,7 +536,7 @@ object AtomicLanding {
     * by [[cloneShallow]], consulted and self-healed by [[vacuum]]. */
   private[land] def registeredClones(table: String): Seq[String] = {
     val d = hp(table, ClonesDir)
-    val fs = fsOf(d)
+    val fs = fsOf(d, hconf())
     if (!fs.exists(d)) Nil
     else fs.listStatus(d).toSeq.map(s => readUtf8(fs, s.getPath).trim)
   }
@@ -516,7 +550,8 @@ object AtomicLanding {
   def merge(updates: DataFrame, table: String, key: String,
       allowMissingColumns: Boolean = false): Long = {
     val spark = updates.sparkSession
-    val m = snapshotOf(table)
+    val conf = hconf()
+    val m = snapshotOf(table, conf)
     val live = relation(spark, table, m, m.dirs)
     // an updates frame missing a live column would silently rewrite
     // every matched row with NULL there (unionByName pads) — refuse
@@ -536,7 +571,7 @@ object AtomicLanding {
     // swings the pointer. expectedVersion fails the publish if a
     // concurrent commit landed after our snapshot read (the rewrite
     // would erase it otherwise).
-    commit(merged, table, expectedVersion = Some(m.version))
+    commitCore(merged, table, conf, expectedVersion = Some(m.version))._1
   }
 
   /** A dir's key range as recorded in (or derived for) the manifest:
@@ -568,8 +603,11 @@ object AtomicLanding {
     * ("# range" lines) and planning never lists files. None when the
     * dir holds no non-null stats for the column, or the column's
     * physical type has no supported comparator (conservative rewrite).
+    * Like Spark's reader it skips every file under a name that starts
+    * with `_` or `.`, so it never opens an uncommitted task attempt's
+    * file or a checksum sidecar.
     */
-  private def footerKeyRange(spark: SparkSession, dir: String,
+  private[land] def footerKeyRange(spark: SparkSession, dir: String,
       key: String, planning: Boolean): Option[KeyRange] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -578,8 +616,8 @@ object AtomicLanding {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new HPath(dir)
-    val fs = root.getFileSystem(conf)
+    val fs = new HPath(dir).getFileSystem(conf)
+    val root = fs.makeQualified(new HPath(dir))
     val it = fs.listFiles(root, true)
     var loL = Long.MaxValue
     var hiL = Long.MinValue
@@ -587,9 +625,13 @@ object AtomicLanding {
     var hiB: Binary = null
     val cmpB = PrimitiveComparator.UNSIGNED_LEXICOGRAPHICAL_BINARY_COMPARATOR
     var typ: String = null
+    def hidden(p: HPath): Boolean =
+      p.getName.startsWith("_") || p.getName.startsWith(".")
     while (it.hasNext) {
       val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) {
+      val visible = !Iterator.iterate(st.getPath)(_.getParent)
+        .takeWhile(_.depth > root.depth).exists(hidden)
+      if (visible && st.getPath.getName.endsWith(".parquet")) {
         if (planning) planningFooterFiles.incrementAndGet()
         val r = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
         try r.getFooter.getBlocks.asScala.foreach { b =>
@@ -650,7 +692,11 @@ object AtomicLanding {
   /** (dir, key) -> range, from the live manifest's "# range" lines —
     * the manifest-only planning surface [[mergePruned]] reads. */
   private[land] def liveRanges(table: String): Map[(String, String), KeyRange] =
-    manifest(table).fold(Map.empty[(String, String), KeyRange])(_.ranges)
+    liveRanges(table, hconf())
+
+  private def liveRanges(table: String, conf: Configuration)
+      : Map[(String, String), KeyRange] =
+    manifestIn(table, conf).fold(Map.empty[(String, String), KeyRange])(_.ranges)
 
   /** File-level MERGE — the 100-TB refinement [[merge]]'s scaladoc
     * names: rewrite ONLY the live data dirs whose footer key range
@@ -698,8 +744,9 @@ object AtomicLanding {
     // exactly the window a concurrent append can land in, which is what
     // the rebase specs need to stage deterministically
     val spark = updates.sparkSession
+    val conf = hconf()
     // one manifest plans the whole rewrite: schema, ranges and dirs
-    val live = manifest(table)
+    val live = manifestIn(table, conf)
     if (!allowMissingColumns) {
       val liveCols = live.map(schemaOf(spark, table, _).fieldNames.toSet)
         .getOrElse(Set.empty)
@@ -730,9 +777,9 @@ object AtomicLanding {
     // STREAMING append keeps the append's newer batch id (a stale pinned
     // id would let the engine double-commit the replayed batch)
     beforeCommit()
-    commit(merged, table, keepDirs = kept.map(_._1),
+    commitCore(merged, table, conf, keepDirs = kept.map(_._1),
       expectedVersion = live.map(_.version), statsKeys = Seq(key),
-      knownRanges = known, rebaseAppends = rebaseDisjoint(updates, table, key))
+      knownRanges = known, rebaseAppends = rebaseDisjoint(updates, table, key, conf))._1
   }
 
   /** Manifest-first pruning plan for a keyed snapshot rewrite: every
@@ -781,8 +828,8 @@ object AtomicLanding {
     * dir, or one whose range covers a probe key, refuses the rebase
     * (conservative: fail as before). */
   private def rebaseDisjoint(probe: DataFrame, table: String,
-      key: String): Seq[String] => Boolean = { extras =>
-    val rec = liveRanges(table)
+      key: String, conf: Configuration): Seq[String] => Boolean = { extras =>
+    val rec = liveRanges(table, conf)
     val extRanges = extras.map(d => rec.get((d, key)))
     extRanges.forall(_.isDefined) && {
       val flags = extRanges.flatten.zipWithIndex.map { case (r, i) =>
@@ -817,7 +864,8 @@ object AtomicLanding {
   def deletePruned(deleteKeys: DataFrame, table: String, key: String,
       beforeCommit: () => Unit = () => ()): Long = {
     val spark = deleteKeys.sparkSession
-    val m = snapshotOf(table)
+    val conf = hconf()
+    val m = snapshotOf(table, conf)
     val keys = deleteKeys.select(col(key))
     val (touched, kept) = prunePlan(keys, table, m, key)
     if (touched.isEmpty) return m.version
@@ -828,9 +876,9 @@ object AtomicLanding {
     val body = if (remaining.isEmpty) remaining.repartition(1) else remaining
     val known = kept.collect { case (d, Some(r)) => (d, key) -> r }.toMap
     beforeCommit()
-    commit(body, table, keepDirs = kept.map(_._1),
+    commitCore(body, table, conf, keepDirs = kept.map(_._1),
       expectedVersion = Some(m.version), statsKeys = Seq(key),
-      knownRanges = known, rebaseAppends = rebaseDisjoint(keys, table, key))
+      knownRanges = known, rebaseAppends = rebaseDisjoint(keys, table, key, conf))._1
   }
 
   /** Write `df` and publish atomically; returns the committed version.
@@ -891,7 +939,7 @@ object AtomicLanding {
       rebaseAppends: Seq[String] => Boolean = _ => false,
       writer: String = "",
       extraMarks: Map[String, Long] = Map.empty): Long =
-    commitCore(df, table, append, beforePublish, batchId, maxConflictWaitMs,
+    commitCore(df, table, hconf(), append, beforePublish, batchId, maxConflictWaitMs,
       keepDirs, evolveSchema, expectedVersion, statsKeys, knownRanges,
       rebaseAppends, writer, extraMarks)._1
 
@@ -912,37 +960,63 @@ object AtomicLanding {
     case other => other
   }
 
-  /** Steps (1) and (2): write `df` into `staging` and require its
-    * completion mark. A plan that optimizes to a [[LocalRelation]] holds
-    * its rows on the driver already (a `createDataFrame(Seq...)` run
-    * record, an empty batch), so the driver writes them itself through
-    * the output writer Spark's write tasks use — the same codec, schema
-    * conversion and footer metadata, with no Spark job. There the mark
-    * is `close()` returning: a failed write or close throws before the
-    * dir is moved. Every other plan is a `df.write` job and must leave
-    * `_SUCCESS`. */
-  private def stage(df: DataFrame, staging: HPath, fs: FileSystem): Unit =
+  /** Steps (1) and (2): write `df` into `staging` (already made) and
+    * require its completion mark. A plan that optimizes to a
+    * [[LocalRelation]] holds its rows on the driver already (a
+    * `createDataFrame(Seq...)` run record, an empty batch), so the driver
+    * writes them itself through the output writer Spark's write tasks
+    * use — the same codec, schema conversion and footer metadata, with
+    * no Spark job. There the mark is `close()` returning: a failed write
+    * or close throws before the dir is moved. Every other plan runs one
+    * write job whose tasks write straight into `staging` under
+    * [[StagingCommitProtocol]]; its mark is `FileFormatWriter.write`
+    * returning after every partition's authorized task commit. */
+  private def stage(df: DataFrame, staging: HPath, conf: Configuration): Unit = {
+    val spark = df.sparkSession
+    val id = staging.getName
     df.queryExecution.optimizedPlan match {
       case r: LocalRelation if !r.isStreaming =>
-        val spark = df.sparkSession
-        val job = Job.getInstance(spark.sessionState.newHadoopConf())
+        val job = Job.getInstance(conf)
         val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, r.schema)
-        val id = staging.getName
         val ctx = new TaskAttemptContextImpl(job.getConfiguration,
           new TaskAttemptID(new TaskID(new JobID(id, 0), TaskType.MAP, 0), 0))
         val file = new HPath(staging, s"part-00000-$id-c000${factory.getFileExtension(ctx)}")
         val writer = factory.newInstance(file.toString, r.schema, ctx)
         try r.data.foreach(writer.write) finally writer.close()
       case _ =>
-        df.write.parquet(staging.toString)
-        require(fs.exists(new HPath(staging, "_SUCCESS")),
-          s"writer did not mark $staging complete; refusing to publish")
+        val qe = df.queryExecution
+        val session = qe.sparkSession
+        SQLExecution.withNewExecutionId(qe, Some("stage")) {
+          FileFormatWriter.write(session, qe.executedPlan, new ParquetFileFormat,
+            new StagingCommitProtocol(id, staging.toString),
+            FileFormatWriter.OutputSpec(staging.toString, Map.empty, qe.analyzed.output),
+            conf, partitionColumns = Nil, bucketSpec = None, statsTrackers = Nil,
+            options = Map.empty)
+        }
     }
+  }
+
+  /** The schema checks `df.write` makes before its writer runs and
+    * `FileFormatWriter.write` does not — a duplicate column name and an
+    * empty (or nested empty) schema — raising the same errors. */
+  private def checkWritable(schema: StructType, caseSensitive: Boolean): Unit = {
+    schema.fieldNames.groupBy(n => if (caseSensitive) n else n.toLowerCase)
+      .collectFirst { case (n, ns) if ns.length > 1 =>
+        throw new AnalysisException("COLUMN_ALREADY_EXISTS",
+          Map("columnName" -> s"`${n.replace("`", "``")}`"))
+      }
+    def empty(s: StructType): Boolean = s.isEmpty ||
+      s.exists(f => f.dataType match { case st: StructType => empty(st); case _ => false })
+    if (empty(schema))
+      throw new AnalysisException("EMPTY_SCHEMA_NOT_SUPPORTED_FOR_DATASOURCE",
+        Map("format" -> "Parquet"))
+  }
 
   /** [[commit]] plus the manifest-relative name of the dir this commit
     * wrote — what [[compactSmallFrom]] needs to tell its fold output
     * apart from concurrently-appended dirs that rode the rebase. */
-  private def commitCore(df: DataFrame, table: String, append: Boolean = false,
+  private def commitCore(df: DataFrame, table: String, conf: Configuration,
+      append: Boolean = false,
       beforePublish: () => Unit = () => (),
       batchId: Option[Long] = None,
       maxConflictWaitMs: Long = 30000L,
@@ -954,7 +1028,7 @@ object AtomicLanding {
       rebaseAppends: Seq[String] => Boolean = _ => false,
       writer: String = "",
       extraMarks: Map[String, Long] = Map.empty): (Long, String) = {
-    val fs = fsOf(hp(table))
+    val fs = fsOf(hp(table), conf)
 
     // schema enforcement (Delta's rule): an append may never silently
     // drop or retype a live column; ADDING columns is explicit
@@ -1005,15 +1079,19 @@ object AtomicLanding {
       }
     }
 
+    // the staging dir is made once, before either writer runs: neither
+    // writer makes a dir of its own
+    checkWritable(df.schema, df.sparkSession.sessionState.conf.caseSensitiveAnalysis)
     val staging = hp(table, ".staging", UUID.randomUUID().toString)
-    stage(df, staging, fs)
+    mkdirs(fs, staging)
+    stage(df, staging, conf)
 
     val dirName = staging.getName
     val dataDir = hp(table, "data", dirName)
-    fs.mkdirs(dataDir.getParent)
+    mkdirs(fs, dataDir.getParent)
     require(fs.rename(staging, dataDir), s"rename $staging -> $dataDir failed")
 
-    fs.mkdirs(hp(table, "manifests"))
+    mkdirs(fs, hp(table, "manifests"))
     // the new dir's key ranges: one footer pass per key over the dir
     // just staged (bounded by THIS commit's output, not the table) —
     // cached across reservation attempts, the dir is immutable
@@ -1025,7 +1103,7 @@ object AtomicLanding {
     // ONE pointer + manifest read per reservation attempt: the live
     // dirs, range lines, marks and schema the attempt carries all come
     // from `live`, and `live` is always the manifest of version next - 1
-    var live = manifest(table)
+    var live = manifestIn(table, conf)
     var next = live.fold(0L)(_.version + 1L)
     var waitedMs = 0L
     var reserved = false
@@ -1054,7 +1132,7 @@ object AtomicLanding {
       val carried: Seq[String] = expectedVersion match {
         case Some(e) if next != e + 1L =>
           val curDirs = live.toSeq.flatMap(_.dirs)
-          val eDirs = dirsOfVersion(table, e)
+          val eDirs = manifestOf(table, e, conf).dirs
           val removed = eDirs.filterNot(curDirs.toSet)
           val extras = curDirs.filterNot(eDirs.toSet)
           if (removed.nonEmpty || !rebaseAppends(extras))
@@ -1114,7 +1192,7 @@ object AtomicLanding {
             "(retry with a longer maxConflictWaitMs) or its writer died " +
             "(vacuum() reclaims the orphaned slot once no writer is active)")
         Thread.sleep(25); waitedMs += 25
-        live = manifest(table)
+        live = manifestIn(table, conf)
         live.foreach(m => if (m.version >= next) next = m.version + 1L)
       }
     }
@@ -1123,7 +1201,7 @@ object AtomicLanding {
       beforePublish()
       // the pointer swing goes through the PointerStore seam: rename-based
       // on POSIX/HDFS, direct-PUT on object stores without atomic rename
-      PointerStore.forPointer(fs, hconf, hp(table, Pointer))
+      PointerStore.forPointer(fs, conf, hp(table, Pointer))
         .publish(manifestName(next))
     } catch {
       case t: Throwable =>
@@ -1172,9 +1250,10 @@ object AtomicLanding {
     * maintenance trigger: an overwrite-per-run table keeps liveDirCount
     * at 1 forever while old snapshots pile up on disk until vacuumed. */
   def supersededCount(table: String): Int = {
+    val conf = hconf()
     val dir = hp(table, "manifests")
-    val fs = fsOf(dir)
-    val current = currentVersion(table).map(manifestName)
+    val fs = fsOf(dir, conf)
+    val current = versionOf(table, conf).map(manifestName)
     if (!fs.exists(dir)) 0
     else fs.listStatus(dir).count(s => !current.contains(s.getPath.getName))
   }
@@ -1207,11 +1286,13 @@ object AtomicLanding {
     // the recorded schema: a schema-evolved table has columns that live
     // only in newer data dirs, and a rewrite that dropped them would
     // make the loss permanent once vacuum() deletes the original dirs
-    val m = snapshotOf(table)
+    val conf = hconf()
+    val m = snapshotOf(table, conf)
     val df0 = relation(spark, table, m, m.dirs)
     val df = if (numFiles > 0) df0.coalesce(numFiles) else df0
     beforeCommit()
-    commit(df, table, expectedVersion = Some(m.version), rebaseAppends = _ => true)
+    commitCore(df, table, conf, expectedVersion = Some(m.version),
+      rebaseAppends = _ => true)._1
   }
 
   /** Bin-packing compaction: rewrite ONLY the data dirs at or below
@@ -1269,8 +1350,9 @@ object AtomicLanding {
       beforeCommit: () => Unit = () => (),
       transform: Option[DataFrame => DataFrame] = None,
       extraMarks: Map[String, Long] = Map.empty): SmallCompaction = {
-    val fs = fsOf(hp(table))
-    val m = manifest(table).getOrElse(
+    val conf = hconf()
+    val fs = fsOf(hp(table), conf)
+    val m = manifestIn(table, conf).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $table"))
     val base = m.version
     expectedBase.foreach { e =>
@@ -1288,7 +1370,7 @@ object AtomicLanding {
       val merged = transform.map(_(merged0))
         .getOrElse(merged0.coalesce(numFiles))
       beforeCommit()
-      val (v, newDir) = commitCore(merged, table, keepDirs = big,
+      val (v, newDir) = commitCore(merged, table, conf, keepDirs = big,
         expectedVersion = Some(base), rebaseAppends = _ => true,
         extraMarks = extraMarks)
       SmallCompaction(v, Some(newDir))
@@ -1309,8 +1391,8 @@ object AtomicLanding {
     * live per-version lock and is preserved, unreferenced data dirs get
     * the same age grace (a writer moves staging -> data/ BEFORE
     * reserving its slot), and `.staging` is not touched at all (its
-    * mtime freezes at write start, so NO age bound can distinguish a
-    * long-running write from an abandoned one). Auto-maintenance in the
+    * mtime moves only when a file is created or renamed in it, so NO age
+    * bound can distinguish a long-running write from an abandoned one). Auto-maintenance in the
     * ingestion commit path uses this mode.
     *
     * `retainVersions = N` keeps a TIME-TRAVEL window: the last N
@@ -1321,9 +1403,13 @@ object AtomicLanding {
     * expressed in versions (deterministic and testable) rather than
     * wall-clock hours. */
   def vacuum(table: String, futureGraceMs: Long = 0L,
-      retainVersions: Int = 0): Seq[String] = {
-    val fs = fsOf(hp(table))
-    val cur = currentVersion(table)
+      retainVersions: Int = 0): Seq[String] =
+    vacuum(table, futureGraceMs, retainVersions, hconf())
+
+  private def vacuum(table: String, futureGraceMs: Long, retainVersions: Int,
+      conf: Configuration): Seq[String] = {
+    val fs = fsOf(hp(table), conf)
+    val cur = versionOf(table, conf)
     val current = cur.map(manifestName)
     val now = System.currentTimeMillis()
     def young(s: org.apache.hadoop.fs.FileStatus): Boolean =
@@ -1371,14 +1457,14 @@ object AtomicLanding {
     // by the grace window so a clone mid-creation is never dropped.
     val qualDataPrefix = {
       val dp = hp(table, "data")
-      fsOf(dp).makeQualified(dp).toString + "/"
+      fsOf(dp, conf).makeQualified(dp).toString + "/"
     }
     val clonesReg = hp(table, ClonesDir)
     val cloneKeep: Set[String] =
       (if (!fs.exists(clonesReg)) Nil
        else fs.listStatus(clonesReg).toSeq).flatMap { reg =>
         val clone = readUtf8(fs, reg.getPath).trim
-        val cfs = fsOf(hp(clone))
+        val cfs = fsOf(hp(clone), conf)
         val mDirC = hp(clone, "manifests")
         val live = cfs.exists(hp(clone, Pointer)) || cfs.exists(mDirC)
         if (!live) {
@@ -1408,9 +1494,11 @@ object AtomicLanding {
       !keep.contains(n) && (everReferenced.contains(n) || !young(s))
     }
     // .staging is reclaimed ONLY by full (grace = 0, writers-stopped)
-    // vacuum: a staging dir's mtime is frozen at write START (task files
-    // land under _temporary), so any write longer than the grace would
-    // be deleted MID-WRITE by concurrent auto-maintenance if age-gated
+    // vacuum: a staging dir's mtime moves only when a task attempt
+    // creates or renames a file in it, so a task writing one large file
+    // leaves it untouched for as long as it writes — any write longer
+    // than the grace would be deleted MID-WRITE by concurrent
+    // auto-maintenance if age-gated
     val doomed = Seq(
       hp(table, ".staging") -> ((_: org.apache.hadoop.fs.FileStatus) =>
         futureGraceMs == 0L),
@@ -1472,22 +1560,31 @@ object AtomicLanding {
   final case class LinkedSnapshot(rootVersion: Long, members: Map[String, Long])
 
   /** The published root generation, if any publish ever completed. */
-  def currentRootVersion(root: String): Option[Long] =
-    readIfExists(hp(root, RootPointer)).map(_.trim.stripPrefix("r-").toLong)
+  def currentRootVersion(root: String): Option[Long] = rootVersionOf(root, hconf())
+
+  private def rootVersionOf(root: String, conf: Configuration): Option[Long] =
+    readIfExists(hp(root, RootPointer), conf).map(_.trim.stripPrefix("r-").toLong)
 
   /** Resolve the live root generation to its member pins — ONE read;
     * every member then reads via [[readVersion]] at its pin, so the
     * whole multi-table index is snapshot-isolated against concurrent
     * publishes. */
   def linkedSnapshot(root: String): Option[LinkedSnapshot] =
-    currentRootVersion(root).flatMap(linkedSnapshotAt(root, _))
+    linkedSnapshot(root, hconf())
+
+  private def linkedSnapshot(root: String, conf: Configuration): Option[LinkedSnapshot] =
+    rootVersionOf(root, conf).flatMap(linkedSnapshotAt(root, _, conf))
 
   /** Resolve a SPECIFIC root generation — the index-level time travel
     * [[readVersion]] gives tables. Retained generations (see
     * [[vacuumLinked]]'s `retainRoots`) stay resolvable after
     * maintenance; reclaimed ones return None. */
   def linkedSnapshotAt(root: String, v: Long): Option[LinkedSnapshot] =
-    readIfExists(hp(root, "roots", rootName(v))).map(text => LinkedSnapshot(v,
+    linkedSnapshotAt(root, v, hconf())
+
+  private def linkedSnapshotAt(root: String, v: Long,
+      conf: Configuration): Option[LinkedSnapshot] =
+    readIfExists(hp(root, "roots", rootName(v)), conf).map(text => LinkedSnapshot(v,
       text.split("\n").toSeq
         .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
         .map { l =>
@@ -1524,8 +1621,9 @@ object AtomicLanding {
     members.keys.foreach(m => require(
       m.nonEmpty && !m.exists(c => c == '\n' || c == '\r'),
       s"bad member name '$m'"))
-    val fs = fsOf(hp(root))
-    var next = currentRootVersion(root).getOrElse(-1L) + 1L
+    val conf = hconf()
+    val fs = fsOf(hp(root), conf)
+    var next = rootVersionOf(root, conf).getOrElse(-1L) + 1L
     var waitedMs = 0L
     var reserved = false
     while (!reserved) {
@@ -1543,12 +1641,12 @@ object AtomicLanding {
             s"publisher for >${maxConflictWaitMs}ms — a publish is in flight " +
             "or its writer died (vacuumLinked() reclaims the orphaned slot)")
         Thread.sleep(25); waitedMs += 25
-        currentRootVersion(root).foreach(cv => if (cv >= next) next = cv + 1L)
+        rootVersionOf(root, conf).foreach(cv => if (cv >= next) next = cv + 1L)
       }
     }
     try {
       beforePublish()
-      PointerStore.forPointer(fs, hconf, hp(root, RootPointer))
+      PointerStore.forPointer(fs, conf, hp(root, RootPointer))
         .publish(rootName(next))
     } catch {
       case t: Throwable =>
@@ -1562,12 +1660,16 @@ object AtomicLanding {
   /** Read one member at the version the live root pins. */
   def readLinkedMember(spark: SparkSession, root: String,
       member: String): DataFrame = {
-    val snap = linkedSnapshot(root).getOrElse(
+    val conf = hconf()
+    val snap = linkedSnapshot(root, conf).getOrElse(
       throw new IllegalStateException(s"no published root at $root"))
-    readVersion(spark, s"$root/$member",
+    val table = s"$root/$member"
+    val m = manifestOf(table,
       snap.members.getOrElse(member,
         throw new IllegalArgumentException(
-          s"root $root pins no member '$member' (has ${snap.members.keys.mkString(", ")})")))
+          s"root $root pins no member '$member' (has ${snap.members.keys.mkString(", ")})")),
+      conf)
+    relation(spark, table, m, m.dirs)
   }
 
   /** Reclaim superseded root generations and superseded member
@@ -1590,8 +1692,9 @@ object AtomicLanding {
     * reserved future root slots survive, same rule as [[vacuum]]). */
   def vacuumLinked(root: String, futureGraceMs: Long = 0L,
       retainRoots: Int = 0): Seq[String] = {
-    val fs = fsOf(hp(root))
-    val cur = currentRootVersion(root)
+    val conf = hconf()
+    val fs = fsOf(hp(root), conf)
+    val cur = rootVersionOf(root, conf)
     val now = System.currentTimeMillis()
     def retained(name: String): Boolean = {
       val v = name.stripPrefix("r-")
@@ -1612,22 +1715,21 @@ object AtomicLanding {
     // sets that member's retention window
     val snaps = cur.toSeq.flatMap { c =>
       (math.max(0L, c - retainRoots) to c)
-        .flatMap(linkedSnapshotAt(root, _))
+        .flatMap(linkedSnapshotAt(root, _, conf))
     }
     val oldestPin: Map[String, Long] = snaps.flatMap(_.members.toSeq)
       .groupBy(_._1).map { case (m, vs) => m -> vs.map(_._2).min }
-    val liveMembers = linkedSnapshot(root).toSeq.flatMap(_.members.keys)
+    val liveMembers = linkedSnapshot(root, conf).toSeq.flatMap(_.members.keys)
     val removedMembers = liveMembers.flatMap { m =>
       val t = s"$root/$m"
-      (currentVersion(t), oldestPin.get(m)) match {
+      (versionOf(t, conf), oldestPin.get(m)) match {
         case (Some(live), Some(oldest)) if live >= oldest =>
           // the contiguous window [live - retain, live] covers every
           // retained pin; with retainRoots = 0 this degenerates to the
           // old quiescence guard (vacuum only when live == pin)
           val window = (live - oldest).toInt
           if (retainRoots == 0 && window > 0) Nil
-          else vacuum(t, futureGraceMs = futureGraceMs,
-            retainVersions = window)
+          else vacuum(t, futureGraceMs, window, conf)
         case _ => Nil
       }
     }

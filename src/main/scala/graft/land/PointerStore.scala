@@ -1,6 +1,7 @@
 package graft.land
 
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
@@ -14,8 +15,8 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
   * they provide that replace:
   *
   *   - POSIX / HDFS: write a temp file next to the pointer and rename
-  *     over it ([[PointerStore.Rename]] — local `rename(2)`, HDFS
-  *     `FileContext.rename(OVERWRITE)`).
+  *     over it ([[PointerStore.Rename]] — local `rename(2)` through NIO,
+  *     HDFS `FileContext.rename(OVERWRITE)`).
   *   - Object stores WITHOUT atomic rename (S3 and friends, where
   *     "rename" is a non-atomic copy loop and an overwriting rename
   *     does not exist at all): a whole-object PUT of the pointer key is
@@ -44,20 +45,32 @@ object PointerStore {
   val DefaultNoRenameSchemes = "s3,s3a,s3n,gs,oss,swift,cos,wasb,wasbs"
 
   /** Temp-file-and-rename swing for stores with an atomic overwriting
-    * rename. Plain `FileSystem.rename` refuses an existing destination
-    * on HDFS, so that store falls back to the `FileContext` OVERWRITE
-    * form — HDFS's documented atomic replace. */
+    * rename. On the local file system both steps go through NIO — the
+    * move is `ATOMIC_MOVE`, one `rename(2)` — because Hadoop's local
+    * create forks a `chmod` when libhadoop is not loaded. Plain
+    * `FileSystem.rename` refuses an existing destination on HDFS, so
+    * that store falls back to the `FileContext` OVERWRITE form — HDFS's
+    * documented atomic replace. */
   final class Rename(fs: FileSystem, conf: Configuration, pointer: HPath)
       extends PointerStore {
     def publish(value: String): Unit = {
+      val bytes = value.getBytes(StandardCharsets.UTF_8)
       val tmp = new HPath(pointer.getParent,
         s".${pointer.getName}.${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(value.getBytes(StandardCharsets.UTF_8)) finally out.close()
-      if (!fs.rename(tmp, pointer)) {
-        val fc = FileContext.getFileContext(fs.getUri, conf)
-        fc.rename(fs.makeQualified(tmp), fs.makeQualified(pointer),
-          Options.Rename.OVERWRITE)
+      AtomicLanding.localPath(fs, pointer) match {
+        case Some(p) =>
+          val t = p.resolveSibling(tmp.getName)
+          Files.createDirectories(p.getParent)
+          Files.write(t, bytes)
+          Files.move(t, p, StandardCopyOption.ATOMIC_MOVE)
+        case None =>
+          val out = fs.create(tmp, true)
+          try out.write(bytes) finally out.close()
+          if (!fs.rename(tmp, pointer)) {
+            val fc = FileContext.getFileContext(fs.getUri, conf)
+            fc.rename(fs.makeQualified(tmp), fs.makeQualified(pointer),
+              Options.Rename.OVERWRITE)
+          }
       }
     }
   }

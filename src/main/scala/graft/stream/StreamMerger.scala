@@ -54,6 +54,8 @@ object StreamMerger {
 
   /** Batch-compat merge: read every object under `inPrefix`, emit ONE
     * JSON array file at `outFile`, archive inputs to `processedPrefix`.
+    * One listing drives both: exactly the merged objects are archived,
+    * and one arriving after the listing stays for the next run.
     * Returns the number of merged events.
     */
   def mergeCompat(relay: FileRelay, inPrefix: String, outFile: String,
@@ -61,7 +63,7 @@ object StreamMerger {
     val parts = relay.list(inPrefix).sortBy(_.getName)
     val events = parts.flatMap(p => splitConcatenated(relay.readUtf8(p)))
     relay.writeUtf8(new Path(outFile), events.mkString("[", ",", "]"))
-    relay.moveAll(inPrefix, processedPrefix)
+    relay.moveExact(parts, processedPrefix)
     events.size
   }
 

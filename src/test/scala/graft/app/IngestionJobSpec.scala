@@ -211,6 +211,61 @@ class IngestionJobSpec extends AnyFunSuite {
     assert(store.catalogEntries(9).size == 1)
   }
 
+  /** A relay whose first listing of `inbound` drops `late` into it
+    * right after listing: the object arrives mid-run. */
+  private def lateArrival(inbound: String, late: String, body: String): FileRelay =
+    new FileRelay() {
+      private var first = true
+      override def list(prefix: String): Seq[Path] = {
+        val r = super.list(prefix)
+        if (first && new Path(prefix) == new Path(inbound)) {
+          first = false
+          writeUtf8(new Path(s"$inbound/$late"), body)
+        }
+        r
+      }
+    }
+
+  test("file pattern: an object arriving after the run's listing is neither landed nor archived") {
+    val root = Spool.dir("graft-app-flate")
+    val bucket = s"$root/inbound"
+    val inbound = s"$bucket/init/2/8"
+    val relay = lateArrival(inbound, "late.csv", "x,y\n5,6")
+    relay.writeUtf8(new Path(s"$inbound/a.csv"), "x,y\n1,2")
+    val store = new InMemoryMetadataStore(
+      sources = Seq(srcSys(2, IngestionPattern.File, bucket)),
+      assets = Seq(DataAsset(8, "files", None, TriggerMechanism.TimeDriven,
+        ExtractionMethod.Full, None)))
+    val dest = s"$root/raw/8/init/20240110120000"
+    IngestionJob.run(newEnv(store, root).copy(relay = relay),
+      IngestionJob.Args(dest, 2, 8, "2_8_20240110120000"))
+    def names(p: String) = new FileRelay().list(p).map(_.getName).sorted
+    assert(names(dest) == Seq("a.csv"))
+    assert(names(s"$bucket/processed/2/8") == Seq("a.csv"),
+      "only the landed listing is archived")
+    assert(names(inbound) == Seq("late.csv"), "the late object waits for the next run")
+  }
+
+  test("stream pattern: an object arriving after the merge's listing is neither merged nor archived") {
+    val root = Spool.dir("graft-app-slate")
+    val bucket = s"$root/inbound"
+    val inbound = s"$bucket/init/3/9"
+    val relay = lateArrival(inbound, "late.json", """{"a":9}""")
+    relay.writeUtf8(new Path(s"$inbound/e1.json"), """{"a":1}{"a":2}""")
+    val store = new InMemoryMetadataStore(
+      sources = Seq(srcSys(3, IngestionPattern.Stream, bucket)),
+      assets = Seq(DataAsset(9, "stream", None, TriggerMechanism.EventDriven,
+        ExtractionMethod.Full, None)))
+    val dest = s"$root/raw/9/init/20240110120000"
+    IngestionJob.run(newEnv(store, root).copy(relay = relay),
+      IngestionJob.Args(dest, 3, 9, "3_9_20240110120000"))
+    assert(relay.readUtf8(new Path(s"$dest/streaming_file.json")) == """[{"a":1},{"a":2}]""")
+    def names(p: String) = new FileRelay().list(p).map(_.getName).sorted
+    assert(names(s"$bucket/processed/3/9") == Seq("e1.json"),
+      "only the merged listing is archived")
+    assert(names(inbound) == Seq("late.json"), "the late object waits for the next run")
+  }
+
   test("file pattern in transactional mode: objects land as rows WITH the run record in one swing, then archive") {
     val root = Spool.dir("graft-app-ftxn")
     val relay = new FileRelay()

@@ -28,6 +28,18 @@ class TransactionalIngestSpec extends AnyFunSuite {
   private lazy val docs = graft.Tables.t(spark, TestSpark.Sf0001, "documents")
     .select(col("doc_id"), col("source"))
 
+  test("the run record lands at the case class's encoder schema and reads back as the entry") {
+    val root = freshRoot()
+    val e = entry("e0").copy(lastExtTime = Some(new Timestamp(1700000002123L)))
+    TransactionalIngest.ingest(spark, root, docs.limit(1), e, batchId = Some(1L))
+    // the manifest records the committed frame's schema (a parquet read
+    // relaxes every column to nullable, so the recorded line is the check)
+    assert(AtomicLanding.liveSchema(spark, s"$root/${TransactionalIngest.CatalogMember}")
+      .contains(org.apache.spark.sql.Encoders.product[CatalogEntry].schema))
+    val (_, cat) = TransactionalIngest.snapshot(spark, root).get
+    assert(cat.as[CatalogEntry].collect().toSeq == Seq(e))
+  }
+
   test("landing + catalog publish in one swing; crash between member commits and the root swing exposes NEITHER; the identified retry converges") {
     val root = freshRoot()
     val b1 = docs.filter(col("doc_id") < 100)

@@ -22,7 +22,9 @@ import graft.queries.Spool
   * staged file is the file a `df.write` task writes for the same rows —
   * the same parquet schema (nullability included), footer key-value
   * metadata, writer and codec — read back as the same rows, under the
-  * same append enforcement. */
+  * same append enforcement. Any other plan is one write job whose tasks
+  * stage straight into the commit's dir ([[StagingCommitProtocol]]),
+  * and its files hold the same against `df.write` too. */
 class DriverCommitSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -84,35 +86,39 @@ class DriverCommitSpec extends AnyFunSuite {
     df.select(to_json(struct(df.columns.map(col): _*))).as[String]
       .collect().toSeq.sorted
 
-  /** Commit `df` with no job, then hold its one staged file against what
-    * `df.write` writes for the same rows. */
-  private def assertDriverCommit(df: DataFrame): Unit = {
+  /** Commit `df`, then hold every staged file against every file
+    * `df.write` writes for the same rows. Returns the staged dir. */
+  private def assertSameFiles(df: DataFrame, byDriver: Boolean): String = {
     val table = freshTable()
     val (v, jobs) = JobCounter.jobsDuring(spark)(AtomicLanding.commit(df, table))
-    assert(jobs == 0, s"a local-relation commit ran $jobs Spark jobs")
+    if (byDriver) assert(jobs == 0, s"a local-relation commit ran $jobs Spark jobs")
+    else assert(jobs >= 1)
     val Seq(dir) = AtomicLanding.dirPathsOfVersion(table, v)
-    val driver = footers(dir)
-    assert(driver.size == 1, s"driver commit wrote ${driver.map(_._1)}")
-    val (driverName, driverFooter) = driver.head
+    val staged = footers(dir)
+    if (byDriver) assert(staged.size == 1, s"driver commit wrote ${staged.map(_._1)}")
+    else assert(staged.nonEmpty)
 
     val byJob = Spool.dir("graft-drivercommit-job") + "/out"
     df.write.parquet(byJob)
     val jobFooters = footers(byJob)
     assert(jobFooters.nonEmpty)
-    for ((jobName, jobFooter) <- jobFooters) {
-      assert(driverName.substring(driverName.indexOf('.')) ==
+    for ((stagedName, stagedFooter) <- staged; (jobName, jobFooter) <- jobFooters) {
+      assert(stagedName.substring(stagedName.indexOf('.')) ==
         jobName.substring(jobName.indexOf('.')), "same codec extension")
-      val (dm, jm) = (driverFooter.getFileMetaData, jobFooter.getFileMetaData)
+      val (dm, jm) = (stagedFooter.getFileMetaData, jobFooter.getFileMetaData)
       assert(dm.getSchema == jm.getSchema)
       assert(dm.getKeyValueMetaData == jm.getKeyValueMetaData)
       assert(dm.getCreatedBy == jm.getCreatedBy)
-      val codecs = (driverFooter.getBlocks.asScala ++ jobFooter.getBlocks.asScala)
+      val codecs = (stagedFooter.getBlocks.asScala ++ jobFooter.getBlocks.asScala)
         .flatMap(_.getColumns.asScala.map(_.getCodec)).distinct
       assert(codecs.size <= 1, s"codecs differ: $codecs")
     }
     assert(rows(AtomicLanding.read(spark, table)) == rows(df))
     assert(rows(AtomicLanding.read(spark, table)) == rows(spark.read.parquet(byJob)))
+    dir
   }
+
+  private def assertDriverCommit(df: DataFrame): Unit = { assertSameFiles(df, byDriver = true); () }
 
   test("a local-relation commit runs no Spark job and stages the file df.write writes: every type, nulls, multi-byte strings, microsecond timestamps") {
     assertDriverCommit(local(wideRows, wide))
@@ -146,14 +152,63 @@ class DriverCommitSpec extends AnyFunSuite {
     assert(land.count() == 0 && cat.count() == 1)
   }
 
-  test("a plan that is not a local relation still commits through a write job with its _SUCCESS mark") {
+  /** The names in a staged dir, on the local file system. */
+  private def names(dir: String): Seq[String] =
+    Option(new java.io.File(dir.stripPrefix("file:")).list()).toSeq.flatten.sorted
+
+  test("a plan that is not a local relation still commits through a write job, staged with its committed part files only") {
     val table = freshTable()
     val (v, jobs) = JobCounter.jobsDuring(spark)(
-      AtomicLanding.commit(spark.range(5).toDF("id"), table))
+      AtomicLanding.commit(spark.range(5).toDF("id").repartition(2), table))
     assert(jobs >= 1)
     val Seq(dir) = AtomicLanding.dirPathsOfVersion(table, v)
-    assert(new java.io.File(new java.net.URI(dir).getPath, "_SUCCESS").exists())
+    // every task file renamed to its committed name next to its .crc: no
+    // _SUCCESS, no _temporary tree, no attempt file left
+    val ns = names(dir)
+    val parts = ns.filter(_.startsWith("part-"))
+    assert(parts.nonEmpty && parts.forall(_.endsWith(".parquet")), ns)
+    assert(ns.toSet == (parts ++ parts.map(p => s".$p.crc")).toSet, ns)
     assert(AtomicLanding.read(spark, table).count() == 5)
+  }
+
+  test("a write job stages the files df.write writes: every type, through two tasks") {
+    val df = local(wideRows, wide).repartition(2)
+    val dir = assertSameFiles(df, byDriver = false)
+    assert(footers(dir).size == 2, "one file per non-empty task")
+  }
+
+  test("a task that throws publishes no version, and the next commit succeeds") {
+    val table = freshTable()
+    AtomicLanding.commit(spark.range(3).toDF("id"), table)
+    val boom = udf((i: Long) => if (i == 7L) throw new IllegalStateException("boom") else i)
+    intercept[org.apache.spark.SparkException](
+      AtomicLanding.commit(spark.range(0, 10, 1, 1).select(boom(col("id")).as("id")), table))
+    assert(AtomicLanding.currentVersion(table).contains(0L))
+    assert(names(s"$table/.staging").isEmpty, "the aborted job drops its staging dir")
+    assert(names(s"$table/data").size == 1)
+    assert(AtomicLanding.commit(spark.range(4).toDF("id"), table) == 1L)
+    assert(AtomicLanding.read(spark, table).count() == 4)
+  }
+
+  test("a duplicate column name, an empty schema and an unsupported type fail as df.write fails them, on either path") {
+    def error(f: => Any): String = intercept[org.apache.spark.sql.AnalysisException](f).getMessage
+    val cases = Seq(
+      spark.range(3).select(col("id"), col("id")),
+      spark.range(3).select(col("id"), col("id").as("ID")),
+      spark.range(3).select(),
+      spark.range(3).select(col("id"), struct().as("st")),
+      spark.range(3).select(col("id"), expr("make_interval(0, 0, 0, cast(id as int))").as("iv")))
+    for (df <- cases) {
+      val table = freshTable()
+      val expected = error(df.write.parquet(Spool.dir("graft-drivercommit-job") + "/out"))
+      assert(error(AtomicLanding.commit(df, table)) == expected)
+      assert(AtomicLanding.currentVersion(table).isEmpty)
+    }
+    for (df <- cases.take(4)) {
+      val onDriver = local(Nil, df.schema)
+      assert(error(AtomicLanding.commit(onDriver, freshTable())) ==
+        error(df.write.parquet(Spool.dir("graft-drivercommit-job") + "/out")))
+    }
   }
 
   test("append enforcement raises the same drop and retype errors on either path") {
