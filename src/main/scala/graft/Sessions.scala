@@ -55,6 +55,12 @@ object Sessions {
       // metaspace and 71 MB of heap after GC over 100 entries, and cut a
       // warm pass's compiles from about 3,480 (29-35 s) to 39-68.
       .config("spark.sql.codegen.cache.maxEntries", "4000")
+      // Streaming checkpoints on file: go through NIO (DESIGN.md
+      // principle 10): Spark's default manager forked 157 processes
+      // (readlink per rename, chmod per create and mkdir) in one
+      // q_stream_window run. Other schemes keep Spark's default.
+      .config(graft.stream.LocalCheckpointFileManager.ClassKey,
+        classOf[graft.stream.LocalCheckpointFileManager].getName)
       .getOrCreate()
 
   def cpusFromEnv: Int =

@@ -64,6 +64,18 @@ object Pipeline {
     Stage("data_masking", "data_masking", masking),
     Stage("data_publish", "data_publish", publish))
 
+  /** The committed data an entry's run landed, whichever way it landed:
+    * the landing member of a linked root (transactional mode), the
+    * snapshot of an atomic table, or the plain parquet dir. */
+  private def landed(spark: org.apache.spark.sql.SparkSession,
+      entry: CatalogEntry): org.apache.spark.sql.DataFrame = {
+    val root = entry.srcFilePath
+    TransactionalIngest.snapshot(spark, root).map(_._1)
+      .orElse(graft.land.AtomicLanding.currentVersion(root)
+        .map(_ => graft.land.AtomicLanding.read(spark, root)))
+      .getOrElse(spark.read.parquet(root))
+  }
+
   /** A real quality_check body: validate the landed data against the
     * rules; ANY violation throws — the chain records "failed" and stops
     * before masking/publish ever see bad data. */
@@ -72,7 +84,7 @@ object Pipeline {
     entry => {
       import org.apache.spark.sql.functions.col
       val bad = graft.operators.DataQuality
-        .validate(spark.read.parquet(entry.srcFilePath), rules)
+        .validate(landed(spark, entry), rules)
         .filter(col("n_violations") > 0L)
         .collect()
       if (bad.nonEmpty) throw new IllegalStateException(
@@ -86,7 +98,7 @@ object Pipeline {
   def maskingStage(spark: org.apache.spark.sql.SparkSession,
       masks: Seq[(String, org.apache.spark.sql.Column)]): CatalogEntry => Unit =
     entry => {
-      val df = masks.foldLeft(spark.read.parquet(entry.srcFilePath)) {
+      val df = masks.foldLeft(landed(spark, entry)) {
         case (d, (name, c)) => d.withColumn(name, c)
       }
       df.write.mode("overwrite").parquet(entry.srcFilePath + "_masked")

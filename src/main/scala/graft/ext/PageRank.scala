@@ -19,18 +19,19 @@ import org.apache.spark.sql.functions._
   * Dangling mass (nodes with no out-edges) is dropped, not
   * redistributed — the standard simplification, identical in the oracle.
   *
-  * Two regimes, picked at runtime by one aggregate over the
-  * deduplicated `(src, dst)` edge set (the same job checks the null
-  * contract below):
+  * Two regimes, picked at runtime by one collect of at most the bound
+  * plus one deduplicated `(src, dst)` edges:
   *  - at or below [[ConnectedComponents.LocalSolveMaxEdges]] edges (the
-  *    bound connected components uses), the edges are collected once
-  *    and the recurrence runs on the driver over dense `Array[Long]`
+  *    bound connected components uses), those collected edges are the
+  *    graph: the null contract below is checked on them and the
+  *    recurrence runs on the driver over dense `Array[Long]`
   *    state. Driver memory is linear in the edge count: the collected
   *    pairs, one `2·edges` long array to find the sorted node ids, and
   *    two int index arrays, plus three long arrays per node (peak not
   *    measured at the bound). Small graphs are all per-round job cost
   *    on a cluster; here they cost milliseconds.
-  *  - above it, the distributed loop below runs.
+  *  - above it, one count checks the null contract and the
+  *    distributed loop below runs.
   * Integer arithmetic makes the two regimes bit-identical by
   * construction, round count included.
   *
@@ -89,21 +90,21 @@ object PageRank {
       maxIters: Int, scale: Long, localSolveMax: Long): (DataFrame, Int) = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct()
-    // one job picks the regime AND checks the null contract
-    val probe = e.agg(count(lit(1)),
-      count(when(col("src").isNull || col("dst").isNull, lit(1)))).head()
-    val (nEdges, nNull) = (probe.getLong(0), probe.getLong(1))
-    require(nNull == 0L,
+    def requireNonNull(nNull: Long): Unit = require(nNull == 0L,
       s"PageRank edges need non-null src and dst: $nNull distinct edge(s) " +
         "have a null endpoint")
-    require(nEdges > 0L, "PageRank over an empty edge set")
-    if (nEdges <= localSolveMax) {
+    // one action picks the regime: at most localSolveMax + 1 edges
+    val head = e.limit(math.min(localSolveMax, Int.MaxValue - 1L).toInt + 1).collect()
+    require(head.nonEmpty, "PageRank over an empty edge set")
+    if (head.length <= localSolveMax) {
+      requireNonNull(head.count(r => r.isNullAt(0) || r.isNullAt(1)).toLong)
       import spark.implicits._
       val (nodes, ranks, rounds) = solveLocal(
-        e.as[(Long, Long)].collect(), maxIters, scale)
+        head.map(r => (r.getLong(0), r.getLong(1))), maxIters, scale)
       return (nodes.indices.map(i => (nodes(i), ranks(i))).toDF("node", "rank"),
         rounds)
     }
+    requireNonNull(e.where(col("src").isNull || col("dst").isNull).count())
 
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // adjacency = edges ⋈ outdeg, built once, co-partitioned on src,

@@ -1,5 +1,7 @@
 package graft.files
 
+import java.nio.file.Files
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 
@@ -89,9 +91,21 @@ class FileRelay(conf: Configuration = new Configuration()) {
     finally in.close()
   }
 
+  /** Write (overwrite) `p`. On the local file system through NIO, where
+    * Hadoop's checksummed create forks `chmod` for the file and its
+    * `.crc`; a sidecar left by an earlier Hadoop write is deleted first,
+    * as it would fail a checksummed read of the new bytes. */
   def writeUtf8(p: Path, body: String): Unit = {
-    val out = fs(p).create(p, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val f = fs(p)
+    graft.land.AtomicLanding.localPath(f, p) match {
+      case Some(l) =>
+        Files.createDirectories(l.getParent)
+        Files.deleteIfExists(graft.land.AtomicLanding.crcSidecar(l))
+        Files.write(l, bytes)
+      case None =>
+        val out = f.create(p, true)
+        try out.write(bytes) finally out.close()
+    }
   }
 }

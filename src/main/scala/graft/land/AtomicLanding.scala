@@ -10,7 +10,7 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.FileFormatWriter
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileFormatWriter}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit, max, when}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -109,10 +109,15 @@ object AtomicLanding {
   private def hp(parts: String*): HPath = new HPath(parts.mkString("/"))
 
   /** `p` as an NIO path when `fs` is the local file system. */
-  private[land] def localPath(fs: FileSystem, p: HPath): Option[java.nio.file.Path] =
+  private[graft] def localPath(fs: FileSystem, p: HPath): Option[java.nio.file.Path] =
     if (fs.getUri.getScheme == "file")
       Some(java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath))
     else None
+
+  /** The `.crc` sidecar Hadoop's checksummed local file system keeps
+    * beside local file `l`. */
+  private[graft] def crcSidecar(l: java.nio.file.Path): java.nio.file.Path =
+    l.resolveSibling(s".${l.getFileName}.crc")
 
   /** `mkdirs`; through NIO on the local file system, where Hadoop forks
     * a `chmod` for each dir it makes. */
@@ -976,8 +981,11 @@ object AtomicLanding {
     val id = staging.getName
     df.queryExecution.optimizedPlan match {
       case r: LocalRelation if !r.isStreaming =>
+        val format = new ParquetFileFormat
+        // the type check FileFormatWriter.write makes on the job path
+        DataSourceUtils.verifySchema(format, r.schema)
         val job = Job.getInstance(conf)
-        val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, r.schema)
+        val factory = format.prepareWrite(spark, job, Map.empty, r.schema)
         val ctx = new TaskAttemptContextImpl(job.getConfiguration,
           new TaskAttemptID(new TaskID(new JobID(id, 0), TaskType.MAP, 0), 0))
         val file = new HPath(staging, s"part-00000-$id-c000${factory.getFileExtension(ctx)}")

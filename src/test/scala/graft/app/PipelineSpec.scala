@@ -87,6 +87,41 @@ class PipelineSpec extends AnyFunSuite {
     assert(e2.dataMasking == CatalogEntry.StatusNotStarted)
   }
 
+  /** Quality and masking over what a run landed at `sourcePath` under
+    * `config`, twice into the same root; returns the masked row count. */
+  private def stagesOverLanded(st: InMemoryMetadataStore, config: EngineConfig,
+      keyCol: String, textCol: String): Long = {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{DataQuality, Masking}
+    val root = Spool.dir("graft-pipe-landed")
+    val stages = Pipeline.defaultStages(
+      quality = Pipeline.qualityStage(spark, Seq(
+        DataQuality.NotNull(keyCol), DataQuality.Unique(keyCol))),
+      masking = Pipeline.maskingStage(spark, Seq(
+        textCol -> Masking.pseudonym(col(textCol), "s1").cast("string"))))
+    val a = args(root)
+    for (execId <- Seq("1_7_20240110120000", "1_7_20240110130000"))
+      Pipeline.run(env(st).copy(config = config), a.copy(execId = execId), stages)
+    assert(st.catalogEntries(7).forall(e =>
+      e.dqValidation == "passed" && e.dataMasking == "passed"))
+    spark.read.parquet(a.sourcePath + "_masked").count()
+  }
+
+  test("with atomic landing the stages read the table's committed snapshot") {
+    assert(stagesOverLanded(store(), cfg.copy(atomicLanding = true),
+      "r_regionkey", "r_name") == 5)
+  }
+
+  test("in transactional mode the stages read the linked root's landing member") {
+    val st = new InMemoryMetadataStore(
+      sources = Seq(SourceSystem(1, IngestionPattern.Database, None, None, None,
+        None, None, None, Some("bkt"))),
+      assets = Seq(DataAsset(7, "events", None, TriggerMechanism.TimeDriven,
+        ExtractionMethod.Incremental, Some("ts"))))
+    assert(stagesOverLanded(st, cfg.copy(atomicLanding = true, transactionalCatalog = true),
+      "event_id", "event_type") == graft.Tables.t(spark, TestSpark.Sf0001, "events").count())
+  }
+
   test("a failing stage is marked failed, later stages never run") {
     val st = store()
     val root = Spool.dir("graft-pipe2")

@@ -204,7 +204,7 @@ class DriverCommitSpec extends AnyFunSuite {
       assert(error(AtomicLanding.commit(df, table)) == expected)
       assert(AtomicLanding.currentVersion(table).isEmpty)
     }
-    for (df <- cases.take(4)) {
+    for (df <- cases) {
       val onDriver = local(Nil, df.schema)
       assert(error(AtomicLanding.commit(onDriver, freshTable())) ==
         error(df.write.parquet(Spool.dir("graft-drivercommit-job") + "/out")))

@@ -17,6 +17,7 @@ file it creates and every dir it makes; this is how to find who asks.
 """
 import argparse
 import collections
+import os
 import re
 import sys
 
@@ -77,4 +78,11 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    try:
+        main()
+        sys.stdout.flush()
+    except BrokenPipeError:
+        # the reader (say, `head`) closed the pipe: stop without a
+        # traceback, and keep the exit-time flush from raising again
+        os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
+        sys.exit(1)
